@@ -334,7 +334,9 @@ def cosine_pairs_blas(
         # two consumers (both join sides) — without the persist each
         # side re-runs the scan → pack lineage, reading the corpus
         # twice (the MinHash-base rule, SCALE.md deliberate-persist
-        # inventory; released by the ContextCleaner)
+        # inventory). The persist sits in the SQL CacheManager, which
+        # the ContextCleaner never frees: the caller's pipeline_scope
+        # unpersists it
         .persist()
     )
     pa = packed.select(F.col("blk").alias("blk_a"), F.col("rows").alias("rows_a"))

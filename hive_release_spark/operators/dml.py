@@ -8,7 +8,10 @@ no delta mechanism, so this module provides the documented equivalent:
 rewrite, write to a staging dir, atomically swap. This is exactly what
 lakehouse formats do per-file; here the granularity is the table (or the
 partition, via ``partition_filter``), which is the honest plain-parquet
-contract.
+contract. The partitions a scoped statement touches are chosen on
+metadata, as Hive's ``PartitionPruner`` evaluates the predicate against
+partition specs: the filter runs over the directory listing, never over
+the partitions' rows.
 
 Semantics guarantees:
 - readers see either the old or the new table (directory swap), never a mix;
@@ -26,11 +29,16 @@ Semantics guarantees:
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"  # Hive's directory for NULL
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -67,13 +75,6 @@ def _rewrite(spark: SparkSession, path: str, transform) -> None:
     shutil.rmtree(old)
 
 
-def _partition_dirname(col: str, value) -> str:
-    """Hive-style partition directory component (``col=value``)."""
-    if value is None:
-        return f"{col}=__HIVE_DEFAULT_PARTITION__"
-    return f"{col}={value}"
-
-
 def _staged_partition_rels(staged: str, partition_cols: list[str]) -> list[str]:
     """Relative ``col=value[/col=value...]`` paths actually present in a
     staged partitioned write (leaf partition directories only)."""
@@ -93,6 +94,42 @@ def _staged_partition_rels(staged: str, partition_cols: list[str]) -> list[str]:
     return rels
 
 
+def _unescape_path_name(name: str) -> str:
+    """Inverse of Spark's partition-path escaping (``a%3A1`` → ``a:1``),
+    as ``ExternalCatalogUtils.unescapePathName`` decodes it."""
+    return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), name)
+
+
+def _matching_partitions(
+    spark: SparkSession,
+    df: DataFrame,
+    path: str,
+    partition_filter: Column,
+    partition_cols: list[str],
+) -> list[str]:
+    """Relative ``col=value[/...]`` directories of ``path`` whose partition
+    values satisfy ``partition_filter``, exactly as they appear on disk.
+
+    Pruning runs on metadata, as Hive's ``PartitionPruner`` evaluates the
+    predicate against partition specs: the leaf directories are listed,
+    their values decoded (``__HIVE_DEFAULT_PARTITION__`` is NULL) and cast
+    to the table's partition types, and the filter is applied to that
+    in-memory local frame. No data is read and no Spark job runs."""
+    rels = _staged_partition_rels(path, partition_cols)
+    values: dict[str, list[str | None]] = {c: [] for c in partition_cols}
+    for rel in rels:
+        for c, part in zip(partition_cols, rel.split(os.sep)):
+            v = part[len(c) + 1 :]
+            values[c].append(None if v == _DEFAULT_PARTITION else _unescape_path_name(v))
+    listing = spark.createDataFrame(
+        pa.table({**{c: pa.array(v, pa.string()) for c, v in values.items()}, "__rel": rels})
+    )
+    typed = listing.select(
+        *(F.col(c).cast(df.schema[c].dataType).alias(c) for c in partition_cols), "__rel"
+    )
+    return [r["__rel"] for r in typed.filter(partition_filter).select("__rel").collect()]
+
+
 def _rewrite_partitions(
     spark: SparkSession,
     path: str,
@@ -103,8 +140,12 @@ def _rewrite_partitions(
     """Partition-scoped copy-on-write (SCALE.md cliff #4): only partitions
     matching ``partition_filter`` are read, rewritten, and swapped; every
     other partition directory is untouched (identical files and mtimes).
-    Catalyst prunes the scan to the affected partitions, so at 100 TB a
-    DELETE on one day touches one day's files, not the table.
+
+    The affected partitions come from metadata, the directory listing
+    (:func:`_matching_partitions`), never from a scan of their rows, and
+    Catalyst prunes the rewrite's scan to the same partitions, so at
+    100 TB a DELETE on one day lists the table's directories and reads
+    one day's files.
 
     The transform may also EMIT rows in partitions the target had no rows
     for (MERGE inserts into a fresh day): those staged directories are
@@ -112,19 +153,14 @@ def _rewrite_partitions(
     concurrent writer creating the same partition is a detected conflict,
     not a silent replace."""
     df = spark.read.parquet(path)
-    affected = df.filter(partition_filter)
-    parts = affected.select(*partition_cols).distinct().collect()
-    rels = [
-        os.path.join(*(_partition_dirname(c, row[c]) for c in partition_cols))
-        for row in parts
-    ]
+    rels = _matching_partitions(spark, df, path, partition_filter, partition_cols)
     # conflict detection is scoped to the AFFECTED partitions — a
     # concurrent writer in a different partition is not a conflict
     token = tuple(
         _version_token(d) if os.path.exists(d) else None
         for d in (os.path.join(path, rel) for rel in rels)
     )
-    out = transform(affected)
+    out = transform(df.filter(partition_filter))
     staged = f"{path}.__staged_{uuid.uuid4().hex[:8]}"
     out.write.mode("overwrite").partitionBy(*partition_cols).parquet(staged)
     new_rels = [r for r in _staged_partition_rels(staged, partition_cols) if r not in set(rels)]
@@ -262,23 +298,41 @@ def merge_into(
                 f"partition-scoped MERGE cannot reassign partition columns {sorted(moved)}; "
                 "use a full-table merge_into(partition_filter=None)"
             )
-        # every source row must fall inside the scoped partitions, else its
-        # update/insert would silently target an unread partition
-        stray = source.filter(
-            ~F.coalesce(partition_filter, F.lit(False))
-        ).limit(1)
-        if stray.count() > 0:
-            raise ValueError(
-                "partition-scoped MERGE: source rows fall outside partition_filter"
-            )
+
+    # One aggregate checks the source: every row must fall inside the
+    # scoped partitions, else its update/insert would silently target an
+    # unread partition; and each target row may match at most one source
+    # row (cardinality; NULL keys group together, as in groupBy).
+    out_of_scope = (
+        F.lit(False)
+        if partition_filter is None
+        else ~F.coalesce(partition_filter, F.lit(False))
+    )
+    keys, dup, stray = (
+        source.groupBy(*on)
+        .agg(
+            (F.count(F.lit(1)) > 1).alias("__dup"),
+            F.max(out_of_scope).alias("__stray"),
+        )
+        .agg(F.count(F.lit(1)), F.max("__dup"), F.max("__stray"))
+        .first()
+    )
+    if stray:
+        raise ValueError(
+            "partition-scoped MERGE: source rows fall outside partition_filter"
+        )
+    sentinels = ("__tgt_m", "__src_m")
+    for sentinel in sentinels:
+        if sentinel in src_cols:
+            raise ValueError(f"column name {sentinel!r} is reserved by MERGE")
+    if keys == 0 and not evolve_schema:
+        return  # an empty source updates, deletes and inserts nothing
 
     def tr(df: DataFrame) -> DataFrame:
-        for sentinel in ("__tgt_m", "__src_m"):
-            if sentinel in df.columns or sentinel in src_cols:
+        for sentinel in sentinels:
+            if sentinel in df.columns:
                 raise ValueError(f"column name {sentinel!r} is reserved by MERGE")
-        # cardinality check: each target row may match at most one source row
-        dup = source.groupBy(*on).count().filter(F.col("count") > 1).limit(1)
-        if dup.count() > 0:
+        if dup:
             raise ValueError("MERGE cardinality violation: source has duplicate keys")
         if evolve_schema:
             src_types = {f.name: f.dataType for f in source.schema.fields}

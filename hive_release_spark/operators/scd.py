@@ -14,16 +14,22 @@ collapse + lead over the collapsed frame — see the query's docstring);
 ``scd2_apply`` touches target rows for CHANGED keys only via one
 semi/anti join pair on the key, so a steady-state CDC tick costs
 O(batch + affected history), never a full-dimension rebuild. The
-rewrite itself is the whole-file overwrite of this repo's
-unpartitioned DML path; partition the dimension by key range and route
-through ``merge_into(partition_filter=...)`` when single files stop
-being appropriate.
+commit is the unpartitioned copy-on-write of the DML layer
+(``dml._rewrite``): the folded table is written to a staging directory
+and swapped in atomically, with concurrent-writer detection. The read
+and the write never share a directory, so nothing is checkpointed, and
+a failed write leaves the previous dimension intact. Partition the
+dimension by key range and route through
+``merge_into(partition_filter=...)`` when single files stop being
+appropriate.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+
+from hive_release_spark.operators import dml
 
 
 def scd2_history(
@@ -88,13 +94,15 @@ def scd2_apply(
     if not os.path.exists(path):
         scd2_history(incoming, key, state, ts).write.parquet(path)
         return
-    tgt = spark.read.parquet(path)
     affected = incoming.select(key).distinct()
-    untouched = tgt.join(affected, key, "left_anti")
-    prior = (
-        tgt.join(affected, key, "semi")
-        .select(key, state, F.col("valid_from").alias(ts))
-    )
-    rebuilt = scd2_history(prior.unionByName(incoming), key, state, ts)
-    out = untouched.unionByName(rebuilt).localCheckpoint(eager=True)
-    out.write.mode("overwrite").parquet(path)
+
+    def fold(tgt: DataFrame) -> DataFrame:
+        untouched = tgt.join(affected, key, "left_anti")
+        prior = (
+            tgt.join(affected, key, "semi")
+            .select(key, state, F.col("valid_from").alias(ts))
+        )
+        rebuilt = scd2_history(prior.unionByName(incoming), key, state, ts)
+        return untouched.unionByName(rebuilt)
+
+    dml._rewrite(spark, path, fold)

@@ -324,68 +324,64 @@ CONTRACT_CHANGED_ROUND = 13
 # (ts, event_id) end-to-end.
 CONTRACT_CHANGED: list = []
 
-# Round-13 selection (post-drain regime, propose_window() emits this
-# list verbatim — validated by tools/witness_ledger.py --window):
+# Post-drain selection after CORRECTNESS_r13 (propose_window() emits
+# this list verbatim — validated by tools/witness_ledger.py --window):
 # CONTRACT_CHANGED is empty (cleared above), so the window is one rep
-# per required §2 family missing so far, stalest family first (scan,
-# tpch via q1, neardup via dedup_minhash_lsh, functions, join,
-# multimodal, streaming, ptf, sample, script, session_window via
-# events_top_paths, setop, sketch, text, topk), then
-# oldest-witness-first fill from the r6/r7-witnessed tier — never
-# re-recording an r12-fresh row.  Registry growth stays FROZEN: 362
-# entries, optimization only this round.
+# per required §2 family missing so far, stalest family first, then
+# oldest-witness-first fill — never re-recording an r13-fresh row.
+# Registry growth stays FROZEN: 362 entries, optimization only.
 
 DRIVER_WINDOW = [
-    "scan_filter_project",
-    "q1_pricing_summary",
-    "dedup_minhash_lsh",
-    "fn_regex",
-    "join_left_semi",
-    "multimodal_features",
-    "stream_stream_left_join",
-    "ptf_apply_in_pandas_zscore",
-    "sample_fraction",
-    "script_transform",
-    "events_top_paths",
-    "setop_intersect_all",
-    "agg_hll_sketch",
-    "text_quality",
-    "topk_orders",
-    "q18_large_orders",
-    "udtf_stack",
-    "window_lead_lag",
-    "join_left_anti",
-    "join_cross",
-    "join_theta_residual",
-    "join_pure_theta",
-    "subquery_in",
-    "subquery_scalar_correlated",
-    "subquery_not_in",
-    "window_range_frame",
-    "window_first_last",
-    "window_share_of_total",
-    "fn_conditional",
-    "fn_hash",
-    "fn_complex_types",
-    "window_rows_frame",
-    "text_fingerprint",
-    "text_ngrams_top",
-    "text_tfidf_top_terms",
-    "stream_static_join",
-    "agg_pivot",
-    "join_merge_hint",
-    "fn_str_to_map",
-    "text_token_bpe_regex",
-    "join_unique",
-    "split_train_eval",
-    "pipeline_dedup_quality",
-    "decontaminate_ngram",
-    "pack_sequences",
-    "domain_mix_resample",
-    "pipeline_neardedup_corpus",
-    "q13_customer_distribution",
-    "q21_waiting_suppliers",
-    "dedup_connected_components",
+    "sim_ann_lsh",
+    "corpus_token_stats",
+    "stream_dedup_first",
+    "fn_parse_url",
+    "stream_stream_join",
+    "multimodal_frame_sample",
+    "dedup_jaccard_prefix",
+    "stream_stream_full_join",
+    "ptf_matchpath",
+    "sample_reservoir_group",
+    "text_script_profile",
+    "stream_session",
+    "ds_cross_channel_customers",
+    "agg_hll_union",
+    "ds_topk_per_group",
+    "q6_forecast_revenue",
+    "join_shuffle_hash_hint",
+    "text_context_ngrams",
+    "fn_string2",
+    "fn_numeric_repr",
+    "text_normalize",
+    "text_pii_scrub",
+    "shuffle_shard_assign",
+    "sample_stratified",
+    "vocab_coverage_cutoff",
+    "source_overlap_matrix",
+    "q14_promo_effect",
+    "q7_volume_shipping",
+    "q8_market_share",
+    "q15_top_supplier",
+    "q16_supplier_cnt",
+    "q17_small_quantity_revenue",
+    "q19_disjunctive_revenue",
+    "q22_dormant_customers",
+    "q2_min_cost_supplier",
+    "q11_important_parts",
+    "q20_excess_suppliers",
+    "funnel_conversion",
+    "retention_cohorts",
+    "agg_grouping_id",
+    "window_range_interval",
+    "window_ignore_nulls",
+    "udtf_explode_map",
+    "udtf_inline",
+    "dedup_simhash",
+    "text_langid",
+    "agg_unpivot",
+    "dq_checks",
+    "sort_null_ordering",
+    "text_lm_score",
 ]
 
 def _ordered():

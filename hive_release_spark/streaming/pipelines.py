@@ -415,9 +415,9 @@ def late_drop_replay(
         shutil.move(part, dest)
         os.utime(dest, (mtime, mtime))
         shutil.rmtree(tmp)
-    schema = spark.read.parquet(data_dir).schema
     stream = (
-        spark.readStream.schema(schema)
+        # the batch files are written from ``events``: same schema
+        spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(data_dir)
     )

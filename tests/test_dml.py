@@ -387,3 +387,182 @@ def test_merge_schema_evolution(spark, tmp_path):
         matched_update={"val": F.col("src.val")},
     )
     assert set(spark.read.parquet(path2).columns) == {"id", "val"}
+
+
+def _jobs(spark, fn):
+    """Run ``fn()`` under a fresh job group; return (its result, the
+    number of Spark jobs it launched)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _files(d):
+    """{file: (mtime, bytes)} of every data file under ``d``."""
+    import os
+
+    return {
+        os.path.relpath(os.path.join(root, f), d): (
+            os.path.getmtime(os.path.join(root, f)),
+            open(os.path.join(root, f), "rb").read(),
+        )
+        for root, _dirs, files in os.walk(d)
+        for f in files
+    }
+
+
+@pytest.fixture()
+def escaped_table(spark, tmp_path):
+    """Partitions whose directory names Spark escapes (``k=a%3A1``,
+    ``t=... 10%3A30%3A00``) plus the NULL partition
+    (``k=__HIVE_DEFAULT_PARTITION__``)."""
+    import datetime as dt
+
+    path = str(tmp_path / "esc_t")
+    t1, t2 = dt.datetime(2024, 1, 1, 10, 30), dt.datetime(2024, 1, 2, 8, 0)
+    spark.createDataFrame(
+        [("a:1", t1, 1, 10.0), ("a:1", t1, 2, 20.0), ("a:1", t2, 3, 30.0),
+         (None, t1, 4, 40.0), ("b/2", t2, 5, 50.0)],
+        "k STRING, t TIMESTAMP, id BIGINT, val DOUBLE",
+    ).write.partitionBy("k", "t").parquet(path)
+    return path, t1, t2
+
+
+def test_partition_scoped_dml_on_escaped_and_null_partitions(spark, escaped_table):
+    """Partition values Spark escapes on disk and the NULL partition are
+    found by every scoped statement: each commits (no unclearable
+    ConcurrentWriteError('retry')) and leaves the other partitions'
+    files untouched."""
+    import os
+
+    path, t1, t2 = escaped_table
+    scope = dict(partition_cols=["k", "t"])
+    assert os.path.isdir(os.path.join(path, "k=a%3A1"))
+    other = os.path.join(path, "k=b%2F2")
+    before = _files(other)
+
+    dml.delete_from(
+        spark, path, F.col("id") == 1,
+        partition_filter=(F.col("k") == "a:1") & (F.col("t") == F.lit(t1)), **scope,
+    )
+    dml.update_table(
+        spark, path, {"val": F.col("val") + 1}, F.lit(True),
+        partition_filter=F.col("k").isNull(), **scope,
+    )
+    dml.merge_into(
+        spark, path,
+        spark.createDataFrame(
+            [("a:1", t2, 3, 99.0), ("a:1", t2, 6, 60.0)],
+            "k STRING, t TIMESTAMP, id BIGINT, val DOUBLE",
+        ),
+        on=["id"], matched_update={"val": F.col("src.val")},
+        partition_filter=F.col("k") == "a:1", **scope,
+    )
+    got = sorted(
+        (r.k or "", r.t, r.id, r.val) for r in spark.read.parquet(path).collect()
+    )
+    assert got == [
+        ("", t1, 4, 41.0),
+        ("a:1", t1, 2, 20.0),
+        ("a:1", t2, 3, 99.0),
+        ("a:1", t2, 6, 60.0),
+        ("b/2", t2, 5, 50.0),
+    ]
+    assert _files(other) == before
+
+
+def test_partition_matching_reads_no_data(spark, escaped_table):
+    """Affected partitions come from the directory listing: matching
+    launches no Spark job and returns the names as they are on disk."""
+    path, t1, _t2 = escaped_table
+    df = spark.read.parquet(path)
+    got, jobs = _jobs(spark, lambda: dml._matching_partitions(
+        spark, df, path,
+        F.col("k").isNull() | ((F.col("k") == "a:1") & (F.col("t") == F.lit(t1))),
+        ["k", "t"],
+    ))
+    assert jobs == 0
+    assert sorted(got) == [
+        "k=__HIVE_DEFAULT_PARTITION__/t=2024-01-01 10%3A30%3A00",
+        "k=a%3A1/t=2024-01-01 10%3A30%3A00",
+    ]
+
+
+def test_partition_scoped_update_delete_job_count(spark, escaped_table):
+    """A scoped UPDATE or DELETE runs at most the target's schema
+    inference and the staged write — no scan to find its partitions."""
+    path, _t1, _t2 = escaped_table
+    scope = dict(partition_filter=F.col("k") == "a:1", partition_cols=["k", "t"])
+    _, jobs = _jobs(spark, lambda: dml.update_table(
+        spark, path, {"val": F.col("val") * 2}, F.col("id") == 2, **scope
+    ))
+    assert jobs <= 2
+    _, jobs = _jobs(spark, lambda: dml.delete_from(spark, path, F.col("id") == 2, **scope))
+    assert jobs <= 2
+
+
+def test_partition_scoped_merge_checks_source_in_one_aggregate(spark, escaped_table):
+    """Both MERGE source checks (scope and cardinality) are one aggregate.
+    With AQE off every query is one job, so a scoped MERGE is exactly
+    three: the source checks, the target's schema inference and the
+    staged write."""
+    path, _t1, t2 = escaped_table
+    source = spark.createDataFrame(
+        [("a:1", t2, 3, 99.0)], "k STRING, t TIMESTAMP, id BIGINT, val DOUBLE"
+    )
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        _, jobs = _jobs(spark, lambda: dml.merge_into(
+            spark, path, source, on=["id"], matched_update={"val": F.col("src.val")},
+            partition_filter=F.col("k") == "a:1", partition_cols=["k", "t"],
+        ))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert jobs == 3
+    assert {r.id: r.val for r in spark.read.parquet(path).collect()}[3] == 99.0
+
+
+def test_merge_out_of_scope_reported_before_duplicates(spark, tmp_path):
+    """A source that is both out of scope and duplicate-keyed raises the
+    scope error: the checks keep their order."""
+    path = str(tmp_path / "order_t")
+    spark.createDataFrame(
+        [("a", 1, 10.0), ("b", 2, 20.0)], "grp STRING, id BIGINT, val DOUBLE"
+    ).write.partitionBy("grp").parquet(path)
+    source = spark.createDataFrame(
+        [("a", 1, 1.0), ("a", 1, 2.0), ("b", 2, 3.0)], "grp STRING, id BIGINT, val DOUBLE"
+    )
+    with pytest.raises(ValueError, match="outside partition_filter"):
+        dml.merge_into(
+            spark, path, source, on=["id"],
+            partition_filter=F.col("grp") == "a", partition_cols=["grp"],
+        )
+
+
+def test_merge_empty_source_keeps_table_byte_identical(spark, table):
+    before = _files(table)
+    empty = spark.createDataFrame([], "id BIGINT, name STRING, val DOUBLE")
+    dml.merge_into(
+        spark, table, empty, on=["id"], matched_update={"val": F.col("src.val")},
+        matched_delete=F.lit(True),
+    )
+    assert _files(table) == before
+
+
+def test_merge_null_key_duplicates_violate_cardinality(spark, table):
+    """NULL keys group together, so two NULL-keyed source rows are a
+    duplicate key, as groupBy counts them."""
+    source = spark.createDataFrame(
+        [(None, "x", 1.0), (None, "y", 2.0)], "id BIGINT, name STRING, val DOUBLE"
+    )
+    with pytest.raises(ValueError, match="cardinality"):
+        dml.merge_into(spark, table, source, on=["id"])

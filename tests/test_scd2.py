@@ -111,3 +111,19 @@ def test_scd2_streaming_cdc_equals_batch_rebuild(spark, tmp_path):
     assert got == want
     # the 2026-day-4 'a' for key 1 is a REAL new version (a->b->a)
     assert sum(1 for r in got if r[0] == 1) == 3
+
+
+def test_scd2_apply_leaves_no_storage_blocks(spark, tmp_path):
+    """The incremental apply commits through a staged swap: once it
+    returns, no cached or checkpointed block is left in storage."""
+    path = str(tmp_path / "dim")
+    b1 = spark.createDataFrame(
+        [(1, "a", _t(0)), (2, "x", _t(0))], "id BIGINT, attr STRING, ts TIMESTAMP"
+    )
+    b2 = spark.createDataFrame(
+        [(1, "b", _t(1)), (3, "n", _t(1))], "id BIGINT, attr STRING, ts TIMESTAMP"
+    )
+    scd2_apply(spark, path, b1)
+    scd2_apply(spark, path, b2)
+    assert len(spark.sparkContext._jsc.sc().getRDDStorageInfo()) == 0
+    assert _rows(spark.read.parquet(path)) == _rows(scd2_history(b1.unionByName(b2)))
