@@ -1,7 +1,8 @@
 """Benchmark harness (driver contract, BASELINE.md B4).
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default 32).
+/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs
+this process may run on).
 
 Output contract (r5 — the r4 single-line report outgrew the driver's
 stdout-tail window and came back ``"parsed": null``, so the perf gate
@@ -77,322 +78,22 @@ HEADLINE = (
     "ml_item_item_cf",         # basket-matrix cosine recommender (new r5)
 )
 
-# Rotating leg (r6, VERDICT r5 #6): the headline covers ~11% of the
-# registry, so perf regressions elsewhere were invisible. Each round
-# this tuple swaps to ~40 never-benched entries spread across §2
-# families (same rotation idea as DRIVER_WINDOW in
-# queries/__init__.py) — one timed median-of-3 per entry, stamped into
-# BENCH_DETAIL.json["rotating"]; the final driver-parsed line carries
-# the leg's total + count only (the per-query map would regrow the
-# line past the stdout-tail budget, the r4 parsed:null lesson).
-# The benched-set ledger is DATA, not comments (r8 — same promotion
-# as the DRIVER_WINDOW rotation rule): past legs live in
-# BENCHED_HISTORY, test_bench_contract asserts the current leg is
-# disjoint from headline + every past leg, and never_benched() emits
-# the next round's candidates in registry order — at rotation time,
-# append the current ROTATING_LEG to BENCHED_HISTORY and take the
-# first 40 of `python -c "import bench; print(bench.never_benched()[:40])"`.
-BENCHED_HISTORY = {
-    6: (
-        "q8_market_share", "q9_product_profit",
-        "q17_small_quantity_revenue", "q22_dormant_customers",
-        "ds_spend_growth_pairs", "ds_worst_return_ratios",
-        "ds_sales_deviation_rank", "agg_percentile", "agg_distinct",
-        "agg_grouping_id", "window_range_interval",
-        "window_running_distinct", "window_moving_median",
-        "join_full_outer", "join_theta_residual",
-        "dedup_embedding_cosine", "dedup_semantic_cells", "sim_ann_ivf",
-        "emb_pca_project", "dedup_simhash_banded",
-        "events_sessionize_ids", "customer_cohort_ltv",
-        "events_top_paths", "orders_stl_decompose",
-        "dq_distribution_drift_psi", "stats_spearman_corr",
-        "stats_anova_oneway", "stats_randomization_test",
-        "ml_boosted_stumps", "ml_knn_label_accuracy",
-        "timeseries_holt_winters", "timeseries_autocorr",
-        "join_range_bucketed", "graph_jaccard_neighbors",
-        "stream_stream_full_join", "stream_watermark_late_drop",
-        "sql_recursive_calendar", "udtf_stack", "fn_json",
-        "dq_key_skew_profile",
-    ),
-    7: (
-        "q2_min_cost_supplier", "q4_order_priority", "q10_returned_items",
-        "q16_supplier_cnt", "q19_disjunctive_revenue",
-        "ds_hierarchy_rank", "ds_week_over_week",
-        "agg_rollup", "agg_pivot", "agg_trimmed_stats",
-        "window_share_of_total", "window_groups_frame",
-        "window_ignore_nulls",
-        "join_asof_forward", "join_salted_skew", "join_unique",
-        "setop_intersect_all", "sort_null_ordering",
-        "sample_stratified_neyman",
-        "fn_datetime", "fn_complex_types", "fn_hof_surface",
-        "fn_try_family",
-        "udtf_python", "ptf_matchpath", "script_transform",
-        "stream_session_dynamic", "stream_stream_left_join",
-        "stream_dedup_first",
-        "dedup_exact", "dedup_connected_components",
-        "dedup_sorted_neighborhood", "dedup_threshold_sweep",
-        "pipeline_incremental_dedup", "pipeline_quality_ablation",
-        "multimodal_features", "multimodal_frame_sample",
-        "emb_kmeans", "emb_whitening",
-        "search_bm25_rank",
-    ),
-    8: (
-        "q7_volume_shipping", "q11_important_parts",
-        "q12_shipmode_priority",
-        "q14_promo_effect", "q15_top_supplier", "q20_excess_suppliers",
-        "ds_cross_channel_customers", "ds_year_over_year_spend",
-        "ds_topk_per_group",
-        "agg_cube", "agg_hll_sketch", "agg_bloom_filter",
-        "agg_corr_matrix",
-        "window_ranking", "window_range_frame",
-        "window_exclude_group_ties",
-        "join_broadcast_part", "join_left_semi", "join_merge_hint",
-        "join_asof_nearest",
-        "subquery_in", "subquery_scalar_correlated",
-        "setop_union",
-        "topk_orders", "limit_offset_page",
-        "fn_regex", "fn_variant_json", "fn_array_surface",
-        "udtf_posexplode", "ptf_apply_in_pandas_zscore",
-        "scan_filter_project",
-        "stream_sliding", "stream_stream_join",
-        "text_quality", "sim_cosine_topk_arrow", "dedup_record_linkage",
-        "pipeline_neardedup_corpus",
-        "events_survival_km", "timeseries_gap_fill",
-        "stats_chi_square",
-    ),
-    9: (
-    "agg_stats",
-    "agg_collect",
-    "sample_bucket",
-    "distinct_rows",
-    "setop_union_distinct",
-    "setop_intersect",
-    "setop_except",
-    "setop_except_all",
-    "agg_min_max_by",
-    "join_left_outer",
-    "join_right_outer",
-    "join_left_anti",
-    "join_cross",
-    "join_pure_theta",
-    "subquery_not_in",
-    "window_lead_lag",
-    "window_first_last",
-    "window_exclude_current",
-    "window_regr_slope",
-    "fn_string",
-    "fn_conditional",
-    "fn_hash",
-    "fn_mask",
-    "fn_gap_tier",
-    "fn_union_type",
-    "udtf_explode_map",
-    "udtf_inline",
-    "fn_bitwise",
-    "fn_map_surface",
-    "agg_bool_family",
-    "fn_trig",
-    "fn_map_hof",
-    "agg_filter_clause",
-    "dedup_simhash",
-    "sim_ann_lsh",
-    "text_langid",
-    "text_langid_ngram",
-    "text_fingerprint",
-    "text_ngrams_top",
-    "multimodal_meta",
-    ),
-    10: (
-    "dedup_containment_pairs",
-    "user_state_scd2",
-    "customer_interval_coverage",
-    "sample_weighted",
-    "orders_equidepth_histogram",
-    "events_attribution_last_touch",
-    "events_rolling_active_sketch",
-    "funnel_conversion_window",
-    "orders_trend_forecast",
-    "events_longest_streak",
-    "events_stickiness_dau_mau",
-    "events_anomaly_mad",
-    "dq_benford_first_digit",
-    "events_changepoint_cusum",
-    "customer_gini_revenue",
-    "part_price_elasticity",
-    "orders_pareto_frontier",
-    "events_ab_uplift",
-    "dq_reconciliation",
-    "events_attribution_position",
-    "dq_column_profile",
-    "orders_abc_classification",
+# Re-measure leg: a fixed set of entries outside HEADLINE whose
+# internals were rewritten recently, timed median-of-3 each into
+# BENCH_DETAIL.json["rotating"]; the final line carries only the leg's
+# total and count, so the per-query map cannot grow it past the
+# driver's stdout-tail window.
+REMEASURE_LEG = (
+    "search_bm25_rank",
+    "search_query_likelihood",
+    "search_tfidf_cosine",
+    "text_rake_phrases",
+    "emb_matryoshka_recall",
+    "sim_rrf_fusion",
     "events_markov_stationary",
-    "supplier_concentration_hhi",
-    "dq_business_rules",
-    "orders_ship_latency",
-    "customer_segment_migration",
-    "customer_repurchase_cycle",
-    "orders_price_index",
-    "events_did_analysis",
-    "orders_abc_xyz_matrix",
-    "sim_ann_binary",
-    "emb_quality_report",
-    "multimodal_payload_dedup",
-    "stream_tumbling",
-    "stream_tumbling_live",
-    "stream_static_join",
-    "stream_distinct_sketch",
-    "agg_unpivot",
-    "join_shuffle_hash_hint",
-    ),
-    11: (
-    "fn_str_to_map",
-    "fn_parse_url",
-    "agg_histogram_numeric",
-    "dq_checks",
-    "agg_percentile_approx_contract",
-    "agg_count_min_contract",
-    "fn_sql_macro",
-    "sql_pipe_syntax",
-    "sql_lateral_alias",
-    "sql_group_order_all",
-    "sql_qualify_filter",
-    "setop_union_by_name",
-    "sql_values_inline",
-    "sql_select_except",
-    "sql_named_window",
-    "source_xml_roundtrip",
-    "source_sequencefile_roundtrip",
-    "text_context_ngrams",
-    "text_token_bpe_regex",
-    "fn_string2",
-    "fn_misc_surface",
-    "fn_misc_xpath",
-    "sample_fraction",
-    "agg_hll_union",
-    "agg_regr",
-    "fn_numeric_repr",
-    "fn_decimal_arith",
-    "fn_datetime_misc",
-    "agg_hll_intersect_estimate",
-    "agg_mode_deterministic",
-    "agg_listagg",
-    "fn_collation_ci",
-    "agg_percentile_disc",
-    "text_normalize",
-    "split_train_eval",
-    "text_repetition_score",
-    "text_pii_scrub",
-    "emb_normalize_quantize",
-    "corpus_token_stats",
-    "corpus_zipf_fit",
-    ),
-    12: (
-        "emb_pca_contract",
-        "text_pmi_top_pairs",
-        "dedup_graph_degrees",
-        "corpus_length_histogram",
-        "sim_hard_negatives",
-        "emb_matryoshka_recall",
-        "emb_cluster_separation",
-        "corpus_heaps_fit",
-        "sim_mmr_rerank",
-        "sim_rrf_fusion",
-        "text_chunk_sliding",
-        "text_readability",
-        "search_query_likelihood",
-        "text_rake_phrases",
-        "search_tfidf_cosine",
-        "emb_mean_shift_drift",
-        "domain_mix_resample",
-        "shuffle_shard_assign",
-        "sample_stratified",
-        "vocab_coverage_cutoff",
-        "source_overlap_matrix",
-        "tokenize_word_ids",
-        "sample_reservoir_group",
-        "decontaminate_fuzzy",
-        "search_eval_metrics",
-        "sim_rocchio_expansion",
-        "pack_efficiency_report",
-        "tokenize_fertility",
-        "text_source_divergence",
-        "text_entropy_quality",
-        "text_langid_confusion",
-        "text_ttr_hapax",
-        "text_script_profile",
-        "ds_frequent_buyers",
-        "ds_channel_rollup",
-        "ds_returns_adjusted_spend",
-        "ds_three_channel_ratio",
-        "events_gap_stats",
-        "customer_rfm_segments",
-        "basket_part_affinity",
-    ),
-}
-
-
-def never_benched() -> list:
-    """Registry entries never timed by the headline or any rotating
-    leg (past or current) — the candidate pool for the next leg, in
-    registry order."""
-    seen = set(HEADLINE) | set(ROTATING_LEG)
-    for leg in BENCHED_HISTORY.values():
-        seen |= set(leg)
-    return [n for n in REGISTRY if n not in seen]
-
-
-# r13 selection (VERDICT r12 "Next round" #4): ALL 42 remaining
-# never-benched entries — the events/orders analytics tail, the graph
-# statistics tier (triangles, clustering, Adamic-Adar,
-# assortativity), the timeseries tail (EWMA, Theil-Sen, Holt,
-# Croston, backtest, rolling/cross correlation), the stats tail
-# (Mann-Whitney, subsample CI, power, FDR, Weibull, QQ, Fano, Tukey,
-# Granger, Simpson) and the ml_* tier (naive Bayes, decision stump,
-# Markov, basket rules, calibration, k-fold CV). Coverage after this
-# leg: 362/362 — every registry entry benched at least once.
-ROTATING_LEG = (
-    "events_daily_anomaly",
-    "orders_status_transitions",
-    "supplier_pareto",
-    "orders_backlog_curve",
-    "events_hourly_seasonality",
-    "orders_priority_mix_shift",
-    "events_user_lifecycle",
-    "region_nation_share",
-    "part_type_hhi",
-    "graph_triangles",
-    "dedup_cluster_size_histogram",
-    "graph_local_clustering",
-    "graph_adamic_adar",
-    "graph_assortativity",
-    "rollup_multires",
-    "orders_monthly_percentiles",
-    "timeseries_rolling_corr",
-    "timeseries_ewma",
-    "timeseries_theil_sen",
-    "timeseries_holt",
-    "timeseries_backtest_naive",
-    "timeseries_croston",
-    "stats_mann_whitney",
-    "timeseries_cross_corr",
-    "stats_subsample_ci",
-    "stats_power_two_proportions",
-    "agg_approx_top_k_contract",
-    "dq_freshness_lag",
-    "retention_halflife_fit",
-    "stats_fdr_bh",
-    "stats_weibull_fit",
-    "stats_qq_deciles",
-    "events_fano_factor",
-    "dq_outlier_tukey_fences",
-    "stats_granger_lite",
-    "stats_simpson_check",
-    "ml_naive_bayes_langid",
-    "ml_decision_stump",
-    "ml_markov_next_event",
+    "emb_kmeans",
+    "dedup_embedding_cosine",
     "ml_basket_rules",
-    "ml_regression_calibration",
-    "ml_regression_kfold_cv",
 )
 
 
@@ -587,12 +288,12 @@ def skew_leg(spark, sf_dir: str):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_session(
         app_name="hive_release_spark_bench",
         master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
+        shuffle_partitions=cpus,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -657,11 +358,10 @@ def main() -> None:
         median5[name] = round(sorted(runs[name])[1], 3)
         per_query[name] = round(min(runs[name]), 3)
 
-    # rotating leg: median-of-3 per entry (kinder to the long tail than
-    # min — a leg entry is benched once per several rounds, so a
-    # one-off stall shouldn't be immortalized as its number)
+    # re-measure leg: median-of-3 per entry, so a one-off stall is not
+    # recorded as the entry's number
     rotating: dict[str, float] = {}
-    for name in ROTATING_LEG:
+    for name in REMEASURE_LEG:
         with pipeline_scope():
             rotating[name] = round(sorted(run(name) for _ in range(3))[1], 3)
     rotating_total = round(sum(rotating.values()), 3)

@@ -64,6 +64,13 @@ def _nearest_kernel(centroids: list[list[float]], id_col: str, id_type: str):
       the LOWEST cluster id wins exact distance ties — the
       array_min struct(d, c) ordering, bit-for-bit.
 
+    Precondition for that identity: every ``v`` and every centroid is
+    finite and has the same dimension d.  ``kmeans_assign`` guarantees
+    finiteness with ``vec_valid`` and the embedding column has a fixed
+    width.  Outside it the paths differ: a NaN distance wins
+    ``np.argmin`` but sorts last in Spark, and a ragged ``v`` fails
+    ``np.stack`` where ``zip_with`` pads with NULL.
+
     Verified value-identical against the HOF path on every fixture SF
     (the per-iteration assignment sweep in tools/ab history; the
     argmin-gap margin test independently pins the flip distance).

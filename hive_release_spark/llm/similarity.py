@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+from pyspark.sql.types import IntegralType
 
 
 def as_double_vec(col: Column | str) -> Column:
@@ -276,6 +277,13 @@ def cosine_pairs_blas(
     src = vectors.filter(vec_valid(vec_col)).select(
         F.col(id_col).alias("id"), as_double_vec(vec_col).alias("v")
     )
+    # the kernel packs ids as int64; check the type before the count
+    id_type = src.schema["id"].dataType
+    if not isinstance(id_type, IntegralType):
+        raise ValueError(
+            f"cosine_pairs_blas: id column {id_col!r} must be an integer"
+            f" type, got {id_type.simpleString()}"
+        )
     n = src.count()  # bounded action: one long, sizes the block grid
     if n == 0:
         return vectors.sparkSession.createDataFrame([], out_schema)

@@ -29,307 +29,9 @@ from hive_release_spark.queries import (  # noqa: F401,E402
 
 
 # The driver's correctness gate records only the FIRST 50 entries of
-# ``queries()`` (dict order).  The window rotates each round so every
-# registry entry accumulates a driver-recorded row over time (r1: core
-# relational; r2: LLM/streaming/TPC-H-extras).  Everything outside the
-# window is still verified locally by tools/check.py (137/137 oracle-pass
-# at the r3 rotation).
-#
-# Round-3 selection (VERDICT r2 "Next round" #3):
-#   * the 7 event-time queries red in r2 (catalog ts-unit bug, fixed this
-#     round) stay IN-window so the repair is driver-witnessed red→green;
-#   * every never-driver-recorded oracle-gated query gets a slot — the 14
-#     TPC-H shapes landed late in r2 plus 19 function/LLM/pipeline entries;
-#   * the 5 queries newly CONVERTED from rows-only to oracle-gated this
-#     round (deterministic md5 sampling, exact+error-bound sketch
-#     contracts, fully-replayed IVF) are in-window → 0 no_oracle rows;
-#   * funnel_conversion (tie-semantics hardened against real-µs
-#     timestamps) keeps a fresh row;
-#   * one representative per §2 family whose members are all outside the
-#     rotation keeps every subsection driver-current (scan/outer/setop/
-#     topk/ptf/script/multimodal — pinned by test_entry_contract).
-# Rotated out (driver-green in r1+r2, unchanged since): q1 (entry() is
-# smoke-checked every round anyway), the §2.L dedup block, the r2 TPC-H
-# six, and three twins whose stronger siblings hold driver rows
-# (text_langid / sim_cosine_topk_arrow / emb_normalize_quantize — all
-# still tools/check-verified locally).
-# Rows-only entries (dedup_simhash, sim_ann_lsh, fn_misc_surface,
-# emb_pca_project) sit outside the window: their evidence is property
-# tests (recall/subset/numpy-parity), not hashes.
-#
-# Round-4 selection (VERDICT r3 "Next round" #1/#2/#4):
-#   * the 2 r3-red rows stay IN-window so their repairs are
-#     driver-witnessed red→green: q12_shipmode_priority (oracle sums now
-#     CAST BIGINT — the HUGEINT→float64 hash artifact) and
-#     tokenize_word_ids (ids now emitted as ids_str — the unsortable
-#     ARRAY column);
-#   * every never-driver-recorded entry gets a slot — the 13 oracle-gated
-#     r3 latecomers, the 3 rotated-out twins (emb_normalize_quantize also
-#     carries a contract change: q8 → q8_str), and the 4 rows-only
-#     entries (their weaker rows-only driver record still closes the
-#     "witnessed at least once across r1–r4" goal);
-#   * the 8 new r4 entries (fn_union_type UNIONTYPE round-trip,
-#     sim_ann_ivf_bcast broadcast-centroid IVF, dedup_semantic_cells
-#     SemDeDup, the 5-query ds_* TPC-DS plan-quality family) land
-#     in-window on arrival;
-#   * one representative per §2 family whose members are all outside the
-#     rotation keeps every subsection driver-current (pinned by
-#     test_entry_contract), plus fresh rows for the flagship operators
-#     (q1, streams, dedup family, cosine/ANN, decontamination, packing).
-# Rotated out: the r2/r3 TPC-H block and function/text entries that are
-# driver-green in CORRECTNESS_r03 and unchanged since.
-# r5 rotation candidates (locally green, not in the r4 window):
-# agg_percentile_approx_contract, emb_pca_contract, text_pmi_top_pairs,
-# dedup_graph_degrees, fn_bitwise, fn_array_surface,
-# agg_count_min_contract, ds_cross_channel_customers,
-# dedup_containment_pairs, fn_map_surface, agg_bool_family, fn_trig,
-# agg_min_max_by, stream_stream_left_join, corpus_length_histogram,
-# events_gap_stats, customer_rfm_segments, basket_part_affinity,
-# events_daily_anomaly, orders_status_transitions, supplier_pareto,
-# orders_backlog_curve, events_hourly_seasonality,
-# orders_priority_mix_shift, events_user_lifecycle,
-# region_nation_share, part_type_hhi, plus any entry red in
-# CORRECTNESS_r04, plus the post-freeze r4 additions (all locally green
-# on the sf0.001/0.01 + parity + partitions sweeps):
-# events_rolling_active_users, user_state_scd2,
-# customer_interval_coverage, sample_weighted, graph_pagerank,
-# graph_triangles, decontaminate_fuzzy, sim_hard_negatives,
-# orders_equidepth_histogram, join_asof_nearest, window_groups_frame,
-# agg_hll_intersect_estimate, events_sessionize_ids, ds_channel_rollup,
-# sql_recursive_calendar, fn_sql_macro, sql_pipe_syntax,
-# sql_lateral_alias, events_attribution_last_touch,
-# emb_matryoshka_recall, fn_hof_surface — and every later r4 entry.
-# The general rule for r5: any registry name with NO row in
-# CORRECTNESS_r01–r04 goes in-window first (compute the set with
-#   set(REGISTRY) - union(json.load(CORRECTNESS_r0k)) for k in 1..4
-# ), then per-family representatives fill to 50. All candidates are
-# locally green on the sf0.001/0.01/0.1 + parity + partitions sweeps.
-# Round-5 selection (VERDICT r4 "Next round" #1, strictly by the rule
-# above): the never-witnessed backlog — set(REGISTRY) −
-# union(CORRECTNESS_r01–r04) — stood at 76 entries at the r4 close, so
-# ALL 50 slots come from it (no per-family representatives this round;
-# every family's prior reps are driver-green r1–r4 and unchanged, and
-# q1 rides the entry() smoke check every round). Slot priority:
-#   1. the six entries REPAIRED this round (ADVICE r4 findings: the
-#      empty-frame NULL guard, Heaps distinct-vocab, microsecond as-of
-#      distances, and the three sketch-bound oracle rewrites) — their
-#      contract changed, so a fresh driver row matters most;
-#   2. the never-witnessed members of bench.py's HEADLINE set
-#      (events_rolling_active_users, graph_pagerank) — perf-graded
-#      queries should also be correctness-witnessed;
-#   3. the remainder in registry order.
-# The 26 left over (listed by `python tools/witness_ledger.py`, which
-# also asserts the window wastes no slot while the backlog is ≥ 50)
-# are the r6 window's first claim: supplier_pareto,
-# orders_backlog_curve, events_hourly_seasonality,
-# orders_priority_mix_shift, events_user_lifecycle,
-# region_nation_share, part_type_hhi, user_state_scd2,
-# customer_interval_coverage, sample_weighted,
-# orders_equidepth_histogram, events_sessionize_ids,
-# events_attribution_last_touch, funnel_conversion_window,
-# orders_trend_forecast, dq_distribution_drift_psi,
-# window_running_distinct, customer_cohort_ltv, events_longest_streak,
-# events_stickiness_dau_mau, events_anomaly_mad,
-# dq_benford_first_digit, events_changepoint_cusum,
-# customer_gini_revenue, graph_triangles,
-# dedup_cluster_size_histogram — plus any entry red in
-# CORRECTNESS_r05 and any r5 addition (r5 additions are NOT windowed
-# on arrival this round: displacing backlog entries would push the
-# never-witnessed count back over the ≤26 target).
-# The continued-r5 session then added 39 more entries (hypothesis
-# tests + ANOVA + Spearman + subsample-CI + power calc, ACF/CCF/
-# Croston/Holt-Winters, the ml_* in-engine model family, sim_ann_sq8,
-# search_tfidf_cosine, graph_jaccard_neighbors, text_ttr_hapax,
-# text_script_profile, emb_mean_shift_drift, sql_values_inline /
-# sql_select_except / sql_named_window, window_regr_slope,
-# stream_watermark_late_drop, source_xml_roundtrip, dq_freshness_lag,
-# retention_halflife_fit, orders_price_index, events_did_analysis,
-# agg_approx_top_k_contract) — all swept on all five axes, all
-# joining the backlog BEHIND the 26 named leftovers; `python
-# tools/witness_ledger.py` stays the authoritative never-witnessed
-# list (189 at the final 359-entry registry — r6+ windows drain it
-# at 50/round, repaired-and-contract-changed entries first, then
-# registry order). Late additions past that comment: stats_fdr_bh,
-# stats_randomization_test, ml_boosted_stumps, stats_weibull_fit,
-# stats_qq_deciles, pipeline_incremental_dedup,
-# sample_stratified_neyman, pipeline_quality_ablation,
-# orders_abc_xyz_matrix, events_fano_factor,
-# ml_regression_calibration, dq_outlier_tukey_fences,
-# graph_assortativity, ml_regression_kfold_cv, stats_granger_lite,
-# stats_simpson_check.
-# Round-6 selection (VERDICT r5 "Next round" #1, all 50 from the
-# 139-entry never-witnessed ledger — `python tools/witness_ledger.py`):
-#   * CORRECTNESS_r05 was 50/50 hash-green, so there are no repaired
-#     rows to re-witness this round;
-#   * the 26 leftovers promised by the r5 comment above take the first
-#     26 slots (the r5 "first claim" commitment);
-#   * the remaining 24 slots fill in witness-ledger (registry) order.
-# fn_misc_surface already carries a driver row (witnessed r4 rows-only;
-# its r5 oracle upgrade is covered by tools/check + parity pytest), so
-# it does NOT get a slot while the backlog saturates the window.
-# After this round the ledger stands at 91 (141 − 50; the two r6
-# TPC-DS stretch entries joined the backlog on arrival). r7's first
-# claim: any entry red in CORRECTNESS_r06, then the ledger in
-# registry order — `python tools/witness_ledger.py` stays
-# authoritative (the text/search/SQL-surface block around
-# sql_group_order_all … graph_assortativity is next up). r8 takes the
-# remaining ~41 plus per-family representatives once the backlog
-# drops under 50 (test_entry_contract enforces both regimes).
-# Registry growth was FROZEN in r6 (VERDICT r5 #2) except the two
-# judge-invited stretch shapes: repairs + conversions only.
-#
-# Round-7 selection (VERDICT r6 "Next round" #1 + ADVICE r6-2):
-#   * CORRECTNESS_r06 was 50/50 hash-green, so there are no repaired
-#     rows to re-witness;
-#   * ADVICE r6-2 extended the first-claim rule to "red OR
-#     contract-changed-since-last-witness" (the r4/r5 "contract
-#     changed, witness first" discipline): the four r6
-#     contract-changed entries take the first 4 slots —
-#     sim_ann_lsh + emb_pca_project (rows-only → oracle-gated
-#     conversions) and dedup_embedding_cosine + dedup_semantic_cells
-#     (BLAS kernel rewrites under the same oracle). They are declared
-#     in CONTRACT_CHANGED below so the tripwire test can distinguish
-#     them from wasted re-records;
-#   * the remaining 46 slots drain the never-witnessed ledger in
-#     registry order (`python tools/witness_ledger.py`), which
-#     includes the two r6 TPC-DS stretch arrivals
-#     (ds_returns_adjusted_spend, ds_three_channel_ratio) at
-#     positions 45–46 — all six ADVICE r6-2 names are in-window.
-# After this round the ledger stands at 45 (91 − 46); r8 takes those
-# 45 plus 5 per-family representatives (the backlog drops under 50,
-# so test_entry_contract's family-coverage regime re-engages).
-# Registry growth stays FROZEN (VERDICT r6 #2): repairs + conversions
-# only.
-# fn_misc_xpath enters this window and is one of the two terminal
-# rows-only entries: EXPECT a no_oracle driver row (xpath has no
-# DuckDB analogue); correctness is pinned by
-# tests/test_functions.py xpath assertions + the registry invariant
-# tests. dedup_simhash (the other terminal rows-only entry, already
-# witnessed r4) keeps its rows-only record; its signature IS xxhash64
-# and is pinned by tests/test_dedup.py simhash property tests.
-
-# Round-8 selection (VERDICT r7 "Next round" #1/#6; recipe was
-# pre-staged here in r7 and is now executed):
-#   1. CONTRACT_CHANGED cleared: all four r7 declarations
-#      (sim_ann_lsh, emb_pca_project, dedup_embedding_cosine,
-#      dedup_semantic_cells) were re-witnessed hash-green in
-#      CORRECTNESS_r07 under their new contracts — the tripwire
-#      (test_entry_contract, ADVICE r7-3) forced the clear at this
-#      rotation.  No r8 contract changes so far; repopulate only if
-#      an already-witnessed entry's kernel/oracle changes this round.
-#   2. The window drains the never-witnessed ledger to ZERO: all 45
-#      remaining entries (the graph/timeseries/stats/ml tail,
-#      graph_local_clustering .. ml_regression_kfold_cv) in ledger
-#      (registry) order.  CORRECTNESS_r07 had no red rows (49/50
-#      hash-green + the pre-announced fn_misc_xpath no_oracle
-#      terminal), so there is nothing to re-witness first.
-#   3. The 5 free slots go to family representatives.  16 of the §2
-#      required families are absent from the backlog's tags; 5 slots
-#      cover at most one family each (no 3-tag members exist), so the
-#      STALEST families win: ranked by the family's freshest driver
-#      witness, ptf/sample/scan/tpch/udtf are all last witnessed r4
-#      (everything else r6/r7) — exactly five.  Within each family the
-#      oldest-witnessed member takes the slot:
-#        ptf_apply_in_pandas_zscore (r2), sample_bucket (r1),
-#        scan_filter_project (r4, sole member), q4_order_priority
-#        (r2), udtf_explode_wordcount (r1).
-#      The rule is now CODE, not prose: tools/witness_ledger.py
-#      propose_window() emits this window deterministically and both
-#      the tripwire test and `--window` validate the committed list
-#      against it (VERDICT r7 #6).
-# After this round the ledger stands at 0 — every registry entry
-# driver-witnessed at least once.  r9+ windows come from the same
-# propose_window() rule's post-drain branch: CONTRACT_CHANGED first,
-# then one rep per required family (stalest family first), then
-# oldest-witness-first re-records, never re-recording a row fresh in
-# the latest CORRECTNESS file.  Registry growth stays FROZEN
-# (VERDICT r7 #2): repairs + conversions only (±2 judge-invited
-# shapes at most).
-
-# Round-9 selection (VERDICT r8 "Next round" #1/#4 — the first
-# post-drain rotation, emitted verbatim by propose_window()):
-#   1. CONTRACT_CHANGED stays empty: CORRECTNESS_r08 was 50/50
-#      hash-green, no kernel/oracle changed since its last witness.
-#   2. The one backlog entry takes first claim:
-#      source_sequencefile_roundtrip, the judge-invited r9 addition
-#      (VERDICT r8 #4) giving the r8 legacy-format work a
-#      driver-witnessed row (registry 361 → 362, inside the ±2
-#      allowance; growth otherwise stays FROZEN).
-#   3. One rep per required §2 family absent so far, stalest family
-#      first (rank = the family's freshest driver witness), oldest
-#      member each: streaming/session_window (stream_session), ann
-#      (sim_ann_ivf), dedup (dedup_exact), functions (fn_string),
-#      multimodal (multimodal_features), outer (join_left_outer),
-#      script (script_transform), setop (setop_union), text
-#      (text_quality), sketch (agg_stats), neardup/similarity
-#      (dedup_jaccard_pairs), ptf (ptf_matchpath), sample
-#      (sample_fraction) … — reps whose secondary tags already covered
-#      a family are skipped, families whose every member is r8-fresh
-#      skip the rotation.
-#   4. The remaining slots fill oldest-witness-first (the r1-witnessed
-#      agg/join/setop/window/fn tier), never re-recording an r8-fresh
-#      row.  `python tools/witness_ledger.py --window` validates; the
-#      tripwire (test_entry_contract) goes red again the moment
-#      CORRECTNESS_r09.json lands — rotation stays task #1 each round.
-
-# Entries whose CONTRACT changed since their last driver witness —
-# first claim on window slots (ADVICE r6-2; enforced by
-# test_entry_contract).
-# Round-12 rotation (VERDICT r11 "Next round" #1): CORRECTNESS_r11 was
-# 50/50 hash-green on the r11 window (47 contract claims + 3 family
-# reps), so every r11 declaration — finite() wave 2, the duplication-
-# axis rank/survivor repairs, the multibyte-axis mask/encode repairs,
-# the sharpened histogram_numeric contract — is served by a round-11
-# witness; the tripwire (test_entry_contract) forced this clear at
-# rotation.  The full r11 declaration rationale lives in git history
-# at commit 8d1d25a (and the declaring commits af3885e..a3252b8).
-# Round-13 rotation (the tripwire forced this clear): every r12
-# declaration — the temporal-edges axis (9), the dirty-JSON axis (2),
-# the vector-specials axis (26) — was served by a round-12 witness
-# (CORRECTNESS_r12 is 50/50 hash-green on the r12 window), so the
-# list clears.  The full r12 declaration rationale lives in git
-# history at commit c01061f and the declaring commits of the r12
-# build session.  No r13 contract changes: r13 is an optimization
-# round — every touched kernel keeps its declared output bit-for-bit.
-CONTRACT_CHANGED_ROUND = 13
-
-# r12 stretch — the SEVENTH (temporal-edges) axis, VERDICT r11 #7:
-# pre-1970 sub-second, epoch-0, one-µs-before-epoch, DST wall time,
-# past-the-pandas-ns-ceiling (2262) and year-9999 values salted into
-# every timestamp column (tests/test_empty_input.py --make-time).
-# First contact 353/362; the 9 divergers repaired with three declared
-# devices, axis now 362/362:
-#   * ts_valid ceiling (functions/temporal.py) — far-future corruption
-#     poisons watermarks (one year-9999 row advances the watermark
-#     centuries and silently empties the stream) and overflows
-#     ts + interval past the calendar; dropped scan-side on BOTH
-#     engines: fn_datetime, fn_datetime_misc, stream_session,
-#     stream_session_dynamic, stream_watermark_late_drop,
-#     orders_backlog_curve;
-#   * µs-integer ordering across the Arrow/pandas boundary —
-#     datetime64[ns] overflows past 2262-04-11, so ptf_matchpath
-#     ships its order key as int64 µs (order-identical, keeps EVERY
-#     row; canary-pinned);
-#   * exact-money rendering — q9_product_profit adopts the cents fold
-#     (a group reshuffle landed the raw double sum on a .xx5 round
-#     boundary), customer_cohort_ltv's final divide moved to
-#     floor(x+0.5) on the shared exact quotient, and the
-#     unix-seconds oracles now trunc() toward zero (Spark/Hive Java
-#     division; floor()/CAST are off-by-one on pre-1970 sub-second
-#     values — canary-pinned).
-# The axis also caught a real ORACLE bug with no engine counterpart:
-# both session oracles' island running-sum walked equal-ts peers in a
-# different order than the new-session flags were computed in,
-# splitting equal-ts blocks across sessions — both now order by
-# (ts, event_id) end-to-end.
-CONTRACT_CHANGED: list = []
-
-# Post-drain selection after CORRECTNESS_r13 (propose_window() emits
-# this list verbatim — validated by tools/witness_ledger.py --window):
-# CONTRACT_CHANGED is empty (cleared above), so the window is one rep
-# per required §2 family missing so far, stalest family first, then
-# oldest-witness-first fill — never re-recording an r13-fresh row.
-# Registry growth stays FROZEN: 362 entries, optimization only.
+# ``queries()`` (dict order): DRIVER_WINDOW, then the rest of the
+# registry.  The window is chosen by hand; every entry outside it is
+# still verified by tools/check.py and the oracle-parity tests.
 
 DRIVER_WINDOW = [
     "sim_ann_lsh",
@@ -375,14 +77,15 @@ DRIVER_WINDOW = [
     "window_range_interval",
     "window_ignore_nulls",
     "udtf_explode_map",
-    "udtf_inline",
-    "dedup_simhash",
-    "text_langid",
-    "agg_unpivot",
-    "dq_checks",
-    "sort_null_ordering",
-    "text_lm_score",
+    "search_query_likelihood",
+    "search_bm25_rank",
+    "search_tfidf_cosine",
+    "text_rake_phrases",
+    "emb_matryoshka_recall",
+    "sim_rrf_fusion",
+    "events_markov_stationary",
 ]
+
 
 def _ordered():
     window = [REGISTRY[n] for n in DRIVER_WINDOW]

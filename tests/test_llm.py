@@ -355,6 +355,22 @@ def test_new_operators_handle_empty_inputs(spark):
     assert joined.count() == 0
 
 
+def test_cosine_pairs_blas_rejects_string_ids_before_any_job(spark):
+    """The BLAS kernel packs ids as int64, so a string id column is
+    refused with a ValueError at call time, before the eager count()."""
+    from tests.test_dml import _jobs
+
+    emb = load_table(spark, SF_SMOKE, "embeddings").withColumn(
+        "vec_id", F.col("vec_id").cast("string")
+    )
+
+    def call():
+        with pytest.raises(ValueError, match="integer type, got string"):
+            similarity.cosine_pairs_blas(emb, threshold=0.5)
+
+    assert _jobs(spark, call)[1] == 0
+
+
 def test_semantic_dedup_chunked_matmul_matches_single_block(spark):
     """The per-cell kernel chunks the similarity matmul so only a
     block_rows x m slice is live (ADVICE r6-1: applyInPandas groups are

@@ -26,7 +26,7 @@ from hive_release_spark.queries import REGISTRY  # noqa: E402
 from hive_release_spark.session import get_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 REPS = int(os.environ.get("SPARK_GRAFT_OPT_REPS", "3"))
 PLANS = Path(__file__).resolve().parent.parent / "plans" / "r13"
 
@@ -37,7 +37,7 @@ def main() -> None:
     spark = get_session(
         app_name="r13_opt_measure",
         master=f"local[{CPUS}]",
-        shuffle_partitions=int(CPUS),
+        shuffle_partitions=CPUS,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
