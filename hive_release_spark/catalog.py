@@ -9,11 +9,26 @@ is the thin layer that registers the driver testdata
 At 100 TB these would be real external tables (``saveAsTable`` +
 ``partitionBy``/``bucketBy``); the loader keeps that path open by accepting
 any directory layout where ``{name}.parquet`` exists.
+
+Schemas are recorded once per file version. Hive compiles a query against
+the columns its metastore recorded for the table (``StorageDescriptor`` /
+``FieldSchema``) and never opens data files to learn their types; Spark's
+Hive path does the same with ``spark.sql.hive.caseSensitiveInferenceMode=
+INFER_AND_SAVE``. ``spark.read.parquet`` without a schema instead answers
+every call with a one-task schema-inference job, so the first load of a
+table file keeps the ``StructType`` Spark inferred, and later loads of the
+same file version pass it through ``spark.read.schema`` and launch no job.
+A file version is ``(realpath, inode, size, mtime_ns)`` plus the session
+settings that map Parquet types to Spark types; a rewritten file or a
+changed setting infers again. Only regular files are recorded: a
+directory's own ``stat`` does not change when a file below it is
+rewritten, so a directory layout is inferred on every load.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,17 +74,48 @@ _EVENTS_RAW_NS_SCHEMA = T.StructType(
     ]
 )
 
-_events_ts_unit_cache: dict[str, str] = {}
+# Session settings that change how Parquet types map to Spark types; an
+# inferred schema is only reused under the values it was inferred with.
+_PARQUET_TYPE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+
+# Footer-derived facts per file: realpath -> ((inode, size, mtime_ns), facts).
+# Threads racing on an entry at worst infer the same fact twice.
+_file_facts: dict[str, tuple[tuple[int, int, int], dict]] = {}
+
+
+def _facts(path: str) -> dict | None:
+    """The facts recorded for the current version of the regular file at
+    ``path`` (empty if it changed since they were recorded), or None if
+    ``path`` is not a regular file."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    real = os.path.realpath(path)
+    version = (st.st_ino, st.st_size, st.st_mtime_ns)
+    entry = _file_facts.get(real)
+    if entry is None or entry[0] != version:
+        entry = _file_facts[real] = (version, {})
+    return entry[1]
 
 
 def events_ts_unit(path: str) -> str:
     """Return the parquet time unit ('ns', 'us', 'ms', 's') of events.ts.
 
-    Reads only the file footer (cheap), cached per path. Self-verifying by
-    design: if the driver regenerates the fixture with a different unit the
-    loader adapts instead of silently corrupting every event-time operator.
+    Reads only the file footer (cheap), recorded per file version.
+    Self-verifying by design: if the driver regenerates the fixture with a
+    different unit the loader adapts instead of silently corrupting every
+    event-time operator.
     """
-    unit = _events_ts_unit_cache.get(path)
+    facts = _facts(path)
+    unit = facts.get("ts_unit") if facts is not None else None
     if unit is None:
         import pyarrow.parquet as pq
 
@@ -92,7 +138,8 @@ def events_ts_unit(path: str) -> str:
                 "tz-naive (isAdjustedToUTC=false) timestamp"
             )
         unit = type_str[len("timestamp[") :].split("]")[0].split(",")[0]
-        _events_ts_unit_cache[path] = unit
+        if facts is not None:
+            facts["ts_unit"] = unit
     return unit
 
 
@@ -100,7 +147,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one table (Hive TableScanOperator analogue — SURVEY.md §2.A).
 
     Column pruning and predicate pushdown happen automatically once callers
-    ``select``/``filter`` on the returned frame.
+    ``select``/``filter`` on the returned frame. The schema is inferred once
+    per file version and recorded, as the Hive metastore records a table's
+    columns and Spark's ``INFER_AND_SAVE`` saves an inferred Hive schema;
+    repeat loads of an unchanged file launch no Spark job. A directory
+    layout is inferred on every load, since its ``stat`` does not change
+    when a file below it is rewritten.
     """
     path = table_path(sf_dir, name)
     if name == "events" and events_ts_unit(path) == "ns":
@@ -110,7 +162,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df.withColumn(
             "ts", F.timestamp_micros(F.expr("ts DIV 1000")).cast(T.TimestampNTZType())
         )
-    return spark.read.parquet(path)
+    facts = _facts(path)
+    if facts is None:
+        return spark.read.parquet(path)
+    key = ("schema", *(spark.conf.get(k) for k in _PARQUET_TYPE_CONFS))
+    if key not in facts:
+        facts[key] = spark.read.parquet(path).schema
+    return spark.read.schema(facts[key]).parquet(path)
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:

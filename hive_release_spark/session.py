@@ -24,6 +24,17 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 
+def _driver_memory() -> str:
+    """Half the machine's physical memory, at most 16g (16g where
+    ``/proc/meminfo`` is absent)."""
+    try:
+        with open("/proc/meminfo") as fh:
+            total_kb = int(fh.readline().split()[1])  # MemTotal
+    except OSError:
+        return "16g"
+    return f"{min(16 * 1024, total_kb // 2048)}m"
+
+
 def get_session(
     app_name: str = "hive_release_spark",
     master: str | None = None,
@@ -43,8 +54,9 @@ def get_session(
         builder = builder.master(master)
         if master.startswith("local"):
             # local mode = driver-only: the driver heap IS executor memory.
-            # The 1g default causes GC thrash with 32 task threads.
-            builder = builder.config("spark.driver.memory", "16g")
+            # The 1g default causes GC thrash with 32 task threads; more
+            # than the machine holds gets the process killed instead.
+            builder = builder.config("spark.driver.memory", _driver_memory())
     conf: dict[str, str] = {
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",

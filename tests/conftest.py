@@ -33,6 +33,22 @@ def spark():
     yield s
 
 
+def _jobs(spark, fn):
+    """Run ``fn()`` under a fresh job group; return (its result, the
+    number of Spark jobs it launched)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def oracle_con():
     from hive_release_spark import testing

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hive_release_spark.operators import dml
+from tests.conftest import _jobs
 
 
 @pytest.fixture()
@@ -387,22 +388,6 @@ def test_merge_schema_evolution(spark, tmp_path):
         matched_update={"val": F.col("src.val")},
     )
     assert set(spark.read.parquet(path2).columns) == {"id", "val"}
-
-
-def _jobs(spark, fn):
-    """Run ``fn()`` under a fresh job group; return (its result, the
-    number of Spark jobs it launched)."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _files(d):

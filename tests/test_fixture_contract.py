@@ -8,7 +8,8 @@ collapsed into January 1970 — 7 red oracle rows from one line. These tests
 pin the loader's assumptions to the files themselves so the next silent
 regeneration fails HERE, loudly, instead of as a spray of oracle mismatches.
 
-Footer-only reads (pyarrow) — no Spark session needed, sub-second.
+Footer-only reads (pyarrow), except the loader tests at the end, which
+check that ``load_table`` reads each file version's own schema.
 """
 
 from __future__ import annotations
@@ -217,3 +218,119 @@ def test_lineitem_key_nonuniqueness_is_known(sf_dir):
         assert full_dups == 0, "lineitem grew full-row duplicates"
     finally:
         con.close()
+
+
+def _replace_parquet(table, path):
+    """Regenerate ``path`` the way a fixture build does: write a sibling
+    file, then rename it over the old one."""
+    import os
+
+    pq.write_table(table, path + ".tmp")
+    os.replace(path + ".tmp", path)
+
+
+def test_events_ts_unit_follows_rewritten_file(spark, tmp_path):
+    """The sniffed unit belongs to a file version, not a path: an events
+    file regenerated from µs to ns at the same path must take the ns arm."""
+    import pyarrow as pa
+
+    from hive_release_spark.catalog import load_table
+
+    path = table_path(str(tmp_path), "events")
+    us = pa.array([1704067200_000_000, 1704070800_123_456], pa.timestamp("us"))
+    cols = {
+        "event_id": pa.array([1, 2], pa.int64()),
+        "user_id": pa.array([10, 11], pa.int64()),
+        "event_type": pa.array(["view", "click"]),
+        "value": pa.array([1.0, 2.0], pa.float64()),
+        "props": pa.array(["{}", "{}"]),
+    }
+    pq.write_table(pa.table({"ts": us, **cols}), path)
+    assert events_ts_unit(path) == "us"
+
+    _replace_parquet(pa.table({"ts": us.cast(pa.timestamp("ns")), **cols}), path)
+    assert events_ts_unit(path) == "ns"
+    rows = load_table(spark, str(tmp_path), "events").orderBy("event_id").collect()
+    assert [r.ts.isoformat() for r in rows] == [
+        "2024-01-01T00:00:00",
+        "2024-01-01T01:00:00.123456",
+    ]
+
+
+@pytest.mark.parametrize("table", TABLES)
+def test_repeat_load_launches_no_job(spark, table):
+    """A second load of an unchanged table file reuses the schema Spark
+    inferred on the first and launches no schema-inference job."""
+    from hive_release_spark.catalog import load_table
+    from tests.conftest import SF_SMOKE, _jobs
+
+    load_table(spark, SF_SMOKE, table)
+    df, jobs = _jobs(spark, lambda: load_table(spark, SF_SMOKE, table))
+    assert jobs == 0
+    assert df.schema == spark.read.parquet(table_path(SF_SMOKE, table)).schema
+
+
+def test_rewritten_file_shows_added_column(spark, tmp_path):
+    import pyarrow as pa
+
+    from hive_release_spark.catalog import load_table
+
+    path = table_path(str(tmp_path), "t")
+    pq.write_table(pa.table({"id": pa.array([1, 2], pa.int64())}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["id"]
+
+    _replace_parquet(
+        pa.table({"id": pa.array([1, 2], pa.int64()), "tag": pa.array(["a", "b"])}), path
+    )
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["id", "tag"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "a"), (2, "b")]
+
+
+def test_parquet_type_setting_change_infers_again(spark, tmp_path):
+    """A recorded schema is only reused under the Parquet type settings it
+    was inferred with: flipping binaryAsString gives a fresh read's schema."""
+    import pyarrow as pa
+
+    from hive_release_spark.catalog import load_table
+
+    path = table_path(str(tmp_path), "b")
+    pq.write_table(pa.table({"blob": pa.array([b"x", b"y"], pa.binary())}), path)
+    key = "spark.sql.parquet.binaryAsString"
+    before = spark.conf.get(key)
+    try:
+        for value in ("false", "true", "false"):
+            spark.conf.set(key, value)
+            got = load_table(spark, str(tmp_path), "b").schema
+            assert got == spark.read.parquet(path).schema
+            assert got["blob"].dataType.typeName() == (
+                "string" if value == "true" else "binary"
+            )
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_directory_layout_reads_rewritten_inner_file(spark, tmp_path):
+    """A directory's own stat does not change when a file below it is
+    rewritten in place, so a directory layout is never served a recorded
+    schema."""
+    import os
+
+    import pyarrow as pa
+
+    from hive_release_spark.catalog import load_table
+
+    table_dir = table_path(str(tmp_path), "d")
+    os.mkdir(table_dir)
+    inner = os.path.join(table_dir, "part-0.parquet")
+    pq.write_table(pa.table({"id": pa.array([1], pa.int64())}), inner)
+    assert load_table(spark, str(tmp_path), "d").columns == ["id"]
+    dir_stat = os.stat(table_dir)
+
+    pq.write_table(
+        pa.table({"id": pa.array([1], pa.int64()), "extra": pa.array([7.5])}), inner
+    )
+    assert os.stat(table_dir).st_mtime_ns == dir_stat.st_mtime_ns
+    df = load_table(spark, str(tmp_path), "d")
+    assert df.columns == ["id", "extra"]
+    assert [tuple(r) for r in df.collect()] == [(1, 7.5)]

@@ -358,7 +358,7 @@ def test_new_operators_handle_empty_inputs(spark):
 def test_cosine_pairs_blas_rejects_string_ids_before_any_job(spark):
     """The BLAS kernel packs ids as int64, so a string id column is
     refused with a ValueError at call time, before the eager count()."""
-    from tests.test_dml import _jobs
+    from tests.conftest import _jobs
 
     emb = load_table(spark, SF_SMOKE, "embeddings").withColumn(
         "vec_id", F.col("vec_id").cast("string")
