@@ -10,19 +10,23 @@ At 100 TB these would be real external tables (``saveAsTable`` +
 ``partitionBy``/``bucketBy``); the loader keeps that path open by accepting
 any directory layout where ``{name}.parquet`` exists.
 
-Schemas are recorded once per file version. Hive compiles a query against
-the columns its metastore recorded for the table (``StorageDescriptor`` /
-``FieldSchema``) and never opens data files to learn their types; Spark's
-Hive path does the same with ``spark.sql.hive.caseSensitiveInferenceMode=
-INFER_AND_SAVE``. ``spark.read.parquet`` without a schema instead answers
-every call with a one-task schema-inference job, so the first load of a
-table file keeps the ``StructType`` Spark inferred, and later loads of the
-same file version pass it through ``spark.read.schema`` and launch no job.
-A file version is ``(realpath, inode, size, mtime_ns)`` plus the session
-settings that map Parquet types to Spark types; a rewritten file or a
-changed setting infers again. Only regular files are recorded: a
-directory's own ``stat`` does not change when a file below it is
-rewritten, so a directory layout is inferred on every load.
+Schemas are recorded once per table version. Hive compiles a query
+against the columns its metastore recorded for the table
+(``StorageDescriptor`` / ``FieldSchema``) and never opens data files to
+learn their types; Spark's Hive path does the same with
+``spark.sql.hive.caseSensitiveInferenceMode=INFER_AND_SAVE``.
+``spark.read.parquet`` without a schema instead answers every call with a
+one-task schema-inference job. :func:`read_parquet` is the one reader: the
+first read of a table version keeps the ``StructType`` Spark inferred, and
+later reads of the same version pass it through ``spark.read.schema`` and
+launch no job. The engine's writers also :func:`record` the schema of a
+directory they commit, as Hive's ``MoveTask`` records it in the metastore,
+so the read after a commit infers nothing either.
+
+A table version is ``(inode, size, mtime_ns)`` for a regular file and
+:func:`listing_version` (every file below it) for a directory, plus the
+session settings that change the inferred schema; a rewritten or added
+file, or a changed setting, infers again. Records live in the process.
 """
 
 from __future__ import annotations
@@ -74,36 +78,91 @@ _EVENTS_RAW_NS_SCHEMA = T.StructType(
     ]
 )
 
-# Session settings that change how Parquet types map to Spark types; an
-# inferred schema is only reused under the values it was inferred with.
+# Session settings that change the schema Spark infers for a Parquet
+# table; a schema is only reused under the values it was recorded with.
 _PARQUET_TYPE_CONFS = (
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
     "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
 )
 
-# Footer-derived facts per file: realpath -> ((inode, size, mtime_ns), facts).
-# Threads racing on an entry at worst infer the same fact twice.
-_file_facts: dict[str, tuple[tuple[int, int, int], dict]] = {}
+# Facts per table: realpath -> (version, facts). Threads racing on an
+# entry at worst infer the same fact twice.
+_file_facts: dict[str, tuple[tuple, dict]] = {}
 
 
-def _facts(path: str) -> dict | None:
-    """The facts recorded for the current version of the regular file at
-    ``path`` (empty if it changed since they were recorded), or None if
-    ``path`` is not a regular file."""
+def listing_version(path: str) -> tuple:
+    """Version of the directory ``path``: sorted ``(relpath, size,
+    mtime_ns)`` of every file below it. Any commit that adds, removes or
+    rewrites a file changes it; renaming the directory does not."""
+    entries = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            p = os.path.join(root, f)
+            st = os.stat(p)
+            entries.append((os.path.relpath(p, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(entries))
+
+
+def _version(path: str) -> tuple | None:
+    """``(inode, size, mtime_ns)`` of a regular file, the listing version
+    of a directory, None for anything else."""
     try:
         st = os.stat(path)
     except OSError:
         return None
-    if not stat.S_ISREG(st.st_mode):
-        return None
+    if stat.S_ISREG(st.st_mode):
+        return (st.st_ino, st.st_size, st.st_mtime_ns)
+    if stat.S_ISDIR(st.st_mode):
+        return listing_version(path)
+    return None
+
+
+def _facts(path: str, version: tuple | None = None) -> dict | None:
+    """The facts recorded for ``version`` of ``path`` (default: its
+    current version), empty if the path has changed since they were
+    recorded; None if ``path`` is neither a file nor a directory."""
+    if version is None:
+        version = _version(path)
+        if version is None:
+            return None
     real = os.path.realpath(path)
-    version = (st.st_ino, st.st_size, st.st_mtime_ns)
     entry = _file_facts.get(real)
     if entry is None or entry[0] != version:
         entry = _file_facts[real] = (version, {})
     return entry[1]
+
+
+def _schema_key(spark: SparkSession) -> tuple:
+    return ("schema", *(spark.conf.get(k) for k in _PARQUET_TYPE_CONFS))
+
+
+def record(spark: SparkSession, path: str, version: tuple, schema: T.StructType) -> None:
+    """Record ``schema`` as the schema of ``version`` of the table at
+    ``path``; the engine's writers call it when they commit."""
+    _file_facts[os.path.realpath(path)] = (version, {_schema_key(spark): schema})
+
+
+def forget(path: str) -> None:
+    """Drop what is recorded for ``path`` (a deleted table)."""
+    _file_facts.pop(os.path.realpath(path), None)
+
+
+def read_parquet(spark: SparkSession, path: str, version: tuple | None = None) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema recorded for the
+    table's ``version`` (default: its current version), inferring and
+    recording it on a miss. A caller that has just listed a directory
+    passes that listing as ``version``."""
+    facts = _facts(path, version)
+    if facts is None:
+        return spark.read.parquet(path)
+    key = _schema_key(spark)
+    if key not in facts:
+        facts[key] = spark.read.parquet(path).schema
+    return spark.read.schema(facts[key]).parquet(path)
 
 
 def events_ts_unit(path: str) -> str:
@@ -148,11 +207,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     Column pruning and predicate pushdown happen automatically once callers
     ``select``/``filter`` on the returned frame. The schema is inferred once
-    per file version and recorded, as the Hive metastore records a table's
-    columns and Spark's ``INFER_AND_SAVE`` saves an inferred Hive schema;
-    repeat loads of an unchanged file launch no Spark job. A directory
-    layout is inferred on every load, since its ``stat`` does not change
-    when a file below it is rewritten.
+    per table version and recorded (:func:`read_parquet`), as the Hive
+    metastore records a table's columns and Spark's ``INFER_AND_SAVE``
+    saves an inferred Hive schema; repeat loads of an unchanged file or
+    directory launch no Spark job.
     """
     path = table_path(sf_dir, name)
     if name == "events" and events_ts_unit(path) == "ns":
@@ -162,13 +220,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df.withColumn(
             "ts", F.timestamp_micros(F.expr("ts DIV 1000")).cast(T.TimestampNTZType())
         )
-    facts = _facts(path)
-    if facts is None:
-        return spark.read.parquet(path)
-    key = ("schema", *(spark.conf.get(k) for k in _PARQUET_TYPE_CONFS))
-    if key not in facts:
-        facts[key] = spark.read.parquet(path).schema
-    return spark.read.schema(facts[key]).parquet(path)
+    return read_parquet(spark, path)
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:

@@ -22,8 +22,26 @@ Semantics guarantees:
   (optimistic first-writer-wins; Hive serialized with ZK/DB locks —
   out of scope, SURVEY.md §2.J — and a residual check-to-rename race
   window remains, as in any lockless design);
+- a failed staged write removes its staging directory and leaves the
+  table unchanged;
 - MERGE raises on multiple source matches per target row (Hive/SQL
   cardinality_violation semantics).
+
+Every commit hands the new table's schema to the catalog
+(:func:`catalog.record`), as Hive's ``MoveTask`` records it in the
+metastore, so the next statement's read launches no schema-inference job.
+The schema is recorded under the listing version the commit itself
+produced, never under a listing taken after the swap, so a concurrent
+writer's commit cannot inherit it:
+- a full rewrite records the written frame's schema under the staged
+  directory's listing, taken before the rename (a rename keeps every
+  file's size and mtime);
+- a partition-scoped rewrite *predicts* the version: the listing it read,
+  minus the entries under the rewritten partitions, plus the staged
+  entries under them. It carries the schema it read to that version only
+  if no partition was created, none was emptied, and the written frame's
+  non-partition columns have the read schema's names and types in the
+  same order; otherwise it records nothing and the next read infers.
 """
 
 from __future__ import annotations
@@ -34,8 +52,10 @@ import shutil
 import uuid
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
+
+from hive_release_spark import catalog
 
 
 _DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"  # Hive's directory for NULL
@@ -45,26 +65,25 @@ class ConcurrentWriteError(RuntimeError):
     """Another writer committed between this rewrite's read and swap."""
 
 
-def _version_token(path: str) -> tuple:
-    """Fingerprint of the table directory: sorted (relpath, size,
-    mtime_ns) of every data file. Any committed rewrite changes it."""
-    entries = []
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            p = os.path.join(root, f)
-            st = os.stat(p)
-            entries.append((os.path.relpath(p, path), st.st_size, st.st_mtime_ns))
-    return tuple(sorted(entries))
+def _write_staged(writer: DataFrameWriter, path: str) -> str:
+    """Write to a fresh staging sibling of ``path`` and return it; a
+    failed write removes it before the error propagates."""
+    staged = f"{path}.__staged_{uuid.uuid4().hex[:8]}"
+    try:
+        writer.mode("overwrite").parquet(staged)
+    except BaseException:
+        shutil.rmtree(staged, ignore_errors=True)
+        raise
+    return staged
 
 
 def _rewrite(spark: SparkSession, path: str, transform) -> None:
     """Read → transform → staged write → conflict check → directory swap."""
-    token = _version_token(path)
-    df = spark.read.parquet(path)
-    out = transform(df)
-    staged = f"{path}.__staged_{uuid.uuid4().hex[:8]}"
-    out.write.mode("overwrite").parquet(staged)
-    if _version_token(path) != token:
+    token = catalog.listing_version(path)
+    out = transform(catalog.read_parquet(spark, path, token))
+    staged = _write_staged(out.write, path)
+    written = catalog.listing_version(staged)
+    if catalog.listing_version(path) != token:
         shutil.rmtree(staged, ignore_errors=True)
         raise ConcurrentWriteError(
             f"table {path} changed during rewrite; retry against the new version"
@@ -73,6 +92,7 @@ def _rewrite(spark: SparkSession, path: str, transform) -> None:
     os.rename(path, old)
     os.rename(staged, path)
     shutil.rmtree(old)
+    catalog.record(spark, path, written, out.schema)
 
 
 def _staged_partition_rels(staged: str, partition_cols: list[str]) -> list[str]:
@@ -92,6 +112,11 @@ def _staged_partition_rels(staged: str, partition_cols: list[str]) -> list[str]:
 
     walk(staged, 0, "")
     return rels
+
+
+def _data_columns(schema, partition_cols: list[str]) -> list[tuple]:
+    """(name, type) of the non-partition columns, in order."""
+    return [(f.name, f.dataType) for f in schema.fields if f.name not in partition_cols]
 
 
 def _unescape_path_name(name: str) -> str:
@@ -152,20 +177,21 @@ def _rewrite_partitions(
     renamed in as new partitions, with a commit-time existence check so a
     concurrent writer creating the same partition is a detected conflict,
     not a silent replace."""
-    df = spark.read.parquet(path)
+    version = catalog.listing_version(path)
+    df = catalog.read_parquet(spark, path, version)
     rels = _matching_partitions(spark, df, path, partition_filter, partition_cols)
     # conflict detection is scoped to the AFFECTED partitions — a
     # concurrent writer in a different partition is not a conflict
     token = tuple(
-        _version_token(d) if os.path.exists(d) else None
+        catalog.listing_version(d) if os.path.exists(d) else None
         for d in (os.path.join(path, rel) for rel in rels)
     )
     out = transform(df.filter(partition_filter))
-    staged = f"{path}.__staged_{uuid.uuid4().hex[:8]}"
-    out.write.mode("overwrite").partitionBy(*partition_cols).parquet(staged)
-    new_rels = [r for r in _staged_partition_rels(staged, partition_cols) if r not in set(rels)]
+    staged = _write_staged(out.write.partitionBy(*partition_cols), path)
+    staged_rels = _staged_partition_rels(staged, partition_cols)
+    new_rels = [r for r in staged_rels if r not in set(rels)]
     recheck = tuple(
-        _version_token(d) if os.path.exists(d) else None
+        catalog.listing_version(d) if os.path.exists(d) else None
         for d in (os.path.join(path, rel) for rel in rels)
     )
     if recheck != token or any(
@@ -175,6 +201,21 @@ def _rewrite_partitions(
         raise ConcurrentWriteError(
             f"affected partitions of {path} changed during rewrite; retry"
         )
+    # the read schema still describes the table if the partition set and
+    # the written files' columns are unchanged (see the module docstring)
+    carry = set(staged_rels) == set(rels) and _data_columns(
+        out.schema, partition_cols
+    ) == _data_columns(df.schema, partition_cols)
+    if carry:
+        scoped = tuple(rel + os.sep for rel in rels)
+        predicted = tuple(sorted(
+            [e for e in version if not e[0].startswith(scoped)]
+            + [
+                (os.path.join(rel, name), size, mtime)
+                for rel in rels
+                for name, size, mtime in catalog.listing_version(os.path.join(staged, rel))
+            ]
+        ))
     try:
         for rel in rels + new_rels:
             old_dir = os.path.join(path, rel)
@@ -187,6 +228,8 @@ def _rewrite_partitions(
                 os.rename(new_dir, old_dir)
     finally:
         shutil.rmtree(staged, ignore_errors=True)
+    if carry:
+        catalog.record(spark, path, predicted, df.schema)
 
 
 def update_table(

@@ -18,7 +18,9 @@ commit is the unpartitioned copy-on-write of the DML layer
 (``dml._rewrite``): the folded table is written to a staging directory
 and swapped in atomically, with concurrent-writer detection. The read
 and the write never share a directory, so nothing is checkpointed, and
-a failed write leaves the previous dimension intact. Partition the
+a failed write leaves the previous dimension intact. The first write and
+every fold record the table's schema in the catalog, so the next fold
+reads it without a schema-inference job. Partition the
 dimension by key range and route through
 ``merge_into(partition_filter=...)`` when single files stop being
 appropriate.
@@ -29,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from hive_release_spark import catalog
 from hive_release_spark.operators import dml
 
 
@@ -92,7 +95,9 @@ def scd2_apply(
 
     incoming = changes.select(key, state, ts)
     if not os.path.exists(path):
-        scd2_history(incoming, key, state, ts).write.parquet(path)
+        history = scd2_history(incoming, key, state, ts)
+        history.write.parquet(path)
+        catalog.record(spark, path, catalog.listing_version(path), history.schema)
         return
     affected = incoming.select(key).distinct()
 

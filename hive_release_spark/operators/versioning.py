@@ -19,8 +19,10 @@ data regressions).
 
 Scale posture: the version directory IS the dataset (no copy-on-read);
 a snapshot write costs exactly one dataset write; `read_snapshot` is a
-plain parquet scan with full pushdown/pruning. Retention is explicit
-(`expire_snapshots`) — nothing is deleted implicitly.
+parquet scan with full pushdown/pruning, under the schema the snapshot
+write recorded in the catalog, so the read itself launches no Spark job.
+Retention is explicit (`expire_snapshots`) — nothing is deleted
+implicitly.
 """
 
 from __future__ import annotations
@@ -30,6 +32,8 @@ import re
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+
+from hive_release_spark import catalog
 
 _VERSION_RE = re.compile(r"^v(\d+)$")
 
@@ -75,8 +79,10 @@ def snapshot_write(df: DataFrame, table_dir: str) -> int:
     staging = tempfile.mkdtemp(dir=table_dir, prefix="._staging_")
     stage_target = os.path.join(staging, "data")
     df.write.mode("error").parquet(stage_target)
+    written = catalog.listing_version(stage_target)
     os.rename(stage_target, vdir)  # atomic publish; never overwrites
     os.rmdir(staging)
+    catalog.record(df.sparkSession, vdir, written, df.schema)
     fd, tmp = tempfile.mkstemp(dir=table_dir, prefix="._latest_")
     with os.fdopen(fd, "w") as fh:
         fh.write(str(version))
@@ -89,9 +95,13 @@ def read_snapshot(
 ) -> DataFrame:
     """Time-travel read: the pinned ``version``, or the committed latest."""
     v = latest_snapshot(table_dir) if version is None else version
-    if v is None or v not in list_snapshots(table_dir):
-        raise FileNotFoundError(f"no snapshot v{version} under {table_dir}")
-    return spark.read.parquet(os.path.join(table_dir, f"v{v}"))
+    if v is None:
+        raise FileNotFoundError(
+            f"no committed snapshot under {table_dir}: no _LATEST pointer and no v<n> directory"
+        )
+    if v not in list_snapshots(table_dir):
+        raise FileNotFoundError(f"no snapshot v{v} under {table_dir}")
+    return catalog.read_parquet(spark, os.path.join(table_dir, f"v{v}"))
 
 
 def expire_snapshots(table_dir: str, keep_last: int = 2) -> list[int]:
@@ -105,5 +115,7 @@ def expire_snapshots(table_dir: str, keep_last: int = 2) -> list[int]:
     versions = list_snapshots(table_dir)
     expired = [v for v in versions[:-keep_last] if v != latest]
     for v in expired:
-        shutil.rmtree(os.path.join(table_dir, f"v{v}"))
+        vdir = os.path.join(table_dir, f"v{v}")
+        shutil.rmtree(vdir)
+        catalog.forget(vdir)
     return expired

@@ -3,10 +3,13 @@ parquet tables — SURVEY.md §2.B ACID mapping."""
 
 from __future__ import annotations
 
+import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
-from hive_release_spark.operators import dml
+from hive_release_spark import catalog
+from hive_release_spark.operators import dml, scd, versioning
 from tests.conftest import _jobs
 
 
@@ -482,38 +485,48 @@ def test_partition_matching_reads_no_data(spark, escaped_table):
 
 
 def test_partition_scoped_update_delete_job_count(spark, escaped_table):
-    """A scoped UPDATE or DELETE runs at most the target's schema
-    inference and the staged write — no scan to find its partitions."""
+    """A scoped UPDATE or DELETE runs no scan to find its partitions. The
+    first statement on a table the engine did not write infers its schema
+    and runs the staged write; every later one reads the schema the
+    previous commit recorded and runs only the write."""
     path, _t1, _t2 = escaped_table
     scope = dict(partition_filter=F.col("k") == "a:1", partition_cols=["k", "t"])
     _, jobs = _jobs(spark, lambda: dml.update_table(
         spark, path, {"val": F.col("val") * 2}, F.col("id") == 2, **scope
     ))
-    assert jobs <= 2
+    assert jobs == 2
+    _, jobs = _jobs(spark, lambda: dml.update_table(
+        spark, path, {"val": F.col("val") + 1}, F.col("id") == 2, **scope
+    ))
+    assert jobs == 1
     _, jobs = _jobs(spark, lambda: dml.delete_from(spark, path, F.col("id") == 2, **scope))
-    assert jobs <= 2
+    assert jobs == 1
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == [1, 3, 4, 5]
 
 
 def test_partition_scoped_merge_checks_source_in_one_aggregate(spark, escaped_table):
     """Both MERGE source checks (scope and cardinality) are one aggregate.
     With AQE off every query is one job, so a scoped MERGE is exactly
     three: the source checks, the target's schema inference and the
-    staged write."""
+    staged write. A second MERGE reads the schema the first recorded and
+    runs two."""
     path, _t1, t2 = escaped_table
-    source = spark.createDataFrame(
-        [("a:1", t2, 3, 99.0)], "k STRING, t TIMESTAMP, id BIGINT, val DOUBLE"
-    )
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        _, jobs = _jobs(spark, lambda: dml.merge_into(
-            spark, path, source, on=["id"], matched_update={"val": F.col("src.val")},
-            partition_filter=F.col("k") == "a:1", partition_cols=["k", "t"],
-        ))
+        jobs = []
+        for val in (99.0, 98.0):
+            source = spark.createDataFrame(
+                [("a:1", t2, 3, val)], "k STRING, t TIMESTAMP, id BIGINT, val DOUBLE"
+            )
+            jobs.append(_jobs(spark, lambda: dml.merge_into(
+                spark, path, source, on=["id"], matched_update={"val": F.col("src.val")},
+                partition_filter=F.col("k") == "a:1", partition_cols=["k", "t"],
+            ))[1])
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    assert jobs == 3
-    assert {r.id: r.val for r in spark.read.parquet(path).collect()}[3] == 99.0
+    assert jobs == [3, 2]
+    assert {r.id: r.val for r in spark.read.parquet(path).collect()}[3] == 98.0
 
 
 def test_merge_out_of_scope_reported_before_duplicates(spark, tmp_path):
@@ -551,3 +564,238 @@ def test_merge_null_key_duplicates_violate_cardinality(spark, table):
     )
     with pytest.raises(ValueError, match="cardinality"):
         dml.merge_into(spark, table, source, on=["id"])
+
+
+@pytest.mark.parametrize("scoped", [False, True])
+def test_failed_staged_write_leaves_no_staging_dir(spark, tmp_path, scoped):
+    """A staged write that raises removes its staging directory; the table
+    is unchanged and the next statement on it commits."""
+    import os
+
+    path = str(tmp_path / "t")
+    spark.createDataFrame(
+        [("a", 1, 10.0), ("b", 2, 20.0)], "grp STRING, id BIGINT, val DOUBLE"
+    ).write.partitionBy("grp").parquet(path)
+    scope = dict(partition_filter=F.col("grp") == "a", partition_cols=["grp"]) if scoped else {}
+    before = _files(path)
+    with pytest.raises(Exception, match="boom"):
+        dml.update_table(spark, path, {"val": F.raise_error(F.lit("boom"))}, F.lit(True), **scope)
+    assert [n for n in os.listdir(tmp_path) if "__staged_" in n] == []
+    assert _files(path) == before
+    dml.update_table(spark, path, {"val": F.col("val") + 1}, F.col("id") == 1, **scope)
+    assert {r.id: r.val for r in spark.read.parquet(path).collect()} == {1: 11.0, 2: 20.0}
+
+
+def _partitioned(spark, path):
+    spark.createDataFrame(
+        [("a", 1, 10.0, 1), ("a", 2, 20.0, 2), ("b", 3, 30.0, 3)],
+        "grp STRING, id BIGINT, val DOUBLE, n INT",
+    ).write.partitionBy("grp").parquet(path)
+    return path
+
+
+def _scope_a():
+    return dict(partition_filter=F.col("grp") == "a", partition_cols=["grp"])
+
+
+def _full_rewrite(spark, tmp_path):
+    path = _partitioned(spark, str(tmp_path / "t"))
+    dml.update_table(spark, path, {"val": F.col("val") * 2}, F.col("id") == 1)
+    return path
+
+
+def _scoped_rewrite(spark, tmp_path):
+    path = _partitioned(spark, str(tmp_path / "t"))
+    dml.update_table(spark, path, {"val": F.col("val") * 2}, F.col("id") == 1, **_scope_a())
+    return path
+
+
+def _full_partition_delete(spark, tmp_path):
+    path = _partitioned(spark, str(tmp_path / "t"))
+    dml.delete_from(spark, path, F.lit(True), F.col("grp") == "b", partition_cols=["grp"])
+    return path
+
+
+def _merge_into_new_partition(spark, tmp_path):
+    path = _partitioned(spark, str(tmp_path / "t"))
+    source = spark.createDataFrame(
+        [("c", 4, 40.0, 4)], "grp STRING, id BIGINT, val DOUBLE, n INT"
+    )
+    dml.merge_into(
+        spark, path, source, on=["id"],
+        partition_filter=F.col("grp").isin("a", "c"), partition_cols=["grp"],
+    )
+    return path
+
+
+def _evolve_schema_merge(scoped):
+    def commit(spark, tmp_path):
+        path = _partitioned(spark, str(tmp_path / "t"))
+        source = spark.createDataFrame(
+            [("a", 1, 11.0, 1, "gold")], "grp STRING, id BIGINT, val DOUBLE, n INT, tier STRING"
+        )
+        dml.merge_into(
+            spark, path, source, on=["id"], matched_update={"tier": F.col("src.tier")},
+            evolve_schema=True, **(_scope_a() if scoped else {}),
+        )
+        return path
+    return commit
+
+
+def _type_changing_scoped_update(spark, tmp_path):
+    path = _partitioned(spark, str(tmp_path / "t"))
+    dml.update_table(spark, path, {"n": F.col("n") * 1.5}, F.lit(True), **_scope_a())
+    return path
+
+
+def _snapshot(spark, tmp_path):
+    t = str(tmp_path / "ds")
+    version = versioning.snapshot_write(
+        spark.range(3).select("id", F.array("id").alias("xs"), F.struct("id").alias("s")), t
+    )
+    return f"{t}/v{version}"
+
+
+_CHANGES = "id BIGINT, attr STRING, ts TIMESTAMP"
+_T0 = datetime.datetime(2024, 1, 1)
+
+
+def _scd_create(spark, tmp_path):
+    path = str(tmp_path / "dim")
+    scd.scd2_apply(spark, path, spark.createDataFrame([(1, "a", _T0)], _CHANGES))
+    return path
+
+
+def _scd_fold(spark, tmp_path):
+    path = _scd_create(spark, tmp_path)
+    later = _T0 + datetime.timedelta(days=1)
+    scd.scd2_apply(spark, path, spark.createDataFrame([(1, "b", later), (2, "x", later)], _CHANGES))
+    return path
+
+
+@pytest.mark.parametrize(
+    "commit, recorded",
+    [
+        (_full_rewrite, True),
+        (_scoped_rewrite, True),
+        (_full_partition_delete, False),
+        (_merge_into_new_partition, False),
+        (_evolve_schema_merge(scoped=False), True),
+        (_evolve_schema_merge(scoped=True), False),
+        (_type_changing_scoped_update, False),
+        (_snapshot, True),
+        (_scd_create, True),
+        (_scd_fold, True),
+    ],
+    ids=[
+        "full_rewrite", "scoped_rewrite", "full_partition_delete", "merge_new_partition",
+        "evolve_schema_merge", "evolve_schema_scoped_merge", "type_changing_scoped_update",
+        "snapshot", "scd_create", "scd_fold",
+    ],
+)
+def test_read_after_commit_matches_fresh_inference(spark, tmp_path, commit, recorded):
+    """After every kind of commit the engine's next read has the schema a
+    fresh inference gives. It launches no job when the commit recorded the
+    schema; a scoped rewrite that created or emptied a partition, or
+    changed a column, records nothing and the read infers."""
+    path = commit(spark, tmp_path)
+    df, jobs = _jobs(spark, lambda: catalog.read_parquet(spark, path))
+    assert df.schema == spark.read.parquet(path).schema
+    assert jobs == (0 if recorded else 1)
+
+
+def _write_extra_file(path):
+    """An outside writer's file that sorts first in ``path`` and carries
+    a column the table lacks."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({"id": pa.array([9], pa.int64()), "val": pa.array([9.0]),
+                  "n": pa.array([9], pa.int32()), "extra": pa.array(["x"])}),
+        os.path.join(path, "a.parquet"),
+    )
+
+
+def _reads_again_with_extra(spark, path):
+    df, jobs = _jobs(spark, lambda: catalog.read_parquet(spark, path))
+    assert jobs == 1
+    assert df.schema == spark.read.parquet(path).schema
+    assert "extra" in df.columns
+
+
+def test_appended_file_after_commit_infers_again(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(1, 10.0, 1)], "id BIGINT, val DOUBLE, n INT").write.parquet(path)
+    dml.update_table(spark, path, {"val": F.col("val") + 1}, F.lit(True))
+    _write_extra_file(path)
+    _reads_again_with_extra(spark, path)
+
+
+def test_file_in_other_partition_after_commit_infers_again(spark, tmp_path):
+    import os
+
+    path = _partitioned(spark, str(tmp_path / "t"))
+    scope_b = dict(partition_filter=F.col("grp") == "b", partition_cols=["grp"])
+    dml.update_table(spark, path, {"val": F.col("val") + 1}, F.lit(True), **scope_b)
+    _write_extra_file(os.path.join(path, "grp=a"))
+    _reads_again_with_extra(spark, path)
+
+
+def test_concurrent_commit_in_other_partition_is_not_inherited(spark, tmp_path):
+    """The scoped rewrite predicts its version from the listing it read;
+    a file another writer commits to an unaffected partition meanwhile is
+    not in it, so the next read infers and sees that file's column."""
+    import os
+
+    path = _partitioned(spark, str(tmp_path / "t"))
+
+    def transform(df):
+        _write_extra_file(os.path.join(path, "grp=a"))
+        return df.withColumn("val", F.col("val") + 1)
+
+    dml._rewrite_partitions(spark, path, transform, F.col("grp") == "b", ["grp"])
+    _reads_again_with_extra(spark, path)
+
+
+def test_parquet_type_setting_change_after_commit_infers_again(spark, table):
+    dml.update_table(spark, table, {"val": F.col("val") + 1}, F.lit(True))
+    key = "spark.sql.parquet.binaryAsString"
+    before = spark.conf.get(key)
+    try:
+        for value, want_jobs in (("true", 1), (before, 0)):
+            spark.conf.set(key, value)
+            df, jobs = _jobs(spark, lambda: catalog.read_parquet(spark, table))
+            assert jobs == want_jobs
+            assert df.schema == spark.read.parquet(table).schema
+    finally:
+        spark.conf.set(key, before)
+
+
+@pytest.mark.parametrize("setting", [
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+])
+def test_directory_schema_setting_change_infers_again(spark, tmp_path, setting):
+    """Settings that change the schema inferred for a partitioned
+    directory are part of a record's key: flipping one infers again."""
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(1, 10.0)], "id BIGINT, val DOUBLE").write.parquet(f"{path}/y=2024")
+    spark.createDataFrame([(2, 20.0, "x")], "id BIGINT, val DOUBLE, extra STRING").write.parquet(
+        f"{path}/y=2025"
+    )
+    before = spark.conf.get(setting)
+    flipped = "false" if before == "true" else "true"
+    try:
+        schemas = []
+        for value, want_jobs in ((before, 1), (flipped, 1), (before, 0)):
+            spark.conf.set(setting, value)
+            df, jobs = _jobs(spark, lambda: catalog.read_parquet(spark, path))
+            assert jobs == want_jobs
+            assert df.schema == spark.read.parquet(path).schema
+            schemas.append(df.schema)
+        assert schemas[0] != schemas[1]
+    finally:
+        spark.conf.set(setting, before)

@@ -311,20 +311,24 @@ def test_parquet_type_setting_change_infers_again(spark, tmp_path):
 
 
 def test_directory_layout_reads_rewritten_inner_file(spark, tmp_path):
-    """A directory's own stat does not change when a file below it is
-    rewritten in place, so a directory layout is never served a recorded
-    schema."""
+    """A directory's version is the listing of the files below it: a
+    repeat load of an unchanged directory launches no job, and a file
+    rewritten in place infers again although the directory's own stat
+    does not change."""
     import os
 
     import pyarrow as pa
 
     from hive_release_spark.catalog import load_table
+    from tests.conftest import _jobs
 
     table_dir = table_path(str(tmp_path), "d")
     os.mkdir(table_dir)
     inner = os.path.join(table_dir, "part-0.parquet")
     pq.write_table(pa.table({"id": pa.array([1], pa.int64())}), inner)
     assert load_table(spark, str(tmp_path), "d").columns == ["id"]
+    df, jobs = _jobs(spark, lambda: load_table(spark, str(tmp_path), "d"))
+    assert jobs == 0 and df.columns == ["id"]
     dir_stat = os.stat(table_dir)
 
     pq.write_table(

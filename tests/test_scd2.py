@@ -11,6 +11,7 @@ from datetime import datetime
 from pyspark.sql import functions as F  # noqa: F401
 
 from hive_release_spark.operators.scd import scd2_apply, scd2_history
+from tests.conftest import _jobs
 
 
 def _t(d):
@@ -127,3 +128,27 @@ def test_scd2_apply_leaves_no_storage_blocks(spark, tmp_path):
     scd2_apply(spark, path, b2)
     assert len(spark.sparkContext._jsc.sc().getRDDStorageInfo()) == 0
     assert _rows(spark.read.parquet(path)) == _rows(scd2_history(b1.unionByName(b2)))
+
+
+def test_second_scd2_apply_runs_no_schema_inference(spark, tmp_path):
+    """Each apply records the dimension's schema, so a later apply reads
+    it without a schema-inference job: with AQE off, and the batch a
+    local frame, an apply is one job, the staged write."""
+    path = str(tmp_path / "dim")
+    b1 = spark.createDataFrame(
+        [(1, "a", _t(0)), (2, "x", _t(0))], "id BIGINT, attr STRING, ts TIMESTAMP"
+    )
+    b2 = spark.createDataFrame(
+        [(1, "b", _t(1)), (3, "n", _t(1))], "id BIGINT, attr STRING, ts TIMESTAMP"
+    )
+    b3 = spark.createDataFrame([(2, "y", _t(2))], "id BIGINT, attr STRING, ts TIMESTAMP")
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        scd2_apply(spark, path, b1)
+        jobs = [_jobs(spark, lambda b=b: scd2_apply(spark, path, b))[1] for b in (b2, b3)]
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert jobs == [1, 1]
+    want = scd2_history(b1.unionByName(b2).unionByName(b3))
+    assert _rows(spark.read.parquet(path)) == _rows(want)

@@ -9,7 +9,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from hive_release_spark import catalog
 from hive_release_spark.operators import versioning as V
+from tests.conftest import _jobs
 
 
 def test_snapshot_write_and_time_travel(spark, tmp_path):
@@ -50,19 +52,36 @@ def test_snapshot_dirs_are_immutable(spark, tmp_path):
 
 def test_read_missing_snapshot_raises(spark, tmp_path):
     t = str(tmp_path / "ds")
+    with pytest.raises(FileNotFoundError, match="no committed snapshot .*no _LATEST pointer"):
+        V.read_snapshot(spark, t)
     V.snapshot_write(spark.range(0, 2), t)
-    with pytest.raises(FileNotFoundError):
+    with pytest.raises(FileNotFoundError, match="no snapshot v9 under"):
         V.read_snapshot(spark, t, version=9)
+
+
+def test_read_after_snapshot_write_launches_no_job(spark, tmp_path):
+    """The snapshot write records the version's schema, so the read of
+    the committed latest runs no schema-inference job."""
+    t = str(tmp_path / "ds")
+    df = spark.range(0, 4).select("id", F.lit("a").alias("tag"))
+    V.snapshot_write(df, t)
+    snap, jobs = _jobs(spark, lambda: V.read_snapshot(spark, t))
+    assert jobs == 0
+    assert snap.schema == spark.read.parquet(os.path.join(t, "v1")).schema
+    assert sorted(r.id for r in snap.collect()) == [0, 1, 2, 3]
 
 
 def test_expire_keeps_recent_and_latest(spark, tmp_path):
     t = str(tmp_path / "ds")
     for i in range(4):
         V.snapshot_write(spark.range(0, i + 1), t)
+    recorded = lambda v: os.path.realpath(os.path.join(t, f"v{v}")) in catalog._file_facts  # noqa: E731
+    assert all(recorded(v) for v in (1, 2, 3, 4))
     expired = V.expire_snapshots(t, keep_last=2)
     assert expired == [1, 2]
     assert V.list_snapshots(t) == [3, 4]
     assert V.read_snapshot(spark, t, version=3).count() == 3
+    assert [recorded(v) for v in (1, 2, 3, 4)] == [False, False, True, True]
 
 
 def test_orphan_version_dir_does_not_wedge_writes(spark, tmp_path):
