@@ -24,8 +24,24 @@ Semantics guarantees:
   window remains, as in any lockless design);
 - a failed staged write removes its staging directory and leaves the
   table unchanged;
-- MERGE raises on multiple source matches per target row (Hive/SQL
-  cardinality_violation semantics).
+- MERGE raises when two source rows share a join key, NULL keys grouped
+  together as ``groupBy`` groups them, whether or not a target row
+  matches them. This is stricter than Hive's ``cardinality_violation()``,
+  which fails only when one target row matches twice.
+
+MERGE speculates, then guards. Hive 2.3 rewrites a MERGE into one
+multi-insert statement whose ``cardinality_violation()`` branch fails the
+query from inside (``UpdateDeleteSemanticAnalyzer``); likewise the scope
+and cardinality checks here run inside the MERGE's own staged write. The
+source is grouped by the join keys once; an ``Observation`` on that
+grouping returns the check flags from the write job, and a guard reads
+them after the write and before the conflict check and swap. A failed
+check discards the staged write and raises, scope first, then
+cardinality. When AQE proves the join's target side empty it never runs
+the observed source side (a no-insert MERGE into an empty target); the
+observation then holds no row, and the guard computes the same flags
+with one aggregate. Trade-off: an empty source costs one discarded
+staged write, not one aggregate; the table stays byte-identical.
 
 Every commit hands the new table's schema to the catalog
 (:func:`catalog.record`), as Hive's ``MoveTask`` records it in the
@@ -52,7 +68,7 @@ import shutil
 import uuid
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameWriter, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from hive_release_spark import catalog
@@ -65,23 +81,33 @@ class ConcurrentWriteError(RuntimeError):
     """Another writer committed between this rewrite's read and swap."""
 
 
-def _write_staged(writer: DataFrameWriter, path: str) -> str:
-    """Write to a fresh staging sibling of ``path`` and return it; a
-    failed write removes it before the error propagates."""
+def _write_staged(writer: DataFrameWriter, path: str, guard=None) -> str | None:
+    """Write to a fresh staging sibling of ``path`` and return it.
+
+    ``guard``, if given, runs after the write: it raises to abort the
+    statement, or returns False to discard the write (None is returned).
+    A failed write or guard removes the staging directory before the
+    error propagates."""
     staged = f"{path}.__staged_{uuid.uuid4().hex[:8]}"
     try:
         writer.mode("overwrite").parquet(staged)
+        if guard is None or guard():
+            return staged
     except BaseException:
         shutil.rmtree(staged, ignore_errors=True)
         raise
-    return staged
+    shutil.rmtree(staged, ignore_errors=True)
+    return None
 
 
-def _rewrite(spark: SparkSession, path: str, transform) -> None:
-    """Read → transform → staged write → conflict check → directory swap."""
+def _rewrite(spark: SparkSession, path: str, transform, guard=None) -> None:
+    """Read → transform → staged write → guard → conflict check →
+    directory swap."""
     token = catalog.listing_version(path)
     out = transform(catalog.read_parquet(spark, path, token))
-    staged = _write_staged(out.write, path)
+    staged = _write_staged(out.write, path, guard)
+    if staged is None:
+        return
     written = catalog.listing_version(staged)
     if catalog.listing_version(path) != token:
         shutil.rmtree(staged, ignore_errors=True)
@@ -161,6 +187,7 @@ def _rewrite_partitions(
     transform,
     partition_filter: Column,
     partition_cols: list[str],
+    guard=None,
 ) -> None:
     """Partition-scoped copy-on-write (SCALE.md cliff #4): only partitions
     matching ``partition_filter`` are read, rewritten, and swapped; every
@@ -187,7 +214,9 @@ def _rewrite_partitions(
         for d in (os.path.join(path, rel) for rel in rels)
     )
     out = transform(df.filter(partition_filter))
-    staged = _write_staged(out.write.partitionBy(*partition_cols), path)
+    staged = _write_staged(out.write.partitionBy(*partition_cols), path, guard)
+    if staged is None:
+        return
     staged_rels = _staged_partition_rels(staged, partition_cols)
     new_rels = [r for r in staged_rels if r not in set(rels)]
     recheck = tuple(
@@ -307,8 +336,12 @@ def merge_into(
     rows) instead of silently dropped; inserted rows carry their source
     values, matched rows take them only through ``matched_update``.
 
-    Implemented as a full outer join rewrite; update/delete expressions may
-    reference both sides via aliases (``F.col("src.x")``, ``F.col("tgt.x")``).
+    Implemented as a full outer join rewrite of the target with the source
+    grouped by ``on``; update/delete expressions may reference both sides
+    via aliases (``F.col("src.x")``, ``F.col("tgt.x")``). A source with a
+    repeated key raises (cardinality violation), as does a scoped MERGE's
+    source row outside ``partition_filter``; both are checked by the
+    staged write itself, before its commit.
 
     Matched/not-matched detection uses sentinel marker columns added to each
     side before the join, never the nullness of data columns — a nullable
@@ -342,49 +375,77 @@ def merge_into(
                 "use a full-table merge_into(partition_filter=None)"
             )
 
-    # One aggregate checks the source: every row must fall inside the
-    # scoped partitions, else its update/insert would silently target an
-    # unread partition; and each target row may match at most one source
-    # row (cardinality; NULL keys group together, as in groupBy).
+    sentinels = ("__tgt_m", "__src_m")
+    for sentinel in sentinels:
+        if sentinel in src_cols:
+            raise ValueError(f"column name {sentinel!r} is reserved by MERGE")
+
+    # Speculate, then guard (module docstring). The source is grouped by
+    # the join keys once; the join reuses that grouping's hash exchange,
+    # and the grouping carries both checks: every source row must fall
+    # inside the scoped partitions, else its update/insert would silently
+    # target an unread partition, and no key may repeat (cardinality).
+    # The grouped frame's one non-key column, ``__src_m`` (reserved, so no
+    # source column collides with it), holds the key's row count, its
+    # out-of-scope flag and its other source columns. It is non-NULL on
+    # every source-side row of the join, so it is also the matched marker.
     out_of_scope = (
         F.lit(False)
         if partition_filter is None
         else ~F.coalesce(partition_filter, F.lit(False))
     )
-    keys, dup, stray = (
-        source.groupBy(*on)
-        .agg(
-            (F.count(F.lit(1)) > 1).alias("__dup"),
-            F.max(out_of_scope).alias("__stray"),
-        )
-        .agg(F.count(F.lit(1)), F.max("__dup"), F.max("__stray"))
-        .first()
+    rest = [c for c in src_cols if c not in on]
+    grouped = source.groupBy(*on).agg(
+        F.struct(
+            F.count(F.lit(1)).alias("n"),
+            F.max(out_of_scope).alias("stray"),
+            *([F.first(F.struct(*rest)).alias("row")] if rest else []),
+        ).alias("__src_m")
     )
-    if stray:
-        raise ValueError(
-            "partition-scoped MERGE: source rows fall outside partition_filter"
+    # retry-safe flags only (bool_or, max, and count read as > 0): a
+    # re-executed task may add its rows to the metrics twice
+    flags = (
+        F.bool_or(F.col("__src_m.n") > 1).alias("dup"),
+        F.max("__src_m.stray").alias("stray"),
+        F.count(F.lit(1)).alias("keys"),
+    )
+    # observed directly above the grouping, so no filter the join infers
+    # (isnotnull(key) on a no-insert MERGE) can be pushed below it
+    observation = Observation()
+    grouped_src = grouped.observe(observation, *flags).select(
+        *on, *(["__src_m.row.*"] if rest else []), "__src_m"
+    )
+
+    def guard() -> bool:
+        """Raise on a failed source check; False discards the write of an
+        empty source (nothing to update, delete or insert)."""
+        # AQE drops the source side of a join it proves empty (a no-insert
+        # MERGE into an empty target); the observation then completes with
+        # no row, and the flags are computed directly instead
+        got = (
+            grouped.agg(*flags).first()
+            if observation._jo.getRow().length() == 0
+            else observation.get
         )
-    sentinels = ("__tgt_m", "__src_m")
-    for sentinel in sentinels:
-        if sentinel in src_cols:
-            raise ValueError(f"column name {sentinel!r} is reserved by MERGE")
-    if keys == 0 and not evolve_schema:
-        return  # an empty source updates, deletes and inserts nothing
+        if got["stray"]:
+            raise ValueError(
+                "partition-scoped MERGE: source rows fall outside partition_filter"
+            )
+        if got["dup"]:
+            raise ValueError("MERGE cardinality violation: source has duplicate keys")
+        return got["keys"] > 0 or evolve_schema
 
     def tr(df: DataFrame) -> DataFrame:
         for sentinel in sentinels:
             if sentinel in df.columns:
                 raise ValueError(f"column name {sentinel!r} is reserved by MERGE")
-        if dup:
-            raise ValueError("MERGE cardinality violation: source has duplicate keys")
         if evolve_schema:
             src_types = {f.name: f.dataType for f in source.schema.fields}
             for c in source.columns:
                 if c not in df.columns:
                     df = df.withColumn(c, F.lit(None).cast(src_types[c]))
         tgt = df.withColumn("__tgt_m", F.lit(1)).alias("tgt")
-        src = source.withColumn("__src_m", F.lit(1)).alias("src")
-        joined = tgt.join(src, on, "full_outer")
+        joined = tgt.join(grouped_src.alias("src"), on, "full_outer")
         matched = F.col("__tgt_m").isNotNull() & F.col("__src_m").isNotNull()
         src_only = F.col("__tgt_m").isNull()
 
@@ -413,9 +474,11 @@ def merge_into(
         return joined.select(*out_cols)
 
     if partition_filter is not None:
-        _rewrite_partitions(spark, target_path, tr, partition_filter, partition_cols)
+        _rewrite_partitions(
+            spark, target_path, tr, partition_filter, partition_cols, guard
+        )
     else:
-        _rewrite(spark, target_path, tr)
+        _rewrite(spark, target_path, tr, guard)
 
 
 def insert_into(spark: SparkSession, path: str, rows: DataFrame) -> None:

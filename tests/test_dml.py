@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime
 
 import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from hive_release_spark import catalog
@@ -504,29 +505,98 @@ def test_partition_scoped_update_delete_job_count(spark, escaped_table):
     assert sorted(r.id for r in spark.read.parquet(path).collect()) == [1, 3, 4, 5]
 
 
-def test_partition_scoped_merge_checks_source_in_one_aggregate(spark, escaped_table):
-    """Both MERGE source checks (scope and cardinality) are one aggregate.
-    With AQE off every query is one job, so a scoped MERGE is exactly
-    three: the source checks, the target's schema inference and the
-    staged write. A second MERGE reads the schema the first recorded and
-    runs two."""
-    path, _t1, t2 = escaped_table
+def _merge_jobs_aqe_off(spark, path, sources, **kw):
+    """Jobs of one MERGE per source, with AQE off so every query is one
+    job plus its broadcasts."""
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        jobs = []
-        for val in (99.0, 98.0):
-            source = spark.createDataFrame(
-                [("a:1", t2, 3, val)], "k STRING, t TIMESTAMP, id BIGINT, val DOUBLE"
-            )
-            jobs.append(_jobs(spark, lambda: dml.merge_into(
-                spark, path, source, on=["id"], matched_update={"val": F.col("src.val")},
-                partition_filter=F.col("k") == "a:1", partition_cols=["k", "t"],
-            ))[1])
+        return [
+            _jobs(spark, lambda: dml.merge_into(
+                spark, path, source, on=["id"], matched_update={"val": F.col("src.val")}, **kw
+            ))[1]
+            for source in sources
+        ]
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    assert jobs == [3, 2]
+
+
+def test_partition_scoped_merge_checks_ride_the_staged_write(spark, escaped_table):
+    """Both MERGE source checks (scope and cardinality) are observed by
+    the staged write itself, so a scoped MERGE runs no query of its own
+    for them: the first MERGE is the target's schema inference and the
+    write, a second one (schema recorded by the first) only the write."""
+    path, _t1, t2 = escaped_table
+    sources = [
+        spark.createDataFrame([("a:1", t2, 3, val)], "k STRING, t TIMESTAMP, id BIGINT, val DOUBLE")
+        for val in (99.0, 98.0)
+    ]
+    jobs = _merge_jobs_aqe_off(
+        spark, path, sources, partition_filter=F.col("k") == "a:1", partition_cols=["k", "t"]
+    )
+    assert jobs == [2, 1]
     assert {r.id: r.val for r in spark.read.parquet(path).collect()}[3] == 98.0
+
+
+def test_second_merge_runs_one_job(spark, table):
+    """An unscoped MERGE on a table the engine wrote runs the staged write
+    and nothing else: the checks ride the write, the schema is recorded."""
+    dml.update_table(spark, table, {"val": F.col("val") + 1}, F.col("id") == 1)
+    source = spark.createDataFrame([(2, "B", 99.0), (5, "e", 50.0)], "id BIGINT, name STRING, val DOUBLE")
+    assert _merge_jobs_aqe_off(spark, table, [source]) == [1]
+    assert {r.id: r.val for r in spark.read.parquet(table).collect()} == {
+        1: 11.0, 2: 99.0, 3: 30.0, 4: 40.0, 5: 50.0,
+    }
+
+
+def _plan_nodes(node):
+    """(nodeName, node) for every node of a physical plan, preorder."""
+    yield node.nodeName(), node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def test_merge_write_plan_scans_source_once(spark, table, tmp_path, monkeypatch):
+    """With AQE off the MERGE's write plan observes the source checks in
+    one CollectMetrics, scans the source once, and shuffles the source
+    once: the join reuses the grouping's hash exchange. Together with
+    the one-job pin above, a source-check pre-pass or a second source
+    scan fails here."""
+    src_path = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(2, "B", 99.0), (5, "e", 50.0)], "id BIGINT, name STRING, val DOUBLE"
+    ).write.parquet(src_path)
+    source = spark.read.parquet(src_path)
+    plans = []
+    write_staged = dml._write_staged
+
+    def spy(writer, path, guard=None):
+        plans.append(writer._df._jdf.queryExecution().executedPlan())
+        return write_staged(writer, path, guard)
+
+    monkeypatch.setattr(dml, "_write_staged", spy)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        dml.merge_into(spark, table, source, on=["id"], matched_update={"val": F.col("src.val")})
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    [plan] = plans
+    nodes = list(_plan_nodes(plan))
+    assert [n for n, _ in nodes].count("CollectMetrics") == 1
+    leaves = [node for _n, node in nodes if not node.children().size()]
+    assert sum(src_path in leaf.toString() for leaf in leaves) == 1
+    join = next(node for n, node in nodes if "Join" in n)
+    src_side = next(
+        kid for kid in (join.children().apply(i) for i in range(2))
+        if any(n == "CollectMetrics" for n, _ in _plan_nodes(kid))
+    )
+    names = [n for n, _ in _plan_nodes(src_side)]
+    # one exchange on the source side, below the observation
+    assert names.count("Exchange") == 1
+    assert names.index("CollectMetrics") < names.index("Exchange")
+    assert {r.id: r.val for r in spark.read.parquet(table).collect()}[2] == 99.0
 
 
 def test_merge_out_of_scope_reported_before_duplicates(spark, tmp_path):
@@ -558,20 +628,115 @@ def test_merge_empty_source_keeps_table_byte_identical(spark, table):
 
 def test_merge_null_key_duplicates_violate_cardinality(spark, table):
     """NULL keys group together, so two NULL-keyed source rows are a
-    duplicate key, as groupBy counts them."""
+    duplicate key, as groupBy counts them. A no-insert MERGE becomes a
+    left outer join, for which Catalyst infers ``isnotnull(id)`` on the
+    source side; the checks are observed above the grouping, so that
+    filter cannot drop the NULL-keyed rows before they are counted."""
     source = spark.createDataFrame(
         [(None, "x", 1.0), (None, "y", 2.0)], "id BIGINT, name STRING, val DOUBLE"
     )
+    before = _files(table)
     with pytest.raises(ValueError, match="cardinality"):
         dml.merge_into(spark, table, source, on=["id"])
+    with pytest.raises(ValueError, match="cardinality"):
+        dml.merge_into(
+            spark, table, source, on=["id"], matched_update={"val": F.col("src.val")},
+            not_matched_insert=False,
+        )
+    assert _files(table) == before
+
+
+def _staged_dirs(d):
+    import os
+
+    return [n for n in os.listdir(d) if "__staged_" in n]
+
+
+@pytest.fixture()
+def emptied_table(spark, table):
+    """``table`` after a DELETE of every row: an engine-written, empty target."""
+    dml.delete_from(spark, table, F.lit(True))
+    return table
+
+
+def test_no_insert_merge_into_empty_target_checks_cardinality(spark, emptied_table, monkeypatch):
+    """A no-insert MERGE into an empty target is a left outer join with an
+    empty left side, which AQE answers without running the source, so the
+    write observes no metrics. The guard computes the same flags itself:
+    a duplicate-keyed source still raises and nothing stays staged."""
+    import os
+
+    made = []  # every Observation merge_into creates
+    monkeypatch.setattr(dml, "Observation", lambda: made.append(Observation()) or made[-1])
+    before = _files(emptied_table)
+    source = spark.createDataFrame([(2, "x", 1.0), (2, "y", 2.0)], "id BIGINT, name STRING, val DOUBLE")
+    with pytest.raises(ValueError, match="cardinality"):
+        dml.merge_into(spark, emptied_table, source, on=["id"], not_matched_insert=False)
+    [observation] = made
+    assert observation._jo.getRow().length() == 0  # the fallback ran
+    assert _staged_dirs(os.path.dirname(emptied_table)) == []
+    assert _files(emptied_table) == before
+
+
+def test_no_insert_merge_into_empty_target_commits_valid_source(spark, emptied_table):
+    """The same MERGE with a unique-keyed source passes the fallback's
+    checks and commits its (empty) rewrite."""
+    import os
+
+    before = catalog.listing_version(emptied_table)
+    source = spark.createDataFrame([(2, "x", 1.0), (3, "y", 2.0)], "id BIGINT, name STRING, val DOUBLE")
+    dml.merge_into(
+        spark, emptied_table, source, on=["id"], matched_update={"val": F.col("src.val")},
+        not_matched_insert=False,
+    )
+    assert catalog.listing_version(emptied_table) != before
+    assert spark.read.parquet(emptied_table).count() == 0
+    assert _staged_dirs(os.path.dirname(emptied_table)) == []
+
+
+def test_out_of_scope_row_creating_a_partition_raises(spark, tmp_path):
+    """An out-of-scope source row that would insert into a partition the
+    table lacks raises; the staged write that held it is dropped, so no
+    partition directory appears and the table is unchanged."""
+    import os
+
+    path = _partitioned(spark, str(tmp_path / "t"))
+    before = _files(path)
+    source = spark.createDataFrame(
+        [("a", 1, 11.0, 1), ("c", 9, 90.0, 9)], "grp STRING, id BIGINT, val DOUBLE, n INT"
+    )
+    with pytest.raises(ValueError, match="outside partition_filter"):
+        dml.merge_into(spark, path, source, on=["id"], **_scope_a())
+    assert not os.path.exists(os.path.join(path, "grp=c"))
+    assert _staged_dirs(tmp_path) == []
+    assert _files(path) == before
+
+
+def test_reserved_source_column_raises_before_any_job(spark, table):
+    """A source carrying a MERGE sentinel name is a schema error, raised
+    before the statement runs anything."""
+    source = spark.createDataFrame([(1, 1)], "id BIGINT, __src_m INT")
+
+    def merge():
+        with pytest.raises(ValueError, match="reserved by MERGE"):
+            dml.merge_into(spark, table, source, on=["id"])
+
+    assert _jobs(spark, merge)[1] == 0
+
+
+def test_merge_key_only_source(spark, table):
+    """A source holding only the join keys deletes its matches and inserts
+    its other keys with NULL data columns."""
+    source = spark.createDataFrame([(1,), (9,)], "id BIGINT")
+    dml.merge_into(spark, table, source, on=["id"], matched_delete=F.lit(True))
+    got = {r.id: (r.name, r.val) for r in spark.read.parquet(table).collect()}
+    assert got == {2: ("b", 20.0), 3: ("c", 30.0), 4: ("d", 40.0), 9: (None, None)}
 
 
 @pytest.mark.parametrize("scoped", [False, True])
 def test_failed_staged_write_leaves_no_staging_dir(spark, tmp_path, scoped):
     """A staged write that raises removes its staging directory; the table
     is unchanged and the next statement on it commits."""
-    import os
-
     path = str(tmp_path / "t")
     spark.createDataFrame(
         [("a", 1, 10.0), ("b", 2, 20.0)], "grp STRING, id BIGINT, val DOUBLE"
@@ -580,7 +745,7 @@ def test_failed_staged_write_leaves_no_staging_dir(spark, tmp_path, scoped):
     before = _files(path)
     with pytest.raises(Exception, match="boom"):
         dml.update_table(spark, path, {"val": F.raise_error(F.lit("boom"))}, F.lit(True), **scope)
-    assert [n for n in os.listdir(tmp_path) if "__staged_" in n] == []
+    assert _staged_dirs(tmp_path) == []
     assert _files(path) == before
     dml.update_table(spark, path, {"val": F.col("val") + 1}, F.col("id") == 1, **scope)
     assert {r.id: r.val for r in spark.read.parquet(path).collect()} == {1: 11.0, 2: 20.0}

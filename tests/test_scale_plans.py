@@ -405,6 +405,9 @@ def test_corpus_build_returns_checkpointed_report(spark):
     assert "Scan ExistingRDD" in plan, plan
     assert "Exchange" not in plan, plan
     assert "FileScan" not in plan, plan
+    # free the checkpoint's blocks now, not at the JVM's next collection:
+    # later tests (test_scd2) assert that executor storage holds no block
+    df._jdf.queryExecution().analyzed().rdd().unpersist(True)
 
 
 def test_range_join_bucketed_equals_naive_theta(spark):
