@@ -320,11 +320,13 @@ def interval_join_full(
 
 
 def run_available_now(
-    result: DataFrame, name: str, output_mode: str = "complete", timeout_s: int = 300
+    result: DataFrame, name: str, output_mode: str = "complete", timeout_s: float = 300
 ) -> DataFrame:
     """Execute a streaming result fully (availableNow trigger → memory
     sink) and return the materialized table. Stops any prior query with
-    the same name so re-runs are idempotent."""
+    the same name so re-runs are idempotent. Raises ``TimeoutError``
+    (after stopping the query) if it has not finished within
+    ``timeout_s`` seconds, instead of returning a partial table."""
     spark = result.sparkSession
     for q in spark.streams.active:
         if q.name == name:
@@ -336,8 +338,12 @@ def run_available_now(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    finished = q.awaitTermination(timeout_s)
     q.stop()
+    if not finished:
+        raise TimeoutError(
+            f"streaming query {name!r} did not finish within {timeout_s} s"
+        )
     return spark.table(name)
 
 
@@ -370,12 +376,21 @@ def late_drop_replay(
     late-data rejection — the entire point of watermarks — becomes a
     hash-gated batch-SQL predicate.
 
-    Mechanics: the three batch files are rewritten idempotently under
-    spark-warehouse (one part file each, modification times staggered
-    so FileStreamSource's oldest-first ordering is deterministic),
-    streamed with maxFilesPerTrigger=1 so availableNow runs one batch
-    per file. ``ts`` is cast to classic TIMESTAMP (EventTimeWatermark
-    rejects NTZ; session tz is pinned UTC so values are preserved)."""
+    Mechanics: one scan of the events and one Spark job stage the
+    three batch files (Hive's multi-insert, ``FROM src INSERT …
+    INSERT …``). Each row is tagged with every batch whose filter it
+    passes (``ts >= split`` → 1-ontime, ``ts >= tick`` → 2-tick,
+    ``ts < split`` → 3-late), exploded to one row per tag and written
+    ``coalesce(1)`` partitioned by the tag, so each batch gets one
+    part file without the tag column; a batch with no rows gets no
+    partition directory and is written as an empty file instead. The
+    part files are moved to ``data/<batch>.parquet`` under
+    spark-warehouse (rewritten idempotently, modification times
+    staggered so FileStreamSource's oldest-first ordering is
+    deterministic) and streamed with maxFilesPerTrigger=1 so
+    availableNow runs one batch per file. ``ts`` is cast to classic
+    TIMESTAMP (EventTimeWatermark rejects NTZ; session tz is pinned UTC
+    so values are preserved)."""
     import glob
     import os
     import shutil
@@ -403,18 +418,30 @@ def late_drop_replay(
         shutil.rmtree(base)
     os.makedirs(data_dir)
     tick = "2024-01-28 00:00:00"
-    for name, frame, mtime in (
-        ("1-ontime", events.filter(F.col("ts") >= F.lit(split)), 1_000_000_000),
-        ("2-tick", events.filter(F.col("ts") >= F.lit(tick)), 1_000_000_100),
-        ("3-late", events.filter(F.col("ts") < F.lit(split)), 1_000_000_200),
-    ):
-        tmp = os.path.join(base, f"_{name}")
-        frame.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+    batches = (
+        ("1-ontime", F.col("ts") >= F.lit(split), 1_000_000_000),
+        ("2-tick", F.col("ts") >= F.lit(tick), 1_000_000_100),
+        ("3-late", F.col("ts") < F.lit(split), 1_000_000_200),
+    )
+    tags = F.array_compact(
+        F.array(*(F.when(cond, F.lit(name)) for name, cond, _ in batches))
+    )
+    staged = os.path.join(base, "_staged")
+    (
+        events.withColumn("batch", F.explode(tags))
+        .coalesce(1)
+        .write.partitionBy("batch")
+        .parquet(staged)
+    )
+    for name, _, mtime in batches:
+        part_dir = os.path.join(staged, f"batch={name}")
+        if not os.path.isdir(part_dir):
+            events.limit(0).coalesce(1).write.parquet(part_dir)
+        part = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
         dest = os.path.join(data_dir, f"{name}.parquet")
         shutil.move(part, dest)
         os.utime(dest, (mtime, mtime))
-        shutil.rmtree(tmp)
+    shutil.rmtree(staged)
     stream = (
         # the batch files are written from ``events``: same schema
         spark.readStream.schema(events.schema)

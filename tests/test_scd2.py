@@ -114,9 +114,26 @@ def test_scd2_streaming_cdc_equals_batch_rebuild(spark, tmp_path):
     assert sum(1 for r in got if r[0] == 1) == 3
 
 
+def _release_dropped_blocks(spark, timeout_s: float = 30.0) -> None:
+    """Free the storage blocks of frames that earlier tests dropped.
+    Spark's ContextCleaner releases a block only after the JVM collects
+    its RDD, which a long test session may not do for many minutes;
+    blocks of frames still referenced stay."""
+    import gc
+    import time
+
+    gc.collect()  # release the Python-side py4j references first
+    sc = spark.sparkContext
+    deadline = time.monotonic() + timeout_s
+    while len(sc._jsc.sc().getRDDStorageInfo()) and time.monotonic() < deadline:
+        sc._jvm.System.gc()
+        time.sleep(0.2)
+
+
 def test_scd2_apply_leaves_no_storage_blocks(spark, tmp_path):
     """The incremental apply commits through a staged swap: once it
     returns, no cached or checkpointed block is left in storage."""
+    _release_dropped_blocks(spark)
     path = str(tmp_path / "dim")
     b1 = spark.createDataFrame(
         [(1, "a", _t(0)), (2, "x", _t(0))], "id BIGINT, attr STRING, ts TIMESTAMP"

@@ -4,11 +4,17 @@ SURVEY.md §2.K."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQueryListener
 
 from hive_release_spark.catalog import load_table
+from hive_release_spark.functions.temporal import ts_valid
 from hive_release_spark.streaming import pipelines as P
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_ORACLE, SF_SMOKE, _jobs
 
 
 def _batch_events(spark):
@@ -253,6 +259,24 @@ def test_stream_stream_full_join_closed_region_parity(spark):
     assert any(r[1] is None for r in s)  # clicks that never converted
 
 
+def _replay_files(sf_dir):
+    base = os.path.join(
+        "spark-warehouse", f"latedrop_{os.path.basename(sf_dir.rstrip('/'))}"
+    )
+    return {
+        name: os.path.join(base, "data", f"{name}.parquet")
+        for name in ("1-ontime", "2-tick", "3-late")
+    }
+
+
+def _replay_events(spark, sf_dir):
+    return (
+        load_table(spark, sf_dir, "events")
+        .filter(ts_valid("ts"))
+        .select(F.col("ts").cast(T.TimestampType()).alias("ts"), "value")
+    )
+
+
 def test_late_drop_replay_drops_every_late_row_by_watermark(spark):
     """The 3-batch replay must witness an ACTUAL watermark drop: the
     state operator's numRowsDroppedByWatermark across the run equals
@@ -265,14 +289,8 @@ def test_late_drop_replay_drops_every_late_row_by_watermark(spark):
     # manually because run_available_now stops the query before its
     # progress metrics can be read
     P.late_drop_replay(spark, SF_SMOKE)
-    import glob
-    import os
-
-    base = os.path.join(
-        "spark-warehouse", f"latedrop_{os.path.basename(SF_SMOKE.rstrip('/'))}"
-    )
-    data_dir = os.path.join(base, "data")
-    late_file = glob.glob(os.path.join(data_dir, "3-late.parquet"))[0]
+    late_file = _replay_files(SF_SMOKE)["3-late"]
+    data_dir = os.path.dirname(late_file)
     n_late_windows = (
         spark.read.parquet(late_file)
         .select(F.date_trunc("day", "ts").alias("d"))
@@ -314,3 +332,78 @@ def test_late_drop_replay_drops_every_late_row_by_watermark(spark):
 
     min_ws = min(r["ws"] for r in out.collect())
     assert min_ws >= datetime.datetime(2024, 1, 8), min_ws
+
+
+def test_run_available_now_raises_on_timeout(spark):
+    """A query still running at the timeout raises, naming the query,
+    instead of returning a partial memory-sink table; it is stopped."""
+    stream = P.tumbling_agg(P.load_events_stream(spark, SF_SMOKE))
+    with pytest.raises(TimeoutError, match="t_timeout_test"):
+        P.run_available_now(stream, "t_timeout_test", timeout_s=0.001)
+    assert all(q.name != "t_timeout_test" for q in spark.streams.active)
+
+
+@pytest.mark.parametrize("sf_dir", [SF_SMOKE, SF_ORACLE])
+def test_late_drop_replay_stages_each_batch_row_for_row(spark, sf_dir):
+    """The one tagged write stages exactly the rows of each batch's own
+    filter, with the events schema (no tag column)."""
+    split, tick = "2024-01-08 00:00:00", "2024-01-28 00:00:00"
+    P.late_drop_replay(spark, sf_dir, split=split)
+    events = _replay_events(spark, sf_dir)
+    want = {
+        "1-ontime": events.filter(F.col("ts") >= F.lit(split)),
+        "2-tick": events.filter(F.col("ts") >= F.lit(tick)),
+        "3-late": events.filter(F.col("ts") < F.lit(split)),
+    }
+    for name, path in _replay_files(sf_dir).items():
+        got = spark.read.parquet(path)
+        assert got.schema == events.schema, (name, got.schema)
+        assert got.count() == want[name].count() > 0, name
+        assert got.exceptAll(want[name]).count() == 0, name
+        assert want[name].exceptAll(got).count() == 0, name
+
+
+def test_late_drop_replay_writes_empty_late_batch(spark):
+    """A split before every event leaves the late batch empty: the
+    partitioned write makes no directory for it, yet its file exists
+    with 0 rows and the replay still runs."""
+    out = P.late_drop_replay(spark, SF_SMOKE, split="2000-01-01 00:00:00")
+    assert out.count() > 0
+    files, events = _replay_files(SF_SMOKE), _replay_events(spark, SF_SMOKE)
+    late = spark.read.parquet(files["3-late"])
+    assert late.count() == 0
+    assert late.schema == events.schema
+    assert spark.read.parquet(files["1-ontime"]).count() == events.count()
+
+
+class _BatchCounter(StreamingQueryListener):
+    def __init__(self, name):
+        self.name, self.batches = name, 0
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        self.batches += event.progress.name == self.name
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        pass
+
+
+def test_late_drop_replay_stages_in_one_job(spark):
+    """Staging the three batch files is one Spark job on the caller's
+    job group; the stream's micro-batch jobs run under the query's own
+    job group, so they are pinned as micro-batches: one per file."""
+    load_table(spark, SF_SMOKE, "events")  # schema recorded: no job below
+    counter = _BatchCounter("stream_watermark_late_drop")
+    spark.streams.addListener(counter)
+    try:
+        _, jobs = _jobs(spark, lambda: P.late_drop_replay(spark, SF_SMOKE))
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(counter)
+    assert jobs == 1
+    assert counter.batches == 3
