@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hive_release_spark.llm.text import tokens
+from hive_release_spark.operators.pairs import sorted_pairs
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -128,28 +129,15 @@ def jaccard_pairs(
     )
     if max_df is not None:
         postings = postings.filter(F.size("docs") <= max_df)
-    # emit all ordered pairs (i<j) within each postings list; the pair
-    # array is materialized in its own projection and explode_OUTER'd so
-    # InferFiltersFromGenerate can't duplicate its construction into an
-    # inferred size-filter (see _exploded_shingles)
-    pair_arrays = postings.filter(F.size("docs") > 1).select(
-        F.flatten(
-            F.transform(
-                F.col("docs"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-                    lambda y: F.struct(
-                        x["doc_id"].alias("doc_a"),
-                        y["doc_id"].alias("doc_b"),
-                        x["n_sh"].alias("na"),
-                        y["n_sh"].alias("nb"),
-                    ),
-                ),
-            )
-        ).alias("ps")
-    )
-    pairs = pair_arrays.select(F.explode_outer("ps").alias("p")).filter(
-        F.col("p").isNotNull()
+    pairs = sorted_pairs(
+        postings,
+        "docs",
+        lambda x, y: F.struct(
+            x["doc_id"].alias("doc_a"),
+            y["doc_id"].alias("doc_b"),
+            x["n_sh"].alias("na"),
+            y["n_sh"].alias("nb"),
+        ),
     )
     return (
         pairs.groupBy(
@@ -285,20 +273,10 @@ def minhash_lsh_pairs(
     )
     if max_df is not None:
         postings = postings.filter(F.size("docs") <= max_df)
-    cand_arrays = postings.filter(F.size("docs") > 1).select(
-        F.flatten(
-            F.transform(
-                F.col("docs"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-                    lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-                ),
-            )
-        ).alias("ps")
-    )
     candidates = (
-        cand_arrays.select(F.explode_outer("ps").alias("p"))
-        .filter(F.col("p").isNotNull())
+        sorted_pairs(
+            postings, "docs", lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b"))
+        )
         .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .distinct()
     )
@@ -506,25 +484,14 @@ def simhash_pairs(
     postings = banded.groupBy("chunk", "v").agg(
         F.sort_array(F.collect_set(F.struct("doc_id", "simhash"))).alias("docs")
     )
-    pair_arrays = postings.filter(F.size("docs") > 1).select(
-        F.flatten(
-            F.transform(
-                F.col("docs"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-                    lambda y: F.struct(
-                        x["doc_id"].alias("doc_a"),
-                        y["doc_id"].alias("doc_b"),
-                        F.bit_count(
-                            x["simhash"].bitwiseXOR(y["simhash"])
-                        ).alias("hamming"),
-                    ),
-                ),
-            )
-        ).alias("ps")
-    )
-    pairs = pair_arrays.select(F.explode_outer("ps").alias("p")).filter(
-        F.col("p").isNotNull()
+    pairs = sorted_pairs(
+        postings,
+        "docs",
+        lambda x, y: F.struct(
+            x["doc_id"].alias("doc_a"),
+            y["doc_id"].alias("doc_b"),
+            F.bit_count(x["simhash"].bitwiseXOR(y["simhash"])).alias("hamming"),
+        ),
     )
     return (
         pairs.select("p.doc_a", "p.doc_b", "p.hamming")
@@ -718,22 +685,11 @@ def prefix_candidate_pairs(
         pref.select("doc_id", F.explode("pref").alias("s_h"))
         .groupBy("s_h")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-        .filter(F.size("ds") > 1)
-    )
-    pair_arrays = postings.select(
-        F.flatten(
-            F.transform(
-                F.col("ds"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                    lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-                ),
-            )
-        ).alias("ps")
     )
     candidates = (
-        pair_arrays.select(F.explode_outer("ps").alias("p"))
-        .filter(F.col("p").isNotNull())
+        sorted_pairs(
+            postings, "ds", lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b"))
+        )
         .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .distinct()
     )

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from hive_release_spark.llm.dedup import _doc_shingles, _exploded_shingles, shingles
 from hive_release_spark.llm.text import token_count
+from hive_release_spark.operators.pairs import sorted_pairs
 
 HEX = "0123456789abcdef"
 
@@ -260,20 +261,12 @@ def source_overlap(
         .distinct()
     )
     postings = gs.groupBy("s_h").agg(F.sort_array(F.collect_set("src")).alias("srcs"))
-    pair_arrays = postings.filter(F.size("srcs") > 1).select(
-        F.flatten(
-            F.transform(
-                F.col("srcs"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("srcs"), i + 2, F.size(F.col("srcs"))),
-                    lambda y: F.struct(x.alias("source_a"), y.alias("source_b")),
-                ),
-            )
-        ).alias("ps")
-    )
     return (
-        pair_arrays.select(F.explode_outer("ps").alias("p"))
-        .filter(F.col("p").isNotNull())
+        sorted_pairs(
+            postings,
+            "srcs",
+            lambda x, y: F.struct(x.alias("source_a"), y.alias("source_b")),
+        )
         .groupBy(
             F.col("p.source_a").alias("source_a"),
             F.col("p.source_b").alias("source_b"),

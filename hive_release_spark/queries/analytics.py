@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
 from hive_release_spark.functions.temporal import ts_valid
+from hive_release_spark.operators.pairs import sorted_pairs
 from hive_release_spark.queries.registry import register
 
 
@@ -316,20 +317,10 @@ def basket_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("grp")
         .agg(F.count("*").alias("c"))
     )
-    pair_arrays = baskets.filter(F.size("gs") > 1).select(
-        F.flatten(
-            F.transform(
-                F.col("gs"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("gs"), i + 2, F.size(F.col("gs"))),
-                    lambda y: F.struct(x.alias("grp_a"), y.alias("grp_b")),
-                ),
-            )
-        ).alias("ps")
-    )
     pairs = (
-        pair_arrays.select(F.explode_outer("ps").alias("p"))
-        .filter(F.col("p").isNotNull())
+        sorted_pairs(
+            baskets, "gs", lambda x, y: F.struct(x.alias("grp_a"), y.alias("grp_b"))
+        )
         .groupBy(F.col("p.grp_a").alias("grp_a"), F.col("p.grp_b").alias("grp_b"))
         .agg(F.count("*").alias("c_ab"))
         .filter(F.col("c_ab") >= 20)

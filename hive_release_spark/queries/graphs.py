@@ -6,11 +6,13 @@ the oracles re-derive the pair set in SQL and unroll the iterations.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
 from hive_release_spark.llm import dedup, graph
+from hive_release_spark.operators.pairs import sorted_pairs
+from hive_release_spark.operators.topk import global_topk
 from hive_release_spark.queries.registry import register
 
 # The Jaccard >= 0.5 trigram pair set, identical to the
@@ -52,18 +54,14 @@ def _pr_iterations(k: int) -> str:
 def _copurchase_pairs(li: DataFrame) -> DataFrame:
     """The >= 2-support co-purchase edge list (pa < pb), emitted from
     each order's sorted distinct part list — the item-item-CF
-    pair-emission recipe (r13, guide §2.4): ONE order-key exchange
-    (repartition + subset-key rule for the dedup and the basket
-    groupBy), i<j pairs via in-order HOFs instead of an
-    equi-self-join of the distinct basket frame (which shuffled it
-    twice plus the pair groupBy, or broadcast it wholesale at fixture
-    scale). Identical pair set: parts are distinct within an order,
-    the array is ascending, and slice(i+2..) emits exactly the
-    pa < pb combinations the join produced. explode_OUTER +
-    isNotNull: the InferFiltersFromGenerate lesson (an inner explode
-    gets an inferred size-filter that duplicates the pair-array
-    construction). Shared by the Adamic-Adar / Jaccard-neighbors /
-    assortativity substrate builders; returned UNPERSISTED."""
+    pair-emission recipe: ONE order-key exchange (repartition +
+    subset-key rule for the dedup and the basket groupBy), then
+    sorted_pairs instead of an equi-self-join of the distinct basket
+    frame (which shuffled it twice plus the pair groupBy, or broadcast
+    it wholesale at fixture scale). Parts are distinct within an order
+    and the array is ascending, so the pairs are exactly pa < pb.
+    Shared by the Adamic-Adar / Jaccard-neighbors / assortativity
+    substrate builders; returned UNPERSISTED."""
     baskets = (
         li.select("l_orderkey", "l_partkey")
         .repartition("l_orderkey")
@@ -71,20 +69,10 @@ def _copurchase_pairs(li: DataFrame) -> DataFrame:
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_list("l_partkey")).alias("parts"))
     )
-    pair_arrays = baskets.filter(F.size("parts") > 1).select(
-        F.flatten(
-            F.transform(
-                F.col("parts"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("parts"), i + 2, F.size(F.col("parts"))),
-                    lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-                ),
-            )
-        ).alias("ps")
-    )
     return (
-        pair_arrays.select(F.explode_outer("ps").alias("p"))
-        .filter(F.col("p").isNotNull())
+        sorted_pairs(
+            baskets, "parts", lambda x, y: F.struct(x.alias("pa"), y.alias("pb"))
+        )
         .groupBy(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
         .agg(F.count("*").alias("n"))
         .filter(F.col("n") >= 2)
@@ -346,20 +334,9 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["u", "v"],
         "left_anti",
     )
-    # r13 (guide §2.5, the CF top-k device): the global row_number
-    # funneled EVERY candidate pair through one task's sort;
-    # orderBy+limit compiles to TakeOrderedAndProject (parallel
-    # per-partition top-k) and the ordering is total — (u, v) unique —
-    # so the 20 survivors are identical; the window then ranks 20 rows.
-    top20 = nonedge.orderBy(F.desc(F.round("aa", 6)), "u", "v").limit(20)
     return (
-        top20.withColumn(
-            # rank on the reported precision (see oracle note)
-            "rk",
-            F.row_number().over(
-                W.orderBy(F.desc(F.round("aa", 6)), "u", "v")
-            ),
-        )
+        # rank on the reported precision (see oracle note)
+        global_topk(nonedge, 20, F.desc(F.round("aa", 6)), "u", "v")
         .select(
             F.col("u").alias("part_a"),
             F.col("v").alias("part_b"),
@@ -466,14 +443,8 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("deg_u") + F.col("deg_v") - F.col("n_common")),
         )
     )
-    # r13: global row_number → orderBy+limit (TakeOrderedAndProject;
-    # total order, (u, v) unique), window then ranks the 20 survivors
-    top20 = scored.orderBy(F.desc("score"), "u", "v").limit(20)
     return (
-        top20.withColumn(
-            "rk",
-            F.row_number().over(W.orderBy(F.desc("score"), "u", "v")),
-        )
+        global_topk(scored, 20, F.desc("score"), "u", "v")
         .select(
             F.col("u").alias("part_a"),
             F.col("v").alias("part_b"),

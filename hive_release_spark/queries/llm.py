@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
 from hive_release_spark.llm import dedup, multimodal, similarity, text
+from hive_release_spark.operators.pairs import sorted_pairs
 from hive_release_spark.queries.registry import register
 
 # ---------------------------------------------------------------------------
@@ -866,23 +867,14 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings = ex.groupBy("s_h").agg(
         F.sort_array(F.collect_list(F.struct("n_sh", "doc_id"))).alias("docs")
     )
-    pair_arrays = postings.filter(F.size("docs") > 1).select(
-        F.flatten(
-            F.transform(
-                F.col("docs"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-                    lambda y: F.struct(
-                        x["doc_id"].alias("doc_small"),
-                        y["doc_id"].alias("doc_big"),
-                        x["n_sh"].alias("n_small"),
-                    ),
-                ),
-            )
-        ).alias("ps")
-    )
-    pairs = pair_arrays.select(F.explode_outer("ps").alias("p")).filter(
-        F.col("p").isNotNull()
+    pairs = sorted_pairs(
+        postings,
+        "docs",
+        lambda x, y: F.struct(
+            x["doc_id"].alias("doc_small"),
+            y["doc_id"].alias("doc_big"),
+            x["n_sh"].alias("n_small"),
+        ),
     )
     return (
         pairs.groupBy(

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
 from hive_release_spark.llm import clustering, similarity, text
+from hive_release_spark.operators.topk import global_topk
 from hive_release_spark.queries.registry import register
 
 
@@ -1133,24 +1134,17 @@ def search_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        scored.withColumn(
-            # rank on the reported precision (r11 replica axis) — the
-            # raw float sum is engine-wobbly at the last ulp.
-            # PROBABILISTIC, not absolute (ADVICE r11-3): a raw score
-            # straddling a 6th-decimal rounding boundary could still
-            # round (and rank) differently per engine; round() only
-            # shrinks the vulnerable set from "every near-tie" to
-            # "ties within one ulp OF a boundary". The fully
-            # deterministic alternative — an exact integer surrogate
-            # (BIGINT-quantized score) — costs a documented contract
-            # change; adopt it if this ever wobbles in practice.
-            # Shared by search_tfidf_cosine and graph_adamic_adar.
-            "rk",
-            F.row_number().over(
-                W.orderBy(F.desc(F.round("score", 6)), "doc_id")
-            ),
-        )
-        .filter(F.col("rk") <= 20)
+        # rank on the reported precision — the raw float sum is
+        # engine-wobbly at the last ulp. PROBABILISTIC, not absolute: a
+        # raw score straddling a 6th-decimal rounding boundary could
+        # still round (and rank) differently per engine; round() only
+        # shrinks the vulnerable set from "every near-tie" to "ties
+        # within one ulp OF a boundary". The fully deterministic
+        # alternative — an exact integer surrogate (BIGINT-quantized
+        # score) — costs a documented contract change; adopt it if this
+        # ever wobbles in practice. Shared by search_tfidf_cosine and
+        # graph_adamic_adar.
+        global_topk(scored, 20, F.desc(F.round("score", 6)), "doc_id")
         .select("doc_id", F.round("score", 6).alias("bm25"), "rk")
         .orderBy("rk")
     )
@@ -1558,15 +1552,8 @@ def search_query_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         (c0 + h - 3 * F.log(F.col("dlen") + mu)).alias("score"),
     )
-    # r13 (guide §2.5, the CF top-k device): orderBy+limit compiles to
-    # TakeOrderedAndProject (parallel per-partition top-k; the ordering
-    # is total — doc_id unique), the window then ranks 20 rows instead
-    # of the corpus-cardinality score frame
-    top20 = scored.orderBy(F.desc("score"), "doc_id").limit(20)
     return (
-        top20.withColumn(
-            "rk", F.row_number().over(W.orderBy(F.desc("score"), "doc_id"))
-        )
+        global_topk(scored, 20, F.desc("score"), "doc_id")
         .select("doc_id", F.round("score", 6).alias("ql_score"), "rk")
         .orderBy("rk")
     )
@@ -1705,15 +1692,8 @@ def text_rake_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_occur"),
         F.round(F.max("score"), 6).alias("rake_score"),
     )
-    # r13: orderBy+limit = TakeOrderedAndProject over the
-    # phrase-cardinality frame (total order — phrase unique); the
-    # window ranks the 15 survivors
-    top15 = agg.orderBy(F.desc("rake_score"), "phrase").limit(15)
     return (
-        top15.withColumn(
-            "rk",
-            F.row_number().over(W.orderBy(F.desc("rake_score"), "phrase")),
-        )
+        global_topk(agg, 15, F.desc("rake_score"), "phrase")
         .select("phrase", "plen", "n_occur", "rake_score", "rk")
         .orderBy("rk")
     )
@@ -1827,14 +1807,8 @@ def search_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        scored.withColumn(
-            # rank on the reported precision (see bm25 note)
-            "rk",
-            F.row_number().over(
-                W.orderBy(F.desc(F.round("score", 6)), "doc_id")
-            ),
-        )
-        .filter(F.col("rk") <= 20)
+        # rank on the reported precision (see bm25 note)
+        global_topk(scored, 20, F.desc(F.round("score", 6)), "doc_id")
         .select("doc_id", F.round("score", 6).alias("tfidf_cos"), "rk")
         .orderBy("rk")
     )

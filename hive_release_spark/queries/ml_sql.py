@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
 from hive_release_spark.functions.numeric import is_finite
+from hive_release_spark.operators.pairs import sorted_pairs
+from hive_release_spark.operators.topk import global_topk
 from hive_release_spark.queries.registry import register
 
 
@@ -671,17 +673,13 @@ def ml_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything; cosine discounts them). The score is one exact-long
     ratio through sqrt, folded at micro; (score, pa, pb) tie-break."""
     li = load_table(spark, sf_dir, "lineitem")
-    # r12 optimization (guide §2.4): pair emission via the postings-list
-    # shape (groupBy order → sorted part array → inline i<j pairs), the
-    # same device the dedup family uses — replaces the equi-self-join,
-    # which shuffled the basket frame TWICE (once per join side) plus
-    # once for the pair groupBy.  Identical pair set: parts are distinct
-    # within an order, the array is sorted ascending, and slice(i+2..)
-    # emits exactly the pa < pb combinations the
-    # a.l_partkey < b.l_partkey join produced.
+    # Pair emission from the sorted per-order part array (sorted_pairs)
+    # replaces the equi-self-join, which shuffled the basket frame TWICE
+    # (once per join side) plus once for the pair groupBy.  Parts are
+    # distinct within an order, so the pairs are exactly the
+    # a.l_partkey < b.l_partkey join's.
     #
-    # Second pass (same round, the basket_part_affinity device): ONE
-    # order-key exchange serves the whole fact path — the fact
+    # ONE order-key exchange serves the whole fact path — the fact
     # repartitions on l_orderkey, and both the (l_orderkey, l_partkey)
     # dedup and the basket groupBy chain on that partitioning
     # (subset-key rule) with no further exchange.  What persists is the
@@ -706,23 +704,8 @@ def ml_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("d"))
     )
     deg.persist()
-    pair_arrays = baskets.filter(F.size("parts") > 1).select(
-        F.flatten(
-            F.transform(
-                F.col("parts"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("parts"), i + 2, F.size(F.col("parts"))),
-                    lambda y: F.struct(x.alias("pa"), y.alias("pb")),
-                ),
-            )
-        ).alias("ps")
-    )
-    # explode_OUTER + isNotNull, not plain explode: the dedup-family
-    # InferFiltersFromGenerate lesson (llm/dedup.py) — an inner explode
-    # gets an inferred size-filter that duplicates the pair-array
-    # construction
-    pairs = pair_arrays.select(F.explode_outer("ps").alias("p")).filter(
-        F.col("p").isNotNull()
+    pairs = sorted_pairs(
+        baskets, "parts", lambda x, y: F.struct(x.alias("pa"), y.alias("pb"))
     )
     co = (
         pairs.groupBy(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
@@ -754,18 +737,8 @@ def ml_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.sqrt(F.col("deg_a").cast("double") * F.col("deg_b")),
         )
     )
-    # r12 optimization (guide §2.5): the global row_number window
-    # funneled EVERY scored pair through one task's sort; orderBy+limit
-    # compiles to TakeOrderedAndProject (parallel per-partition top-k,
-    # driver merge of 20-row heads) and the ordering (cosine DESC, pa,
-    # pb) is total — (pa, pb) is unique — so the 20 survivors are
-    # identical; the window then ranks just those 20 rows.
-    top20 = scored.orderBy(F.desc("cosine"), "pa", "pb").limit(20)
     return (
-        top20.withColumn(
-            "rk",
-            F.row_number().over(W.orderBy(F.desc("cosine"), "pa", "pb")),
-        )
+        global_topk(scored, 20, F.desc("cosine"), "pa", "pb")
         .select(
             F.col("pa").alias("part_a"),
             F.col("pb").alias("part_b"),
@@ -997,14 +970,8 @@ def ml_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("n_a") * F.col("n_b")),
         )
     )
-    # global row_number → orderBy+limit (TakeOrderedAndProject; the
-    # ordering is total — (pa, pb) unique), window then ranks 20 rows
-    top20 = scored.orderBy(F.desc("lift"), "pa", "pb").limit(20)
     return (
-        top20.withColumn(
-            "rk",
-            F.row_number().over(W.orderBy(F.desc("lift"), "pa", "pb")),
-        )
+        global_topk(scored, 20, F.desc("lift"), "pa", "pb")
         .select(
             F.col("pa").alias("antecedent"),
             F.col("pb").alias("consequent"),

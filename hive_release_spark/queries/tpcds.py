@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
 from hive_release_spark.functions.numeric import is_finite
+from hive_release_spark.operators.topk import global_topk
 from hive_release_spark.queries.registry import register
 
 
@@ -731,13 +732,7 @@ def ds_sales_deviation_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg_m = F.col("yr_cents").cast("double") / F.col("yr_months")
     d = w.withColumn("deviation", F.abs(F.col("cents") - avg_m) / avg_m)
     return (
-        d.withColumn(
-            "rk",
-            F.row_number().over(
-                W.orderBy(F.desc("deviation"), "brand", "month")
-            ),
-        )
-        .filter(F.col("rk") <= 15)
+        global_topk(d, 15, F.desc("deviation"), "brand", "month")
         .select(
             "brand",
             "month",

@@ -5,6 +5,7 @@ TestPerfCliDriver plan assertions (SURVEY.md §5.3)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
@@ -291,3 +292,28 @@ def test_jaccard_intersect_generate_barrier_holds(spark):
             "the intersect is being re-evaluated per predicate"
         )
         assert "Generate explode" in plan, f"{name}: barrier Generate missing"
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "ml_item_item_cf",
+        "dedup_jaccard_pairs",
+        "dedup_minhash_lsh",
+        "dedup_simhash",
+        "dedup_jaccard_prefix",
+        "dedup_containment_pairs",
+        "source_overlap_matrix",
+        "basket_part_affinity",
+    ],
+)
+def test_pair_emission_builds_pair_array_once(spark, name):
+    """Each direct caller of operators.pairs.sorted_pairs builds its pair
+    array in one projection: ``flatten(`` appears once in the simple
+    plan. An inner explode would add an inferred size-filter that
+    copies the construction twice more. (The graph_* entries persist
+    their pair frame, so the cached plan is echoed and the count is
+    not 1 there.)"""
+    spark.catalog.clearCache()
+    plan = _plan(REGISTRY[name].fn(spark, SF_SMOKE), mode="simple")
+    assert plan.count("flatten(") == 1, plan

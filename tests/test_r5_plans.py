@@ -112,7 +112,8 @@ def test_bm25_single_tokenize_pass(spark):
     ride ONE doc-grain conditional aggregate over ONE tokenize pass
     (the former shape re-ran scan→split→explode four times: dl fed
     stats + the scored join, tf fed df + scored). per_doc persists, so
-    both consumers read the cache; the 1-row stats frame broadcasts."""
+    both consumers read the cache; the 1-row stats frame broadcasts;
+    the top-20 is a TakeOrderedAndProject."""
     spark.catalog.clearCache()
     df = _entry(spark, "search_bm25_rank")
     simple = _plan(df, "simple")
@@ -123,6 +124,7 @@ def test_bm25_single_tokenize_pass(spark):
     plan = _plan(df, "formatted")
     assert plan.count("BroadcastExchange") >= 1, plan
     assert "CartesianProduct" not in plan
+    assert "TakeOrderedAndProject" in plan
 
 
 def test_cuped_single_user_collapse(spark):

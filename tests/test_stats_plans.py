@@ -28,9 +28,10 @@ def test_sq8_query_side_broadcasts_and_windows_share_one_exchange(spark):
 
 
 def test_tfidf_cosine_reuses_persisted_tf_and_weight_frames(spark):
-    """search_tfidf_cosine persists the tf frame (feeds df/n_docs/w)
-    and the weight frame (feeds the norm agg AND the scoring join);
-    the plan must read them as InMemoryTableScan, not re-run the
+    """search_tfidf_cosine persists only the tf frame (it feeds
+    df/n_docs, the doc-norm weights and the scoring join); the weight
+    frame streams and is never cached (test_tfidf_weight_matrix_not_cached).
+    The tf consumers must read it as InMemoryTableScan, not re-run the
     tokenize explode per consumer."""
     plan = _plan(REGISTRY["search_tfidf_cosine"].fn(spark, SF_SMOKE))
     n = plan.count("InMemoryTableScan")
