@@ -18,7 +18,7 @@ an empty array yields is dropped with ``isNotNull``.
 
 from __future__ import annotations
 
-from typing import Callable
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F

@@ -14,11 +14,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def global_topk(
-    df: DataFrame, k: int, *order: Column | str, rank: str = "rk"
-) -> DataFrame:
+def global_topk(df: DataFrame, k: int, *order: Column | str) -> DataFrame:
     """The first ``k`` rows of ``df`` under ``order``, with their 1-based
-    position in column ``rank``.
+    position in column ``rk``.
 
     Precondition: ``order`` is total. Its trailing keys must be unique
     per row, or rows tied at the k-th place are cut arbitrarily and
@@ -26,5 +24,5 @@ def global_topk(
     return (
         df.orderBy(*order)
         .limit(k)
-        .withColumn(rank, F.row_number().over(Window.orderBy(*order)))
+        .withColumn("rk", F.row_number().over(Window.orderBy(*order)))
     )

@@ -58,11 +58,6 @@ def test_global_topk_empty_frame(spark):
     assert out.columns == ["id", "score", "rk"]
 
 
-def test_global_topk_rank_column_name(spark):
-    out = global_topk(_scored(spark), 2, F.desc("score"), "id", rank="pos")
-    assert [(r.id, r.pos) for r in out.orderBy("pos").collect()] == [(2, 1), (5, 2)]
-
-
 def _baskets(spark):
     return spark.createDataFrame(
         [(1, [1, 2, 3]), (2, [4]), (3, []), (4, None), (5, [5, 6])],
