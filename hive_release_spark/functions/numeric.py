@@ -90,3 +90,23 @@ def cents_sql(x: str, scale: int = 100) -> str:
         f"CAST(round(CASE WHEN isfinite({x}) THEN {x} END"
         f" * {scale}) AS BIGINT)"
     )
+
+
+def exact_moment(a: str, b: str) -> Column:
+    """``sum(a*b)`` over BIGINT columns, exact, as a DOUBLE: the
+    second-moment device of the closed-form statistics entries.
+
+    The per-row multiply runs in LONG and only the sum runs as
+    DECIMAL(38,0), the one step that needs more than 64 bits (a sum of
+    squared price cents passes 2**63 at sf0.1). Both routes hold exact
+    integers, so the sum is bit-identical to a DECIMAL multiply, which
+    costs a Decimal128 multiply per row. The final cast rounds the
+    exact integer to the nearest double, as DuckDB's HUGEINT cast does.
+
+    Precondition: every ``|a*b| < 2**63``. The caller guarantees it by
+    bounding its inputs. Nothing here checks it: in an ANSI session an
+    overflowing product raises ARITHMETIC_OVERFLOW, but the default
+    ``get_session(hive_parity=True)`` runs with ANSI off, where the
+    product silently wraps to a wrong sum.
+    """
+    return F.sum((F.col(a) * F.col(b)).cast("decimal(38,0)")).cast("double")

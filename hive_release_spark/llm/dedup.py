@@ -544,7 +544,7 @@ def span_chunk_dedup(
     """
     from pyspark import StorageLevel
 
-    w = F.split(F.col(text_col), " ")
+    w = tokens(F.col(text_col))
     base = docs.select(F.col(id_col).alias("doc_id"), w.alias("w")).select(
         "doc_id",
         "w",

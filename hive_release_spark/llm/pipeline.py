@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from hive_release_spark.llm.dedup import _doc_shingles, _exploded_shingles, shingles
-from hive_release_spark.llm.text import token_count
+from hive_release_spark.llm.text import token_count, tokens
 from hive_release_spark.operators.pairs import sorted_pairs
 
 HEX = "0123456789abcdef"
@@ -251,7 +251,7 @@ def source_overlap(
     sources the per-gram pair array is ≤ k(k-1)/2."""
     # token array materialized in its own projection (expression-reuse
     # trap), explode_outer + isNotNull (InferFiltersFromGenerate dodge)
-    w = F.split(F.col(text_col), " ")
+    w = tokens(F.col(text_col))
     gs = (
         docs.select(F.col(group_col).alias("src"), w.alias("w"))
         .select("src", shingles(F.col("w"), n).alias("sh"))

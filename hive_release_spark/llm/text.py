@@ -29,19 +29,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text)).cast("long")
 
 
-def stopword_ratio(text: Column | str) -> Column:
-    """Fraction of tokens that are stopwords — a quality-score feature."""
-    toks = tokens(text)
-    stop = F.filter(toks, lambda t: t.isin(*STOPWORDS))
-    return F.size(stop) / F.size(toks)
-
-
-def avg_token_len(text: Column | str) -> Column:
-    toks = tokens(text)
-    total = F.aggregate(toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t))
-    return total / F.size(toks)
-
-
 def fingerprint(text: Column | str) -> Column:
     """Document fingerprint: md5 over the sorted distinct token set —
     canonicalizes word order + duplication (near-dup pre-key)."""
@@ -144,22 +131,6 @@ def tfidf_top_terms(
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
         .select("doc_id", "term", "tfidf", "rk")
-    )
-
-
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document quality scoring: length, token stats, stopword ratio,
-    punctuation ratio. All JVM-side expressions."""
-    t = F.col(text_col)
-    return df.select(
-        "doc_id",
-        F.length(t).cast("long").alias("n_chars"),
-        token_count(t).alias("n_tokens"),
-        F.round(avg_token_len(t), 4).alias("avg_tok_len"),
-        F.round(stopword_ratio(t), 4).alias("stop_ratio"),
-        (F.length(t) - F.length(F.regexp_replace(t, "[^a-z]", "")))
-        .cast("long")
-        .alias("n_nonalpha"),
     )
 
 

@@ -5,7 +5,7 @@ matrix all group rows into a sorted postings array (documents per
 shingle, parts per order, sources per n-gram) and then need each
 unordered pair of its elements once. Emitting the pairs inline with
 higher-order functions costs one shuffle for the grouping and no
-self-join.
+self-join. ``baskets`` builds the array for the basket entries.
 
 The recipe has one non-obvious constraint. Catalyst's
 InferFiltersFromGenerate adds ``size(child) > 0 AND isnotnull(child)``
@@ -22,6 +22,25 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def baskets(df: DataFrame, key: str, item: str, items: str) -> DataFrame:
+    """One row per ``key`` with its distinct ``item`` values in the
+    ascending array column ``items``; no other column survives.
+
+    The fact crosses ONE exchange, a repartition on ``key``. The
+    (key, item) distinct and the groupBy both have their clustered
+    distribution satisfied by it (subset-key rule), so they chain in
+    the same stage with no further shuffle. Persisting the distinct
+    frame instead would not help: under AQE a cache boundary reports
+    UnknownPartitioning, and every consumer would re-exchange."""
+    return (
+        df.select(key, item)
+        .repartition(key)
+        .distinct()
+        .groupBy(key)
+        .agg(F.sort_array(F.collect_list(item)).alias(items))
+    )
 
 
 def sorted_pairs(

@@ -15,15 +15,8 @@ broadcasts when small). Nothing collects; the report is one row.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def null_violations(df: DataFrame, cols: list[str]) -> Column | None:
-    """Aggregate expressions counting NULLs per required column."""
-    return [
-        F.count(F.when(F.col(c).isNull(), 1)).alias(f"null_{c}") for c in cols
-    ]
 
 
 def pk_duplicates(df: DataFrame, key_cols: list[str]) -> DataFrame:

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
 from hive_release_spark.functions.temporal import ts_valid
-from hive_release_spark.operators.pairs import sorted_pairs
+from hive_release_spark.operators.pairs import baskets, sorted_pairs
 from hive_release_spark.queries.registry import register
 
 
@@ -288,38 +288,25 @@ def basket_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the SQL self-join lives only in the oracle); the lift join runs on
     the group-frequency frame (50 keys, broadcast)."""
     li = load_table(spark, sf_dir, "lineitem")
-    # r12 (guide §2.4): ONE order-key exchange serves the whole fact
-    # path.  The fact repartitions on l_orderkey; the (l_orderkey, grp)
-    # dedup and the basket groupBy both have their clustered
-    # distributions satisfied by that partitioning (subset-key rule)
-    # and CHAIN in one plan with no further exchange — a first draft
-    # persisted the deduped item frame instead, but the cache boundary
-    # reports UnknownPartitioning under AQE, so every consumer
-    # re-exchanged and the A/B came back neutral.  What persists now is
-    # the BASKET frame (one row per order), and the other two consumers
-    # derive from it: the order count is its row count (every order has
-    # >= 1 item group) riding as DATA via the threshold-attach pattern
-    # (1-row broadcast crossJoin, the oracle's own `n` CTE shape), and
-    # the group frequency re-explodes the per-order distinct group
-    # lists — the identical (order, grp) multiset the item frame held.
-    items = (
-        li.select("l_orderkey", (F.col("l_partkey") % 50).alias("grp"))
-        .repartition("l_orderkey")
-        .distinct()
+    # The BASKET frame (one row per order) persists, and the other two
+    # consumers derive from it: the order count is its row count (every
+    # order has >= 1 item group) riding as DATA via the threshold-attach
+    # pattern (1-row broadcast crossJoin, the oracle's own `n` CTE
+    # shape), and the group frequency re-explodes the per-order
+    # distinct group lists — the oracle's (order, grp) item multiset.
+    bs = baskets(
+        li.withColumn("grp", F.col("l_partkey") % 50), "l_orderkey", "grp", "gs"
     )
-    baskets = items.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_list("grp")).alias("gs")
-    )
-    baskets.persist()
-    nn = baskets.agg(F.count("*").alias("n_orders"))
+    bs.persist()
+    nn = bs.agg(F.count("*").alias("n_orders"))
     freq = (
-        baskets.select(F.explode("gs").alias("grp"))
+        bs.select(F.explode("gs").alias("grp"))
         .groupBy("grp")
         .agg(F.count("*").alias("c"))
     )
     pairs = (
         sorted_pairs(
-            baskets, "gs", lambda x, y: F.struct(x.alias("grp_a"), y.alias("grp_b"))
+            bs, "gs", lambda x, y: F.struct(x.alias("grp_a"), y.alias("grp_b"))
         )
         .groupBy(F.col("p.grp_a").alias("grp_a"), F.col("p.grp_b").alias("grp_b"))
         .agg(F.count("*").alias("c_ab"))

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
 from hive_release_spark.functions import hive as hive_fns
-from hive_release_spark.llm.text import tokens
+from hive_release_spark.llm.text import token_count, tokens
 from hive_release_spark.operators.matchpath import match_path
 from hive_release_spark.functions.numeric import is_finite
 from hive_release_spark.queries.registry import register
@@ -125,7 +125,7 @@ def text_token_bpe_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.regexp_extract_all("text", F.lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), 0))
         .cast("long")
         .alias("n_bpe_tokens"),
-        F.size(F.split("text", " ")).cast("long").alias("n_ws_tokens"),
+        token_count("text").alias("n_ws_tokens"),
     )
 
 

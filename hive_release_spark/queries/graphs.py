@@ -10,8 +10,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
+from hive_release_spark.functions.numeric import exact_moment
 from hive_release_spark.llm import dedup, graph
-from hive_release_spark.operators.pairs import sorted_pairs
+from hive_release_spark.operators.pairs import baskets, sorted_pairs
 from hive_release_spark.operators.topk import global_topk
 from hive_release_spark.queries.registry import register
 
@@ -53,25 +54,17 @@ def _pr_iterations(k: int) -> str:
 
 def _copurchase_pairs(li: DataFrame) -> DataFrame:
     """The >= 2-support co-purchase edge list (pa < pb), emitted from
-    each order's sorted distinct part list — the item-item-CF
-    pair-emission recipe: ONE order-key exchange (repartition +
-    subset-key rule for the dedup and the basket groupBy), then
-    sorted_pairs instead of an equi-self-join of the distinct basket
-    frame (which shuffled it twice plus the pair groupBy, or broadcast
-    it wholesale at fixture scale). Parts are distinct within an order
-    and the array is ascending, so the pairs are exactly pa < pb.
-    Shared by the Adamic-Adar / Jaccard-neighbors / assortativity
-    substrate builders; returned UNPERSISTED."""
-    baskets = (
-        li.select("l_orderkey", "l_partkey")
-        .repartition("l_orderkey")
-        .distinct()
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_list("l_partkey")).alias("parts"))
-    )
+    each order's sorted distinct part list by sorted_pairs instead of
+    an equi-self-join of the distinct basket frame (which shuffled it
+    twice plus the pair groupBy, or broadcast it wholesale at fixture
+    scale). Parts are distinct within an order and the array is
+    ascending, so the pairs are exactly pa < pb. Shared by the
+    Adamic-Adar / Jaccard-neighbors / assortativity substrate
+    builders; returned UNPERSISTED."""
+    bs = baskets(li, "l_orderkey", "l_partkey", "parts")
     return (
         sorted_pairs(
-            baskets, "parts", lambda x, y: F.struct(x.alias("pa"), y.alias("pb"))
+            bs, "parts", lambda x, y: F.struct(x.alias("pa"), y.alias("pb"))
         )
         .groupBy(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
         .agg(F.count("*").alias("n"))
@@ -531,18 +524,14 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("x", "y")
     )
-    # r13 (the linreg lesson): per-row moment multiplies in LONG —
-    # exact, |x·y| ≤ max_degree² ≪ 2⁶³ (degrees are bounded by the
-    # item count; ANSI keeps violations loud) — only the sums stay
-    # Decimal128.  Bit-identical: exact integers on both routes.
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+    # degrees are bounded by the item count, so |x·y| ≪ 2⁶³
     s = de.agg(
         F.count("*").alias("m"),
         F.sum("x").alias("sx"),
         F.sum("y").alias("sy"),
-        F.sum(d38(F.col("x") * F.col("x"))).cast("double").alias("sxx"),
-        F.sum(d38(F.col("y") * F.col("y"))).cast("double").alias("syy"),
-        F.sum(d38(F.col("x") * F.col("y"))).cast("double").alias("sxy"),
+        exact_moment("x", "x").alias("sxx"),
+        exact_moment("y", "y").alias("syy"),
+        exact_moment("x", "y").alias("sxy"),
     )
     num = F.col("m") * F.col("sxy") - F.col("sx").cast("double") * F.col(
         "sy"

@@ -305,7 +305,7 @@ def corpus_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     points."""
     docs = load_table(spark, sf_dir, "documents")
     freq = (
-        docs.select(F.explode(F.split("text", " ")).alias("term"))
+        docs.select(F.explode(text.tokens("text")).alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("f"))
     )
@@ -409,7 +409,7 @@ def text_pmi_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanned for counting only."""
     docs = load_table(spark, sf_dir, "documents")
     big = (
-        docs.select(F.split("text", " ").alias("w"))
+        docs.select(text.tokens("text").alias("w"))
         .filter(F.size("w") >= 2)
         .select(
             F.explode(
@@ -508,7 +508,7 @@ def corpus_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     all read off this distribution before a tokenization run is sized.
     Scan-side bucket arithmetic, one tiny-keyspace aggregation."""
     docs = load_table(spark, sf_dir, "documents")
-    n = F.size(F.split("text", " "))
+    n = F.size(text.tokens("text"))
     return (
         docs.select(
             F.floor(n / 16).cast("long").alias("bucket"),
@@ -831,7 +831,7 @@ def corpus_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Heaps parameters."""
     docs = load_table(spark, sf_dir, "documents")
     terms = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("term")
+        "doc_id", F.explode(text.tokens("text")).alias("term")
     )
     firsts = terms.groupBy("term").agg(F.min("doc_id").alias("first_doc"))
     firsts = firsts.select(
@@ -1089,7 +1089,7 @@ def search_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # them).
     from pyspark import StorageLevel
 
-    toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
+    toks = docs.select("doc_id", F.explode(text.tokens("text")).alias("term"))
     per_doc = toks.groupBy("doc_id").agg(
         F.count("*").alias("dlen"),
         *[
@@ -1277,7 +1277,7 @@ def text_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortening are exactly oracle-replayed."""
     docs = load_table(spark, sf_dir, "documents")
     n = docs.select(
-        "doc_id", F.split("text", " ").alias("toks")
+        "doc_id", text.tokens("text").alias("toks")
     ).withColumn("n_tok", F.size("toks"))
     last_idx = F.greatest(
         F.lit(0), F.ceil((F.col("n_tok") - 64) / 48.0)
@@ -1333,7 +1333,7 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
-        F.size(F.split("text", " ")).cast("long").alias("n_words"),
+        text.token_count("text").alias("n_words"),
         F.greatest(
             F.size(F.split("text", r"[.!?]+\s")), F.lit(1)
         ).cast("long").alias("n_sents"),
@@ -1504,7 +1504,7 @@ def search_query_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the length term is untouched.
     from pyspark import StorageLevel
 
-    toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
+    toks = docs.select("doc_id", F.explode(text.tokens("text")).alias("term"))
     per_doc = toks.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("dlen"),
         *[
@@ -1630,7 +1630,7 @@ def text_rake_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "t")
+        "doc_id", F.posexplode(text.tokens("text")).alias("pos", "t")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     freq = tok.groupBy("t").agg(F.count("*").alias("freq"))
     # r13: top-8 stopwords via TakeOrderedAndProject instead of a
@@ -1752,7 +1752,7 @@ def search_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts. Same tie-break discipline as BM25."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("term")
+        "doc_id", F.explode(text.tokens("text")).alias("term")
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     tf.persist()

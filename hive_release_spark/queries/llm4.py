@@ -485,7 +485,7 @@ def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             "source",
             "norm",
-            F.size(F.split("norm", " ")).alias("n_tok"),
+            F.size(text.tokens("norm")).alias("n_tok"),
             F.length("norm").alias("n_len"),
         ).persist(StorageLevel.MEMORY_AND_DISK)
         qual = (F.col("n_tok") >= 10) & (F.col("n_len") >= 50)
@@ -700,7 +700,7 @@ def sample_importance_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(
             "doc_id",
             "lang",
-            F.explode(F.split("text", " ")).alias("term"),
+            F.explode(text.tokens("text")).alias("term"),
         )
         .withColumn(
             "b",
@@ -949,7 +949,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     wf = (
-        docs.select(F.explode(F.split("text", " ")).alias("word"))
+        docs.select(F.explode(text.tokens("text")).alias("word"))
         .filter(F.col("word").rlike("^[A-Za-z0-9]+$"))
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
@@ -1216,7 +1216,7 @@ def pack_efficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket key is a closed-form pow/log2 expression, not a join
     against a bucket table."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split("text", " ")).cast("long")
+    n_tok = text.token_count("text")
     budget = _PACK_BUDGET
     d = docs.select(n_tok.alias("n_tokens"))
     bucket = F.pow(
@@ -1290,7 +1290,7 @@ def tokenize_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
             "text", F.lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), 0
         )
     ).cast("long")
-    n_words = F.size(F.split("text", " ")).cast("long")
+    n_words = text.token_count("text")
     n_chars = F.length(F.replace(F.col("text"), F.lit(" "), F.lit(""))).cast(
         "long"
     )
@@ -1373,7 +1373,7 @@ def text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tc = (
         docs.select(
-            "source", F.explode(F.split("text", " ")).alias("t")
+            "source", F.explode(text.tokens("text")).alias("t")
         )
         .groupBy("source", "t")
         .agg(F.count("*").alias("n"))
@@ -1473,7 +1473,7 @@ def text_entropy_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tc = (
         docs.select(
-            "doc_id", "source", F.explode(F.split("text", " ")).alias("t")
+            "doc_id", "source", F.explode(text.tokens("text")).alias("t")
         )
         .groupBy("doc_id", "source", "t")
         .agg(F.count("*").alias("n"))
@@ -1610,7 +1610,7 @@ def text_ttr_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard scale-out for corpus-level vocabulary stats."""
     docs = load_table(spark, sf_dir, "documents")
     tc = (
-        docs.select("source", F.explode(F.split("text", " ")).alias("t"))
+        docs.select("source", F.explode(text.tokens("text")).alias("t"))
         .groupBy("source", "t")
         .agg(F.count("*").alias("n"))
     )
@@ -1841,7 +1841,7 @@ def pipeline_quality_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.when(
             (F.col("n_chars") >= 20)
-            & (F.size(F.split("text", " ")) >= 5),
+            & (F.size(text.tokens("text")) >= 5),
             1,
         )
         .otherwise(0)

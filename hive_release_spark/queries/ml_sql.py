@@ -21,8 +21,9 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
-from hive_release_spark.functions.numeric import is_finite
-from hive_release_spark.operators.pairs import sorted_pairs
+from hive_release_spark.functions.numeric import exact_moment, is_finite
+from hive_release_spark.llm.text import tokens
+from hive_release_spark.operators.pairs import baskets, sorted_pairs
 from hive_release_spark.operators.topk import global_topk
 from hive_release_spark.queries.registry import register
 
@@ -89,11 +90,14 @@ def ml_linear_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     work. The inputs are exact integers (quantity, discount and price
     in cents — round-to-integer of identical doubles is engine-safe),
     and the SECOND moments sum as DECIMAL / HUGEINT (sum(y_cents^2) is
-    ~6e19 at sf0.1 — already past long; ANSI made that a loud error,
-    not a silent wrap) before ONE exact-integer-to-nearest-double cast
-    that both engines round identically; the SAME Cramer expression
-    tree then folds them (named minors keep the two spellings
-    structurally identical). R^2 comes from the fitted cross-moment
+    ~6e19 at sf0.1 — already past long) before ONE exact-integer-to-
+    nearest-double cast that both engines round identically
+    (``exact_moment``). The per-row products stay in LONG; what keeps
+    them exact is the input bound (price cents ≤ ~1.05e7 at sf0.1, so
+    squares ≤ ~1.1e14), not ANSI: the default Hive-parity session
+    runs with ANSI off, where an overflow would wrap silently. The
+    SAME Cramer expression tree then folds them (named minors keep
+    the two spellings structurally identical). R^2 comes from the fitted cross-moment
     identity b'X'y, no second pass.
     Determinant conditioning is healthy here (quantity/discount are
     bounded, uncentered moments fine); a production fit would center
@@ -109,30 +113,18 @@ def ml_linear_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_discount") * 100).cast("long").alias("x2"),
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("y"),
     )
-    # r13 (guide §1.2 per-task work, measured): the per-row second-
-    # moment MULTIPLY runs in LONG — exact, since every product is
-    # bounded by |y|² ≲ 1e14 ≪ 2⁶³ on the declared inputs (quantity
-    # ≤ ~10², discount·100 ≤ 10, price_cents ≤ ~10⁷; ANSI keeps any
-    # violation a loud overflow error, the same failure mode as the
-    # .cast("long") above) — and only the SUM runs as DECIMAL(38,0),
-    # which is the one step that genuinely needs >64-bit exactness
-    # (sum(y²) ≈ 6e19 at sf0.1).  The former shape multiplied
-    # DECIMAL(19)×LONG per row — six Decimal128 multiplies per row
-    # dominated the aggregate; the sums are bit-identical either way
-    # (exact integers on both routes; interleaved A/B: 1.12 s →
-    # 0.71 s min, sums verified equal to the decimal-multiply path).
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+    # quantity ≤ ~10², discount·100 ≤ 10, price cents ≤ ~10⁷: products ≪ 2⁶³
     s = li.agg(
         F.count("*").alias("n"),
         F.sum("x1").alias("s1"),
         F.sum("x2").alias("s2"),
         F.sum("y").alias("sy"),
-        F.sum(d38(F.col("x1") * F.col("x1"))).cast("double").alias("s11"),
-        F.sum(d38(F.col("x1") * F.col("x2"))).cast("double").alias("s12"),
-        F.sum(d38(F.col("x2") * F.col("x2"))).cast("double").alias("s22"),
-        F.sum(d38(F.col("x1") * F.col("y"))).cast("double").alias("s1y"),
-        F.sum(d38(F.col("x2") * F.col("y"))).cast("double").alias("s2y"),
-        F.sum(d38(F.col("y") * F.col("y"))).cast("double").alias("syy"),
+        exact_moment("x1", "x1").alias("s11"),
+        exact_moment("x1", "x2").alias("s12"),
+        exact_moment("x2", "x2").alias("s22"),
+        exact_moment("x1", "y").alias("s1y"),
+        exact_moment("x2", "y").alias("s2y"),
+        exact_moment("y", "y").alias("syy"),
     )
     dd = lambda c: F.col(c).cast("double")  # noqa: E731
     d = s.withColumns(
@@ -281,12 +273,12 @@ def ml_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang-ID performance (where word NB is near-perfect)."""
     docs = load_table(spark, sf_dir, "documents")
     tr = docs.filter(F.col("doc_id") % 2 == 0).select(
-        "lang", "doc_id", F.explode(F.split("text", " ")).alias("term")
+        "lang", "doc_id", F.explode(tokens("text")).alias("term")
     )
     te = docs.filter(F.col("doc_id") % 2 == 1).select(
         "doc_id",
         F.col("lang").alias("true_lang"),
-        F.explode(F.split("text", " ")).alias("term"),
+        F.explode(tokens("text")).alias("term"),
     )
     tc = tr.groupBy("lang", "term").agg(F.count("*").alias("c"))
     tc.persist()
@@ -677,35 +669,22 @@ def ml_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # replaces the equi-self-join, which shuffled the basket frame TWICE
     # (once per join side) plus once for the pair groupBy.  Parts are
     # distinct within an order, so the pairs are exactly the
-    # a.l_partkey < b.l_partkey join's.
-    #
-    # ONE order-key exchange serves the whole fact path — the fact
-    # repartitions on l_orderkey, and both the (l_orderkey, l_partkey)
-    # dedup and the basket groupBy chain on that partitioning
-    # (subset-key rule) with no further exchange.  What persists is the
-    # BASKET frame; the degree frame derives from it by re-exploding
-    # the per-order distinct part lists (the identical (order, part)
-    # multiset the former distinct frame held), so the former three
-    # fact-cardinality exchanges become one.
-    baskets = (
-        li.select("l_orderkey", "l_partkey")
-        .repartition("l_orderkey")
-        .distinct()
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_list("l_partkey")).alias("parts"))
-    )
-    baskets.persist()
+    # a.l_partkey < b.l_partkey join's.  What persists is the basket
+    # frame; the degree frame re-explodes its per-order distinct part
+    # lists (the same (order, part) multiset a distinct frame holds).
+    bs = baskets(li, "l_orderkey", "l_partkey", "parts")
+    bs.persist()
     # deg feeds TWO broadcast subtrees (deg_a / deg_b projections) —
     # without the persist the explode+groupBy over the basket frame
-    # runs twice (r12; the item-degree frame is item-cardinality, tiny)
+    # runs twice (the item-degree frame is item-cardinality, tiny)
     deg = (
-        baskets.select(F.explode("parts").alias("l_partkey"))
+        bs.select(F.explode("parts").alias("l_partkey"))
         .groupBy("l_partkey")
         .agg(F.count("*").alias("d"))
     )
     deg.persist()
     pairs = sorted_pairs(
-        baskets, "parts", lambda x, y: F.struct(x.alias("pa"), y.alias("pb"))
+        bs, "parts", lambda x, y: F.struct(x.alias("pa"), y.alias("pb"))
     )
     co = (
         pairs.groupBy(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
@@ -893,34 +872,25 @@ def ml_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     total via broadcast attaches. Metrics are exact-long ratios
     folded once; (lift, a, b) tie-break on the top-20."""
     li = load_table(spark, sf_dir, "lineitem")
-    # r13 — the ml_item_item_cf recipe replayed on its directed sibling
-    # (guide §2.4): ONE order-key exchange serves the whole fact path
-    # (repartition on l_orderkey; dedup + basket groupBy chain on it by
-    # the subset-key rule), DIRECTED pair emission happens inside each
-    # order's distinct part list via HOFs instead of the equi-self-join
-    # (which shuffled the basket frame twice plus the pair groupBy):
-    # for every element x the inner transform pairs it with every OTHER
-    # element — parts are distinct within an order, so y != x removes
-    # exactly the self-pair and the emitted multiset equals the
-    # a.l_partkey <> b.l_partkey join's. The basket frame persists;
-    # degree and the basket count derive from it (re-explode / row
-    # count — the identical multisets the distinct frame held).
-    baskets = (
-        li.select("l_orderkey", "l_partkey")
-        .repartition("l_orderkey")
-        .distinct()
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_list("l_partkey")).alias("parts"))
-    )
-    baskets.persist()
-    nb = baskets.agg(F.count("*").alias("n_baskets"))
+    # The ml_item_item_cf recipe replayed on its directed sibling:
+    # DIRECTED pair emission happens inside each order's distinct part
+    # list via HOFs instead of the equi-self-join (which shuffled the
+    # basket frame twice plus the pair groupBy): for every element x
+    # the inner transform pairs it with every OTHER element — parts are
+    # distinct within an order, so y != x removes exactly the self-pair
+    # and the emitted multiset equals the a.l_partkey <> b.l_partkey
+    # join's. The basket frame persists; degree and the basket count
+    # derive from it (re-explode / row count).
+    bs = baskets(li, "l_orderkey", "l_partkey", "parts")
+    bs.persist()
+    nb = bs.agg(F.count("*").alias("n_baskets"))
     deg = (
-        baskets.select(F.explode("parts").alias("l_partkey"))
+        bs.select(F.explode("parts").alias("l_partkey"))
         .groupBy("l_partkey")
         .agg(F.count("*").alias("d"))
     )
     deg.persist()
-    pair_arrays = baskets.filter(F.size("parts") > 1).select(
+    pair_arrays = bs.filter(F.size("parts") > 1).select(
         F.flatten(
             F.transform(
                 F.col("parts"),
@@ -1128,12 +1098,8 @@ def ml_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n"),
             F.sum("y").alias("sy"),
-            # r13 (the linreg lesson): per-row multiply in LONG —
-            # exact, y is line-price cents (≤ ~1e7, scale-invariant),
-            # y² ≪ 2⁶³; only the sum stays Decimal128
-            F.sum((F.col("y") * F.col("y")).cast("decimal(38,0)"))
-            .cast("double")
-            .alias("syy"),
+            # line-price cents ≤ ~1e7 at any scale, so y² ≪ 2⁶³
+            exact_moment("y", "y").alias("syy"),
         )
     )
     cells.persist()
@@ -1345,15 +1311,9 @@ def ml_regression_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"),
         F.sum("x").alias("sx"),
         F.sum("y").alias("sy"),
-        # r13 (the linreg lesson): per-row multiplies in LONG —
-        # exact, x ≤ ~10² and y ≤ ~1e7 cents (scale-invariant values);
-        # only the sums stay Decimal128
-        F.sum((F.col("x") * F.col("x")).cast("decimal(38,0)"))
-        .cast("double")
-        .alias("sxx"),
-        F.sum((F.col("x") * F.col("y")).cast("decimal(38,0)"))
-        .cast("double")
-        .alias("sxy"),
+        # x ≤ ~10² and y ≤ ~1e7 cents at any scale: products ≪ 2⁶³
+        exact_moment("x", "x").alias("sxx"),
+        exact_moment("x", "y").alias("sxy"),
     )
     # try_divide on the slope: a single-row (or constant-x) slice has
     # zero x-variance and the fit is undefined — NULL, DuckDB's x/0
@@ -1491,16 +1451,14 @@ def ml_regression_kfold_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").cast("long").alias("x"),
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("y"),
     )
-    # r13 (the linreg lesson): per-row multiplies in LONG — exact on
-    # the declared inputs (x ≤ ~10², y ≤ ~1e7 cents); sums Decimal128
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+    # x ≤ ~10² and y ≤ ~1e7 cents at any scale: products ≪ 2⁶³
     f = pts.groupBy("fold").agg(
         F.count("*").alias("n"),
         F.sum("x").alias("sx"),
         F.sum("y").alias("sy"),
-        F.sum(d38(F.col("x") * F.col("x"))).cast("double").alias("sxx"),
-        F.sum(d38(F.col("x") * F.col("y"))).cast("double").alias("sxy"),
-        F.sum(d38(F.col("y") * F.col("y"))).cast("double").alias("syy"),
+        exact_moment("x", "x").alias("sxx"),
+        exact_moment("x", "y").alias("sxy"),
+        exact_moment("y", "y").alias("syy"),
     )
     f.persist()
     g = f.agg(

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
-from hive_release_spark.functions.numeric import finite, is_finite
+from hive_release_spark.functions.numeric import exact_moment, finite, is_finite
 from hive_release_spark.queries.registry import register
 
 _A = "1-URGENT"
@@ -847,12 +847,8 @@ def stats_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n"),
             F.sum("y").alias("sy"),
-            # r13 (the linreg lesson): per-row multiply in LONG —
-            # exact, y is order-total cents (≤ ~1e8, a scale-invariant
-            # value bound), y² ≪ 2⁶³; only the sum stays Decimal128
-            F.sum((F.col("y") * F.col("y")).cast("decimal(38,0)"))
-            .cast("double")
-            .alias("syy"),
+            # order-total cents ≤ ~1e8 at any scale, so y² ≪ 2⁶³
+            exact_moment("y", "y").alias("syy"),
         )
     )
     t = g.agg(
@@ -1504,12 +1500,8 @@ def sample_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("nh"),
             F.sum("y").alias("sy"),
-            # r13 (the linreg lesson): per-row multiply in LONG —
-            # exact, y is order-total cents (≤ ~1e8, a scale-invariant
-            # value bound), y² ≪ 2⁶³; only the sum stays Decimal128
-            F.sum((F.col("y") * F.col("y")).cast("decimal(38,0)"))
-            .cast("double")
-            .alias("syy"),
+            # order-total cents ≤ ~1e8 at any scale, so y² ≪ 2⁶³
+            exact_moment("y", "y").alias("syy"),
         )
     )
     # try_divide at both degenerate points, matching DuckDB's x/0 NULL:

@@ -1,14 +1,24 @@
-"""Unit tests for the shared query helpers in ``hive_release_spark.operators``:
-``global_topk`` (ranked top-k) and ``sorted_pairs`` (postings pair
-emission). The registry entries built on them are covered by the oracle
-and plan suites; these pin the helpers' own contracts on tiny frames."""
+"""Unit tests for the shared query helpers: ``global_topk`` (ranked
+top-k), ``baskets`` and ``sorted_pairs`` (basket building and postings
+pair emission) and ``exact_moment`` (exact integer second moments). The
+registry entries built on them are covered by the oracle and plan
+suites; these pin the helpers' own contracts on tiny frames. The last
+test keeps the idioms from being pasted back inline."""
 
 from __future__ import annotations
 
+import ast
+import re
+from pathlib import Path
+
+import pytest
 from pyspark.sql import functions as F
 
-from hive_release_spark.operators.pairs import sorted_pairs
+from hive_release_spark.functions.numeric import exact_moment
+from hive_release_spark.operators.pairs import baskets, sorted_pairs
 from hive_release_spark.operators.topk import global_topk
+
+PKG = Path(__file__).resolve().parent.parent / "hive_release_spark"
 
 
 def _plan(df, mode: str = "simple") -> str:
@@ -82,3 +92,97 @@ def test_sorted_pairs_builds_pair_array_once(spark):
     the plan shows ``flatten(`` exactly once."""
     plan = _plan(sorted_pairs(_baskets(spark), "items", _pair))
     assert plan.count("flatten(") == 1, plan
+
+
+def _orders(spark):
+    # order 1 repeats part 3; order 2 has a single part
+    return spark.createDataFrame(
+        [(1, 3), (1, 1), (1, 3), (1, 2), (2, 9), (3, 5), (3, 4), (3, 5)],
+        "o INT, part INT",
+    )
+
+
+def test_baskets_dedups_and_sorts_each_key(spark):
+    out = baskets(_orders(spark).repartition(3), "o", "part", "parts")
+    assert out.columns == ["o", "parts"]
+    got = sorted((r.o, r.parts) for r in out.collect())
+    assert got == [(1, [1, 2, 3]), (2, [9]), (3, [4, 5])]
+
+
+def test_baskets_crosses_one_key_exchange(spark):
+    """The distinct and the groupBy reuse the key repartition: the plan
+    has exactly one Exchange, a hash partitioning on the key."""
+    plan = _plan(baskets(_orders(spark), "o", "part", "parts"))
+    exchanges = [ln for ln in plan.splitlines() if "Exchange " in ln]
+    assert len(exchanges) == 1, plan
+    assert re.search(r"Exchange hashpartitioning\(o#\d+, ", exchanges[0]), plan
+
+
+def test_exact_moment_sums_past_long(spark):
+    # each square (9e18) fits in a long; their sum (2.7e19) does not
+    y = 3_000_000_000
+    df = spark.createDataFrame([(y,)] * 3, "y BIGINT")
+    got = df.select(exact_moment("y", "y").alias("syy")).first().syy
+    assert 3 * y * y > 2**63
+    assert got == float(3 * y * y) == 2.7e19
+
+
+def test_exact_moment_product_overflow_raises_under_ansi(spark):
+    """The precondition |a*b| < 2**63 is the caller's: only an ANSI
+    session turns a violation into an error."""
+    df = spark.createDataFrame([(4_000_000_000,)], "y BIGINT")
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+            df.select(exact_moment("y", "y")).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+# (pattern, the only files allowed to contain it)
+_IDIOMS = {
+    "exact moment": (
+        re.compile(r'\.cast\("decimal\(38,\s*0\)"\)'),
+        {"functions/numeric.py"},
+    ),
+    "basket chain": (
+        re.compile(r"\.repartition\([^()]*\)\s*\.distinct\(\)"),
+        {"operators/pairs.py"},
+    ),
+    "whitespace split": (
+        re.compile(r'F\.split\(\s*[^,]+?,\s*" "\s*\)'),
+        {"llm/text.py", "queries/functions_sql.py"},
+    ),
+}
+# splits a part name, not corpus text
+_SPLIT_EXCEPTIONS = {("queries/llm.py", 'F.split("p_name", " ")')}
+
+
+def test_shared_idioms_are_not_inlined():
+    """Exact moments go through ``exact_moment``, basket building
+    through ``baskets`` and whitespace tokenization of text through
+    ``text.tokens``; ``functions_sql`` keeps Hive's own split UDTF
+    showcase."""
+    stray = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        src = path.read_text()
+        for name, (rx, allowed) in _IDIOMS.items():
+            for m in rx.finditer(src):
+                if rel not in allowed and (rel, m.group(0)) not in _SPLIT_EXCEPTIONS:
+                    line = src.count("\n", 0, m.start()) + 1
+                    stray.append(f"{name}: {rel}:{line}: {m.group(0)}")
+    assert not stray, "\n".join(stray)
+
+    numeric = (PKG / "functions/numeric.py").read_text()
+    (only,) = _IDIOMS["exact moment"][0].finditer(numeric)
+    line = numeric.count("\n", 0, only.start()) + 1
+    (fn,) = [
+        f
+        for f in ast.parse(numeric).body
+        if isinstance(f, ast.FunctionDef) and f.lineno <= line <= f.end_lineno
+    ]
+    assert fn.name == "exact_moment"
+    pairs = (PKG / "operators/pairs.py").read_text()
+    assert len(_IDIOMS["basket chain"][0].findall(pairs)) == 1
