@@ -92,6 +92,23 @@ def cents_sql(x: str, scale: int = 100) -> str:
     )
 
 
+def half_up(c: Column) -> Column:
+    """``floor(c + 0.5)``: the fixed-point output fold. Callers scale
+    first, e.g. ``half_up(diff * 1000000)`` for micro-units.
+
+    It rounds the binary double half-up, toward +inf at a tie (-2.5
+    gives -2), exactly as the DuckDB oracles'
+    ``CAST(floor(x * k + 0.5) AS BIGINT)`` does. ``F.round`` is not
+    used: it rounds the shortest decimal repr, so it can flip at a
+    ``.xx5`` boundary (``round(1.005, 2)`` is 1.01 while the double
+    ``1.005 * 100`` lies below 100.5). NULL in gives NULL out. The
+    result is always BIGINT: the double literal promotes any numeric
+    ``c``, decimals included, to double, and Spark's ``floor`` of a
+    double is BIGINT.
+    """
+    return F.floor(c + F.lit(0.5))
+
+
 def exact_moment(a: str, b: str) -> Column:
     """``sum(a*b)`` over BIGINT columns, exact, as a DOUBLE: the
     second-moment device of the closed-form statistics entries.

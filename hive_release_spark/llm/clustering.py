@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hive_release_spark.functions.numeric import half_up
 from hive_release_spark.llm.similarity import VEC_VALID_SQL, vec_valid
 
 
@@ -414,7 +415,7 @@ def power_iteration_project(
     mrows = (
         pts.select(F.posexplode("v").alias("pos", "x"))
         .groupBy("pos")
-        .agg(F.floor(F.avg("x") * _PI_QUANT + F.lit(0.5)).alias("mq"))
+        .agg(half_up(F.avg("x") * _PI_QUANT).alias("mq"))
         .collect()  # d rows — dimension-bounded driver fetch
     )
     mean = [0.0] * dim_
@@ -440,9 +441,7 @@ def power_iteration_project(
                 xcdf.select(d.alias("d"), F.posexplode("xc").alias("pos", "x"))
                 .groupBy("pos")
                 .agg(
-                    F.floor(
-                        F.avg(F.col("x") * F.col("d")) * _PI_QUANT + F.lit(0.5)
-                    ).alias("wq")
+                    half_up(F.avg(F.col("x") * F.col("d")) * _PI_QUANT).alias("wq")
                 )
                 .collect()  # d rows per iteration — dimension-bounded
             )
@@ -477,9 +476,7 @@ def power_iteration_project(
             xcdf.filter(F.col("vec_id") < nq)
             .select(
                 "vec_id",
-                F.floor(proj * _PI_QUANT + F.lit(0.5))
-                .cast("long")
-                .alias("pc1_micro"),
+                half_up(proj * _PI_QUANT).alias("pc1_micro"),
                 F.lit(math.floor(rayleigh * _PI_QUANT + 0.5))
                 .cast("long")
                 .alias("rayleigh_micro"),

@@ -17,9 +17,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Metadata schema for a multimodal asset column.
-ASSET_META_FIELDS = "n_bytes BIGINT, checksum STRING, modality STRING"
-
 
 def pack_assets(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Build an asset table: payload BINARY + typed metadata columns.

@@ -19,6 +19,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 from pyspark.sql.types import IntegralType
 
+from hive_release_spark.functions.numeric import half_up
+
 
 def as_double_vec(col: Column | str) -> Column:
     return F.col(col).cast("array<double>") if isinstance(col, str) else col.cast("array<double>")
@@ -1302,11 +1304,10 @@ def sq8_topk(
             vec,
             lambda x, i: F.when(
                 F.element_at(F.col("spans"), i + 1) > 0,
-                F.floor(
+                half_up(
                     (x - F.element_at(F.col("mins"), i + 1))
                     / F.element_at(F.col("spans"), i + 1)
-                    + F.lit(0.5)
-                ).cast("long"),
+                ),
             ).otherwise(F.lit(0).cast("long")),
         )
 

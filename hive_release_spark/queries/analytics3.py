@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
-from hive_release_spark.functions.numeric import cents as cents_fold, cents_sql, is_finite, finite, hive_render
+from hive_release_spark.functions.numeric import cents as cents_fold, cents_sql, is_finite, finite, half_up, hive_render
 from hive_release_spark.queries.registry import register
 
 
@@ -862,10 +862,9 @@ def customer_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
             "age_m",
             "cohort_n",
             "active",
-            # floor(x+0.5) device — see oracle note (r12 temporal axis)
-            (
-                F.floor(cum.cast("double") / F.col("cohort_n") + 0.5) / 100
-            ).alias("cum_ltv_per_user"),
+            (half_up(cum.cast("double") / F.col("cohort_n")) / 100).alias(
+                "cum_ltv_per_user"
+            ),
         )
         .orderBy("cohort_m", "age_m")
     )
@@ -3146,17 +3145,9 @@ def orders_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return idx.select(
         "month",
         "n_parts",
-        F.floor(F.col("laspeyres") * 1000 + F.lit(0.5))
-        .cast("long")
-        .alias("laspeyres_milli"),
-        F.floor(F.col("paasche") * 1000 + F.lit(0.5))
-        .cast("long")
-        .alias("paasche_milli"),
-        F.floor(
-            F.sqrt(F.col("laspeyres") * F.col("paasche")) * 1000
-            + F.lit(0.5)
-        )
-        .cast("long")
+        half_up(F.col("laspeyres") * 1000).alias("laspeyres_milli"),
+        half_up(F.col("paasche") * 1000).alias("paasche_milli"),
+        half_up(F.sqrt(F.col("laspeyres") * F.col("paasche")) * 1000)
         .alias("fisher_milli"),
     ).orderBy("month")
 
@@ -3254,17 +3245,16 @@ def events_did_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_users").alias("total_user_periods"),
         F.sum("n_purchases").alias("total_purchases"),
     )
-    fold = lambda c: F.floor(c * 1000000 + F.lit(0.5)).cast("long")  # noqa: E731
     return w.select(
         "total_user_periods",
         "total_purchases",
-        fold(F.col("t_pre")).alias("t_pre_micro"),
-        fold(F.col("t_post")).alias("t_post_micro"),
-        fold(F.col("c_pre")).alias("c_pre_micro"),
-        fold(F.col("c_post")).alias("c_post_micro"),
-        fold(
-            (F.col("t_post") - F.col("t_pre"))
-            - (F.col("c_post") - F.col("c_pre"))
+        half_up(F.col("t_pre") * 1000000).alias("t_pre_micro"),
+        half_up(F.col("t_post") * 1000000).alias("t_post_micro"),
+        half_up(F.col("c_pre") * 1000000).alias("c_pre_micro"),
+        half_up(F.col("c_post") * 1000000).alias("c_post_micro"),
+        half_up(
+            ((F.col("t_post") - F.col("t_pre")) - (F.col("c_post") - F.col("c_pre")))
+            * 1000000
         ).alias("did_micro"),
     )
 
@@ -3404,14 +3394,9 @@ def orders_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("abc_class", "xyz_class")
         .agg(
             F.count("*").alias("n_parts"),
-            F.floor(
-                F.sum("cents").cast("double")
-                / F.max("total_cents")
-                * 1000000
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("revenue_share_micro"),
+            half_up(
+                F.sum("cents").cast("double") / F.max("total_cents") * 1000000
+            ).alias("revenue_share_micro"),
         )
         .orderBy("abc_class", "xyz_class")
     )

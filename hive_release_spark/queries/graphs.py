@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
-from hive_release_spark.functions.numeric import exact_moment
+from hive_release_spark.functions.numeric import exact_moment, half_up
 from hive_release_spark.llm import dedup, graph
 from hive_release_spark.operators.pairs import baskets, sorted_pairs
 from hive_release_spark.operators.topk import global_topk
@@ -444,9 +444,7 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_common",
             "deg_u",
             "deg_v",
-            F.floor(F.col("score") * 1000000 + F.lit(0.5))
-            .cast("long")
-            .alias("jaccard_micro"),
+            half_up(F.col("score") * 1000000).alias("jaccard_micro"),
             "rk",
         )
         .orderBy("rk")
@@ -548,7 +546,5 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return s.select(
         F.col("m").alias("n_directed_edges"),
-        F.floor(num / den * 1000000 + F.lit(0.5))
-        .cast("long")
-        .alias("assortativity_micro"),
+        half_up(num / den * 1000000).alias("assortativity_micro"),
     )

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
+from hive_release_spark.functions.numeric import half_up
 from hive_release_spark.llm import clustering, similarity, text
 from hive_release_spark.operators.topk import global_topk
 from hive_release_spark.queries.registry import register
@@ -1884,10 +1885,6 @@ def emb_mean_shift_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dim",
         "n0",
         "n1",
-        F.floor(diff * 1000000 + F.lit(0.5))
-        .cast("long")
-        .alias("mean_diff_micro"),
-        F.floor(diff / se * 1000 + F.lit(0.5))
-        .cast("long")
-        .alias("welch_t_milli"),
+        half_up(diff * 1000000).alias("mean_diff_micro"),
+        half_up(diff / se * 1000).alias("welch_t_milli"),
     ).orderBy("dim")

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
+from hive_release_spark.functions.numeric import half_up
 from hive_release_spark.llm import dedup, pipeline, text
 from hive_release_spark.queries.analytics3 import _md5_u32
 from hive_release_spark.queries.registry import register
@@ -1623,19 +1624,11 @@ def text_ttr_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
             tokens.alias("n_tokens"),
             types.alias("n_types"),
             hapax.alias("n_hapax"),
-            F.floor(types.cast("double") / tokens * 1000000 + F.lit(0.5))
-            .cast("long")
-            .alias("ttr_micro"),
-            F.floor(hapax.cast("double") / types * 1000000 + F.lit(0.5))
-            .cast("long")
-            .alias("hapax_micro"),
-            F.floor(
-                F.log(types.cast("double")) / F.log(tokens.cast("double"))
-                * 1000000
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("herdan_c_micro"),
+            half_up(types.cast("double") / tokens * 1000000).alias("ttr_micro"),
+            half_up(hapax.cast("double") / types * 1000000).alias("hapax_micro"),
+            half_up(
+                F.log(types.cast("double")) / F.log(tokens.cast("double")) * 1000000
+            ).alias("herdan_c_micro"),
         )
         .orderBy("source")
     )
@@ -1697,12 +1690,8 @@ def text_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             latin_ext.alias("n_latin_ext"),
             cjk.alias("n_cjk"),
             digit.alias("n_digit"),
-            F.floor(latin.cast("double") / total * 1000000 + F.lit(0.5))
-            .cast("long")
-            .alias("latin_ratio_micro"),
-            F.floor(cjk.cast("double") / total * 1000000 + F.lit(0.5))
-            .cast("long")
-            .alias("cjk_ratio_micro"),
+            half_up(latin.cast("double") / total * 1000000).alias("latin_ratio_micro"),
+            half_up(cjk.cast("double") / total * 1000000).alias("cjk_ratio_micro"),
         )
         .orderBy("source")
     )
@@ -1884,11 +1873,7 @@ def pipeline_quality_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "f_alpha",
             "f_uniq",
             "n_docs",
-            F.floor(
-                F.col("n_docs").cast("double") / F.col("nt") * 1000000
-                + F.lit(0.5)
-            )
-            .cast("long")
+            half_up(F.col("n_docs").cast("double") / F.col("nt") * 1000000)
             .alias("share_micro"),
             F.when(
                 (F.col("f_len") == 1)

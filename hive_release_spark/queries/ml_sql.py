@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
-from hive_release_spark.functions.numeric import exact_moment, is_finite
+from hive_release_spark.functions.numeric import exact_moment, half_up, is_finite
 from hive_release_spark.llm.text import tokens
 from hive_release_spark.operators.pairs import baskets, sorted_pairs
 from hive_release_spark.operators.topk import global_topk
@@ -180,18 +180,10 @@ def ml_linear_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return b.select(
         "n",
-        F.floor(F.col("b0") / 100.0 * 1000 + F.lit(0.5))
-        .cast("long")
-        .alias("b0_milli"),
-        F.floor(F.col("b1") / 100.0 * 1000 + F.lit(0.5))
-        .cast("long")
-        .alias("b1_milli"),
-        F.floor(F.col("b2") / 100.0 * 1000 + F.lit(0.5))
-        .cast("long")
-        .alias("b2_milli"),
-        F.floor(F.try_divide(ssr, sst) * 100000 + F.lit(0.5))
-        .cast("long")
-        .alias("r2_e5"),
+        half_up(F.col("b0") / 100.0 * 1000).alias("b0_milli"),
+        half_up(F.col("b1") / 100.0 * 1000).alias("b1_milli"),
+        half_up(F.col("b2") / 100.0 * 1000).alias("b2_milli"),
+        half_up(F.try_divide(ssr, sst) * 100000).alias("r2_e5"),
     )
 
 
@@ -334,11 +326,7 @@ def ml_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_test"),
             correct.alias("n_correct"),
-            F.floor(
-                correct.cast("double") / F.count("*") * 1000000 + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("acc_micro"),
+            half_up(correct.cast("double") / F.count("*") * 1000000).alias("acc_micro"),
         )
         .orderBy("true_lang")
     )
@@ -492,13 +480,8 @@ def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("v").alias("threshold"),
             nl.alias("n_left"),
             posl.alias("pos_left"),
-            F.floor(F.col("gini") * 1000000 + F.lit(0.5))
-            .cast("long")
-            .alias("gini_micro"),
-            F.floor(
-                (F.lit(1.0) - pp * pp - qp * qp) * 1000000 + F.lit(0.5)
-            )
-            .cast("long")
+            half_up(F.col("gini") * 1000000).alias("gini_micro"),
+            half_up((F.lit(1.0) - pp * pp - qp * qp) * 1000000)
             .alias("gini_parent_micro"),
         )
         .withColumn(
@@ -724,9 +707,7 @@ def ml_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c").alias("n_cobaskets"),
             "deg_a",
             "deg_b",
-            F.floor(F.col("cosine") * 1000000 + F.lit(0.5))
-            .cast("long")
-            .alias("cosine_micro"),
+            half_up(F.col("cosine") * 1000000).alias("cosine_micro"),
             "rk",
         )
         .orderBy("rk")
@@ -816,11 +797,7 @@ def ml_markov_next_event(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("pred").alias("predicted"),
             F.count("*").alias("n_test"),
             hit.alias("n_correct"),
-            F.floor(
-                hit.cast("double") / F.count("*") * 1000000 + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("acc_micro"),
+            half_up(hit.cast("double") / F.count("*") * 1000000).alias("acc_micro"),
         )
         .orderBy("prev")
     )
@@ -948,12 +925,8 @@ def ml_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c").alias("support_n"),
             "n_a",
             "n_b",
-            F.floor(F.col("confidence") * 1000000 + F.lit(0.5))
-            .cast("long")
-            .alias("confidence_micro"),
-            F.floor(F.col("lift") * 1000 + F.lit(0.5))
-            .cast("long")
-            .alias("lift_milli"),
+            half_up(F.col("confidence") * 1000000).alias("confidence_micro"),
+            half_up(F.col("lift") * 1000).alias("lift_milli"),
             "rk",
         )
         .orderBy("rk")
@@ -1207,37 +1180,33 @@ def ml_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
-    fold_leaf = lambda c: F.floor(c / 100.0 * 1000 + F.lit(0.5)).cast(  # noqa: E731
-        "long"
-    )
-    fold_mse = lambda c: F.floor(  # noqa: E731
-        c / 10000.0 * 1000 + F.lit(0.5)
-    ).cast("long")
     r1 = best1.select(
         F.lit(1).alias("stage"),
         F.lit("quantity").alias("feature"),
         F.col("q").alias("threshold"),
         F.col("nl").alias("n_left"),
-        fold_leaf(F.col("leaf_l")).alias("leaf_left_milli"),
-        fold_leaf(F.col("leaf_r")).alias("leaf_right_milli"),
-        fold_mse(
+        half_up(F.col("leaf_l") / 100.0 * 1000).alias("leaf_left_milli"),
+        half_up(F.col("leaf_r") / 100.0 * 1000).alias("leaf_right_milli"),
+        half_up(
             (
                 F.col("syyt")
                 - F.col("syt").cast("double") * F.col("syt") / F.col("nt")
             )
             / F.col("nt")
+            / 10000.0
+            * 1000
         ).alias("mse_before_milli"),
-        fold_mse(F.col("sse") / F.col("nt")).alias("mse_after_milli"),
+        half_up(F.col("sse") / F.col("nt") / 10000.0 * 1000).alias("mse_after_milli"),
     )
     r2 = best2.select(
         F.lit(2).alias("stage"),
         F.lit("discount").alias("feature"),
         F.col("d").alias("threshold"),
         F.col("nl").alias("n_left"),
-        fold_leaf(F.col("leaf_l")).alias("leaf_left_milli"),
-        fold_leaf(F.col("leaf_r")).alias("leaf_right_milli"),
-        fold_mse(F.col("srrt") / F.col("nt")).alias("mse_before_milli"),
-        fold_mse(F.col("sse") / F.col("nt")).alias("mse_after_milli"),
+        half_up(F.col("leaf_l") / 100.0 * 1000).alias("leaf_left_milli"),
+        half_up(F.col("leaf_r") / 100.0 * 1000).alias("leaf_right_milli"),
+        half_up(F.col("srrt") / F.col("nt") / 10000.0 * 1000).alias("mse_before_milli"),
+        half_up(F.col("sse") / F.col("nt") / 10000.0 * 1000).alias("mse_after_milli"),
     )
     return r1.unionByName(r2).orderBy("stage")
 
@@ -1346,15 +1315,9 @@ def ml_regression_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "bucket",
             "n",
-            F.floor(pred / 100.0 * 1000 + F.lit(0.5))
-            .cast("long")
-            .alias("avg_pred_milli"),
-            F.floor(actual / 100.0 * 1000 + F.lit(0.5))
-            .cast("long")
-            .alias("avg_actual_milli"),
-            F.floor((pred - actual) / 100.0 * 1000 + F.lit(0.5))
-            .cast("long")
-            .alias("bias_milli"),
+            half_up(pred / 100.0 * 1000).alias("avg_pred_milli"),
+            half_up(actual / 100.0 * 1000).alias("avg_actual_milli"),
+            half_up((pred - actual) / 100.0 * 1000).alias("bias_milli"),
         )
         .orderBy("bucket")
     )
@@ -1518,12 +1481,6 @@ def ml_regression_kfold_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fit.select(
         "fold",
         "n_test",
-        F.floor(
-            F.sqrt(sse / F.col("n_test")) / 100.0 * 1000 + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("rmse_milli"),
-        F.floor(F.col("b1") / 100.0 * 1000000 + F.lit(0.5))
-        .cast("long")
-        .alias("b1_micro"),
+        half_up(F.sqrt(sse / F.col("n_test")) / 100.0 * 1000).alias("rmse_milli"),
+        half_up(F.col("b1") / 100.0 * 1000000).alias("b1_micro"),
     ).orderBy("fold")

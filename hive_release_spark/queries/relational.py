@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table, register_views
-from hive_release_spark.functions.numeric import finite
+from hive_release_spark.functions.numeric import cents, finite
 from hive_release_spark.queries.registry import register
 
 # ---------------------------------------------------------------------------
@@ -558,12 +558,7 @@ def agg_min_max_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer), because engine tie behavior for plain arg_max is
     unspecified."""
     o = load_table(spark, sf_dir, "orders")
-    # finite device (r10 NaN axis) — see oracle note
-    ck = (
-        F.round(finite(F.col("o_totalprice")) * 100).cast("long")
-        * F.lit(10000000)
-        + F.col("o_orderkey")
-    )
+    ck = cents("o_totalprice") * F.lit(10000000) + F.col("o_orderkey")
     t = o.select("o_orderpriority", "o_orderkey", "o_totalprice", ck.alias("ck"))
     return (
         t.groupBy("o_orderpriority")

@@ -8,7 +8,7 @@ Hive ships none of these as builtins; users compose them from windows
 and aggregates exactly as these entries do (the reference capability is
 the composition surface, SURVEY.md §2.C/§2.D). Numerical discipline
 follows the repo rule: every reported statistic is either pure integer
-math or a single floor(x*k+0.5) fold of a double BOTH engines derive
+math or a single ``half_up`` fold of a double BOTH engines derive
 from exact integer inputs, so the driver hash cannot wobble on
 shortest-repr rounding.
 
@@ -25,7 +25,12 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
-from hive_release_spark.functions.numeric import exact_moment, finite, is_finite
+from hive_release_spark.functions.numeric import (
+    exact_moment,
+    finite,
+    half_up,
+    is_finite,
+)
 from hive_release_spark.queries.registry import register
 
 _A = "1-URGENT"
@@ -99,17 +104,10 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c.agg(
         F.max("ta").alias("n_a"),
         F.max("tb").alias("n_b"),
-        F.floor(
-            F.max(
-                F.abs(
-                    F.col("ca") / F.col("ta") - F.col("cb") / F.col("tb")
-                )
-            )
+        half_up(
+            F.max(F.abs(F.col("ca") / F.col("ta") - F.col("cb") / F.col("tb")))
             * 1000000
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("ks_d_micro"),
+        ).alias("ks_d_micro"),
     )
 
 
@@ -196,7 +194,7 @@ def stats_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         ta.alias("n_a"),
         tb.alias("n_b"),
         u2.alias("u2_a"),
-        F.floor(z * 1000 + F.lit(0.5)).cast("long").alias("z_milli"),
+        half_up(z * 1000).alias("z_milli"),
     )
 
 
@@ -278,14 +276,10 @@ def stats_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.countDistinct("p") - 1) * (F.countDistinct("s") - 1)).alias(
             "dof"
         ),
-        F.floor(chi2 * 1000 + F.lit(0.5)).cast("long").alias("chi2_milli"),
+        half_up(chi2 * 1000).alias("chi2_milli"),
         # try_divide: a degenerate 1xC / Rx1 table has min(r-1, c-1) = 0
         # and Cramer's V is undefined — NULL, DuckDB's x/0 answer
-        F.floor(
-            F.sqrt(F.try_divide(chi2, F.max("tot") * minrc)) * 1000000
-            + F.lit(0.5)
-        )
-        .cast("long")
+        half_up(F.sqrt(F.try_divide(chi2, F.max("tot") * minrc)) * 1000000)
         .alias("v_micro"),
     )
 
@@ -360,9 +354,7 @@ def timeseries_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("lag")
         .agg(
             F.count("*").alias("n_pairs"),
-            F.floor(F.corr("x", "y") * 1000000 + F.lit(0.5))
-            .cast("long")
-            .alias("acf_micro"),
+            half_up(F.corr("x", "y") * 1000000).alias("acf_micro"),
         )
         .orderBy("lag")
     )
@@ -405,9 +397,7 @@ def timeseries_cross_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("lag")
         .agg(
             F.count("*").alias("n_pairs"),
-            F.floor(F.corr("x", "y") * 1000000 + F.lit(0.5))
-            .cast("long")
-            .alias("ccf_micro"),
+            half_up(F.corr("x", "y") * 1000000).alias("ccf_micro"),
         )
         .orderBy("lag")
     )
@@ -482,14 +472,10 @@ def stats_subsample_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.agg(
         F.count("*").alias("n_replicates"),
         F.min("n").alias("min_rep_rows"),
-        F.floor(mean * 1000 + F.lit(0.5)).cast("long").alias("mean_milli"),
-        F.floor(sd * 1000 + F.lit(0.5)).cast("long").alias("sd_milli"),
-        F.floor((mean - 1.96 * sd / 4.0) * 1000 + F.lit(0.5))
-        .cast("long")
-        .alias("ci_lo_milli"),
-        F.floor((mean + 1.96 * sd / 4.0) * 1000 + F.lit(0.5))
-        .cast("long")
-        .alias("ci_hi_milli"),
+        half_up(mean * 1000).alias("mean_milli"),
+        half_up(sd * 1000).alias("sd_milli"),
+        half_up((mean - 1.96 * sd / 4.0) * 1000).alias("ci_lo_milli"),
+        half_up((mean + 1.96 * sd / 4.0) * 1000).alias("ci_hi_milli"),
     )
 
 
@@ -546,8 +532,8 @@ def stats_power_two_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return r.select(
         F.col("k").alias("n_purchases"),
         F.col("n").alias("n_events"),
-        F.floor(p1 * 1000000 + F.lit(0.5)).cast("long").alias("p1_micro"),
-        F.floor(p2 * 1000000 + F.lit(0.5)).cast("long").alias("p2_micro"),
+        half_up(p1 * 1000000).alias("p1_micro"),
+        half_up(p2 * 1000000).alias("p2_micro"),
         F.ceil(
             F.try_divide(
                 F.lit(z * z) * (p1 * (1 - p1) + p2 * (1 - p2)),
@@ -772,16 +758,14 @@ def retention_halflife_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").alias("n_points"),
             "cohort_n",
             F.when(b.isNull(), sentinel)
-            .otherwise(F.floor(b * 1000000 + F.lit(0.5)).cast("long"))
+            .otherwise(half_up(b * 1000000))
             .alias("slope_micro"),
             F.when(a.isNull(), sentinel)
-            .otherwise(F.floor(a * 1000000 + F.lit(0.5)).cast("long"))
+            .otherwise(half_up(a * 1000000))
             .alias("intercept_micro"),
             F.when(
                 b.isNotNull() & (b < 0),
-                F.floor(F.lit(-math.log(2)) / b * 1000 + F.lit(0.5)).cast(
-                    "long"
-                ),
+                half_up(F.lit(-math.log(2)) / b * 1000),
             )
             .otherwise(F.lit(-1).cast("long"))
             .alias("halflife_days_milli"),
@@ -875,19 +859,14 @@ def stats_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
         # single-row) slice has zero between/within degrees of freedom
         # and SST = 0, so F and eta^2 are undefined — NULL, DuckDB's
         # x/0 answer, not an ANSI abort
-        F.floor(
+        half_up(
             F.try_divide(
                 F.try_divide(ssb, F.col("k") - 1),
                 F.try_divide(ssw, F.col("nt") - F.col("k")),
             )
             * 1000
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("f_milli"),
-        F.floor(F.try_divide(ssb, sst) * 1000000 + F.lit(0.5))
-        .cast("long")
-        .alias("eta2_micro"),
+        ).alias("f_milli"),
+        half_up(F.try_divide(ssb, sst) * 1000000).alias("eta2_micro"),
     )
 
 
@@ -990,9 +969,7 @@ def stats_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         # try_divide: one row (or a constant column) has zero rank
         # variance and the correlation is undefined — NULL, DuckDB's
         # x/0 answer, not an ANSI abort
-        F.floor(F.try_divide(num, den) * 1000000 + F.lit(0.5))
-        .cast("long")
-        .alias("spearman_micro"),
+        half_up(F.try_divide(num, den) * 1000000).alias("spearman_micro"),
     )
 
 
@@ -1119,12 +1096,8 @@ def stats_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
             "grp",
             "n",
             "k",
-            F.floor(F.col("zv") * 1000 + F.lit(0.5))
-            .cast("long")
-            .alias("z_milli"),
-            F.floor(F.col("pv") * 1000000 + F.lit(0.5))
-            .cast("long")
-            .alias("p_micro"),
+            half_up(F.col("zv") * 1000).alias("z_milli"),
+            half_up(F.col("pv") * 1000000).alias("p_micro"),
             F.col("rk").cast("long").alias("rk"),
             F.when(F.col("rk") <= F.col("max_rk"), 1)
             .otherwise(0)
@@ -1261,14 +1234,8 @@ def stats_randomization_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "b_total",
         "n_extreme",
-        F.floor(F.col("d_obs") * 1000000 + F.lit(0.5))
-        .cast("long")
-        .alias("d_obs_micro"),
-        F.floor(
-            (1.0 + F.col("n_extreme")) / (1.0 + F.col("b_total")) * 1000
-            + F.lit(0.5)
-        )
-        .cast("long")
+        half_up(F.col("d_obs") * 1000000).alias("d_obs_micro"),
+        half_up((1.0 + F.col("n_extreme")) / (1.0 + F.col("b_total")) * 1000)
         .alias("p_milli"),
     )
 
@@ -1370,10 +1337,8 @@ def stats_weibull_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.crossJoin(F.broadcast(tot)).select(
         F.col("n").alias("n_points"),
         F.col("nt").alias("n_orders"),
-        F.floor(k * 1000 + F.lit(0.5)).cast("long").alias("shape_milli"),
-        F.floor(F.exp(-c / k) * 1000 + F.lit(0.5))
-        .cast("long")
-        .alias("scale_days_milli"),
+        half_up(k * 1000).alias("shape_milli"),
+        half_up(F.exp(-c / k) * 1000).alias("scale_days_milli"),
     )
 
 
@@ -1525,20 +1490,10 @@ def sample_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "stratum",
             "nh",
-            F.floor(F.col("sh") * 1000 + F.lit(0.5))
-            .cast("long")
-            .alias("sd_milli"),
-            F.floor(
-                F.try_divide(1000.0 * F.col("nh") * F.col("sh"), F.col("tot"))
-                + F.lit(0.5)
-            )
-            .cast("long")
+            half_up(F.col("sh") * 1000).alias("sd_milli"),
+            half_up(F.try_divide(1000.0 * F.col("nh") * F.col("sh"), F.col("tot")))
             .alias("alloc_of_1000"),
-            F.floor(
-                F.try_divide(F.col("nh") * F.col("sh"), F.col("tot")) * 1000000
-                + F.lit(0.5)
-            )
-            .cast("long")
+            half_up(F.try_divide(F.col("nh") * F.col("sh"), F.col("tot")) * 1000000)
             .alias("weight_micro"),
         )
         .orderBy("stratum")
@@ -1609,7 +1564,7 @@ def events_fano_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n_days",
         F.col("sc").alias("n_events"),
-        F.floor(fano * 1000 + F.lit(0.5)).cast("long").alias("fano_milli"),
+        half_up(fano * 1000).alias("fano_milli"),
         F.when(fano > 1.5, 1).otherwise(0).alias("bursty_flag"),
     ).orderBy("event_type")
 
@@ -1898,20 +1853,13 @@ def stats_granger_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return sse.select(
         F.col("n").alias("n_days"),
-        F.floor(F.col("sse_r") / F.col("n") / 1.0 + F.lit(0.5))
-        .cast("long")
-        .alias("mse_restricted"),
-        F.floor(F.col("sse_u") / F.col("n") / 1.0 + F.lit(0.5))
-        .cast("long")
-        .alias("mse_unrestricted"),
-        F.floor(
+        half_up(F.col("sse_r") / F.col("n") / 1.0).alias("mse_restricted"),
+        half_up(F.col("sse_u") / F.col("n") / 1.0).alias("mse_unrestricted"),
+        half_up(
             (F.col("sse_r") - F.col("sse_u"))
             / (F.col("sse_u") / (F.col("n") - 3))
             * 1000
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("f_milli"),
+        ).alias("f_milli"),
     )
 
 
@@ -2032,12 +1980,8 @@ def stats_simpson_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             "segment",
             "n_treat",
             "n_control",
-            F.floor(F.col("diff") * 1000000 + F.lit(0.5))
-            .cast("long")
-            .alias("diff_micro"),
-            F.floor(F.col("odiff") * 1000000 + F.lit(0.5))
-            .cast("long")
-            .alias("overall_diff_micro"),
+            half_up(F.col("diff") * 1000000).alias("diff_micro"),
+            half_up(F.col("odiff") * 1000000).alias("overall_diff_micro"),
             F.when(
                 (F.col("diff") > 0) != (F.col("odiff") > 0), 1
             )

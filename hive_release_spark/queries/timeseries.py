@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
 from hive_release_spark.operators.asof import asof_join
-from hive_release_spark.functions.numeric import cents, cents_sql, finite
+from hive_release_spark.functions.numeric import cents, cents_sql, finite, half_up
 from hive_release_spark.queries.registry import register
 
 
@@ -477,12 +477,8 @@ def timeseries_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     return z.select(
         F.col("z.series.month").alias("month"),
         # rev is cents/100.0 — already decimal-exact, no round needed.
-        # ewma rounds via floor(x*100+0.5)/100 in BOTH engines: on the
-        # same double, Spark's round() works on the shortest decimal
-        # repr (…225 -> .23) while DuckDB rounds the binary value
-        # (-> .22), so only a binary-deterministic rounding agrees.
         F.col("z.series.rev").alias("rev"),
-        (F.floor(F.col("z.ewma") * 100 + 0.5) / 100).alias("ewma"),
+        (half_up(F.col("z.ewma") * 100) / 100).alias("ewma"),
     ).orderBy("month")
 
 
@@ -598,7 +594,7 @@ def timeseries_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("mk_s"),
         F.when(
-            has_pairs, F.floor((lo + hi) / 2 * 10000 + 0.5) / 10000
+            has_pairs, half_up((lo + hi) / 2 * 10000) / 10000
         ).alias("sen_slope"),
     )
 
@@ -695,15 +691,14 @@ def timeseries_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = folded.select(
         F.explode(F.arrays_zip("series", "states")).alias("z")
     )
-    rnd = lambda c: F.floor(c * 100 + 0.5) / 100
     return z.select(
         F.col("z.series.month").alias("month"),
         F.col("z.series.rev").alias("rev"),
-        rnd(F.col("z.states.l")).alias("level"),
-        rnd(F.col("z.states.b")).alias("trend"),
-        rnd(F.col("z.states.l") + F.col("z.states.b")).alias(
-            "forecast_next"
-        ),
+        (half_up(F.col("z.states.l") * 100) / 100).alias("level"),
+        (half_up(F.col("z.states.b") * 100) / 100).alias("trend"),
+        (
+            half_up((F.col("z.states.l") + F.col("z.states.b")) * 100) / 100
+        ).alias("forecast_next"),
     ).orderBy("month")
 
 
@@ -796,19 +791,15 @@ def timeseries_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.first("c", ignorenulls=True).over(after).alias("nv"),
         F.first(known_i, ignorenulls=True).over(after).alias("ni"),
     )
-    rnd_cents = lambda c: F.floor(c.cast("double") / 100 * 100 + 0.5) / 100
     interp = (
-        F.when(F.col("c").isNotNull(), F.floor(F.col("c").cast("double") + 0.5) / 100)
+        F.when(F.col("c").isNotNull(), half_up(F.col("c").cast("double")) / 100)
         .when(
             F.col("pv").isNotNull() & F.col("nv").isNotNull(),
-            F.floor(
-                (
-                    F.col("pv")
-                    + (F.col("nv") - F.col("pv"))
-                    * (F.col("i").cast("double") - F.col("pi"))
-                    / (F.col("ni") - F.col("pi"))
-                )
-                + 0.5
+            half_up(
+                F.col("pv")
+                + (F.col("nv") - F.col("pv"))
+                * (F.col("i").cast("double") - F.col("pi"))
+                / (F.col("ni") - F.col("pi"))
             )
             / 100,
         )
@@ -817,8 +808,8 @@ def timeseries_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     return w.select(
         "hr",
         F.when(F.col("c").isNull(), 1).otherwise(0).alias("is_gap"),
-        rnd_cents(F.col("c")).alias("rev"),
-        rnd_cents(F.col("pv")).alias("rev_locf"),
+        (half_up(F.col("c").cast("double") / 100 * 100) / 100).alias("rev"),
+        (half_up(F.col("pv").cast("double") / 100 * 100) / 100).alias("rev_locf"),
         interp.alias("rev_interp"),
     ).orderBy("hr")
 
@@ -1083,14 +1074,9 @@ def timeseries_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     has = F.col("n_demand_days") > 0
     return folded.select(
         F.when(has, F.col("n_demand_days")).alias("n_demand_days"),
-        F.when(has, F.floor(F.col("st.z") * 1000 + F.lit(0.5)))
-        .cast("long")
-        .alias("z_milli"),
-        F.when(has, F.floor(F.col("st.p") * 1000 + F.lit(0.5)))
-        .cast("long")
-        .alias("p_milli"),
-        F.when(has, F.floor(F.col("st.z") / F.col("st.p") * 1000 + F.lit(0.5)))
-        .cast("long")
+        F.when(has, half_up(F.col("st.z") * 1000)).alias("z_milli"),
+        F.when(has, half_up(F.col("st.p") * 1000)).alias("p_milli"),
+        F.when(has, half_up(F.col("st.z") / F.col("st.p") * 1000))
         .alias("forecast_milli"),
     )
 
@@ -1249,23 +1235,15 @@ def timeseries_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     has = F.col("n_days") > 0
     return folded.select(
         F.col("st.t").alias("n_days"),
-        F.when(has, F.floor(F.col("st.l") * 1000 + F.lit(0.5)))
-        .cast("long")
-        .alias("level_milli"),
-        F.when(has, F.floor(F.col("st.b") * 1000 + F.lit(0.5)))
-        .cast("long")
-        .alias("trend_milli"),
-        F.when(has, F.floor(F.element_at(F.col("st.s"), nxt) * 1000 + F.lit(0.5)))
-        .cast("long")
+        F.when(has, half_up(F.col("st.l") * 1000)).alias("level_milli"),
+        F.when(has, half_up(F.col("st.b") * 1000)).alias("trend_milli"),
+        F.when(has, half_up(F.element_at(F.col("st.s"), nxt) * 1000))
         .alias("next_season_milli"),
         F.when(
             has,
-            F.floor(
+            half_up(
                 (F.col("st.l") + F.col("st.b") + F.element_at(F.col("st.s"), nxt))
                 * 1000
-                + F.lit(0.5)
             ),
-        )
-        .cast("long")
-        .alias("forecast_milli"),
+        ).alias("forecast_milli"),
     )

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
-from hive_release_spark.functions.numeric import is_finite
+from hive_release_spark.functions.numeric import half_up, is_finite
 from hive_release_spark.operators.topk import global_topk
 from hive_release_spark.queries.registry import register
 
@@ -918,9 +918,7 @@ def ds_three_channel_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ch0_qty",
             "ch1_qty",
             "ch2_qty",
-            F.floor(ratio * 1000000 + F.lit(0.5))
-            .cast("long")
-            .alias("ratio_micro"),
+            half_up(ratio * 1000000).alias("ratio_micro"),
             F.row_number().over(w).cast("long").alias("rn"),
         )
         .filter(F.col("rn") <= 20)

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
-from hive_release_spark.functions.numeric import finite, is_finite
+from hive_release_spark.functions.numeric import finite, half_up, is_finite
 from hive_release_spark.queries.registry import register
 
 
@@ -631,9 +631,7 @@ def window_regr_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_custkey",
             "o_orderkey",
             "rn",
-            F.floor(num / den / F.lit(100.0) * 1000 + F.lit(0.5))
-            .cast("long")
-            .alias("slope_milli"),
+            half_up(num / den / F.lit(100.0) * 1000).alias("slope_milli"),
         )
         .orderBy("o_custkey", "rn")
     )

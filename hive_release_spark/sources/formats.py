@@ -24,8 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_BASIC_FORMATS = ("parquet", "orc", "json", "csv", "text")
-
 
 def avro_available(spark: SparkSession) -> bool:
     """spark-avro is an external module; probe instead of assuming."""

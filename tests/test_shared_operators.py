@@ -1,9 +1,10 @@
 """Unit tests for the shared query helpers: ``global_topk`` (ranked
 top-k), ``baskets`` and ``sorted_pairs`` (basket building and postings
-pair emission) and ``exact_moment`` (exact integer second moments). The
-registry entries built on them are covered by the oracle and plan
-suites; these pin the helpers' own contracts on tiny frames. The last
-test keeps the idioms from being pasted back inline."""
+pair emission), ``exact_moment`` (exact integer second moments) and
+``half_up`` (the fixed-point output fold). The registry entries built
+on them are covered by the oracle and plan suites; these pin the
+helpers' own contracts on tiny frames. The last tests keep the idioms
+from being pasted back inline."""
 
 from __future__ import annotations
 
@@ -14,7 +15,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from hive_release_spark.functions.numeric import exact_moment
+from hive_release_spark.functions.numeric import exact_moment, half_up
 from hive_release_spark.operators.pairs import baskets, sorted_pairs
 from hive_release_spark.operators.topk import global_topk
 
@@ -140,6 +141,33 @@ def test_exact_moment_product_overflow_raises_under_ansi(spark):
         spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
+def test_half_up_rounds_the_binary_double_toward_plus_inf(spark):
+    df = spark.createDataFrame(
+        [(1, 2.5), (2, -2.5), (3, 1.005), (4, None)], "k INT, x DOUBLE"
+    )
+    got = df.select(
+        "k",
+        half_up(F.col("x")).alias("h"),
+        F.round("x").alias("r"),
+        half_up(F.col("x") * 100).alias("h100"),
+        F.round("x", 2).alias("r2"),
+    )
+    rows = {r.k: r for r in got.collect()}
+    # ties go toward +inf; F.round takes -2.5 away from zero
+    assert (rows[1].h, rows[2].h, rows[2].r) == (3, -2, -3.0)
+    # the double 1.005 lies below 1.005, so its x100 product lies below
+    # 100.5; F.round rounds the decimal repr "1.005" up instead
+    assert (rows[3].h100, rows[3].r2) == (100, 1.01)
+    assert rows[4].h is None and rows[4].h100 is None
+
+
+def test_half_up_of_a_decimal_is_bigint(spark):
+    df = spark.range(1).select(F.lit("12.34").cast("decimal(10,2)").alias("d"))
+    out = df.select(half_up(F.col("d") * 10).alias("h"))
+    assert out.schema["h"].dataType.simpleString() == "bigint"
+    assert out.first().h == 123
+
+
 # (pattern, the only files allowed to contain it)
 _IDIOMS = {
     "exact moment": (
@@ -159,15 +187,54 @@ _IDIOMS = {
 _SPLIT_EXCEPTIONS = {("queries/llm.py", 'F.split("p_name", " ")')}
 
 
+def _is_half(n: ast.expr) -> bool:
+    """``0.5`` or ``F.lit(0.5)``."""
+    if (
+        isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "lit"
+        and len(n.args) == 1
+    ):
+        n = n.args[0]
+    return isinstance(n, ast.Constant) and n.value == 0.5
+
+
+def _half_up_folds(tree: ast.AST) -> list[ast.Call]:
+    """Every ``F.floor(<x> + 0.5)`` / ``F.floor(<x> + F.lit(0.5))``."""
+    return [
+        n
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "floor"
+        and isinstance(n.func.value, ast.Name)
+        and n.func.value.id == "F"
+        and len(n.args) == 1
+        and isinstance(n.args[0], ast.BinOp)
+        and isinstance(n.args[0].op, ast.Add)
+        and (_is_half(n.args[0].left) or _is_half(n.args[0].right))
+    ]
+
+
 def test_shared_idioms_are_not_inlined():
     """Exact moments go through ``exact_moment``, basket building
-    through ``baskets`` and whitespace tokenization of text through
-    ``text.tokens``; ``functions_sql`` keeps Hive's own split UDTF
-    showcase."""
+    through ``baskets``, whitespace tokenization of text through
+    ``text.tokens`` and the half-up output fold through ``half_up``;
+    ``functions_sql`` keeps Hive's own split UDTF showcase. The fold is
+    found by an ast walk, not a regex, because its argument often spans
+    lines."""
     stray = []
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
         src = path.read_text()
+        tree = ast.parse(src)
+        own = set()
+        if rel == "functions/numeric.py":
+            (fn,) = [f for f in tree.body if getattr(f, "name", "") == "half_up"]
+            own = {id(n) for n in ast.walk(fn)}
+        for n in _half_up_folds(tree):
+            if id(n) not in own:
+                stray.append(f"half-up fold: {rel}:{n.lineno}: use half_up")
         for name, (rx, allowed) in _IDIOMS.items():
             for m in rx.finditer(src):
                 if rel not in allowed and (rel, m.group(0)) not in _SPLIT_EXCEPTIONS:
@@ -186,3 +253,4 @@ def test_shared_idioms_are_not_inlined():
     assert fn.name == "exact_moment"
     pairs = (PKG / "operators/pairs.py").read_text()
     assert len(_IDIOMS["basket chain"][0].findall(pairs)) == 1
+    assert len(_half_up_folds(ast.parse(numeric))) == 1
