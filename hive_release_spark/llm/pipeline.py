@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from hive_release_spark.llm.dedup import _doc_shingles, _exploded_shingles, shingles
 from hive_release_spark.llm.text import token_count, tokens
 from hive_release_spark.operators.pairs import sorted_pairs
+from hive_release_spark.operators.topk import bounded_sort
 
 HEX = "0123456789abcdef"
 
@@ -261,7 +262,8 @@ def source_overlap(
         .distinct()
     )
     postings = gs.groupBy("s_h").agg(F.sort_array(F.collect_set("src")).alias("srcs"))
-    return (
+    # one row per pair of sources
+    return bounded_sort(
         sorted_pairs(
             postings,
             "srcs",
@@ -271,6 +273,6 @@ def source_overlap(
             F.col("p.source_a").alias("source_a"),
             F.col("p.source_b").alias("source_b"),
         )
-        .agg(F.count("*").alias("n_shared_grams"))
-        .orderBy("source_a", "source_b")
+        .agg(F.count("*").alias("n_shared_grams")),
+        "source_a", "source_b",
     )

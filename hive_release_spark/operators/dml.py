@@ -489,10 +489,10 @@ def insert_into(spark: SparkSession, path: str, rows: DataFrame) -> None:
 def multi_insert(df: DataFrame, sinks: list[tuple[str, object]]) -> None:
     """Hive multi-insert: FROM (one scan) INSERT ... INSERT ...
     (TOK_DESTINATION per branch, SURVEY.md §2.G). The shared scan is
-    cached once; each branch writes its own sink."""
+    cached once: the first branch's write fills the cache and the later
+    branches read it. Each branch writes its own sink."""
     df.persist()
     try:
-        df.count()  # materialize once
         for path, transform in sinks:
             out = transform(df) if callable(transform) else df
             out.write.mode("overwrite").parquet(path)

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from hive_release_spark.catalog import load_table
 from hive_release_spark.functions.temporal import ts_valid
 from hive_release_spark.operators.pairs import baskets, sorted_pairs
+from hive_release_spark.operators.topk import bounded_sort
 from hive_release_spark.queries.registry import register
 
 
@@ -141,14 +142,15 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = ev.groupBy("user_id").agg(
         F.min("wk").alias("cohort"), F.collect_set("wk").alias("wks")
     )
-    return (
+    # cohort week × week offset over the events' time span
+    return bounded_sort(
         per_user.select("cohort", F.explode("wks").alias("wk"))
         .groupBy(
             "cohort",
             (F.datediff("wk", "cohort") / 7).cast("int").alias("week_n"),
         )
-        .agg(F.count("*").alias("active_users"))
-        .orderBy("cohort", "week_n")
+        .agg(F.count("*").alias("active_users")),
+        "cohort", "week_n",
     )
 
 
@@ -395,11 +397,12 @@ def orders_status_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq = o.select(
         "o_orderstatus", F.lag("o_orderstatus").over(w).alias("prev_status")
     )
-    return (
+    # at most 3 × 3 status pairs
+    return bounded_sort(
         seq.filter(F.col("prev_status").isNotNull())
         .groupBy("prev_status", F.col("o_orderstatus").alias("next_status"))
-        .agg(F.count("*").alias("n"))
-        .orderBy("prev_status", "next_status")
+        .agg(F.count("*").alias("n")),
+        "prev_status", "next_status",
     )
 
 
@@ -526,13 +529,14 @@ def events_hourly_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     numbering is pinned on both engines (Spark's dayofweek is
     Sunday-1, so the query derives ISO from date_format 'u')."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    return (
+    # at most 24 hours × 7 weekdays
+    return bounded_sort(
         ev.groupBy(
             F.hour("ts").cast("long").alias("hour_of_day"),
             ((F.dayofweek("ts") + 5) % 7 + 1).cast("long").alias("iso_dow"),
         )
-        .agg(F.count("*").alias("n"), F.round(F.avg("value"), 4).alias("avg_value"))
-        .orderBy("hour_of_day", "iso_dow")
+        .agg(F.count("*").alias("n"), F.round(F.avg("value"), 4).alias("avg_value")),
+        "hour_of_day", "iso_dow",
     )
 
 
@@ -691,8 +695,9 @@ def part_type_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = F.col("r") / F.sum("r").over(W.partitionBy("p_type"))
     shares = rev.select("p_type", s.alias("s"))
-    return (
+    # one row per part type; its window sees (type, brand) rows
+    return bounded_sort(
         shares.groupBy("p_type")
-        .agg(F.count("*").alias("n_brands"), F.round(F.sum(F.col("s") * F.col("s")), 6).alias("hhi"))
-        .orderBy("p_type")
+        .agg(F.count("*").alias("n_brands"), F.round(F.sum(F.col("s") * F.col("s")), 6).alias("hhi")),
+        "p_type",
     )

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
 from hive_release_spark.functions.numeric import cents as cents_fold, cents_sql, is_finite, finite, half_up, hive_render
+from hive_release_spark.operators.topk import bounded_sort
 from hive_release_spark.queries.registry import register
 
 
@@ -59,11 +60,12 @@ def events_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("day"),
         "user_id",
     )
-    return (
+    # one row per day of the events' time span
+    return bounded_sort(
         contrib.join(F.broadcast(days), "day")
         .groupBy("day")
-        .agg(F.countDistinct("user_id").alias("active_7d"))
-        .orderBy("day")
+        .agg(F.countDistinct("user_id").alias("active_7d")),
+        "day",
     )
 
 
@@ -1503,15 +1505,16 @@ def part_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.ln("p_retailprice").alias("lp"),
         F.ln("l_quantity").alias("lq"),
     )
-    return (
+    # one row per part brand
+    return bounded_sort(
         pb.groupBy("p_brand")
         .agg(
             F.count("*").alias("n"),
             F.round(F.regr_slope("lq", "lp"), 4).alias("elasticity"),
             F.round(F.regr_intercept("lq", "lp"), 4).alias("intercept"),
             F.round(F.regr_r2("lq", "lp"), 4).alias("r2"),
-        )
-        .orderBy("p_brand")
+        ),
+        "p_brand",
     )
 
 
@@ -1918,7 +1921,8 @@ def dq_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rel = F.abs(F.col("computed") - F.col("o_totalprice")) / F.col(
         "o_totalprice"
     )
-    return (
+    # one row per order status
+    return bounded_sort(
         j.groupBy("o_orderstatus")
         .agg(
             F.count("*").alias("n_orders"),
@@ -1928,8 +1932,8 @@ def dq_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(rel <= 0.01, 1)).alias("n_within_1pct"),
             F.round(F.avg(rel), 4).alias("avg_rel_err"),
             F.round(F.max(rel), 4).alias("max_rel_err"),
-        )
-        .orderBy("o_orderstatus")
+        ),
+        "o_orderstatus",
     )
 
 
@@ -2879,7 +2883,8 @@ def orders_ship_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("lat"),
     )
     latd = F.col("lat").cast("double")
-    return (
+    # one row per order priority; percentile buffers hold distinct day counts
+    return bounded_sort(
         j.groupBy("o_orderpriority")
         .agg(
             F.count("*").alias("n_lines"),
@@ -2889,8 +2894,8 @@ def orders_ship_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.percentile(latd, F.lit(0.90)), 4).alias("p90_days"),
             F.round(F.percentile(latd, F.lit(0.99)), 4).alias("p99_days"),
             F.max("lat").cast("long").alias("max_days"),
-        )
-        .orderBy("o_orderpriority")
+        ),
+        "o_orderpriority",
     )
 
 
@@ -2968,10 +2973,11 @@ def customer_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("sa"), F.lit("none")).alias("seg_from"),
         F.coalesce(F.col("sb"), F.lit("none")).alias("seg_to"),
     )
-    return (
+    # at most 4 × 4 segment pairs
+    return bounded_sort(
         mig.groupBy("seg_from", "seg_to")
-        .agg(F.count("*").alias("n_customers"))
-        .orderBy("seg_from", "seg_to")
+        .agg(F.count("*").alias("n_customers")),
+        "seg_from", "seg_to",
     )
 
 
@@ -3030,7 +3036,8 @@ def customer_repurchase_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     j = g.join(F.broadcast(c), "o_custkey")
     gd = F.col("gap_days").cast("double")
-    return (
+    # one row per market segment; percentile buffers hold distinct day gaps
+    return bounded_sort(
         j.groupBy("c_mktsegment")
         .agg(
             F.count("*").alias("n_gaps"),
@@ -3038,8 +3045,8 @@ def customer_repurchase_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.percentile(gd, F.lit(0.50)), 4).alias("p50_days"),
             F.round(F.percentile(gd, F.lit(0.90)), 4).alias("p90_days"),
             F.max("gap_days").cast("long").alias("max_days"),
-        )
-        .orderBy("c_mktsegment")
+        ),
+        "c_mktsegment",
     )
 
 

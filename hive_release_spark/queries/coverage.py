@@ -13,6 +13,7 @@ from hive_release_spark.functions import hive as hive_fns
 from hive_release_spark.llm.text import token_count, tokens
 from hive_release_spark.operators.matchpath import match_path
 from hive_release_spark.functions.numeric import is_finite
+from hive_release_spark.operators.topk import bounded_sort
 from hive_release_spark.queries.registry import register
 
 
@@ -346,9 +347,10 @@ def sample_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         1,
         8,
     )
-    return (
+    # one row per return flag
+    return bounded_sort(
         li.filter(h8 < F.lit(_SAMPLE_THR))
         .groupBy("l_returnflag")
-        .agg(F.count("*").alias("n"), F.round(F.sum("l_quantity"), 2).alias("qty"))
-        .orderBy("l_returnflag")
+        .agg(F.count("*").alias("n"), F.round(F.sum("l_quantity"), 2).alias("qty")),
+        "l_returnflag",
     )

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from hive_release_spark.catalog import load_table
 from hive_release_spark.functions.numeric import finite, is_finite
 from hive_release_spark.functions.temporal import ts_valid
+from hive_release_spark.operators.topk import bounded_sort
 from hive_release_spark.queries.registry import register
 
 
@@ -633,7 +634,8 @@ def fn_collation_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = p.select(
         F.collate(cased, "UTF8_LCASE").alias("brand_c"), "p_retailprice"
     )
-    return (
+    # one row per case-folded brand
+    return bounded_sort(
         v.groupBy("brand_c")
         .agg(
             F.count("*").alias("n"),
@@ -643,8 +645,8 @@ def fn_collation_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lower(F.col("brand_c").cast("string")).alias("brand_ci"),
             "n",
             "value",
-        )
-        .orderBy("brand_ci")
+        ),
+        "brand_ci",
     )
 
 

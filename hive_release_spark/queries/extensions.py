@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table, register_views
 from hive_release_spark.functions.numeric import cents, cents_sql, finite
+from hive_release_spark.operators.topk import bounded_sort
 from hive_release_spark.queries.registry import register
 
 # Roundtrip-entry scratch directories registered for end-of-process
@@ -1128,15 +1129,16 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .load(path)
     )
-    return (
+    # one row per event type
+    return bounded_sort(
         back.groupBy("event_type")
         .agg(
             F.count("*").alias("n"),
             # specials ride the XML trip intact but sum like NULL in
             # the gate aggregate (r11 finite wave 2)
             F.sum(cents("value")).alias("value_cents"),
-        )
-        .orderBy("event_type")
+        ),
+        "event_type",
     )
 
 
@@ -1216,7 +1218,8 @@ def source_sequencefile_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
         "l_orderkey BIGINT, flag_n STRING, l_returnflag STRING, "
         "l_quantity DOUBLE, arr ARRAY<INT>, l_shipdate TIMESTAMP",
     )
-    return (
+    # one row per return flag
+    return bounded_sort(
         back.groupBy("l_returnflag")
         .agg(
             F.count("*").alias("n"),
@@ -1226,6 +1229,6 @@ def source_sequencefile_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
             F.sum(cents("l_quantity")).alias("qty_cents"),
             F.sum(F.size("arr")).cast("long").alias("arr_elems"),
             F.max(F.date_format("l_shipdate", "yyyy-MM-dd")).alias("max_ship"),
-        )
-        .orderBy("l_returnflag")
+        ),
+        "l_returnflag",
     )

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from hive_release_spark.catalog import load_table, register_views
 from hive_release_spark.functions.numeric import finite, hive_render
 from hive_release_spark.functions.temporal import ts_valid
+from hive_release_spark.operators.topk import bounded_sort
 from hive_release_spark.queries.registry import register
 
 
@@ -339,15 +340,16 @@ def fn_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     v = F.try_parse_json("props")
     k = F.try_variant_get(v, "$.k", "bigint")
-    return (
+    # one row per event type
+    return bounded_sort(
         e.select("event_type", k.alias("k"), F.try_variant_get(v, "$.missing", "bigint").alias("m"))
         .groupBy("event_type")
         .agg(
             F.sum(F.when(F.col("k") % 3 == 0, F.col("k"))).alias("sum_k3"),
             F.count(F.when(F.col("k") % 3 == 0, 1)).alias("n_k3"),
             F.count("m").alias("n_missing"),
-        )
-        .orderBy("event_type")
+        ),
+        "event_type",
     )
 
 
@@ -850,14 +852,15 @@ def agg_bool_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     GenericUDAFEvery/Any surface, ANSI bool_and/bool_or): predicate
     aggregation per group, the shape behind data-quality HAVING gates."""
     li = load_table(spark, sf_dir, "lineitem")
-    return (
+    # one row per return flag
+    return bounded_sort(
         li.groupBy("l_returnflag")
         .agg(
             F.every(F.col("l_discount") <= 0.1).alias("all_small_disc"),
             F.some(F.col("l_quantity") >= 49).alias("any_big_qty"),
             F.count(F.when(F.col("l_tax") > F.col("l_discount"), 1)).alias("n_tax_gt"),
-        )
-        .orderBy("l_returnflag")
+        ),
+        "l_returnflag",
     )
 
 
@@ -896,7 +899,8 @@ def fn_trig(spark: SparkSession, sf_dir: str) -> DataFrame:
         finite(F.col("l_tax")),
         finite(F.col("l_quantity")),
     )
-    return (
+    # one row per return flag
+    return bounded_sort(
         li.groupBy("l_returnflag")
         .agg(
             F.round(F.sum(F.sin(d)), 4).alias("s_sin"),
@@ -912,8 +916,8 @@ def fn_trig(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("s_atan2"),
             F.round(F.sum(F.degrees(d)), 4).alias("s_deg"),
             F.round(F.sum(F.radians(q)), 4).alias("s_rad"),
-        )
-        .orderBy("l_returnflag")
+        ),
+        "l_returnflag",
     )
 
 

@@ -13,7 +13,7 @@ from hive_release_spark.catalog import load_table
 from hive_release_spark.functions.numeric import exact_moment, half_up
 from hive_release_spark.llm import dedup, graph
 from hive_release_spark.operators.pairs import baskets, sorted_pairs
-from hive_release_spark.operators.topk import global_topk
+from hive_release_spark.operators.topk import bounded_sort, global_topk
 from hive_release_spark.queries.registry import register
 
 # The Jaccard >= 0.5 trigram pair set, identical to the
@@ -180,13 +180,14 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.jaccard_pairs(docs, n=3, threshold=0.5)
     comp = dedup.connected_components(pairs)
     sizes = comp.groupBy("component").agg(F.count("*").alias("cluster_size"))
-    return (
+    # one row per distinct cluster size
+    return bounded_sort(
         sizes.groupBy("cluster_size")
         .agg(
             F.count("*").alias("n_clusters"),
             F.sum(F.col("cluster_size") - 1).alias("docs_dropped"),
-        )
-        .orderBy("cluster_size")
+        ),
+        "cluster_size",
     )
 
 

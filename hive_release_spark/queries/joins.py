@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table, register_views
 from hive_release_spark.operators.hints import maybe_broadcast
+from hive_release_spark.operators.topk import bounded_sort
 from hive_release_spark.queries.registry import register
 
 
@@ -140,7 +141,8 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    return (
+    # one row per nation of the region
+    return bounded_sort(
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(maybe_broadcast(cust), orders.o_custkey == cust.c_custkey)
         .join(
@@ -154,8 +156,8 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
                 "revenue"
             )
-        )
-        .orderBy(F.col("revenue").desc(), F.col("n_name"))
+        ),
+        F.col("revenue").desc(), F.col("n_name"),
     )
 
 

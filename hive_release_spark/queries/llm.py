@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from hive_release_spark.catalog import load_table
 from hive_release_spark.llm import dedup, multimodal, similarity, text
 from hive_release_spark.operators.pairs import sorted_pairs
+from hive_release_spark.operators.topk import bounded_sort
 from hive_release_spark.queries.registry import register
 
 # ---------------------------------------------------------------------------
@@ -1234,7 +1235,8 @@ def emb_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.avg("nrm").alias("mu"), F.stddev_pop("nrm").alias("sd")
     )
     j = n.crossJoin(F.broadcast(s))
-    return (
+    # one row per embedding label
+    return bounded_sort(
         j.groupBy("label")
         .agg(
             F.count("*").alias("n_vecs"),
@@ -1255,8 +1257,8 @@ def emb_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("nrm"), 6).alias("mean_norm"),
             F.round(F.min("nrm"), 6).alias("min_norm"),
             F.round(F.max("nrm"), 6).alias("max_norm"),
-        )
-        .orderBy("label")
+        ),
+        "label",
     )
 
 
@@ -1312,7 +1314,8 @@ def multimodal_payload_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("asset_id").alias("survivor_id"),
         F.max("n_bytes").alias("bytes_each"),
     )
-    return (
+    # one row per modality
+    return bounded_sort(
         g.groupBy("modality")
         .agg(
             F.count("*").alias("n_unique"),
@@ -1321,8 +1324,8 @@ def multimodal_payload_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 (F.col("n_copies") - 1) * F.col("bytes_each")
             ).alias("bytes_saved"),
-        )
-        .orderBy("modality")
+        ),
+        "modality",
     )
 
 

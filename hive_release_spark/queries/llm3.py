@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from hive_release_spark.catalog import load_table
 from hive_release_spark.functions.numeric import half_up
 from hive_release_spark.llm import clustering, similarity, text
-from hive_release_spark.operators.topk import global_topk
+from hive_release_spark.operators.topk import bounded_sort, global_topk
 from hive_release_spark.queries.registry import register
 
 
@@ -147,7 +147,8 @@ def corpus_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on the (tiny) group key space; sums/avgs over integers are
     exact in both engines (unrounded)."""
     docs = load_table(spark, sf_dir, "documents")
-    return (
+    # one row per (lang, source)
+    return bounded_sort(
         docs.groupBy("lang", "source")
         .agg(
             F.count("*").alias("n_docs"),
@@ -155,8 +156,8 @@ def corpus_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("n_chars").alias("min_chars"),
             F.max("n_chars").alias("max_chars"),
             F.avg("n_chars").alias("avg_chars"),
-        )
-        .orderBy("lang", "source")
+        ),
+        "lang", "source",
     )
 
 
@@ -488,7 +489,8 @@ def dedup_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count("*").alias("degree"))
     )
-    return deg.groupBy("degree").agg(F.count("*").alias("n_docs")).orderBy("degree")
+    # one row per distinct degree
+    return bounded_sort(deg.groupBy("degree").agg(F.count("*").alias("n_docs")), "degree")
 
 
 @register(
@@ -510,15 +512,16 @@ def corpus_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scan-side bucket arithmetic, one tiny-keyspace aggregation."""
     docs = load_table(spark, sf_dir, "documents")
     n = F.size(text.tokens("text"))
-    return (
+    # one row per 16-token length bucket
+    return bounded_sort(
         docs.select(
             F.floor(n / 16).cast("long").alias("bucket"),
             (F.floor(n / 16) * 16).cast("long").alias("bucket_lo"),
             n.alias("n_tok"),
         )
         .groupBy("bucket", "bucket_lo")
-        .agg(F.count("*").alias("n_docs"), F.sum("n_tok").cast("long").alias("total_tokens"))
-        .orderBy("bucket")
+        .agg(F.count("*").alias("n_docs"), F.sum("n_tok").cast("long").alias("total_tokens")),
+        "bucket",
     )
 
 

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from hive_release_spark.catalog import load_table
 from hive_release_spark.functions.numeric import half_up
 from hive_release_spark.llm import dedup, pipeline, text
+from hive_release_spark.operators.topk import bounded_sort
 from hive_release_spark.queries.analytics3 import _md5_u32
 from hive_release_spark.queries.registry import register
 
@@ -535,26 +536,21 @@ def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("docs_in"),
             F.count(F.when(qual, 1)).alias("docs_q"),
         )
-        out = (
-            counts.join(maybe_broadcast(kept), ["lang", "source"], "left")
-            .select(
-                "lang",
-                "source",
-                "docs_in",
-                "docs_q",
-                F.coalesce("docs_kept", F.lit(0).cast("long")).alias("docs_kept"),
-                F.coalesce("tokens_kept", F.lit(0).cast("long")).alias("tokens_kept"),
-            )
-            .orderBy("lang", "source")
-            # eager: run the one job NOW, while feat is cached — the
-            # report is (lang, source)-cardinality tiny. Kept after the
-            # r11 A/B (SCALE.md §pipeline_corpus_build): interleaved
-            # min-of-5 shows this shape EQUAL to the r9 leaky-persist
-            # shape (0.83s vs 0.83s min at sf0.1), and the
-            # collect+createDataFrame alternative 0.3s WORSE (PySpark
-            # local relations pay a slow driver collect path).
-            .localCheckpoint(eager=True)
+        report = counts.join(maybe_broadcast(kept), ["lang", "source"], "left").select(
+            "lang",
+            "source",
+            "docs_in",
+            "docs_q",
+            F.coalesce("docs_kept", F.lit(0).cast("long")).alias("docs_kept"),
+            F.coalesce("tokens_kept", F.lit(0).cast("long")).alias("tokens_kept"),
         )
+        # one row per (lang, source). Eager: run the one job NOW, while
+        # feat is cached. Kept after the r11 A/B (SCALE.md
+        # §pipeline_corpus_build): interleaved min-of-5 shows this shape
+        # EQUAL to the r9 leaky-persist shape (0.83s vs 0.83s min at
+        # sf0.1), and the collect+createDataFrame alternative 0.3s WORSE
+        # (PySpark local relations pay a slow driver collect path).
+        out = bounded_sort(report, "lang", "source").localCheckpoint(eager=True)
     return out
 
 
@@ -1168,13 +1164,14 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.jaccard >= F.col("threshold"),
         "left",
     )
-    return (
+    # one row per threshold (5)
+    return bounded_sort(
         j.groupBy("threshold")
         .agg(
             F.count("doc_a").alias("n_pairs"),
             F.countDistinct("doc_b").alias("n_docs_dropped"),
-        )
-        .orderBy("threshold")
+        ),
+        "threshold",
     )
 
 
@@ -1231,7 +1228,8 @@ def pack_efficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         kept.alias("kept"),
         trunc.alias("truncated"),
     )
-    return (
+    # one row per power-of-two length bucket
+    return bounded_sort(
         b.groupBy("bucket")
         .agg(
             F.count("*").alias("n_docs"),
@@ -1245,8 +1243,8 @@ def pack_efficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (F.count("*") * budget),
                 6,
             ).alias("bucket_efficiency"),
-        )
-        .orderBy("bucket")
+        ),
+        "bucket",
     )
 
 
@@ -1301,7 +1299,8 @@ def tokenize_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_words.alias("n_words"),
         n_chars.alias("n_chars"),
     )
-    return (
+    # one row per language
+    return bounded_sort(
         d.groupBy("lang")
         .agg(
             F.count("*").alias("n_docs"),
@@ -1313,8 +1312,8 @@ def tokenize_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(
                 F.sum("n_chars").cast("double") / F.sum("n_bpe"), 6
             ).alias("chars_per_token"),
-        )
-        .orderBy("lang")
+        ),
+        "lang",
     )
 
 
@@ -1491,7 +1490,8 @@ def text_entropy_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("n_distinct") > 1)
     )
-    return (
+    # one row per source
+    return bounded_sort(
         d.groupBy("source")
         .agg(
             F.count("*").alias("n_docs"),
@@ -1503,8 +1503,8 @@ def text_entropy_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(
                 F.avg(F.col("entropy") / F.log2(F.col("n_distinct"))), 6
             ).alias("avg_efficiency"),
-        )
-        .orderBy("source")
+        ),
+        "source",
     )
 
 
@@ -1618,7 +1618,8 @@ def text_ttr_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
     types = F.count("*")
     tokens = F.sum("n")
     hapax = F.count(F.when(F.col("n") == 1, 1))
-    return (
+    # one row per source
+    return bounded_sort(
         tc.groupBy("source")
         .agg(
             tokens.alias("n_tokens"),
@@ -1629,8 +1630,8 @@ def text_ttr_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
             half_up(
                 F.log(types.cast("double")) / F.log(tokens.cast("double")) * 1000000
             ).alias("herdan_c_micro"),
-        )
-        .orderBy("source")
+        ),
+        "source",
     )
 
 
@@ -1682,7 +1683,8 @@ def text_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     cjk = n_class(r"[^\x{4e00}-\x{9fff}]")
     digit = n_class("[^0-9]")
     total = F.sum(F.length("text"))
-    return (
+    # one row per source
+    return bounded_sort(
         docs.groupBy("source")
         .agg(
             total.alias("n_chars"),
@@ -1692,8 +1694,8 @@ def text_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             digit.alias("n_digit"),
             half_up(latin.cast("double") / total * 1000000).alias("latin_ratio_micro"),
             half_up(cjk.cast("double") / total * 1000000).alias("cjk_ratio_micro"),
-        )
-        .orderBy("source")
+        ),
+        "source",
     )
 
 

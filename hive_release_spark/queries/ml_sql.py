@@ -24,7 +24,7 @@ from hive_release_spark.catalog import load_table
 from hive_release_spark.functions.numeric import exact_moment, half_up, is_finite
 from hive_release_spark.llm.text import tokens
 from hive_release_spark.operators.pairs import baskets, sorted_pairs
-from hive_release_spark.operators.topk import global_topk
+from hive_release_spark.operators.topk import bounded_sort, global_topk
 from hive_release_spark.queries.registry import register
 
 
@@ -321,14 +321,15 @@ def ml_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     correct = F.count(
         F.when(F.col("pred_lang") == F.col("true_lang"), 1)
     )
-    return (
+    # one row per language
+    return bounded_sort(
         pred.groupBy("true_lang")
         .agg(
             F.count("*").alias("n_test"),
             correct.alias("n_correct"),
             half_up(correct.cast("double") / F.count("*") * 1000000).alias("acc_micro"),
-        )
-        .orderBy("true_lang")
+        ),
+        "true_lang",
     )
 
 
@@ -790,7 +791,8 @@ def ml_markov_next_event(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("prev"), F.col("next_type").alias("nxt")
     )
     hit = F.count(F.when(F.col("nxt") == F.col("pred"), 1))
-    return (
+    # one row per event type
+    return bounded_sort(
         test.join(F.broadcast(model), "prev")
         .groupBy("prev")
         .agg(
@@ -798,8 +800,8 @@ def ml_markov_next_event(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_test"),
             hit.alias("n_correct"),
             half_up(hit.cast("double") / F.count("*") * 1000000).alias("acc_micro"),
-        )
-        .orderBy("prev")
+        ),
+        "prev",
     )
 
 

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table, register_views
 from hive_release_spark.functions.numeric import cents, finite
+from hive_release_spark.operators.topk import bounded_sort
 from hive_release_spark.queries.registry import register
 
 # ---------------------------------------------------------------------------
@@ -84,7 +85,8 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     (PARTIAL1/MERGEPARTIAL) + ReduceSinkOperator."""
     li = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
+    # returnflag × linestatus: at most 6 rows
+    return bounded_sort(
         li.filter(F.col("l_shipdate") <= "1998-09-02")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -96,8 +98,8 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
             F.round(F.avg("l_discount"), 4).alias("avg_disc"),
             F.count("*").alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
+        ),
+        "l_returnflag", "l_linestatus",
     )
 
 
@@ -560,13 +562,14 @@ def agg_min_max_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     ck = cents("o_totalprice") * F.lit(10000000) + F.col("o_orderkey")
     t = o.select("o_orderpriority", "o_orderkey", "o_totalprice", ck.alias("ck"))
-    return (
+    # one row per order priority
+    return bounded_sort(
         t.groupBy("o_orderpriority")
         .agg(
             F.max_by("o_orderkey", F.col("ck")).alias("priciest_order"),
             F.min_by("o_orderkey", F.col("ck")).alias("cheapest_order"),
             F.round(F.max("o_totalprice"), 2).alias("max_price"),
             F.round(F.min("o_totalprice"), 2).alias("min_price"),
-        )
-        .orderBy("o_orderpriority")
+        ),
+        "o_orderpriority",
     )

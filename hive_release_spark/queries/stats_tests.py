@@ -31,6 +31,7 @@ from hive_release_spark.functions.numeric import (
     half_up,
     is_finite,
 )
+from hive_release_spark.operators.topk import bounded_sort
 from hive_release_spark.queries.registry import register
 
 _A = "1-URGENT"
@@ -349,14 +350,15 @@ def timeseries_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lag", F.explode(F.array(*[F.lit(i) for i in range(1, 8)]))
     ).select("lag", F.col("qty").alias("x"), (F.col("rn") - F.col("lag")).alias("prev_rn"))
     b = day.select(F.col("rn").alias("prev_rn"), F.col("qty").alias("y"))
-    return (
+    # one row per lag (7)
+    return bounded_sort(
         a.join(b, "prev_rn")
         .groupBy("lag")
         .agg(
             F.count("*").alias("n_pairs"),
             half_up(F.corr("x", "y") * 1000000).alias("acf_micro"),
-        )
-        .orderBy("lag")
+        ),
+        "lag",
     )
 
 
@@ -392,14 +394,15 @@ def timeseries_cross_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("rn") - F.col("lag")).alias("prev_rn"),
     )
     b = day.select(F.col("rn").alias("prev_rn"), F.col("n_items").alias("y"))
-    return (
+    # one row per lag (7)
+    return bounded_sort(
         a.join(b, "prev_rn")
         .groupBy("lag")
         .agg(
             F.count("*").alias("n_pairs"),
             half_up(F.corr("x", "y") * 1000000).alias("ccf_micro"),
-        )
-        .orderBy("lag")
+        ),
+        "lag",
     )
 
 

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
 from hive_release_spark.functions.numeric import half_up, is_finite
-from hive_release_spark.operators.topk import global_topk
+from hive_release_spark.operators.topk import bounded_sort, global_topk
 from hive_release_spark.queries.registry import register
 
 
@@ -292,15 +292,14 @@ def ds_channel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_extendedprice").alias("amount"),
         )
     )
-    return (
+    # two channels × months, plus the rollup rows
+    return bounded_sort(
         o.unionByName(r)
         .groupingSets(
             [["channel", "mon"], ["channel"], []], "channel", "mon"
         )
-        .agg(F.count("*").alias("n_rows"), F.round(F.sum("amount"), 2).alias("amount"))
-        .orderBy(
-            F.col("channel").asc_nulls_first(), F.col("mon").asc_nulls_first()
-        )
+        .agg(F.count("*").alias("n_rows"), F.round(F.sum("amount"), 2).alias("amount")),
+        F.col("channel").asc_nulls_first(), F.col("mon").asc_nulls_first(),
     )
 
 
@@ -367,7 +366,8 @@ def ds_late_delivery_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr(
         "INTERVAL 30 DAYS"
     )
-    return (
+    # brands × the region's nations
+    return bounded_sort(
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
@@ -380,8 +380,8 @@ def ds_late_delivery_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(
                 F.count(F.when(late, 1)) * 1.0 / F.count("*"), 4
             ).alias("late_ratio"),
-        )
-        .orderBy("p_brand", "n_name")
+        ),
+        "p_brand", "n_name",
     )
 
 
@@ -438,7 +438,8 @@ def ds_spend_growth_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("y").alias("y2"),
         F.col("spend").alias("s2"),
     )
-    return (
+    # one row per pair of order years
+    return bounded_sort(
         a.join(
             b,
             (F.col("ck") == F.col("ck2"))
@@ -451,8 +452,8 @@ def ds_spend_growth_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg(F.col("s2") / F.col("s1")), 4).alias(
                 "avg_growth"
             ),
-        )
-        .orderBy("y1", "y2")
+        ),
+        "y1", "y2",
     )
 
 

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from hive_release_spark.catalog import load_table
 from hive_release_spark.functions.numeric import cents, cents_sql
 from hive_release_spark.operators.hints import maybe_broadcast
+from hive_release_spark.operators.topk import bounded_sort
 from hive_release_spark.queries.registry import register
 
 
@@ -84,7 +85,8 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1998-01-01")
     )
     o = load_table(spark, sf_dir, "orders")
-    return (
+    # two nation pairs × ship years
+    return bounded_sort(
         li.join(maybe_broadcast(s), li.l_suppkey == s.s_suppkey)
         .join(o, li.l_orderkey == o.o_orderkey)
         .join(maybe_broadcast(c), o.o_custkey == c.c_custkey)
@@ -97,8 +99,8 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
                 "revenue"
             )
-        )
-        .orderBy("supp_nation", "cust_nation", "l_year")
+        ),
+        "supp_nation", "cust_nation", "l_year",
     )
 
 
@@ -155,14 +157,15 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     target = F.when(F.col("supp_nation") == "NATION_5", vol).otherwise(F.lit(0.0))
-    return (
+    # one row per order year
+    return bounded_sort(
         li.join(maybe_broadcast(p), li.l_partkey == p.p_partkey)
         .join(maybe_broadcast(s), li.l_suppkey == s.s_suppkey)
         .join(o, li.l_orderkey == o.o_orderkey)
         .join(maybe_broadcast(c), o.o_custkey == c.c_custkey)
         .groupBy(F.year("o_orderdate").alias("o_year"))
-        .agg(F.round(F.sum(target) / F.sum(vol), 4).alias("mkt_share"))
-        .orderBy("o_year")
+        .agg(F.round(F.sum(target) / F.sum(vol), 4).alias("mkt_share")),
+        "o_year",
     )
 
 
@@ -209,14 +212,15 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_extendedprice") * (1 - F.col("l_discount"))
         - F.lit(0.1) * F.col("p_retailprice") * F.col("l_quantity")
     )
-    return (
+    # nations × order years
+    return bounded_sort(
         li.join(maybe_broadcast(p), li.l_partkey == p.p_partkey)
         .join(maybe_broadcast(s), li.l_suppkey == s.s_suppkey)
         .join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .groupBy(F.col("n_name").alias("nation"), F.year("o_orderdate").alias("o_year"))
-        .agg((F.sum(cents(amount)).cast("double") / 100).alias("sum_profit"))
-        .orderBy(F.col("nation"), F.col("o_year").desc())
+        .agg((F.sum(cents(amount)).cast("double") / 100).alias("sum_profit")),
+        F.col("nation"), F.col("o_year").desc(),
     )
 
 
@@ -243,13 +247,14 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny regardless of fact scale."""
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "1-URGENT")
-    return (
+    # one row per distinct c_count
+    return bounded_sort(
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy(c.c_custkey)
         .agg(F.count("o_orderkey").alias("c_count"))
         .groupBy("c_count")
-        .agg(F.count("*").alias("custdist"))
-        .orderBy(F.col("custdist").desc(), F.col("c_count").desc())
+        .agg(F.count("*").alias("custdist")),
+        F.col("custdist").desc(), F.col("c_count").desc(),
     )
 
 
@@ -328,12 +333,13 @@ def q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s_suppkey")
     )
     li = load_table(spark, sf_dir, "lineitem")
-    return (
+    # brands × the 8 listed sizes
+    return bounded_sort(
         li.join(maybe_broadcast(bad), li.l_suppkey == bad.s_suppkey, "left_anti")
         .join(maybe_broadcast(p), F.col("l_partkey") == p.p_partkey)
         .groupBy("p_brand", "p_size")
-        .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.col("supplier_cnt").desc(), "p_brand", "p_size")
+        .agg(F.count_distinct("l_suppkey").alias("supplier_cnt")),
+        F.col("supplier_cnt").desc(), "p_brand", "p_size",
     )
 
 
@@ -528,7 +534,8 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     recent = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= "1999-01-01"
     )
-    return (
+    # one row per nation
+    return bounded_sort(
         c.crossJoin(F.broadcast(thresh))
         .filter(F.col("c_acctbal") > F.col("ab"))
         .join(recent, c.c_custkey == recent.o_custkey, "left_anti")
@@ -536,8 +543,8 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("numcust"),
             F.round(F.sum("c_acctbal"), 2).alias("totacctbal"),
-        )
-        .orderBy("cntry")
+        ),
+        "cntry",
     )
 
 

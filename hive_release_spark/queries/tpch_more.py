@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
 from hive_release_spark.operators.hints import maybe_broadcast
+from hive_release_spark.operators.topk import bounded_sort
 from hive_release_spark.queries.registry import register
 
 
@@ -42,10 +43,11 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         (o.o_orderkey == li.l_orderkey) & (li.l_shipdate > o.o_orderdate),
         "left_semi",
     )
-    return (
+    # one row per order priority
+    return bounded_sort(
         semi.groupBy("o_orderpriority")
-        .agg(F.count("*").alias("order_count"))
-        .orderBy("o_orderpriority")
+        .agg(F.count("*").alias("order_count")),
+        "o_orderpriority",
     )
 
 
@@ -206,14 +208,15 @@ def q12_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
     )
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
+    # one row per return flag
+    return bounded_sort(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .groupBy("l_returnflag")
         .agg(
             F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
             F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-        )
-        .orderBy("l_returnflag")
+        ),
+        "l_returnflag",
     )
 
 

@@ -66,16 +66,58 @@ def test_merge_cardinality_violation(spark, table):
         dml.merge_into(spark, table, dup_source, on=["id"], not_matched_insert=True)
 
 
+def _source_scans(spark, fn):
+    """Run ``fn()``; return (its result, how many parquet scans in the
+    SQL executions it started read files). A scan served from the cache
+    reads none."""
+    sql = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        lst = sql.executionsList()
+        return [lst.apply(i).executionId() for i in range(lst.size())]
+
+    bus.waitUntilEmpty()
+    before = set(executions())
+    out = fn()
+    bus.waitUntilEmpty()
+    scans = 0
+    for eid in set(executions()) - before:
+        values = sql.executionMetrics(eid)
+        nodes = sql.planGraph(eid).allNodes()
+        for i in range(nodes.size()):
+            node = nodes.apply(i)
+            if not node.name().startswith("Scan parquet"):
+                continue
+            metrics = node.metrics()
+            for j in range(metrics.size()):
+                m = metrics.apply(j)
+                got = values.get(m.accumulatorId())
+                if m.name() == "number of files read" and got.isDefined():
+                    scans += int(got.get()) > 0
+    return out, scans
+
+
 def test_multi_insert(spark, table, tmp_path):
+    """The source is scanned once, by the first sink's write, which
+    fills the cache the second sink reads. No separate action fills it:
+    the call runs one job for the first write and two for the second
+    (its partial aggregate's stage, then the write)."""
     df = spark.read.parquet(table)
     out1, out2 = str(tmp_path / "o1"), str(tmp_path / "o2")
-    dml.multi_insert(
-        df,
-        [
-            (out1, lambda d: d.filter(F.col("val") >= 25).select("id")),
-            (out2, lambda d: d.groupBy().agg(F.sum("val").alias("total"))),
-        ],
-    )
+
+    def call():
+        dml.multi_insert(
+            df,
+            [
+                (out1, lambda d: d.filter(F.col("val") >= 25).select("id")),
+                (out2, lambda d: d.groupBy().agg(F.sum("val").alias("total"))),
+            ],
+        )
+
+    (_, n_jobs), scans = _source_scans(spark, lambda: _jobs(spark, call))
+    assert n_jobs == 3
+    assert scans == 1
     assert sorted(r.id for r in spark.read.parquet(out1).collect()) == [3, 4]
     assert spark.read.parquet(out2).collect()[0].total == 100.0
 

@@ -38,6 +38,12 @@ Checks:
   ``python tools/gen_exchange_ledger.py`` so the growth is a
   conscious, reviewed decision, never a silent one. (Counts shrinking
   passes — strictly better.)
+- **A scan under ``Coalesce 1``** — ``operators/topk.py::bounded_sort``
+  sorts a bounded aggregate in one task. Walking the physical plan
+  tree below every ``CoalesceExec(1)``, each branch must cross an
+  ``Exchange`` or ``BroadcastExchange`` before it reaches a scan leaf;
+  otherwise the helper collapsed a scan stage onto one task. The walk
+  rides this pass instead of building every plan a second time.
 """
 
 from __future__ import annotations
@@ -69,7 +75,25 @@ SCAN_RX = re.compile(
     re.S,
 )
 EXCHANGE_RX = re.compile(r"\(\d+\) Exchange")
+STAGE_BOUNDARIES = {"ShuffleExchangeExec", "BroadcastExchangeExec", "ReusedExchangeExec"}
 LEDGER = Path(__file__).resolve().parent.parent / "tools" / "plan_exchange_ledger.json"
+
+
+def _scans_under_coalesce_one(node, below=False) -> list[str]:
+    """Scan leaves reached from a ``CoalesceExec(1)`` without crossing
+    an exchange (the AQE initial plan, as the formatted explain shows)."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _scans_under_coalesce_one(node.initialPlan(), below)
+    if below and name in STAGE_BOUNDARIES:
+        below = False
+    if name == "CoalesceExec" and node.numPartitions() == 1:
+        below = True
+    cs = node.children()
+    kids = [cs.apply(i) for i in range(cs.size())]
+    if below and not kids and "Scan" in name and name != "LocalTableScanExec":
+        return [name]
+    return [s for c in kids for s in _scans_under_coalesce_one(c, below)]
 
 
 def test_registry_plan_sweep(spark):
@@ -83,6 +107,7 @@ def test_registry_plan_sweep(spark):
     )
     violations: dict[str, list[str]] = {}
     scans_matched = 0
+    coalesced = 0
     for name, q in REGISTRY.items():
         # CacheManager substitutes any LIVE cached subtree into new plans
         # (several entries persist frames at call time and never unpersist
@@ -90,8 +115,13 @@ def test_registry_plan_sweep(spark):
         # whatever ran before. Clear per entry so every count is the
         # clean-session plan — cache-state- and test-order-independent.
         spark.catalog.clearCache()
-        plan = q.fn(spark, SF_SMOKE)._jdf.queryExecution().explainString(mode)
+        qe = q.fn(spark, SF_SMOKE)._jdf.queryExecution()
+        plan = qe.explainString(mode)
         findings = [p for p in PATTERNS if p in plan]
+        if "Coalesce" in plan:
+            coalesced += 1
+            for scan in _scans_under_coalesce_one(qe.executedPlan()):
+                findings.append(f"scan-under-coalesce-1:{scan}")
         for m in SCAN_RX.finditer(plan):
             tbl, schema = m.group(1), m.group(2)
             if tbl not in ncols:
@@ -118,7 +148,10 @@ def test_registry_plan_sweep(spark):
     # the scan regex matching nothing would make the pruning check
     # vacuous — the registry reads parquet hundreds of times
     assert scans_matched > 300, scans_matched
+    # bounded_sort's callers: an empty walk would make that check vacuous
+    assert coalesced >= 40, coalesced
     assert not violations, (
         "plan anti-patterns found (un-broadcast cross join, row-at-a-time "
-        f"Python UDF, unpruned wide-table scan, or shuffle growth): {violations}"
+        "Python UDF, unpruned wide-table scan, shuffle growth, or a scan "
+        f"collapsed under Coalesce 1): {violations}"
     )

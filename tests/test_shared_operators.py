@@ -1,6 +1,7 @@
 """Unit tests for the shared query helpers: ``global_topk`` (ranked
-top-k), ``baskets`` and ``sorted_pairs`` (basket building and postings
-pair emission), ``exact_moment`` (exact integer second moments) and
+top-k), ``bounded_sort`` (single-task sort of a bounded result),
+``baskets`` and ``sorted_pairs`` (basket building and postings pair
+emission), ``exact_moment`` (exact integer second moments) and
 ``half_up`` (the fixed-point output fold). The registry entries built
 on them are covered by the oracle and plan suites; these pin the
 helpers' own contracts on tiny frames. The last tests keep the idioms
@@ -17,7 +18,7 @@ from pyspark.sql import functions as F
 
 from hive_release_spark.functions.numeric import exact_moment, half_up
 from hive_release_spark.operators.pairs import baskets, sorted_pairs
-from hive_release_spark.operators.topk import global_topk
+from hive_release_spark.operators.topk import bounded_sort, global_topk
 
 PKG = Path(__file__).resolve().parent.parent / "hive_release_spark"
 
@@ -67,6 +68,47 @@ def test_global_topk_empty_frame(spark):
     out = global_topk(empty, 5, F.desc("score"), "id")
     assert out.collect() == []
     assert out.columns == ["id", "score", "rk"]
+
+
+# k has ties and NULLs; (k, v) is unique
+_KV = [(2, "b"), (None, "x"), (1, "c"), (2, "a"), (1, None), (3, "a"), (None, "y")]
+
+
+def _kv(spark):
+    return spark.createDataFrame(_KV, "k INT, v STRING").repartition(3)
+
+
+def test_bounded_sort_matches_orderby(spark):
+    def got(*order):
+        return [(r.k, r.v) for r in bounded_sort(_kv(spark), *order).collect()]
+
+    # ascending puts NULLs first, descending last; ties on k are cut by v
+    assert got("k", "v") == [
+        (None, "x"), (None, "y"), (1, None), (1, "c"), (2, "a"), (2, "b"), (3, "a"),
+    ]
+    assert got(F.desc("k"), "v") == [
+        (3, "a"), (2, "a"), (2, "b"), (1, None), (1, "c"), (None, "x"), (None, "y"),
+    ]
+    assert got(F.asc_nulls_last("k"), F.desc_nulls_first("v")) == [
+        (1, None), (1, "c"), (2, "b"), (2, "a"), (3, "a"), (None, "y"), (None, "x"),
+    ]
+
+
+def test_bounded_sort_empty_frame(spark):
+    empty = spark.createDataFrame([], "k INT, v STRING")
+    out = bounded_sort(empty, "k")
+    assert out.collect() == []
+    assert out.columns == ["k", "v"]
+
+
+def test_bounded_sort_plans_no_range_exchange(spark):
+    """One global Sort over ``Coalesce 1``: no range exchange, so no
+    sampling job for its bounds."""
+    agg = _kv(spark).groupBy("k").agg(F.count("*").alias("n"))
+    plan = _plan(bounded_sort(agg, F.desc("n"), "k"))
+    assert "rangepartitioning" not in plan, plan
+    assert len(re.findall(r"\bSort \[", plan)) == 1, plan
+    assert "Coalesce 1" in plan, plan
 
 
 def _baskets(spark):
@@ -182,6 +224,11 @@ _IDIOMS = {
         re.compile(r'F\.split\(\s*[^,]+?,\s*" "\s*\)'),
         {"llm/text.py", "queries/functions_sql.py"},
     ),
+    # a coalesce(1) that feeds a write (streaming/pipelines.py) is not a sort
+    "bounded sort": (
+        re.compile(r"\.coalesce\(\s*1\s*\)\s*\.(?:orderBy|sort)\("),
+        {"operators/topk.py"},
+    ),
 }
 # splits a part name, not corpus text
 _SPLIT_EXCEPTIONS = {("queries/llm.py", 'F.split("p_name", " ")')}
@@ -219,7 +266,8 @@ def _half_up_folds(tree: ast.AST) -> list[ast.Call]:
 def test_shared_idioms_are_not_inlined():
     """Exact moments go through ``exact_moment``, basket building
     through ``baskets``, whitespace tokenization of text through
-    ``text.tokens`` and the half-up output fold through ``half_up``;
+    ``text.tokens``, the single-task sort through ``bounded_sort`` and
+    the half-up output fold through ``half_up``;
     ``functions_sql`` keeps Hive's own split UDTF showcase. The fold is
     found by an ast walk, not a regex, because its argument often spans
     lines."""
@@ -254,3 +302,5 @@ def test_shared_idioms_are_not_inlined():
     pairs = (PKG / "operators/pairs.py").read_text()
     assert len(_IDIOMS["basket chain"][0].findall(pairs)) == 1
     assert len(_half_up_folds(ast.parse(numeric))) == 1
+    topk = (PKG / "operators/topk.py").read_text()
+    assert len(_IDIOMS["bounded sort"][0].findall(topk)) == 1

@@ -30,6 +30,7 @@ def main() -> None:
         "pre-finalization). What to look for: PushedFilters/ReadSchema at",
         "every FileScan, BroadcastHashJoin for dim sides, two-level",
         "HashAggregate (partial/final), TakeOrderedAndProject for top-k,",
+        "`Coalesce 1` → `Sort` for bounded ORDER BY (no range exchange),",
         "no CartesianProduct anywhere.\n",
     ]
     for name in HEADLINE:
