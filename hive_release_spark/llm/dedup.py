@@ -245,8 +245,9 @@ def minhash_lsh_pairs(
     persisted base frame (MEMORY_AND_DISK) reused by the banding stage and
     both sides of the verify join. Without the persist, Spark recomputes
     the scan→tokenize→shingle lineage per consumer — at 100 TB that is the
-    difference between one read and three. The persist is released by
-    Spark's ContextCleaner when the result frame is garbage-collected."""
+    difference between one read and three. The persist sits in the SQL
+    CacheManager, which the ContextCleaner never frees: the caller's
+    ``pipeline_scope`` (or an explicit ``unpersist``) releases it."""
     from pyspark import StorageLevel
 
     rows = num_hashes // bands
@@ -535,8 +536,9 @@ def span_chunk_dedup(
     the join, so it is persisted (MEMORY_AND_DISK) — without the persist
     Spark re-executes the scan+explode lineage per consumer and the
     100 TB corpus is read twice (the same 1-vs-3-reads trade
-    ``minhash_lsh_pairs`` documents; released by Spark's ContextCleaner
-    when the result frame is garbage-collected). Skewed hot chunks
+    ``minhash_lsh_pairs`` documents; the persist sits in the SQL
+    CacheManager and is released by the caller's ``pipeline_scope`` or
+    an explicit ``unpersist``). Skewed hot chunks
     (boilerplate spans repeated across the corpus) partial-agg away in
     the winner election and AQE skew-splits the probe join — the
     window-rank alternative would funnel every copy of a hot span

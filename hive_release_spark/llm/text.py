@@ -98,8 +98,9 @@ def tfidf_top_terms(
     The tf frame is PERSISTED (MEMORY_AND_DISK) across its two consumers
     (docfreq build side, scored probe side) — without it Spark re-executes
     the scan→explode→count lineage per consumer, reading the corpus twice
-    (same fix as the MinHash base frame; released by the ContextCleaner
-    when the result is garbage-collected)."""
+    (same fix as the MinHash base frame; the persist sits in the SQL
+    CacheManager and is released by the caller's ``pipeline_scope`` or
+    an explicit ``unpersist``)."""
     from pyspark import StorageLevel
     from pyspark.sql import Window
 

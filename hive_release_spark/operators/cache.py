@@ -67,14 +67,12 @@ except ImportError:  # pragma: no cover — PySpark 3.x layout
 
 
 @contextmanager
-def pipeline_scope(blocking: bool = True):
+def pipeline_scope():
     """Unpersist every DataFrame persisted/cached inside the scope.
 
-    ``blocking`` (default True) makes the exit-time unpersists
-    synchronous, so executor storage is deterministically empty when
-    the block closes — the right trade at a pipeline boundary.  Pass
-    ``blocking=False`` when the caller immediately starts unrelated
-    work and eventual release is enough.
+    The exit-time unpersists are synchronous, so executor storage is
+    deterministically empty when the block closes — the right trade at
+    a pipeline boundary.
 
     Yields the tracking list (mostly useful to tests); frames already
     unpersisted inside the scope are fine — ``unpersist`` on a
@@ -106,7 +104,7 @@ def pipeline_scope(blocking: bool = True):
         DataFrame.cache = orig_cache
         for df in reversed(tracked):
             try:
-                df.unpersist(blocking=blocking)
+                df.unpersist(blocking=True)
             except Exception:
                 # a dead session / already-released frame must not
                 # mask the block's own exception

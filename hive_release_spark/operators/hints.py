@@ -21,54 +21,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_UNITS = {
-    "tb": 1024**4,
-    "gb": 1024**3,
-    "mb": 1024**2,
-    "kb": 1024,
-    "t": 1024**4,
-    "g": 1024**3,
-    "m": 1024**2,
-    "k": 1024,
-    "b": 1,
-}
 
-
-def _parse_bytes(s: str) -> int:
-    """Spark byte-conf syntax: '10485760b', '10m', '1g', '-1'."""
-    s = s.strip().lower()
-    for unit in _UNITS:  # longest suffixes first (dict is ordered)
-        if s.endswith(unit):
-            return int(s[: -len(unit)]) * _UNITS[unit]
-    return int(s)
-
-
-def maybe_broadcast(
-    df: DataFrame, max_bytes: int | str | None = None
-) -> DataFrame:
+def maybe_broadcast(df: DataFrame) -> DataFrame:
     """Broadcast hint only if Catalyst's size estimate for ``df`` is under
-    a size ceiling; unhinted otherwise (and always unhinted when the
-    ceiling is <= 0, i.e. broadcasting is disabled).
-
-    ``max_bytes`` (VERDICT r6 #6 — the broadcast→shuffle flip as a
-    CALLABLE parameter, not SCALE.md prose): an explicit per-call
-    ceiling, int bytes or a Spark byte-conf string ('64m', '1g').
-    ``None`` (the default) consults the session's
-    ``spark.sql.autoBroadcastJoinThreshold``, so plain
-    ``maybe_broadcast(dim)`` keeps tracking the deploy's conf; a
-    per-dim override lets one join pin a tighter (or looser) cap than
-    the session — e.g. the q3/q5 customer dim, ~15 GB at
-    100 TB-equivalent, where a deploy caps the dim broadcast without
-    touching every other join's behavior."""
-    spark = df.sparkSession
-    if max_bytes is None:
-        threshold = _parse_bytes(
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
-        )
-    elif isinstance(max_bytes, str):
-        threshold = _parse_bytes(max_bytes)
-    else:
-        threshold = int(max_bytes)
+    the session's ``spark.sql.autoBroadcastJoinThreshold``; unhinted
+    otherwise (and always unhinted when the threshold is <= 0, i.e.
+    broadcasting is disabled). The threshold is read as the session's
+    own parsed long, so every byte-conf spelling ('10m', '1g', '-1')
+    means what it means to Spark."""
+    jss = df.sparkSession._jsparkSession
+    threshold = jss.sessionState().conf().autoBroadcastJoinThreshold()
     if threshold <= 0:
         return df
     estimate = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))

@@ -216,7 +216,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     block-matmul path since r6 (the HOF self-join twin
     ``cosine_pairs`` evaluated a 64-term fold per PAIR — 78 s vs
     ~1.5 s at sf0.1; same oracle, same output).
-    ``cosine_pairs(block_col=...)`` remains the blocked scale path."""
+    ``semantic_dedup_pairs`` (pairs within nearest-centroid cells) is
+    the blocked scale path."""
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.cosine_pairs_blas(emb, threshold=0.4)
 
@@ -352,8 +353,8 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivf_oracle(n_cells: int, n_probe: int, k: int, nq: int) -> str:
     """Full DuckDB replay of the IVF pipeline (stride-sampled centroids,
     argmax assignment with larger-cell tie-break, descending probe order,
-    exact re-rank) — shared by the plan-literal and broadcast-centroid
-    variants, which must produce identical results by construction."""
+    exact re-rank) — shared by the two IVF entries, which differ only in
+    cell and probe counts."""
     return f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0),
     params AS (SELECT greatest(1, count(*) // {n_cells}) AS stride FROM e),
@@ -422,14 +423,14 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "similarity", "ann", "broadcast"),
 )
 def sim_ann_ivf_bcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN via the broadcast-centroid physical shape at a cell count
-    (64) where the plan-literal variant's expression tree already hurts:
-    centroids ride as one packed array<struct> row attached by a 1-row
-    broadcast, so plan size is O(1) in n_cells (the 100 TB path, where
-    n_cells ≈ √N is tens of thousands). Same deterministic pipeline,
-    same full DuckDB replay oracle — see similarity.ivf_topk_bcast."""
+    """IVF ANN at 64 cells / 8 probes, four times the cells of
+    ``sim_ann_ivf``: centroids ride as one packed array<struct> row
+    attached by a 1-row broadcast, so plan size is O(1) in n_cells (the
+    100 TB path, where n_cells ≈ √N is tens of thousands). Same
+    deterministic pipeline, same full DuckDB replay oracle — see
+    similarity.ivf_topk."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.ivf_topk_bcast(
+    return similarity.ivf_topk(
         emb.filter(F.col("vec_id") < 20), emb, k=5, n_cells=64, n_probe=8
     )
 

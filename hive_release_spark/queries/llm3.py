@@ -584,18 +584,7 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("query_id", "neighbor_id", "neighbor_label", "sim")
     )
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), "neighbor_id")
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "neighbor_label",
-            F.round("sim", 6).alias("sim"),
-            "rank",
-        )
-    )
+    return similarity.rank_neighbors(sims, 5, "neighbor_label")
 
 
 @register(

@@ -1123,6 +1123,62 @@ def test_repaired_entry_matches_oracle_on_vector_specials(
     assert ok, f"{name} on vector-specials input: {why}"
 
 
+# Stride-sample miss: the centroid-indexed entries sample every
+# stride-th vector id as a centroid, stride = n // n_cells. An
+# embeddings table of the 32 odd ids below 64 is non-empty, yet no id
+# is a multiple of the stride at 16 cells (stride 2) or 8 cells
+# (stride 4), so the sample is empty and no cell exists; every oracle
+# then answers with zero rows. At 64 cells the stride is 1 and the
+# sample is the whole table.
+SAMPLE_MISS = [
+    "sim_ann_ivf",
+    "sim_ann_ivf_bcast",
+    "sim_ann_pq",
+    "dedup_semantic_cells",
+]
+
+
+def make_sample_miss(dst: str) -> str:
+    """Copies of every sf0.001 table, with embeddings cut to the 32 rows
+    whose vec_id is odd and below 64."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    os.makedirs(dst, exist_ok=True)
+    for f in os.listdir(SF_SRC):
+        if f.endswith(".parquet"):
+            t = pq.read_table(os.path.join(SF_SRC, f))
+            if f == "embeddings.parquet":
+                ids = t.column("vec_id")
+                t = t.filter(
+                    pc.and_(pc.less(ids, 64), pc.equal(pc.bit_wise_and(ids, 1), 1))
+                )
+                assert t.num_rows == 32
+            pq.write_table(t, os.path.join(dst, f))
+    return dst
+
+
+@pytest.fixture(scope="module")
+def miss_sf(tmp_path_factory):
+    return make_sample_miss(str(tmp_path_factory.mktemp("sf_miss")))
+
+
+@pytest.fixture(scope="module")
+def miss_con(miss_sf):
+    return testing.duckdb_con(miss_sf)
+
+
+@pytest.mark.parametrize("name", SAMPLE_MISS)
+def test_entry_matches_oracle_on_stride_sample_miss(spark, miss_sf, miss_con, name):
+    from hive_release_spark.queries import REGISTRY
+
+    entry = REGISTRY[name]
+    ok, why = testing.compare_query(
+        spark, miss_con, entry.fn, entry.oracle, miss_sf
+    )
+    assert ok, f"{name} on a stride-sample miss: {why}"
+
+
 def test_nan_similarity_ranks_first_quirk(spark):
     """The engine behavior that makes the vector-geometry contract v2
     NECESSARY, pinned: a NaN cosine similarity sorts FIRST under DESC

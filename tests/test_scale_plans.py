@@ -162,51 +162,6 @@ def test_size_conditional_broadcast_degrades_to_sort_merge(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_maybe_broadcast_max_bytes_parameter_flips_join_strategy(spark):
-    """VERDICT r6 #6: the broadcast→shuffle dim-join flip as a CALLABLE
-    parameter, both arms plan-witnessed. With session auto-broadcast
-    disabled (so Catalyst can't re-broadcast behind the hint's back),
-    the SAME join flips on max_bytes alone: a ceiling above the dim's
-    size estimate pins BroadcastHashJoin; a 1-byte ceiling drops the
-    hint and the join degrades to SortMergeJoin/ShuffledHashJoin — the
-    strategy a 100x-grown dim gets without any query-code edit."""
-    from hive_release_spark.operators.hints import maybe_broadcast
-
-    orders = load_table(spark, SF_SMOKE, "orders")
-    cust = load_table(spark, SF_SMOKE, "customer")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "0")
-        wide = orders.join(
-            maybe_broadcast(cust, max_bytes="64m"),
-            orders.o_custkey == cust.c_custkey,
-        )
-        plan_wide = _plan(wide, mode="simple")
-        assert "BroadcastHashJoin" in plan_wide, plan_wide
-
-        tight = orders.join(
-            maybe_broadcast(cust, max_bytes=1),
-            orders.o_custkey == cust.c_custkey,
-        )
-        plan_tight = _plan(tight, mode="simple")
-        assert "BroadcastHashJoin" not in plan_tight, plan_tight
-        assert (
-            "SortMergeJoin" in plan_tight or "ShuffledHashJoin" in plan_tight
-        ), plan_tight
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_maybe_broadcast_parses_byte_confs():
-    from hive_release_spark.operators.hints import _parse_bytes
-
-    assert _parse_bytes("10485760b") == 10 * 1024 * 1024
-    assert _parse_bytes("10m") == 10 * 1024 * 1024
-    assert _parse_bytes("1GB") == 1024**3
-    assert _parse_bytes("-1") == -1
-    assert _parse_bytes("0") == 0
-
-
 def test_scalar_threshold_queries_scan_lineitem_once(spark):
     """Q2/Q11/Q15/Q17/Q20 decorrelate their scalar/correlated thresholds
     as window functions over the single aggregated (or semi-reduced)
@@ -328,44 +283,32 @@ def test_asof_join_plan_is_single_key_exchange(spark):
 
 
 def test_ivf_bcast_plan_size_constant_in_n_cells(spark):
-    """VERDICT r3 #4: ivf_topk inlines centroids as plan literals, so its
-    expression tree grows O(n_cells); ivf_topk_bcast carries them as a
-    packed broadcast ROW, so its plan must NOT grow. Pin both facts."""
-    from hive_release_spark.llm.similarity import ivf_topk, ivf_topk_bcast
+    """VERDICT r3 #4: ivf_topk carries its centroids as a packed
+    broadcast ROW and assigns corpus cells in an Arrow kernel, never as
+    plan literals, so its plan must NOT grow with n_cells."""
+    from hive_release_spark.llm.similarity import ivf_topk
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
 
-    def plan_len(fn, n_cells):
-        return len(_plan(fn(q, emb, k=3, n_cells=n_cells, n_probe=2), "extended"))
+    def plan_len(n_cells):
+        return len(_plan(ivf_topk(q, emb, k=3, n_cells=n_cells, n_probe=2), "extended"))
 
-    lit8, lit32 = plan_len(ivf_topk, 8), plan_len(ivf_topk, 32)
-    bc8, bc32 = plan_len(ivf_topk_bcast, 8), plan_len(ivf_topk_bcast, 32)
-    assert lit32 > lit8 * 2, "literal variant no longer inlines? update test"
-    assert bc32 < bc8 * 1.2, f"bcast plan grew with n_cells: {bc8} -> {bc32}"
-
-
-def test_ivf_bcast_matches_literal_variant(spark):
-    """Same parameters → bit-identical results between the plan-literal
-    and broadcast-centroid IVF shapes (the refactor contract)."""
-    from hive_release_spark.llm.similarity import ivf_topk, ivf_topk_bcast
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    a = sorted(map(tuple, ivf_topk(q, emb, k=5, n_cells=16, n_probe=4).collect()))
-    b = sorted(map(tuple, ivf_topk_bcast(q, emb, k=5, n_cells=16, n_probe=4).collect()))
-    assert a == b
+    bc8, bc32 = plan_len(8), plan_len(32)
+    assert bc32 < bc8 * 1.2, f"ivf_topk plan grew with n_cells: {bc8} -> {bc32}"
 
 
 def test_ivf_bcast_corpus_side_has_no_shuffle_before_probe_join(spark):
-    """The corpus must reach cell assignment via a broadcast nested-loop
-    attach (no Exchange): one corpus scan, zero corpus shuffles until the
+    """The corpus reaches cell assignment through the Arrow kernel and
+    the queries attach the centroid row by a broadcast nested-loop join
+    (no Exchange): one corpus scan, zero corpus shuffles until the
     per-query rank window."""
-    from hive_release_spark.llm.similarity import ivf_topk_bcast
+    from hive_release_spark.llm.similarity import ivf_topk
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
-    plan = _plan(ivf_topk_bcast(q, emb, k=3, n_cells=8, n_probe=2))
+    plan = _plan(ivf_topk(q, emb, k=3, n_cells=8, n_probe=2))
+    assert "MapInPandas" in plan
     assert "BroadcastNestedLoopJoin" in plan
     # the only hash exchange allowed is the rank window's query_id partition
     import re
