@@ -68,8 +68,8 @@ def hive_render(x: str) -> str:
     return HIVE_RENDER_SQL.format(x=x)
 
 
-def cents(c: Column | str, scale: int = 100) -> Column:
-    """The exact-integer micro-fold (``round(x*scale)::BIGINT``),
+def cents(c: Column | str) -> Column:
+    """The exact-integer micro-fold (``round(x*100)::BIGINT``),
     specials-proof (r11 finite() wave 2).
 
     The BIGINT-cents discipline makes money sums exact and
@@ -81,14 +81,14 @@ def cents(c: Column | str, scale: int = 100) -> Column:
     while finite rows fold bit-identically to the raw device.
     Oracle twin: :func:`cents_sql`.
     """
-    return F.round(finite(c) * scale).cast("long")
+    return F.round(finite(c) * 100).cast("long")
 
 
-def cents_sql(x: str, scale: int = 100) -> str:
+def cents_sql(x: str) -> str:
     """DuckDB twin of :func:`cents` — textual SQL fragment."""
     return (
         f"CAST(round(CASE WHEN isfinite({x}) THEN {x} END"
-        f" * {scale}) AS BIGINT)"
+        " * 100) AS BIGINT)"
     )
 
 

@@ -50,12 +50,11 @@ def _nearest(centroids: list[list[float]]):
     return F.array_min(F.array(*cands))["c"]
 
 
-def _nearest_kernel(centroids: list[list[float]], id_col: str, id_type: str):
+def _nearest_kernel(centroids: list[list[float]], id_type: str):
     """(mapInPandas fn, schema) computing the nearest-centroid index
     with the EXACT arithmetic contract of :func:`_nearest`, vectorized
-    over rows (r13, guide §4.2 — the HOF path evaluates k·d interpreted
-    lambda steps per row per iteration; this is k·d elementwise numpy
-    ops per BATCH, the ``_assign_cells_kernel`` recipe):
+    over rows (k·d elementwise numpy ops per BATCH, not k·d interpreted
+    lambda steps per row — the ``_assign_cells_kernel`` recipe):
 
     - each candidate's squared-L2 distance accumulates SEQUENTIALLY
       over dimensions (``dist += (X[:, j] - C[:, j])²``, elementwise
@@ -80,7 +79,7 @@ def _nearest_kernel(centroids: list[list[float]], id_col: str, id_type: str):
     import pandas as pd
 
     C = np.array(centroids, dtype="float64")  # len(cents) × d, id order
-    schema = f"{id_col} {id_type}, v ARRAY<DOUBLE>, cluster INT"
+    schema = f"vec_id {id_type}, v ARRAY<DOUBLE>, cluster INT"
 
     def assign(batches):
         for b in batches:
@@ -93,7 +92,7 @@ def _nearest_kernel(centroids: list[list[float]], id_col: str, id_type: str):
                 dist += diff * diff
             yield pd.DataFrame(
                 {
-                    id_col: b[id_col],
+                    "vec_id": b["vec_id"],
                     "v": b["v"],
                     "cluster": np.argmin(dist, axis=1).astype("int32"),
                 }
@@ -102,13 +101,7 @@ def _nearest_kernel(centroids: list[list[float]], id_col: str, id_type: str):
     return assign, schema
 
 
-def kmeans_assign(
-    emb: DataFrame,
-    k: int = 8,
-    n_iter: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_assign(emb: DataFrame, k: int = 8, n_iter: int = 3) -> DataFrame:
     """Run ``n_iter`` Lloyd iterations; return (id, cluster) assignments
     under the final centroids."""
     # corrupt vectors carry no geometry — not init candidates, not
@@ -116,36 +109,32 @@ def kmeans_assign(
     # similarity kernels. r10 all-NULL axis; r12 vector-specials axis
     # extends the drop to NaN/Inf components and zero norm (one NaN
     # centroid member would poison every later iteration).
-    pts = emb.filter(vec_valid(vec_col)).select(
-        id_col, F.col(vec_col).cast("array<double>").alias("v")
+    pts = emb.filter(vec_valid("embedding")).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     pts.persist()
     try:
-        cents = [r.v for r in pts.orderBy(id_col).limit(k).collect()]
+        cents = [r.v for r in pts.orderBy("vec_id").limit(k).collect()]
         if not cents:
             # zero-row input: no init centroids, nothing to assign —
             # the typed empty (id, cluster) answer (the oracle's CROSS
             # JOIN against an empty centroid set is empty too); without
             # the guard _nearest([]) builds a VOID-typed F.array() that
             # fails at analysis
-            return pts.select(id_col, F.lit(None).cast("int").alias("cluster"))
+            return pts.select("vec_id", F.lit(None).cast("int").alias("cluster"))
         # fewer rows than k: run with the centroids that exist — the
         # oracle's LIMIT k picks up the same smaller set, and indexing
         # the keep-previous fallback by len(cents) (not the requested
         # k) is what makes the k > n case an IndexError-free degrade
         # instead of a crash
         #
-        # r13 (guide §4.2): the assignment runs the vectorized Arrow
-        # kernel (_nearest_kernel — bit-identical fold order and
-        # argmin tie-break) instead of the interpreted array_min-over-
-        # folds HOF expression, which evaluated k·d lambda steps per
-        # row per iteration and ran EVERY iteration — the last such
-        # hot loop after the r12 IVF/PQ/PCA kernelizations.  The means
-        # pass and the 6-dp centroid rounding stay JVM-side, so the
-        # update step's arithmetic is untouched.
-        id_type = pts.schema[id_col].dataType.simpleString()
+        # The assignment runs the vectorized Arrow kernel
+        # (_nearest_kernel: bit-identical fold order and argmin
+        # tie-break); the means pass and the 6-dp centroid rounding stay
+        # JVM-side, so the update step's arithmetic is the oracle's.
+        id_type = pts.schema["vec_id"].dataType.simpleString()
         for _ in range(n_iter):
-            kernel, schema = _nearest_kernel(cents, id_col, id_type)
+            kernel, schema = _nearest_kernel(cents, id_type)
             assigned = pts.mapInPandas(kernel, schema=schema)
             means = (
                 assigned.select("cluster", F.posexplode("v").alias("pos", "val"))
@@ -158,8 +147,8 @@ def kmeans_assign(
             new = {r.cluster: [x.m for x in r.ms] for r in means}
             # empty cluster → keep its previous centroid
             cents = [new.get(i, cents[i]) for i in range(len(cents))]
-        kernel, schema = _nearest_kernel(cents, id_col, id_type)
-        return pts.mapInPandas(kernel, schema=schema).select(id_col, "cluster")
+        kernel, schema = _nearest_kernel(cents, id_type)
+        return pts.mapInPandas(kernel, schema=schema).select("vec_id", "cluster")
     finally:
         pts.unpersist()
 
@@ -204,12 +193,7 @@ def kmeans_oracle(k: int = 8, n_iter: int = 3) -> str:
     return "\n".join(sql)
 
 
-def pca_project(
-    emb: DataFrame,
-    k: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def pca_project(emb: DataFrame, k: int = 8) -> DataFrame:
     """Distributed PCA projection — the dimension-reduction step an
     embedding pipeline runs before ANN indexing or clustering.
 
@@ -226,8 +210,8 @@ def pca_project(
        centroid loop).
     3. numpy ``eigh`` on the driver yields the top-k components; the
        projection itself is a zero-shuffle Arrow map stage (ONE
-       ``mapInPandas`` kernel whose numpy accumulate replays the old
-       fold's sequential index order bit-for-bit — r12, guide §4.2),
+       ``mapInPandas`` kernel whose numpy accumulate replays a
+       sequential fold's index order bit-for-bit),
        with the 6-dp output round staying JVM-side.
 
     Rows-only by design: float summation order makes the last ulp of
@@ -242,14 +226,14 @@ def pca_project(
     # corrupt vectors carry no geometry — excluded from the moments AND
     # from the projection output (r10 all-NULL axis; r12 vector-
     # specials axis: NaN/Inf components and zero norm drop too).
-    emb = emb.filter(vec_valid(vec_col))
-    head = emb.select(vec_col).first()  # 1-row driver fetch, bounded
+    emb = emb.filter(vec_valid("embedding"))
+    head = emb.select("embedding").first()  # 1-row driver fetch, bounded
     if head is None:
         # zero-row corpus: no covariance to decompose — the typed empty
         # (id, pc0..pc{k-1}) projection (selecting from the empty input
         # keeps the id column's type)
         return emb.select(
-            F.col(id_col), *[F.lit(0.0).alias(f"pc{c}") for c in range(k)]
+            "vec_id", *[F.lit(0.0).alias(f"pc{c}") for c in range(k)]
         )
     d = len(head[0])
 
@@ -270,7 +254,7 @@ def pca_project(
             )
 
     moments = (
-        emb.select(F.col(vec_col).cast("array<double>").alias("v"))
+        emb.select(F.col("embedding").cast("array<double>").alias("v"))
         .mapInPandas(partial_moments, schema="i INT, j INT, val DOUBLE")
         .groupBy("i", "j")
         .agg(F.sum("val").alias("val"))
@@ -296,10 +280,8 @@ def pca_project(
         if comps[j, c] < 0:
             comps[:, c] = -comps[:, c]
 
-    # r12 (guide §4.2): the projection pass moves from k
-    # aggregate(zip_with(...)) HOF folds (k·d interpreted lambda
-    # invocations per row) to ONE Arrow kernel that accumulates the
-    # dot products with vectorized numpy ops in the SAME sequential
+    # The projection pass is ONE Arrow kernel that accumulates the
+    # dot products with vectorized numpy ops in a fold's sequential
     # index order — acc[:, c] after step i is ((0.0 + x₀w₀c) + x₁w₁c)
     # + … + xᵢwᵢc, the fold's exact IEEE op sequence — so every raw
     # projection value is bit-identical to the fold's, and the 6-dp
@@ -309,7 +291,7 @@ def pca_project(
     # 512-node expression tree evaluates per-node, losing to the
     # fold's array loop; the numpy kernel's batch accumulate wins
     # where per-row expression trees cannot.
-    id_type = emb.schema[id_col].dataType.simpleString()
+    id_type = emb.schema["vec_id"].dataType.simpleString()
     comps_by_dim = [
         np.ascontiguousarray(comps[i, :], dtype="float64") for i in range(d)
     ]
@@ -328,8 +310,8 @@ def pca_project(
             yield pd.DataFrame(out)
 
     raw = emb.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").cast("array<double>").alias("v"),
     ).mapInPandas(
         project,
         schema=f"_id {id_type}, "
@@ -341,7 +323,7 @@ def pca_project(
         proj_cols.append(
             F.round(F.col(f"raw{c}") - F.lit(offset), 6).alias(f"pc{c}")
         )
-    return raw.select(F.col("_id").alias(id_col), *proj_cols)
+    return raw.select(F.col("_id").alias("vec_id"), *proj_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -357,13 +339,7 @@ def _quantize(x: float) -> float:
     return math.floor(x * _PI_QUANT + 0.5) / _PI_QUANT
 
 
-def power_iteration_project(
-    emb: DataFrame,
-    n_iter: int = 6,
-    nq: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def power_iteration_project(emb: DataFrame, n_iter: int = 6, nq: int = 20) -> DataFrame:
     """Dominant principal component by QUANTIZED power iteration — the
     cross-engine-deterministic sibling of ``pca_project`` (VERDICT r5
     #4: make the PCA family oracle-gateable end-to-end).
@@ -393,24 +369,24 @@ def power_iteration_project(
     # corrupt vectors carry no geometry — excluded from the moments,
     # the iterate, and the projection output (r10 all-NULL axis; r12
     # vector-specials axis: NaN/Inf components and zero norm too).
-    emb = emb.filter(vec_valid(vec_col))
-    first = emb.select(vec_col).first()
+    emb = emb.filter(vec_valid("embedding"))
+    first = emb.select("embedding").first()
     if first is None:
         # zero-row input: the DuckDB replay's recursive CTE emits no
         # projection rows, so the typed empty answer IS the oracle
-        # match (this used to raise; the all-zero-ITERATE degenerate
+        # match (the all-zero-ITERATE degenerate
         # case below still raises — that one is a data pathology on a
         # NONEMPTY corpus, not an empty slice)
         return emb.select(
-            F.col(id_col).alias("vec_id"),
+            "vec_id",
             F.lit(0).cast("long").alias("pc1_micro"),
             F.lit(0).cast("long").alias("rayleigh_micro"),
             F.lit(0).cast("long").alias("n_iter"),
         )
     dim_ = len(first[0])
     pts = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        "vec_id",
+        F.col("embedding").cast("array<double>").alias("v"),
     )
     mrows = (
         pts.select(F.posexplode("v").alias("pos", "x"))

@@ -32,14 +32,14 @@ from hive_release_spark.operators.pairs import sorted_pairs
 # ---------------------------------------------------------------------------
 
 
-def exact_dedup(df: DataFrame, key: F.Column, id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame, key: F.Column) -> DataFrame:
     """Group by a content key, keep the smallest id as survivor.
 
     ``dropDuplicates`` gives the same semantics but a nondeterministic
     survivor; min-id is the deterministic variant a reproducible pipeline
     wants."""
     return df.groupBy(key.alias("content_key")).agg(
-        F.min(id_col).alias("survivor_id"),
+        F.min("doc_id").alias("survivor_id"),
         F.count("*").alias("n_copies"),
     )
 
@@ -70,17 +70,15 @@ def shingles(w: F.Column, n: int = 3) -> F.Column:
     )
 
 
-def _doc_shingles(docs: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:
+def _doc_shingles(docs: DataFrame, n: int) -> DataFrame:
     """(doc_id, sh) with the token array materialized in its own projection
     so Catalyst keeps it a cheap attribute reference (CollapseProject skips
     non-cheap aliases referenced more than once)."""
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("w")
-    )
+    toks = docs.select("doc_id", tokens("text").alias("w"))
     return toks.select("doc_id", shingles(F.col("w"), n).alias("sh"))
 
 
-def _exploded_shingles(docs: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:
+def _exploded_shingles(docs: DataFrame, n: int) -> DataFrame:
     """(doc_id, n_sh, s_h): exploded shingles keyed by xxhash64 — joining on
     a fixed-width long shuffles ~3× less data than the raw shingle string
     and compares faster (64-bit collisions are negligible at corpus
@@ -92,7 +90,7 @@ def _exploded_shingles(docs: DataFrame, n: int, id_col: str, text_col: str) -> D
     construction into a scan filter where the token array reverts to
     ``split(text)`` — re-evaluated per shingle element (measured 10×:
     3.5s → 0.34s at sf0.1). The rule skips outer generators."""
-    sh = _doc_shingles(docs, n, id_col, text_col)
+    sh = _doc_shingles(docs, n)
     return (
         sh.select("doc_id", F.size("sh").alias("n_sh"), F.explode_outer("sh").alias("s"))
         .filter(F.col("s").isNotNull())
@@ -101,12 +99,7 @@ def _exploded_shingles(docs: DataFrame, n: int, id_col: str, text_col: str) -> D
 
 
 def jaccard_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_df: int | None = None,
+    docs: DataFrame, n: int = 3, threshold: float = 0.5, max_df: int | None = None
 ) -> DataFrame:
     """All-pairs n-gram Jaccard ≥ threshold via inverted-index self-join.
 
@@ -123,7 +116,7 @@ def jaccard_pairs(
     pair count). With a cap the intersection count can only shrink, so
     the output is a SUBSET of the exact pair set at the same threshold —
     an explicit, one-sided trade (property-tested). None = exact."""
-    ex = _exploded_shingles(docs, n, id_col, text_col)
+    ex = _exploded_shingles(docs, n)
     postings = ex.groupBy("s_h").agg(
         F.sort_array(F.collect_list(F.struct("doc_id", "n_sh"))).alias("docs")
     )
@@ -162,18 +155,12 @@ def jaccard_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _shingle_sig_base(
-    docs: DataFrame,
-    num_hashes: int,
-    n: int,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
+def _shingle_sig_base(docs: DataFrame, num_hashes: int, n: int) -> DataFrame:
     """(doc_id, sh, sig): shingle set AND MinHash signature in ONE corpus
     pass with NO shuffle — h_i = array_min(xxhash64(i, xxhash64(shingle)))
     via higher-order functions instead of explode→groupBy. Keeping ``sh``
     in the same frame lets LSH verify candidates without re-scanning and
-    re-shingling the corpus (the r01 3×-scan defect).
+    re-shingling the corpus.
 
     Docs with no shingles (shorter than ``n`` tokens) are dropped — they
     can never reach the Jaccard threshold and would otherwise all collide
@@ -181,9 +168,7 @@ def _shingle_sig_base(
     before shingling (equivalent: ≥n tokens ⇔ ≥1 shingle) — filtering on
     ``size(sh) > 0`` would push the whole shingle expression into the
     scan filter (see _exploded_shingles)."""
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("w")
-    ).filter(F.size("w") >= n)
+    toks = docs.select("doc_id", tokens("text").alias("w")).filter(F.size("w") >= n)
     sh = toks.select("doc_id", shingles(F.col("w"), n).alias("sh"))
     # sh_h materialized as its own attribute: hash each shingle string ONCE,
     # not once per hash function (expression-reuse trap, see shingles()).
@@ -199,19 +184,11 @@ def _shingle_sig_base(
     return hashed.select("doc_id", "sh", sig.alias("sig"))
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    num_hashes: int = 32,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame, num_hashes: int = 32) -> DataFrame:
     """Per-doc MinHash signature: h_i = min over shingles of
     xxhash64(i, xxhash64(shingle)) — all JVM-side builtins, zero shuffles
     (signatures are per-row array folds, not an explode + groupBy)."""
-    return _shingle_sig_base(docs, num_hashes, n, id_col, text_col).select(
-        "doc_id", "sig"
-    )
+    return _shingle_sig_base(docs, num_hashes, 3).select("doc_id", "sig")
 
 
 def minhash_lsh_pairs(
@@ -220,8 +197,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     n: int = 3,
     threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_df: int | None = None,
 ) -> DataFrame:
     """MinHash-LSH candidate generation + exact-Jaccard verification.
@@ -251,7 +226,7 @@ def minhash_lsh_pairs(
     from pyspark import StorageLevel
 
     rows = num_hashes // bands
-    base = _shingle_sig_base(docs, num_hashes, n, id_col, text_col).persist(
+    base = _shingle_sig_base(docs, num_hashes, n).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     # bucket key = xxhash64(band-slice); band id mixed in so buckets from
@@ -285,7 +260,7 @@ def minhash_lsh_pairs(
     # the SAME persisted base, not a fresh corpus scan per side
     va = base.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     vb = base.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    # r12: intersection/union sizes materialize ONCE per candidate pair
+    # intersection/union sizes materialize ONCE per candidate pair
     # behind a Generate barrier (the jaccard_pairs_prefix device) —
     # written as withColumn + filter, alias substitution pushes the
     # threshold predicate into the join condition and the O(na+nb)
@@ -315,7 +290,7 @@ def minhash_lsh_pairs(
 # ---------------------------------------------------------------------------
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Transitive closure of a near-dup pair set: (doc_id, component,
     is_survivor), component = the min doc_id reachable through pairs, the
     deterministic survivor every dedup pipeline needs (A~B and B~C must
@@ -338,33 +313,26 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # LAZY checkpoints (r12): each round's ``changed`` count is an
-    # action that materializes ``new`` anyway — eager=True ran a
-    # SECOND materialization job per round first.  Lazy keeps the same
-    # lineage truncation (the DataFrame wraps the checkpointed RDD
-    # either way) with one job per round instead of two; the computed
-    # per-round plan — and the integer min-label arithmetic — is
-    # unchanged.
+    # LAZY checkpoints: each round's ``changed`` count is an action
+    # that materializes ``new`` anyway, so an eager checkpoint would
+    # run a second job per round for the same lineage truncation.
     labels = (
         edges.select(F.col("a").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("label"))
         .localCheckpoint(eager=False)
     )
-    for _ in range(max_iter):
+    for _ in range(25):  # rounds = cluster diameter, tiny for near-dups
         nbr = (
             edges.join(labels, edges.a == labels.node)
             .select(F.col("b").alias("node"), "label")
             .groupBy("node")
             .agg(F.min("label").alias("nbr_min"))
         )
-        # r13 (guide §2.4): the convergence probe used to be its OWN
-        # node-keyed join of new against old labels — two exchanges
-        # per round spent on a yes/no question.  The changed flag now
-        # rides the label-update join itself (old label and its
-        # replacement meet in the same row), so the probe is a filter
-        # over the checkpointed frame; the label values are the
-        # identical least/coalesce expression.
+        # the changed flag rides the label-update join itself (old
+        # label and its replacement meet in the same row), so the
+        # convergence probe is a filter over the checkpointed frame,
+        # not a second node-keyed join
         new = labels.join(nbr, "node", "left").select(
             "node",
             F.least(F.col("label"), F.coalesce("nbr_min", F.col("label"))).alias("label"),
@@ -391,13 +359,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def simhash(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_bits: int = 64,
-    hash_fn=None,
-) -> DataFrame:
+def simhash(docs: DataFrame, n_bits: int = 64, hash_fn=None) -> DataFrame:
     """``n_bits``-wide SimHash per document: for each bit position, sum
     +1/-1 over token hashes; the sign vector is the signature. Built
     entirely from higher-order functions — no Python in the loop.
@@ -412,7 +374,7 @@ def simhash(
     # materialize the token array, then explode_outer (InferFiltersFromGenerate
     # would otherwise push a split-inlined size filter into the scan)
     tok = (
-        docs.select(F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("w"))
+        docs.select("doc_id", tokens("text").alias("w"))
         .select("doc_id", F.explode_outer("w").alias("t"))
         .filter(F.col("t").isNotNull())
     )
@@ -445,12 +407,7 @@ def simhash(
 
 
 def simhash_pairs(
-    docs: DataFrame,
-    max_hamming: int = 6,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_bits: int = 64,
-    hash_fn=None,
+    docs: DataFrame, max_hamming: int = 6, n_bits: int = 64, hash_fn=None
 ) -> DataFrame:
     """Near-dup pairs by SimHash: band the ``n_bits`` signature into 4
     equal chunks (pigeonhole: hamming ≤ 3 ⇒ some chunk equal; wider
@@ -463,7 +420,7 @@ def simhash_pairs(
     Hamming-filtered BEFORE the distinct so only surviving pairs shuffle.
     A self-join here would recompute the whole scan→tokenize→bit-sums
     signature pipeline once per side."""
-    sig = simhash(docs, id_col, text_col, n_bits=n_bits, hash_fn=hash_fn)
+    sig = simhash(docs, n_bits=n_bits, hash_fn=hash_fn)
     chunk_bits = n_bits // 4
     mask = (1 << chunk_bits) - 1
     chunks = F.array(
@@ -501,12 +458,7 @@ def simhash_pairs(
     )
 
 
-def span_chunk_dedup(
-    docs: DataFrame,
-    k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def span_chunk_dedup(docs: DataFrame, k: int = 10) -> DataFrame:
     """Exact duplicate-SPAN removal: cut every document into
     non-overlapping ``k``-token chunks, keep only the corpus-wide FIRST
     occurrence of each chunk (ordered by (doc_id, chunk_idx)), and
@@ -546,8 +498,8 @@ def span_chunk_dedup(
     """
     from pyspark import StorageLevel
 
-    w = tokens(F.col(text_col))
-    base = docs.select(F.col(id_col).alias("doc_id"), w.alias("w")).select(
+    w = tokens("text")
+    base = docs.select("doc_id", w.alias("w")).select(
         "doc_id",
         "w",
         # explicit NULL guard, not bare size(): under ANSI-off sessions
@@ -618,11 +570,7 @@ def span_chunk_dedup(
 
 
 def prefix_candidate_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    docs: DataFrame, n: int = 3, threshold: float = 0.5
 ) -> tuple[DataFrame, DataFrame]:
     """(candidates, doc_sets) for the prefix-filtered similarity join.
 
@@ -644,28 +592,24 @@ def prefix_candidate_pairs(
     # verification doc sets — without ITS persist each consumer re-runs
     # the scan -> tokenize -> shingle -> window lineage (the
     # MinHash-base rule, SCALE.md deliberate-persist inventory).
-    # r12 (guide §2.4): the document frequency attaches via a window
-    # count over the shingle key — ONE exchange of the exploded frame —
-    # instead of the former groupBy + self-join, which exchanged it
-    # twice (once into the count aggregate, once into the join) and ran
-    # a sort-merge join.  Exact same integer df per (doc, shingle).
-    # With the join gone the exploded frame has ONE consumer, so its
-    # former persist (two-consumer insurance) is dropped too.
+    # The document frequency attaches via a window count over the
+    # shingle key — ONE exchange of the exploded frame, where a
+    # groupBy + join back exchanges it twice.
     #
-    # Skew bound (r13 adjudication, VERDICT r12 #7): the window has no
+    # Skew bound: the window has no
     # map-side combiner, so every row of a hot shingle lands in one
     # task.  Measured at sf0.1: 27 213 distinct shingles over 260 388
     # exploded rows, top key 25 rows (0.0096% share), p999 key 21 rows,
     # 32-partition max/median 8 695/8 192 — no hot task at any fixture
     # SF.  On a Zipfian web corpus (stopword shingles) the documented
-    # escape is the two-phase shape this replaced — groupBy(s_h) count
+    # escape is the two-phase shape — groupBy(s_h) count
     # (combiner) + join back — whose join-side skew is then
     # AQE-splittable (skew-split applies to joins, NOT windows); the
     # window shape is kept because it is one exchange cheaper and the
     # key distribution here is flat.
     from pyspark.sql import Window as _W
 
-    ex = _exploded_shingles(docs, n, id_col, text_col)
+    ex = _exploded_shingles(docs, n)
     exr = ex.withColumn("df", F.count("*").over(_W.partitionBy("s_h")))
     per_doc = exr.groupBy("doc_id").agg(
         F.first("n_sh").alias("n_sh"),
@@ -699,11 +643,7 @@ def prefix_candidate_pairs(
 
 
 def jaccard_pairs_prefix(
-    docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    docs: DataFrame, n: int = 3, threshold: float = 0.5
 ) -> DataFrame:
     """Exact all-pairs Jaccard >= threshold via PREFIX FILTERING — the
     canonical set-similarity-join optimization over the plain postings
@@ -715,7 +655,7 @@ def jaccard_pairs_prefix(
     every prefix. Verification computes exact Jaccard from the sorted
     hash sets (array_intersect), no second corpus scan: the doc-set
     frame comes out of the same pipeline."""
-    candidates, doc_sets = prefix_candidate_pairs(docs, n, threshold, id_col, text_col)
+    candidates, doc_sets = prefix_candidate_pairs(docs, n, threshold)
     a = doc_sets.select(
         F.col("doc_id").alias("doc_a"),
         F.col("n_sh").alias("na"),
@@ -726,7 +666,7 @@ def jaccard_pairs_prefix(
         F.col("n_sh").alias("nb"),
         F.col("all_h").alias("hb"),
     )
-    # r12 (guide §1.2 per-task work): materialize the intersection SIZE
+    # materialize the intersection SIZE
     # once per candidate pair behind a Generate barrier.  Written the
     # natural way (filter + round on a jac expression), predicate
     # pushdown folds the threshold filter into the broadcast-join

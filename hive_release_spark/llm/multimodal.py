@@ -18,13 +18,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def pack_assets(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def pack_assets(df: DataFrame) -> DataFrame:
     """Build an asset table: payload BINARY + typed metadata columns.
     (Here the payload is the utf-8 text; in production it is the media
     bytes and the metadata comes from ingest.)"""
-    payload = F.col(text_col).cast("binary")
+    payload = F.col("text").cast("binary")
     return df.select(
-        F.col(id_col).alias("asset_id"),
+        F.col("doc_id").alias("asset_id"),
         payload.alias("payload"),
         F.octet_length(payload).cast("long").alias("n_bytes"),
         F.sha2(payload, 256).alias("checksum"),
@@ -37,10 +37,10 @@ def pack_assets(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
         # replay says NULL. Quirk pinned by
         # tests/test_empty_input.py::test_element_at_runtime_null_index_quirk
         F.when(
-            F.col(id_col).isNotNull(),
+            F.col("doc_id").isNotNull(),
             F.element_at(
                 F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-                (F.col(id_col) % 3 + 1).cast("int"),
+                (F.col("doc_id") % 3 + 1).cast("int"),
             ),
         ).alias("modality"),
     )

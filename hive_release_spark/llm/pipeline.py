@@ -26,13 +26,7 @@ from hive_release_spark.operators.topk import bounded_sort
 HEX = "0123456789abcdef"
 
 
-def decontaminate(
-    train: DataFrame,
-    eval_df: DataFrame,
-    n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def decontaminate(train: DataFrame, eval_df: DataFrame, n: int = 8) -> DataFrame:
     """Benchmark decontamination: flag training docs sharing any word
     n-gram with the eval set (the GPT-3/Llama 13-gram protocol; ``n`` is
     a dial).  Returns (doc_id, n_hit_grams, contaminated) for every
@@ -51,12 +45,12 @@ def decontaminate(
     the distinct-gram hit count.
     """
     eval_grams = (
-        _exploded_shingles(eval_df, n, id_col, text_col)
+        _exploded_shingles(eval_df, n)
         .select("s_h")
         .distinct()
         .withColumn("__hit", F.lit(1))
     )
-    tr = _doc_shingles(train, n, id_col, text_col).select(
+    tr = _doc_shingles(train, n).select(
         "doc_id", F.explode_outer("sh").alias("s")
     )
     return (
@@ -77,13 +71,7 @@ def decontaminate(
     )
 
 
-def pack_sequences(
-    docs: DataFrame,
-    budget: int = 2048,
-    n_shards: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def pack_sequences(docs: DataFrame, budget: int = 2048, n_shards: int = 8) -> DataFrame:
     """Sequence packing: assign each doc to a fixed-token-budget pack.
 
     Docs are streamed in deterministic (shard, doc_id) order; a doc joins
@@ -98,9 +86,9 @@ def pack_sequences(
     n_tokens, tokens_before).
     """
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        token_count(F.col(text_col)).alias("n_tokens"),
-        F.pmod(F.col(id_col), F.lit(n_shards)).cast("int").alias("shard"),
+        "doc_id",
+        token_count("text").alias("n_tokens"),
+        F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int").alias("shard"),
     )
     w = (
         Window.partitionBy("shard")
@@ -118,13 +106,7 @@ def pack_sequences(
     )
 
 
-def resample_by_weight(
-    docs: DataFrame,
-    weights: dict[str, float],
-    domain_col: str = "source",
-    id_col: str = "doc_id",
-    default_weight: float = 1.0,
-) -> DataFrame:
+def resample_by_weight(docs: DataFrame, weights: dict[str, float]) -> DataFrame:
     """Weighted domain mixing: emit each doc ``weights[domain]`` times in
     expectation — ``floor(w)`` guaranteed copies plus one more for a
     deterministic ``frac(w)`` fraction of docs (Knuth multiplicative hash
@@ -139,19 +121,16 @@ def resample_by_weight(
     for dom, wgt in sorted(weights.items()):
         whole, milli = int(wgt), round((wgt - int(wgt)) * 1000)
         extra = F.when(
-            F.pmod(F.col(id_col) * F.lit(2654435761), F.lit(1000)) < milli, 1
+            F.pmod(F.col("doc_id") * F.lit(2654435761), F.lit(1000)) < milli, 1
         ).otherwise(0)
-        n_copies = F.when(F.col(domain_col) == dom, F.lit(whole) + extra).otherwise(
+        n_copies = F.when(F.col("source") == dom, F.lit(whole) + extra).otherwise(
             n_copies
         )
-    whole, milli = int(default_weight), round((default_weight - int(default_weight)) * 1000)
-    default_extra = F.when(
-        F.pmod(F.col(id_col) * F.lit(2654435761), F.lit(1000)) < milli, 1
-    ).otherwise(0)
-    n_copies = F.coalesce(n_copies, F.lit(whole) + default_extra)
+    # a domain without a weight keeps its docs once
+    n_copies = F.coalesce(n_copies, F.lit(1))
 
     with_n = docs.select(
-        F.col(id_col).alias("doc_id"), F.col(domain_col).alias("domain"), n_copies.alias("n_copies")
+        "doc_id", F.col("source").alias("domain"), n_copies.alias("n_copies")
     ).filter(F.col("n_copies") >= 1)
     return with_n.select(
         "doc_id",
@@ -169,12 +148,7 @@ def _hex_digit(col: Column, pos: int) -> Column:
     return F.call_function("instr", F.lit(HEX), F.substring(col, pos, 1)) - 1
 
 
-def shuffle_shards(
-    docs: DataFrame,
-    n_shards: int = 16,
-    seed: str = "s42",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def shuffle_shards(docs: DataFrame, n_shards: int = 16, seed: str = "s42") -> DataFrame:
     """Deterministic global shuffle + shard assignment for training-data
     serving: sort key = md5(seed:id); shard = first-two-hex-digit bucket
     mod n_shards; position = rank of the sort key within the shard.
@@ -186,8 +160,8 @@ def shuffle_shards(
     range-exchange).  Re-running with the same seed reproduces the exact
     byte order — resumable data loading.
     """
-    h = F.md5(F.concat(F.lit(seed + ":"), F.col(id_col).cast("string")))
-    base = docs.select(F.col(id_col).alias("doc_id"), h.alias("h"))
+    h = F.md5(F.concat(F.lit(seed + ":"), F.col("doc_id").cast("string")))
+    base = docs.select("doc_id", h.alias("h"))
     shard = F.pmod(_hex_digit(F.col("h"), 1) * 16 + _hex_digit(F.col("h"), 2), F.lit(n_shards))
     w = Window.partitionBy("shard").orderBy("sort_key", "doc_id")
     return base.select(
@@ -196,12 +170,7 @@ def shuffle_shards(
 
 
 def stratified_sample(
-    docs: DataFrame,
-    rates: dict[str, float],
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-    seed: str = "v1",
-    default_rate: float = 0.0,
+    docs: DataFrame, rates: dict[str, float], seed: str = "v1"
 ) -> DataFrame:
     """Per-stratum deterministic sampling: keep a doc iff the first 8 hex
     chars of md5(seed:id) fall below the stratum's rate threshold.
@@ -212,17 +181,18 @@ def stratified_sample(
 
     Scale shape: pure scan-side filter, zero shuffles.
     """
-    h8 = F.substring(F.md5(F.concat(F.lit(seed + ":"), F.col(id_col).cast("string"))), 1, 8)
+    h8 = F.substring(
+        F.md5(F.concat(F.lit(seed + ":"), F.col("doc_id").cast("string"))), 1, 8
+    )
     keep = F.lit(None).cast("boolean")
     for stratum, rate in sorted(rates.items()):
         thr = format(min(int(rate * 16**8), 16**8 - 1), "08x")
-        keep = F.when(F.col(stratum_col) == stratum, h8 < F.lit(thr)).otherwise(keep)
-    thr_default = format(min(int(default_rate * 16**8), 16**8 - 1), "08x")
-    keep = F.coalesce(keep, h8 < F.lit(thr_default))
+        keep = F.when(F.col("lang") == stratum, h8 < F.lit(thr)).otherwise(keep)
+    # a stratum without a rate leaves ``keep`` NULL: its docs are dropped
     return docs.filter(keep)
 
 
-def sample_thresholds_sql(rates: dict[str, float], default_rate: float = 0.0) -> str:
+def sample_thresholds_sql(rates: dict[str, float]) -> str:
     """The CASE expression both engines share for stratified_sample's
     oracle — built from the same Python threshold computation so the
     literals are identical by construction."""
@@ -230,15 +200,10 @@ def sample_thresholds_sql(rates: dict[str, float], default_rate: float = 0.0) ->
         f"WHEN '{s}' THEN '{format(min(int(r * 16**8), 16**8 - 1), '08x')}'"
         for s, r in sorted(rates.items())
     )
-    return f"CASE lang {arms} ELSE '{format(min(int(default_rate * 16**8), 16**8 - 1), '08x')}' END"
+    return f"CASE lang {arms} ELSE '00000000' END"
 
 
-def source_overlap(
-    docs: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    group_col: str = "source",
-) -> DataFrame:
+def source_overlap(docs: DataFrame, n: int = 3) -> DataFrame:
     """Cross-source contamination matrix: for every pair of sources, the
     number of DISTINCT word n-grams occurring in both — the "how much of
     dataset A leaked into dataset B" report a corpus curator reads before
@@ -252,9 +217,9 @@ def source_overlap(
     sources the per-gram pair array is ≤ k(k-1)/2."""
     # token array materialized in its own projection (expression-reuse
     # trap), explode_outer + isNotNull (InferFiltersFromGenerate dodge)
-    w = tokens(F.col(text_col))
+    w = tokens("text")
     gs = (
-        docs.select(F.col(group_col).alias("src"), w.alias("w"))
+        docs.select(F.col("source").alias("src"), w.alias("w"))
         .select("src", shingles(F.col("w"), n).alias("sh"))
         .select("src", F.explode_outer("sh").alias("s"))
         .filter(F.col("s").isNotNull())

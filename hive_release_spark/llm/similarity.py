@@ -21,6 +21,11 @@ from pyspark.sql.types import IntegralType
 
 from hive_release_spark.functions.numeric import half_up
 
+# Width of the ``embeddings`` fixture vectors: the LSH hyperplanes have
+# this many components, and the DuckDB replay of the LSH entry embeds
+# the same planes.
+DIM = 64
+
 
 def as_double_vec(col: Column | str) -> Column:
     return F.col(col).cast("array<double>") if isinstance(col, str) else col.cast("array<double>")
@@ -102,23 +107,17 @@ def rank_neighbors(sims: DataFrame, k: int, *extra: str) -> DataFrame:
     )
 
 
-def brute_force_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int = 5) -> DataFrame:
     """Exact cosine top-k: broadcast(queries) ⋈ corpus → window rank."""
     # vector-geometry contract v2: corrupt vectors never enter the rank
     # norms precomputed per ROW below the join (cosine_pre) — the join
     # boundary keeps the fold on the input side, so each pair pays one
     # dot fold instead of three
-    q = queries.filter(vec_valid(vec_col)).select(
-        F.col(id_col).alias("query_id"), as_double_vec(vec_col).alias("qv")
+    q = queries.filter(vec_valid("embedding")).select(
+        F.col("vec_id").alias("query_id"), as_double_vec("embedding").alias("qv")
     ).withColumn("qn", norm(F.col("qv")))
-    c = corpus.filter(vec_valid(vec_col)).select(
-        F.col(id_col).alias("neighbor_id"), as_double_vec(vec_col).alias("cv")
+    c = corpus.filter(vec_valid("embedding")).select(
+        F.col("vec_id").alias("neighbor_id"), as_double_vec("embedding").alias("cv")
     ).withColumn("cn", norm(F.col("cv")))
     sims = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
@@ -131,18 +130,14 @@ def brute_force_topk(
 
 
 def dual_topk_pairs(
-    queries: DataFrame,
-    corpus: DataFrame,
-    prefix_len: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    queries: DataFrame, corpus: DataFrame, prefix_len: int
 ) -> DataFrame:
     """ONE broadcast pair pass carrying BOTH the full-dimension cosine
-    and the ``prefix_len``-dim Matryoshka-truncation cosine (r13,
-    guide §1.2): the callers that rank a corpus under both geometries
-    (emb_matryoshka_recall, sim_rrf_fusion) previously ran
-    :func:`brute_force_topk` once per geometry — two broadcast joins,
-    two full corpus scans, two sets of per-row norm folds. Returns the
+    and the ``prefix_len``-dim Matryoshka-truncation cosine, for the
+    callers that rank a corpus under both geometries
+    (emb_matryoshka_recall, sim_rrf_fusion): one broadcast join, corpus
+    scan and set of per-row norm folds where :func:`brute_force_topk`
+    per geometry would run two of each. Returns the
     PERSISTED pair-skinny frame ``(query_id, neighbor_id, sim,
     sim_p, ok_p)`` (released by the caller's ``pipeline_scope``); the
     caller applies its own rank windows.
@@ -152,17 +147,17 @@ def dual_topk_pairs(
     expressions, same per-row norm hoist); ``sim_p`` is exactly the
     sliced pass's value (``cast(slice(raw))`` composition preserved);
     ``ok_p`` is the sliced pass's ``vec_valid`` gate on BOTH sides —
-    the old per-pass scan filter, carried as a flag so the trunc
+    a sliced pass's scan filter, carried as a flag so the trunc
     window ranks the identical row population after ``filter(ok_p)``.
     """
     from pyspark import StorageLevel
 
-    sl = F.slice(F.col(vec_col), 1, prefix_len)
+    sl = F.slice(F.col("embedding"), 1, prefix_len)
     q = (
-        queries.filter(vec_valid(vec_col))
+        queries.filter(vec_valid("embedding"))
         .select(
-            F.col(id_col).alias("query_id"),
-            as_double_vec(vec_col).alias("qv"),
+            F.col("vec_id").alias("query_id"),
+            as_double_vec("embedding").alias("qv"),
             as_double_vec(sl).alias("qvp"),
             vec_valid(sl).alias("qok"),
         )
@@ -170,10 +165,10 @@ def dual_topk_pairs(
         .withColumn("qnp", norm(F.col("qvp")))
     )
     c = (
-        corpus.filter(vec_valid(vec_col))
+        corpus.filter(vec_valid("embedding"))
         .select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double_vec(vec_col).alias("cv"),
+            F.col("vec_id").alias("neighbor_id"),
+            as_double_vec("embedding").alias("cv"),
             as_double_vec(sl).alias("cvp"),
             vec_valid(sl).alias("cok"),
         )
@@ -197,18 +192,13 @@ def dual_topk_pairs(
     )
 
 
-def cosine_pairs(
-    vectors: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_pairs(vectors: DataFrame, threshold: float) -> DataFrame:
     """All-pairs cosine ≥ threshold (embedding near-dup) over the full
     cross product: small inputs only. The scale path is
     :func:`semantic_dedup_pairs`, which pairs vectors within their
     nearest-centroid cell."""
-    v = vectors.filter(vec_valid(vec_col)).select(
-        F.col(id_col).alias("id"), as_double_vec(vec_col).alias("v")
+    v = vectors.filter(vec_valid("embedding")).select(
+        F.col("vec_id").alias("id"), as_double_vec("embedding").alias("v")
     ).withColumn("nv", norm(F.col("v")))  # per-row norm, not per-pair (r12)
     a, b = v.alias("a"), v.alias("b")
     return (
@@ -228,12 +218,7 @@ def cosine_pairs(
     )
 
 
-def cosine_pairs_blas(
-    vectors: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_pairs_blas(vectors: DataFrame, threshold: float) -> DataFrame:
     """All-pairs cosine ≥ threshold, BLAS block-matmul twin of
     ``cosine_pairs`` — same output, ~50× faster: the HOF self-join
     evaluates a 64-term fold expression per PAIR (n² row-at-a-time
@@ -242,29 +227,19 @@ def cosine_pairs_blas(
     Arrow-batched — the "Pandas UDFs beat per-row by 10-100×" rule
     applied to the pair bomb).
 
-    r13 shape (VERDICT r12 #2 — retire the driver collect): the
-    corpus no longer rides the driver at all.  Rows hash into
-    ``nb`` deterministic id-blocks (xxhash64 — stable across
-    retries, guide §2.5), each block packs into one
-    ``collect_list(struct(id, v))`` row, and the nb(nb+1)/2 ordered
-    block pairs fan out as tasks whose kernel runs the identical
-    normalize + matmul + ``id_a < id_b`` mask the old full-matrix
-    kernel ran (value-identical sweep vs the collected path on every
-    fixture SF).  The former shape ``toPandas()``-ed the whole corpus
-    into a task closure: an n-sized DRIVER collect in a declared
-    query path, re-pickled into the task binary on every action
-    (ADVICE r7-1) — guide §5's first rule is that the driver does no
-    data work.
+    The corpus never rides the driver: rows hash into ``nb``
+    deterministic id-blocks (xxhash64 — stable across retries), each
+    block packs into one ``collect_list(struct(id, v))`` row, and the
+    nb(nb+1)/2 ordered block pairs fan out as tasks whose kernel runs
+    normalize + matmul + the ``id_a < id_b`` mask.
 
-    EAGER at call time (ADVICE r6-3): building this plan runs ONE
-    bounded Spark action — the count() that sizes the block grid
-    (the former shape's toPandas was an unbounded one). Callers that
-    only want the plan shape should use ``cosine_pairs`` instead.
+    EAGER at call time: building this plan runs ONE bounded Spark
+    action — the count() that sizes the block grid. Callers that only
+    want the plan shape should use ``cosine_pairs`` instead.
 
     Scale posture: block replication is the trade — each block ships
     to nb pair-tasks, so the shuffle carries nb × corpus bytes
-    (nb ≈ 64 at the 1M-row end: ~32 GB spread across the cluster,
-    where the old closure stalled the DRIVER on 512 MB per action).
+    (nb ≈ 64 at the 1M-row end: ~32 GB spread across the cluster).
     All-PAIRS output is O(n²) rows, so any n where this entry is
     feasible at all keeps nb small; beyond that, the cell-blocked
     ``semantic_dedup_pairs`` / LSH / IVF paths are the documented
@@ -280,15 +255,15 @@ def cosine_pairs_blas(
     # the matrix build (r10 all-NULL axis; r12 vector-specials axis
     # extends the drop to NaN/Inf components and zero norm, which
     # would otherwise poison the normalized matrix)
-    src = vectors.filter(vec_valid(vec_col)).select(
-        F.col(id_col).alias("id"), as_double_vec(vec_col).alias("v")
+    src = vectors.filter(vec_valid("embedding")).select(
+        F.col("vec_id").alias("id"), as_double_vec("embedding").alias("v")
     )
     # the kernel packs ids as int64; check the type before the count
     id_type = src.schema["id"].dataType
     if not isinstance(id_type, IntegralType):
         raise ValueError(
-            f"cosine_pairs_blas: id column {id_col!r} must be an integer"
-            f" type, got {id_type.simpleString()}"
+            "cosine_pairs_blas: vec_id must be an integer type, got"
+            f" {id_type.simpleString()}"
         )
     n = src.count()  # bounded action: one long, sizes the block grid
     if n == 0:
@@ -401,9 +376,6 @@ def lsh_bucket_topk(
     k: int = 5,
     n_planes: int = 4,
     n_tables: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Multi-table hyperplane-LSH ANN: ``n_tables`` independent
     sign-of-projection signatures of ``n_planes`` bits each; a corpus
@@ -414,21 +386,17 @@ def lsh_bucket_topk(
     100 TB path (tune n_planes up for bigger corpora: bucket size ~
     n/2^n_planes per table).
 
-    Signature kernel (r7, the cosine_pairs_blas lesson applied one
-    entry over): the sign bits were interpreted HOF folds — 64-term
-    ``aggregate(zip_with(...))`` per bit × n_tables·n_planes bits per
-    row, ~2 000 lambda evaluations/vector and the dominant cost of the
-    whole entry (6× the re-rank at sf0.1). Now ONE ``X @ P[t].T`` per
-    table per Arrow batch inside ``mapInPandas`` — identical bucket
-    integers: the planes are the same splitmix constants, and
+    Signature kernel: ONE ``X @ P[t].T`` per table per Arrow batch
+    inside ``mapInPandas``, where HOF folds would evaluate ~2 000
+    lambdas per vector. The bucket integers equal a sequential fold's:
+    the planes are the same splitmix constants, and
     ``tests/test_fixture_margins.py`` pins every projection's distance
     from zero orders of magnitude above BLAS-vs-sequential-fold
     summation drift at all fixture SFs (the independent replay in
     test_independent_reference_values.py computes signatures with the
-    same matmul). The constant matrix (n_tables×n_planes×dim doubles,
+    same matmul). The constant matrix (n_tables×n_planes×DIM doubles,
     ~16 KB at the defaults) rides the task closure; the n_tables-way
-    posting expansion happens inside the kernel, replacing the
-    explode.
+    posting expansion happens inside the kernel, with no explode.
 
     Boundary sensitivity for EXTERNAL callers (ADVICE r7-4): the sign
     bit ``proj > 0`` is evaluated under BLAS summation order, which
@@ -446,14 +414,13 @@ def lsh_bucket_topk(
     import pandas as pd
 
     planes_all = [
-        np.array(_hyperplanes(dim, n_planes, t), dtype="float64")
+        np.array(_hyperplanes(DIM, n_planes, t), dtype="float64")
         for t in range(n_tables)
     ]
     bit_weights = (1 << np.arange(n_planes, dtype="int64")).astype("int64")
 
     def with_buckets(df: DataFrame, idc: str, vc: str, nc: str) -> DataFrame:
-        # id column type derives from the input so the helper stays as
-        # generic as the HOF version was (string ids, ints, ...)
+        # id column type derives from the input (string ids, ints, ...)
         id_type = df.schema[idc].dataType.simpleString()
         out_schema = (
             f"{idc} {id_type}, {vc} ARRAY<DOUBLE>, {nc} DOUBLE, bucket BIGINT"
@@ -482,16 +449,16 @@ def lsh_bucket_topk(
     # ROW here and echoed through the kernel, so the rerank pays one
     # dot fold per candidate pair instead of three (r12).
     q = with_buckets(
-        queries.filter(vec_valid(vec_col)).select(
-            F.col(id_col).alias("query_id"), as_double_vec(vec_col).alias("qv")
+        queries.filter(vec_valid("embedding")).select(
+            F.col("vec_id").alias("query_id"), as_double_vec("embedding").alias("qv")
         ).withColumn("qn", norm(F.col("qv"))),
         "query_id",
         "qv",
         "qn",
     )
     c = with_buckets(
-        corpus.filter(vec_valid(vec_col)).select(
-            F.col(id_col).alias("neighbor_id"), as_double_vec(vec_col).alias("cv")
+        corpus.filter(vec_valid("embedding")).select(
+            F.col("vec_id").alias("neighbor_id"), as_double_vec("embedding").alias("cv")
         ).withColumn("cn", norm(F.col("cv"))),
         "neighbor_id",
         "cv",
@@ -514,7 +481,7 @@ def lsh_bucket_topk(
 # ---------------------------------------------------------------------------
 
 
-def _empty_topk(queries: DataFrame, corpus: DataFrame, id_col: str) -> DataFrame:
+def _empty_topk(queries: DataFrame, corpus: DataFrame) -> DataFrame:
     """Typed empty (query_id, neighbor_id, sim, rank) frame: the answer
     of every centroid-indexed top-k when the stride sample is empty (a
     zero-row corpus, or no vector id a multiple of the stride). No cell
@@ -522,16 +489,14 @@ def _empty_topk(queries: DataFrame, corpus: DataFrame, id_col: str) -> DataFrame
     empty ``cents`` CTE gives the same empty set. Id column types track
     the input frames so the schema is identical to the non-empty path's
     output."""
-    qt = dict(queries.dtypes)[id_col]
-    ct = dict(corpus.dtypes)[id_col]
+    qt = dict(queries.dtypes)["vec_id"]
+    ct = dict(corpus.dtypes)["vec_id"]
     return queries.sparkSession.createDataFrame(
         [], f"query_id {qt}, neighbor_id {ct}, sim double, rank int"
     )
 
 
-def _packed_centroids_data(
-    corpus: DataFrame, n_cells: int, id_col: str, vec_col: str
-) -> list:
+def _packed_centroids_data(corpus: DataFrame, n_cells: int) -> list:
     """Driver-side ``[(cell, [float, ...]), ...]`` stride-sampled
     centroids, in ONE Spark action: the stride is derived in-plan from
     a 1-row count aggregate (the oracle's own ``params`` CTE shape) and
@@ -545,7 +510,9 @@ def _packed_centroids_data(
         (F.col("__n") / F.lit(n_cells)).cast("long"),
     )
     rows = (
-        corpus.select(F.col(id_col).alias("cid"), as_double_vec(vec_col).alias("cv"))
+        corpus.select(
+            F.col("vec_id").alias("cid"), as_double_vec("embedding").alias("cv")
+        )
         .crossJoin(F.broadcast(cnt))
         .filter(F.pmod(F.col("cid"), stride) == 0)
         .orderBy("cid")
@@ -655,8 +622,6 @@ def ivf_topk(
     k: int = 5,
     n_cells: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF ANN: partition the corpus into ``n_cells`` Voronoi cells around
     coarse centroids, probe only the ``n_probe`` nearest cells per query,
@@ -676,21 +641,21 @@ def ivf_topk(
     pinned in tests.
     """
     # vector-geometry contract v2 (r12): corrupt vectors dropped
-    queries = queries.filter(vec_valid(vec_col))
-    corpus = corpus.filter(vec_valid(vec_col))
-    cents = _packed_centroids_data(corpus, n_cells, id_col, vec_col)
+    queries = queries.filter(vec_valid("embedding"))
+    corpus = corpus.filter(vec_valid("embedding"))
+    cents = _packed_centroids_data(corpus, n_cells)
     if not cents:
-        return _empty_topk(queries, corpus, id_col)
+        return _empty_topk(queries, corpus)
 
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double_vec(vec_col).alias("cv")
+        F.col("vec_id").alias("neighbor_id"), as_double_vec("embedding").alias("cv")
     ).withColumn("cn", norm(F.col("cv")))  # per-row norm, not per-pair (r12)
     kernel, schema = _assign_cells_kernel(
         cents, "neighbor_id", dict(c.dtypes)["neighbor_id"], "cv", (("cn", "DOUBLE"),)
     )
     c_cells = c.mapInPandas(kernel, schema=schema)
     q = queries.select(
-        F.col(id_col).alias("query_id"), as_double_vec(vec_col).alias("qv")
+        F.col("vec_id").alias("query_id"), as_double_vec("embedding").alias("qv")
     ).withColumn("qn", norm(F.col("qv")))
     # top n_probe cells per query: sort the struct array desc, slice, project
     packed = _packed_frame(corpus.sparkSession, cents)
@@ -716,32 +681,24 @@ def ivf_topk(
     return rank_neighbors(sims, k)
 
 
-def assign_cells(
-    vectors: DataFrame,
-    n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def assign_cells(vectors: DataFrame, n_cells: int = 16) -> DataFrame:
     """(id, v, cell): each vector labelled with its nearest stride-sampled
     centroid by the Arrow kernel — zero shuffles, plan size O(1) in
     n_cells. The coarse-quantizer assignment shared by IVF search and
     semantic (SemDeDup-style) dedup. An empty stride sample assigns no
     cell, so the result is empty."""
     # vector-geometry contract v2 (r12): corrupt vectors dropped
-    vectors = vectors.filter(vec_valid(vec_col))
-    v = vectors.select(F.col(id_col).alias("id"), as_double_vec(vec_col).alias("v"))
-    cents = _packed_centroids_data(vectors, n_cells, id_col, vec_col)
+    vectors = vectors.filter(vec_valid("embedding"))
+    v = vectors.select(
+        F.col("vec_id").alias("id"), as_double_vec("embedding").alias("v")
+    )
+    cents = _packed_centroids_data(vectors, n_cells)
     kernel, schema = _assign_cells_kernel(cents, "id", dict(v.dtypes)["id"], "v")
     return v.mapInPandas(kernel, schema=schema)
 
 
 def semantic_dedup_pairs(
-    vectors: DataFrame,
-    threshold: float,
-    n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_rows: int = 1024,
+    vectors: DataFrame, threshold: float, n_cells: int = 16, block_rows: int = 1024
 ) -> DataFrame:
     """SemDeDup-style semantic near-dup pairs: bucket every vector into
     its nearest-centroid cell, then emit cosine-≥-threshold pairs WITHIN
@@ -752,9 +709,8 @@ def semantic_dedup_pairs(
     share a cluster by construction of the embedding space). Assignment
     is the zero-shuffle Arrow kernel of :func:`assign_cells`; pair
     emission is ONE ``applyInPandas`` over the cell key (one shuffle)
-    computing each cell's pair block by BLAS matmul — the r6 treatment that took the
-    brute-force twin from 78 s to 0.55 s applied per cell (the HOF
-    self-join it replaces evaluated a d-term fold per PAIR).
+    computing each cell's pair block by BLAS matmul, not a d-term fold
+    per PAIR.
 
     Hot-cell memory contract (ADVICE r6-1): a whole cell of m rows
     does land in one Python worker — applyInPandas groups are
@@ -775,8 +731,8 @@ def semantic_dedup_pairs(
     # NULL vectors carry no geometry — drop them JVM-side before cell
     # assignment (scan-pushed; keeps NULL rows out of both the stride
     # centroid sample and the pair kernel's np.stack). r10 all-NULL axis.
-    vectors = vectors.filter(vec_valid(vec_col))
-    assigned = assign_cells(vectors, n_cells, id_col, vec_col)
+    vectors = vectors.filter(vec_valid("embedding"))
+    assigned = assign_cells(vectors, n_cells)
 
     def cell_pairs(pdf: "pd.DataFrame") -> "pd.DataFrame":
         if len(pdf) < 2:
@@ -819,28 +775,22 @@ def semantic_dedup_pairs(
     )
 
 
-def label_centroids(
-    vectors: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def label_centroids(vectors: DataFrame) -> DataFrame:
     """Element-wise mean embedding per label — class centroids, the
     aggregation behind IVF coarse quantizers, per-class prototypes, and
     embedding-drift monitoring. posexplode → groupBy (label, position) →
     avg: partial aggregation map-side, shuffle carries one row per
     (label, dim) — corpus-size-independent."""
     # vector-geometry contract v2 (r12): corrupt vectors dropped
-    vectors = vectors.filter(vec_valid(vec_col))
+    vectors = vectors.filter(vec_valid("embedding"))
     ex = vectors.select(
-        F.col(label_col).alias("label"),
-        F.posexplode(as_double_vec(vec_col)).alias("pos", "val"),
+        "label",
+        F.posexplode(as_double_vec("embedding")).alias("pos", "val"),
     )
     return ex.groupBy("label", "pos").agg(F.round(F.avg("val"), 6).alias("c"))
 
 
-def normalize_quantize(
-    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
+def normalize_quantize(df: DataFrame) -> DataFrame:
     """L2-normalize an embedding column and int8-quantize it
     (q = round(127 * x / ||v||)) — the standard storage/ANN-index prep
     for a trained-embedding corpus. Pure per-row expressions (transform/
@@ -848,8 +798,8 @@ def normalize_quantize(
     rounded to 6 decimals for output (accumulation-order ulp) while the
     quantizer divides by the raw norm."""
     # vector-geometry contract v2 (r12): corrupt vectors dropped
-    df = df.filter(vec_valid(vec_col))
-    # r12 optimization: materialize the norm as its OWN projection so
+    df = df.filter(vec_valid("embedding"))
+    # materialize the norm as its OWN projection so
     # the quantizer lambda references an attribute, not the fold
     # expression — inlined, the d-term norm fold was re-evaluated for
     # EVERY transform element (O(d²) per row, and HOF folds are
@@ -857,10 +807,10 @@ def normalize_quantize(
     # CollapseProject keeps it materialized.  Values are bit-identical:
     # same fold, evaluated once.
     base = df.select(
-        F.col(id_col), as_double_vec(vec_col).alias("__v")
+        "vec_id", as_double_vec("embedding").alias("__v")
     ).withColumn("__nrm", norm(F.col("__v")))
     return base.select(
-        F.col(id_col),
+        "vec_id",
         F.round(F.col("__nrm"), 6).alias("l2_norm"),
         F.transform(
             F.col("__v"), lambda x: F.round(x / F.col("__nrm") * 127).cast("int")
@@ -874,8 +824,6 @@ def pq_topk(
     k: int = 5,
     n_subspaces: int = 8,
     n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Product-quantization ANN (the vector-database compression path):
     split each d-dim vector into ``n_subspaces`` slices, quantize every
@@ -901,11 +849,11 @@ def pq_topk(
 
     # NULL vectors carry no geometry — not encodable, not candidates;
     # drop JVM-side (scan-pushed). r10 all-NULL axis.
-    corpus = corpus.filter(vec_valid(vec_col))
-    queries = queries.filter(vec_valid(vec_col))
-    cents = _packed_centroids_data(corpus, n_cells, id_col, vec_col)
+    corpus = corpus.filter(vec_valid("embedding"))
+    queries = queries.filter(vec_valid("embedding"))
+    cents = _packed_centroids_data(corpus, n_cells)
     if not cents:
-        return _empty_topk(queries, corpus, id_col)
+        return _empty_topk(queries, corpus)
     d = len(cents[0][1])  # centroids come FROM the corpus
     if d % n_subspaces:
         raise ValueError(f"dim {d} not divisible by {n_subspaces} subspaces")
@@ -922,7 +870,7 @@ def pq_topk(
     C = np.array([cv for _, cv in cents], dtype="float64")
     nearest = _nearest_cell_fn()
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double_vec(vec_col).alias("cv")
+        F.col("vec_id").alias("neighbor_id"), as_double_vec("embedding").alias("cv")
     )
     code_schema = f"neighbor_id {dict(c.dtypes)['neighbor_id']}, " + ", ".join(
         f"code_{s} INT" for s in range(n_subspaces)
@@ -966,7 +914,7 @@ def pq_topk(
     ]
     q = (
         queries.select(
-            F.col(id_col).alias("query_id"), as_double_vec(vec_col).alias("qv")
+            F.col("vec_id").alias("query_id"), as_double_vec("embedding").alias("qv")
         )
         .crossJoin(F.broadcast(packed))
         .select("query_id", *lut_cols)
@@ -984,12 +932,7 @@ def pq_topk(
 
 
 def binary_hamming_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    shortlist: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    queries: DataFrame, corpus: DataFrame, k: int = 5, shortlist: int = 50
 ) -> DataFrame:
     """Binary-quantization ANN: 1-bit sign codes + Hamming shortlist +
     exact cosine rerank — the modern embedding-compression serving
@@ -1005,8 +948,8 @@ def binary_hamming_topk(
     sign bits of identical floats, integer Hamming, the same cosine
     expression as brute_force_topk, ties broken by neighbor id."""
     # vector-geometry contract v2 (r12): corrupt vectors dropped
-    queries = queries.filter(vec_valid(vec_col))
-    corpus = corpus.filter(vec_valid(vec_col))
+    queries = queries.filter(vec_valid("embedding"))
+    corpus = corpus.filter(vec_valid("embedding"))
     weights = [(2**i if i < 63 else -(2**63)) for i in range(64)]
     warr = F.array(*[F.lit(w).cast("long") for w in weights])
 
@@ -1020,16 +963,16 @@ def binary_hamming_topk(
 
     q = (
         queries.select(
-            F.col(id_col).alias("query_id"),
-            as_double_vec(vec_col).alias("qv"),
+            F.col("vec_id").alias("query_id"),
+            as_double_vec("embedding").alias("qv"),
         )
         .withColumn("qcode", code(F.col("qv")))
         .withColumn("qn", norm(F.col("qv")))  # per-row norm (r12)
     )
     c = (
         corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double_vec(vec_col).alias("cv"),
+            F.col("vec_id").alias("neighbor_id"),
+            as_double_vec("embedding").alias("cv"),
         )
         .withColumn("ccode", code(F.col("cv")))
         .withColumn("cn", norm(F.col("cv")))
@@ -1054,12 +997,7 @@ def binary_hamming_topk(
 
 
 def sq8_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    shortlist: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    queries: DataFrame, corpus: DataFrame, k: int = 5, shortlist: int = 50
 ) -> DataFrame:
     """Scalar-quantization (SQ8) ANN: per-dimension min-max int8 codes
     + integer-dot shortlist + exact cosine rerank — the 4x-compression
@@ -1081,12 +1019,11 @@ def sq8_topk(
     expression brute_force_topk gates). Ties break on neighbor id at
     both stages."""
     # vector-geometry contract v2 (r12): corrupt vectors dropped
-    queries = queries.filter(vec_valid(vec_col))
-    corpus = corpus.filter(vec_valid(vec_col))
-    dim = 64
+    queries = queries.filter(vec_valid("embedding"))
+    corpus = corpus.filter(vec_valid("embedding"))
     vstats = (
         corpus.select(
-            F.posexplode(as_double_vec(vec_col)).alias("pos", "x")
+            F.posexplode(as_double_vec("embedding")).alias("pos", "x")
         )
         .groupBy("pos")
         .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
@@ -1120,8 +1057,8 @@ def sq8_topk(
 
     q = (
         queries.select(
-            F.col(id_col).alias("query_id"),
-            as_double_vec(vec_col).alias("qv"),
+            F.col("vec_id").alias("query_id"),
+            as_double_vec("embedding").alias("qv"),
         )
         .crossJoin(F.broadcast(vstats))
         .withColumn("qcode", code(F.col("qv")))
@@ -1130,8 +1067,8 @@ def sq8_topk(
     )
     c = (
         corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double_vec(vec_col).alias("cv"),
+            F.col("vec_id").alias("neighbor_id"),
+            as_double_vec("embedding").alias("cv"),
         )
         .crossJoin(F.broadcast(vstats))
         .withColumn("ccode", code(F.col("cv")))

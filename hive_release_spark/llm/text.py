@@ -60,14 +60,14 @@ def bigrams(text: Column | str) -> Column:
     return bigrams_of(tokens(text))
 
 
-def top_ngrams(df: DataFrame, text_col: str = "text", n_out: int = 30) -> DataFrame:
+def top_ngrams(df: DataFrame, n_out: int = 30) -> DataFrame:
     """Corpus-level top-k bigram frequencies (Hive GenericUDAFnGrams
     parity): explode → count → top-k. Scales as a word-count."""
     # token array materialized in its own projection (expression-reuse
     # trap), then explode_outer: an inner explode would get an
     # InferFiltersFromGenerate size-filter pushed into the scan with the
     # full split-inlined bigram expression (per-element re-evaluation)
-    grams = df.select(tokens(F.col(text_col)).alias("w")).select(
+    grams = df.select(tokens("text").alias("w")).select(
         bigrams_of(F.col("w")).alias("ngrams")
     )
     return (
@@ -80,12 +80,7 @@ def top_ngrams(df: DataFrame, text_col: str = "text", n_out: int = 30) -> DataFr
     )
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     """Per-document top-k TF-IDF terms — the classic relevance/keyword
     operator over a corpus. tf = in-doc term count; idf = ln((N+1)/(df+1))
     with df = number of docs containing the term.
@@ -105,7 +100,7 @@ def tfidf_top_terms(
     from pyspark.sql import Window
 
     terms = (
-        df.select(F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("w"))
+        df.select("doc_id", tokens("text").alias("w"))
         .select("doc_id", F.explode_outer("w").alias("term"))
         .filter(F.col("term").isNotNull())
     )
@@ -184,9 +179,7 @@ def langid_ngram(texts: pd.Series) -> pd.Series:
     return texts.map(score)
 
 
-def repetition_features(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_features(df: DataFrame) -> DataFrame:
     """Gopher/C4-style repetition quality signals per document:
     ``top_bigram_share`` (fraction of bigram occurrences taken by the
     most frequent bigram) and ``distinct_token_ratio``. Docs with fewer
@@ -203,7 +196,7 @@ def repetition_features(
     ratio is carried with min(). Ratios are exact rational divisions
     (int/int), bit-identical across engines — left unrounded.
     """
-    base = df.select(F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("w"))
+    base = df.select("doc_id", tokens("text").alias("w"))
     feat = base.select(
         "doc_id",
         # explicit NULL guard: under ANSI-off sessions size(NULL) is -1
@@ -242,12 +235,12 @@ PII_EMAIL = "[a-z0-9]+@[a-z0-9.]+"
 PII_PHONE = "\\+1-555-[0-9]{4}"
 
 
-def pii_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_scrub(df: DataFrame) -> DataFrame:
     """PII redaction pass: replace email / phone matches with typed
     placeholders and count redactions per row. Pure JVM regex
     (regexp_extract_all + regexp_replace) — no UDF; patterns are kept to
     the POSIX-class subset whose semantics agree across engines."""
-    s = F.col(text_col)
+    s = F.col("text")
     return df.withColumns(
         {
             "n_email": F.size(F.regexp_extract_all(s, F.lit(PII_EMAIL), F.lit(0))),
@@ -275,7 +268,7 @@ _UNICODE_SKEW = (
 )
 
 
-def mask_evasion_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
+def mask_evasion_profile(df: DataFrame) -> DataFrame:
     """Corpus-level PII-mask evasion measurement (VERDICT r11 #8): how
     much of the corpus carries codepoints that Spark's ``mask()``
     would silently pass through. A 100 TB PII pipeline wants this as
@@ -287,7 +280,7 @@ def mask_evasion_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
     One scan-side aggregate, pure JVM regex (codepoint-aware, unlike
     the mask's own UTF-16 char walk) — no UDF, no shuffle beyond the
     single partial/final aggregation."""
-    s = F.col(text_col)
+    s = F.col("text")
     astral = F.regexp_count(s, F.lit(_ASTRAL_MASKABLE))
     skew = F.regexp_count(s, F.lit(_UNICODE_SKEW))
     return df.select(
@@ -302,11 +295,7 @@ def mask_evasion_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def vocab_coverage(
-    df: DataFrame,
-    cutoff: float = 0.999,
-    text_col: str = "text",
-) -> DataFrame:
+def vocab_coverage(df: DataFrame, cutoff: float = 0.999) -> DataFrame:
     """Tokenizer vocabulary construction: keep the most frequent terms
     until they cover ``cutoff`` of total token mass (the frequency-based
     vocab cut every word-level tokenizer starts from). A term is kept
@@ -321,7 +310,7 @@ def vocab_coverage(
     from pyspark.sql import Window
 
     counts = (
-        df.select(tokens(F.col(text_col)).alias("w"))
+        df.select(tokens("text").alias("w"))
         .select(F.explode_outer("w").alias("term"))
         .filter(F.col("term").isNotNull())
         .groupBy("term")
@@ -348,12 +337,7 @@ def vocab_coverage(
     )
 
 
-def encode_word_ids(
-    docs: DataFrame,
-    vocab: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def encode_word_ids(docs: DataFrame, vocab: DataFrame) -> DataFrame:
     """Corpus → token-id sequences against a (term, rank) vocabulary —
     the materialization step between vocabulary construction and
     sequence packing. Out-of-vocab tokens encode as 0 (UNK); ids are the
@@ -370,7 +354,7 @@ def encode_word_ids(
 
     v = vocab.select(F.col("term"), F.col("rank").alias("tok_id"))
     toks = (
-        docs.select(F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("w"))
+        docs.select("doc_id", tokens("text").alias("w"))
         .select("doc_id", F.posexplode_outer("w").alias("pos", "term"))
         .filter(F.col("term").isNotNull())
     )
@@ -395,11 +379,7 @@ def encode_word_ids(
     )
 
 
-def lm_bigram_score(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def lm_bigram_score(docs: DataFrame) -> DataFrame:
     """CCNet-style language-model quality score: train a bigram LM on
     the corpus itself (one pass), then score every document by its mean
     add-one-smoothed bigram log-probability — the filter that separates
@@ -427,7 +407,7 @@ def lm_bigram_score(
     from pyspark import StorageLevel
 
     big = (
-        docs.select(F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("w"))
+        docs.select("doc_id", tokens("text").alias("w"))
         .filter(F.size("w") >= 2)
         .select(
             "doc_id",
@@ -447,7 +427,7 @@ def lm_bigram_score(
     cb = big.groupBy("w1", "w2").agg(F.count("*").alias("cb"))
     ch = big.groupBy("w1").agg(F.count("*").alias("ch"))
     vocab_n = (
-        docs.select(F.explode(tokens(F.col(text_col))).alias("t"))
+        docs.select(F.explode(tokens("text")).alias("t"))
         .agg(F.countDistinct("t").alias("v"))
     )
     return (

@@ -31,8 +31,63 @@ rows carry NULLs).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+
+
+def _asof(
+    fn: str,
+    left: DataFrame,
+    right: DataFrame,
+    on: str,
+    left_t: str,
+    right_t: str,
+    right_payload: list[str] | None,
+    r_struct: Callable[[list[str]], Column],
+    match: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """The body every as-of join shares: tag both sides into one
+    (__k, __t, __is_left, __l, __r) stream, let ``match`` give each left
+    row the ``__match`` payload struct it joins, and unpack ``__l`` and
+    ``__match`` into the output columns.
+
+    ``r_struct(payload)`` builds the right side's ``__r`` struct; each
+    side carries the other side's struct as a typed NULL, so the union
+    lines up by name. ``match(unioned)`` returns the left rows only."""
+    if right_payload is None:
+        right_payload = [c for c in right.columns if c not in (on, right_t)]
+    lcols = list(left.columns)
+    clash = set(lcols) & set(right_payload)
+    if clash:
+        raise ValueError(
+            f"{fn} output would duplicate columns {sorted(clash)}; "
+            "rename or restrict right_payload"
+        )
+    l_struct, rs = F.struct(*lcols), r_struct(right_payload)
+
+    def null_of(df: DataFrame, struct: Column) -> Column:
+        return F.lit(None).cast(df.select(struct.alias("s")).schema["s"].dataType)
+
+    l_tag = left.select(
+        F.col(on).alias("__k"),
+        F.col(left_t).alias("__t"),
+        F.lit(1).alias("__is_left"),
+        l_struct.alias("__l"),
+        null_of(right, rs).alias("__r"),
+    )
+    r_tag = right.select(
+        F.col(on).alias("__k"),
+        F.col(right_t).alias("__t"),
+        F.lit(0).alias("__is_left"),
+        null_of(left, l_struct).alias("__l"),
+        rs.alias("__r"),
+    )
+    return match(l_tag.unionByName(r_tag)).select(
+        *[F.col("__l")[c].alias(c) for c in lcols],
+        *[F.col("__match")[c].alias(c) for c in right_payload],
+    )
 
 
 def asof_join(
@@ -53,48 +108,23 @@ def asof_join(
     carried row is the last in the per-key sort order, which this
     function makes deterministic by sorting the payload struct.
     """
-    if right_payload is None:
-        right_payload = [c for c in right.columns if c not in (on, right_t)]
 
-    lcols = [c for c in left.columns]
-    clash = set(lcols) & set(right_payload)
-    if clash:
-        raise ValueError(
-            f"asof_join output would duplicate columns {sorted(clash)}; "
-            "rename or restrict right_payload"
+    def match(unioned: DataFrame) -> DataFrame:
+        # right rows (is_left=0) sort before left rows at equal __t, then
+        # by the payload struct for a deterministic winner among
+        # same-t rights
+        w = (
+            W.partitionBy("__k")
+            .orderBy("__t", "__is_left", F.col("__r").asc_nulls_last())
+            .rowsBetween(W.unboundedPreceding, W.currentRow)
         )
-    l_tag = left.select(
-        F.col(on).alias("__k"),
-        F.col(left_t).alias("__t"),
-        F.lit(1).alias("__is_left"),
-        F.struct(*lcols).alias("__l"),
-        F.lit(None).cast(
-            right.select(F.struct(*right_payload).alias("s")).schema["s"].dataType
-        ).alias("__r"),
+        return unioned.withColumn(
+            "__match", F.last("__r", ignorenulls=True).over(w)
+        ).filter(F.col("__is_left") == 1)
+
+    return _asof(
+        "asof_join", left, right, on, left_t, right_t, right_payload, F.struct, match
     )
-    r_tag = right.select(
-        F.col(on).alias("__k"),
-        F.col(right_t).alias("__t"),
-        F.lit(0).alias("__is_left"),
-        F.lit(None).cast(
-            left.select(F.struct(*lcols).alias("s")).schema["s"].dataType
-        ).alias("__l"),
-        F.struct(*right_payload).alias("__r"),
-    )
-    unioned = l_tag.unionByName(r_tag)
-    # right rows (is_left=0) sort before left rows at equal __t, then by
-    # the payload struct for a deterministic winner among same-t rights
-    w = (
-        W.partitionBy("__k")
-        .orderBy("__t", "__is_left", F.col("__r").asc_nulls_last())
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    carried = unioned.withColumn("__match", F.last("__r", ignorenulls=True).over(w))
-    out = carried.filter(F.col("__is_left") == 1).select(
-        *[F.col("__l")[c].alias(c) for c in lcols],
-        *[F.col("__match")[c].alias(c) for c in right_payload],
-    )
-    return out
 
 
 def asof_join_nearest(
@@ -120,71 +150,51 @@ def asof_join_nearest(
     Right rows must be unique per (key, t) — same pre-dedup contract as
     asof_join.
     """
-    if right_payload is None:
-        right_payload = [c for c in right.columns if c not in (on, right_t)]
-    lcols = list(left.columns)
-    clash = set(lcols) & set(right_payload)
-    if clash:
-        raise ValueError(
-            f"asof_join_nearest output would duplicate columns {sorted(clash)}; "
-            "rename or restrict right_payload"
-        )
-    r_struct = F.struct(
-        F.col(right_t).alias("__rt"), F.struct(*right_payload).alias("p")
-    )
-    l_tag = left.select(
-        F.col(on).alias("__k"),
-        F.col(left_t).alias("__t"),
-        F.lit(1).alias("__is_left"),
-        F.struct(*lcols).alias("__l"),
-        F.lit(None)
-        .cast(right.select(r_struct.alias("s")).schema["s"].dataType)
-        .alias("__r"),
-    )
-    r_tag = right.select(
-        F.col(on).alias("__k"),
-        F.col(right_t).alias("__t"),
-        F.lit(0).alias("__is_left"),
-        F.lit(None)
-        .cast(left.select(F.struct(*lcols).alias("s")).schema["s"].dataType)
-        .alias("__l"),
-        r_struct.alias("__r"),
-    )
-    unioned = l_tag.unionByName(r_tag)
-    order = W.partitionBy("__k").orderBy("__t", "__is_left")
-    prev_w = order.rowsBetween(W.unboundedPreceding, W.currentRow)
-    next_w = order.rowsBetween(W.currentRow, W.unboundedFollowing)
-    # rights sort before lefts at equal __t, so an exact-t right lands in
-    # the PREV window (distance 0) and never in NEXT — no double match
-    both = unioned.select(
-        "*",
-        F.last("__r", ignorenulls=True).over(prev_w).alias("__prev"),
-        F.first("__r", ignorenulls=True).over(next_w).alias("__next"),
-    ).filter(F.col("__is_left") == 1)
-    # unix_micros over an NTZ->TZ cast, not unix_timestamp: whole-second
-    # truncation would misrank prev/next (and mis-apply the tolerance) by
-    # up to ~1s on sub-second timestamps. The NTZ->BIGINT cast is
-    # rejected outright; the NTZ->TIMESTAMP cast is value-exact because
-    # the session tz is pinned UTC.
-    def _us(c):
-        return F.unix_micros(c.cast("timestamp"))
 
-    t = _us(F.col("__t"))
-    d_prev = t - _us(F.col("__prev.__rt"))
-    d_next = _us(F.col("__next.__rt")) - t
-    tol_us = int(tolerance_s * 1_000_000)
-    prev_ok = F.col("__prev").isNotNull() & (d_prev <= tol_us)
-    next_ok = F.col("__next").isNotNull() & (d_next <= tol_us)
-    # equal distance -> the at-or-before row wins (<=, not <)
-    match = (
-        F.when(prev_ok & next_ok, F.when(d_prev <= d_next, F.col("__prev.p")).otherwise(F.col("__next.p")))
-        .when(prev_ok, F.col("__prev.p"))
-        .when(next_ok, F.col("__next.p"))
-    )
-    out = both.withColumn("__match", match)
-    return out.select(
-        *[F.col("__l")[c].alias(c) for c in lcols],
-        *[F.col("__match")[c].alias(c) for c in right_payload],
+    def r_struct(payload: list[str]) -> Column:
+        return F.struct(F.col(right_t).alias("__rt"), F.struct(*payload).alias("p"))
+
+    def match(unioned: DataFrame) -> DataFrame:
+        order = W.partitionBy("__k").orderBy("__t", "__is_left")
+        prev_w = order.rowsBetween(W.unboundedPreceding, W.currentRow)
+        next_w = order.rowsBetween(W.currentRow, W.unboundedFollowing)
+        # rights sort before lefts at equal __t, so an exact-t right lands
+        # in the PREV window (distance 0) and never in NEXT — no double
+        # match
+        both = unioned.select(
+            "*",
+            F.last("__r", ignorenulls=True).over(prev_w).alias("__prev"),
+            F.first("__r", ignorenulls=True).over(next_w).alias("__next"),
+        ).filter(F.col("__is_left") == 1)
+
+        # unix_micros over an NTZ->TZ cast, not unix_timestamp: whole-second
+        # truncation would misrank prev/next (and mis-apply the tolerance)
+        # by up to ~1s on sub-second timestamps. The NTZ->BIGINT cast is
+        # rejected outright; the NTZ->TIMESTAMP cast is value-exact because
+        # the session tz is pinned UTC.
+        def _us(c):
+            return F.unix_micros(c.cast("timestamp"))
+
+        t = _us(F.col("__t"))
+        d_prev = t - _us(F.col("__prev.__rt"))
+        d_next = _us(F.col("__next.__rt")) - t
+        tol_us = int(tolerance_s * 1_000_000)
+        prev_ok = F.col("__prev").isNotNull() & (d_prev <= tol_us)
+        next_ok = F.col("__next").isNotNull() & (d_next <= tol_us)
+        # equal distance -> the at-or-before row wins (<=, not <)
+        nearest = F.when(d_prev <= d_next, F.col("__prev.p")).otherwise(
+            F.col("__next.p")
+        )
+        return both.withColumn(
+            "__match",
+            F.when(prev_ok & next_ok, nearest)
+            .when(prev_ok, F.col("__prev.p"))
+            .when(next_ok, F.col("__next.p")),
+        )
+
+    return _asof(
+        "asof_join_nearest", left, right, on, left_t, right_t, right_payload,
+        r_struct, match,
     )
 
 
@@ -213,50 +223,22 @@ def asof_join_forward(
     Same dedup contract as the backward form: pre-dedup ``right`` to
     one row per (key, t) for a stable match.
     """
-    if right_payload is None:
-        right_payload = [c for c in right.columns if c not in (on, right_t)]
 
-    lcols = [c for c in left.columns]
-    clash = set(lcols) & set(right_payload)
-    if clash:
-        raise ValueError(
-            f"asof_join_forward output would duplicate columns "
-            f"{sorted(clash)}; rename or restrict right_payload"
+    def match(unioned: DataFrame) -> DataFrame:
+        # __is_left DESC orders left rows BEFORE right rows at equal __t,
+        # so the frame (current..following) of a left row includes
+        # same-t rights; same-t rights pick the smallest payload struct
+        # first.
+        w = (
+            W.partitionBy("__k")
+            .orderBy("__t", F.col("__is_left").desc(), F.col("__r").asc_nulls_last())
+            .rowsBetween(W.currentRow, W.unboundedFollowing)
         )
-    l_tag = left.select(
-        F.col(on).alias("__k"),
-        F.col(left_t).alias("__t"),
-        F.lit(1).alias("__is_left"),
-        F.struct(*lcols).alias("__l"),
-        F.lit(None).cast(
-            right.select(F.struct(*right_payload).alias("s")).schema["s"].dataType
-        ).alias("__r"),
+        return unioned.withColumn(
+            "__match", F.first("__r", ignorenulls=True).over(w)
+        ).filter(F.col("__is_left") == 1)
+
+    return _asof(
+        "asof_join_forward", left, right, on, left_t, right_t, right_payload,
+        F.struct, match,
     )
-    r_tag = right.select(
-        F.col(on).alias("__k"),
-        F.col(right_t).alias("__t"),
-        F.lit(0).alias("__is_left"),
-        F.lit(None).cast(
-            left.select(F.struct(*lcols).alias("s")).schema["s"].dataType
-        ).alias("__l"),
-        F.struct(*right_payload).alias("__r"),
-    )
-    unioned = l_tag.unionByName(r_tag)
-    # left rows (is_left=1 sorts AFTER 0... we need right rows at equal
-    # __t to be INSIDE the following frame of the left row) — order left
-    # rows BEFORE right rows at equal __t: __is_left DESC puts 1 first,
-    # so the frame (current..following) of a left row includes same-t
-    # rights; same-t rights pick the smallest payload struct first.
-    w = (
-        W.partitionBy("__k")
-        .orderBy("__t", F.col("__is_left").desc(), F.col("__r").asc_nulls_last())
-        .rowsBetween(W.currentRow, W.unboundedFollowing)
-    )
-    carried = unioned.withColumn(
-        "__match", F.first("__r", ignorenulls=True).over(w)
-    )
-    out = carried.filter(F.col("__is_left") == 1).select(
-        *[F.col("__l")[c].alias(c) for c in lcols],
-        *[F.col("__match")[c].alias(c) for c in right_payload],
-    )
-    return out

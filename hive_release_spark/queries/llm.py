@@ -293,17 +293,17 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_oracle(k: int = 5, n_planes: int = 4, n_tables: int = 8,
-                dim: int = 64, nq: int = 20) -> str:
-    """Full DuckDB replay of the hyperplane-LSH pipeline. The planes are
+def _lsh_oracle() -> str:
+    """Full DuckDB replay of ``sim_ann_lsh``: top-5 for the 20 queries
+    ``vec_id < 20`` under lsh_bucket_topk's 8 tables of 4 planes. The planes are
     deterministic splitmix-mixed constants (similarity._hyperplanes) —
     data-independent, so embedding the SAME literals in both engines is
     the shared-constant-text discipline the erf polynomial established
     (stats_tests._erf_sql), not a self-referential oracle: a bucketing,
     OR-amplification, dedup, or re-rank misreading still diverges."""
     arms = []
-    for t in range(n_tables):
-        planes = similarity._hyperplanes(dim, n_planes, t)
+    for t in range(8):
+        planes = similarity._hyperplanes(similarity.DIM, 4, t)
         bits = " + ".join(
             f"(CASE WHEN list_dot_product(v, [{', '.join(repr(x) for x in plane)}])"
             f" > 0 THEN {1 << i} ELSE 0 END)"
@@ -317,7 +317,7 @@ def _lsh_oracle(k: int = 5, n_planes: int = 4, n_tables: int = 8,
     cand AS (
       SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
       FROM sig q JOIN sig c USING (bucket)
-      WHERE q.vec_id < {nq} AND c.vec_id <> q.vec_id),
+      WHERE q.vec_id < 20 AND c.vec_id <> q.vec_id),
     sims AS (
       SELECT cand.query_id, cand.neighbor_id,
              list_cosine_similarity(q.v, c.v) AS sim
@@ -327,7 +327,7 @@ def _lsh_oracle(k: int = 5, n_planes: int = 4, n_tables: int = 8,
       SELECT query_id, neighbor_id, sim,
              row_number() OVER (PARTITION BY query_id
                  ORDER BY sim DESC, neighbor_id) AS rank
-      FROM sims) WHERE rank <= {k}
+      FROM sims) WHERE rank <= 5
     """
 
 
@@ -865,7 +865,7 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalizes by the smaller side, with (size, id) ordering making each
     unordered pair appear exactly once."""
     docs = load_table(spark, sf_dir, "documents")
-    ex = dedup._exploded_shingles(docs, 3, "doc_id", "text")
+    ex = dedup._exploded_shingles(docs, 3)
     postings = ex.groupBy("s_h").agg(
         F.sort_array(F.collect_list(F.struct("n_sh", "doc_id"))).alias("docs")
     )

@@ -35,13 +35,13 @@ def _bucket_expr(col: str, cuts: list[float]) -> Column:
     return F.size(F.filter(arr, lambda c: F.col(col).cast("double") >= c))
 
 
-def _interleave(buckets: list[Column], bits: int = BITS) -> Column:
+def _interleave(buckets: list[Column]) -> Column:
     """Morton interleave: bit i of column j lands at position
     i * n_cols + j."""
     n = len(buckets)
     parts = []
     for j, b in enumerate(buckets):
-        for i in range(bits):
+        for i in range(BITS):
             parts.append(
                 F.shiftleft(
                     F.shiftright(b.cast("long"), i).bitwiseAND(F.lit(1)),
@@ -51,29 +51,25 @@ def _interleave(buckets: list[Column], bits: int = BITS) -> Column:
     return functools.reduce(operator.add, parts)
 
 
-def zorder_key(df: DataFrame, cols: list[str], bits: int = BITS) -> Column:
-    """The z-value column for ``cols`` (each bucketed into 2**bits
+def zorder_key(df: DataFrame, cols: list[str]) -> Column:
+    """The z-value column for ``cols`` (each bucketed into 2**BITS
     quantile buckets so skewed distributions still spread evenly)."""
-    n_buckets = 2**bits
+    n_buckets = 2**BITS
     quantiles = [i / n_buckets for i in range(1, n_buckets)]
     buckets = []
     for c in cols:
         cuts = df.approxQuantile(c, quantiles, 0.001)
         buckets.append(_bucket_expr(c, cuts))
-    return _interleave(buckets, bits)
+    return _interleave(buckets)
 
 
 def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    n_files: int = 16,
-    bits: int = BITS,
+    df: DataFrame, path: str, cols: list[str], n_files: int = 16
 ) -> None:
     """Write ``df`` z-order-clustered on ``cols`` into ~``n_files``
     range-partitioned parquet files (each file owns a contiguous z-range,
     so its footer min/max is narrow on every clustered column)."""
-    z = zorder_key(df, cols, bits)
+    z = zorder_key(df, cols)
     (
         df.withColumn("__z", z)
         .repartitionByRange(n_files, "__z")

@@ -13,7 +13,7 @@ expires; dedup-keep-first is a window rank in batch and
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -28,12 +28,8 @@ from hive_release_spark.catalog import (
 # logical type as TIMESTAMP_NTZ, matching the batch loader exactly.
 _EVENTS_NATIVE_SCHEMA = T.StructType(
     [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampNTZType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
+        T.StructField(f.name, T.TimestampNTZType()) if f.name == "ts" else f
+        for f in _EVENTS_RAW_NS_SCHEMA.fields
     ]
 )
 
@@ -68,10 +64,10 @@ def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def tumbling_agg(events: DataFrame, duration: str = "1 hour") -> DataFrame:
-    """Event-time tumbling window counts/sums per event_type."""
+def tumbling_agg(events: DataFrame) -> DataFrame:
+    """Event-time 1-hour tumbling window counts/sums per event_type."""
     return (
-        events.groupBy(F.window("ts", duration), "event_type")
+        events.groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
         .select(
             F.col("window.start").alias("window_start"),
@@ -82,21 +78,18 @@ def tumbling_agg(events: DataFrame, duration: str = "1 hour") -> DataFrame:
     )
 
 
-def sliding_agg(
-    events: DataFrame, duration: str = "2 hours", slide: str = "1 hour"
-) -> DataFrame:
-    """Sliding (hopping) windows: each event lands in duration/slide
-    windows."""
+def sliding_agg(events: DataFrame) -> DataFrame:
+    """Sliding (hopping) 2-hour windows every hour: each event lands in
+    two windows."""
     return (
-        events.groupBy(F.window("ts", duration, slide))
+        events.groupBy(F.window("ts", "2 hours", "1 hour"))
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
         .select(F.col("window.start").alias("window_start"), "n", "sum_value")
     )
 
 
-def session_agg(events: DataFrame, gap: str = "6 hours") -> DataFrame:
-    """Session windows per user: a session closes after ``gap`` of
-    inactivity; end = last event + gap (Spark session_window semantics)."""
+def _sessions(events: DataFrame, gap: str | Column) -> DataFrame:
+    """Per-user session windows closed by ``gap`` of inactivity."""
     return (
         events.groupBy(F.session_window("ts", gap), "user_id")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
@@ -110,34 +103,24 @@ def session_agg(events: DataFrame, gap: str = "6 hours") -> DataFrame:
     )
 
 
-def session_agg_dynamic(
-    events: DataFrame,
-    gaps: dict[str, str] | None = None,
-    default_gap: str = "6 hours",
-) -> DataFrame:
+def session_agg(events: DataFrame) -> DataFrame:
+    """Session windows per user: a session closes after 6 hours of
+    inactivity; end = last event + gap (Spark session_window semantics)."""
+    return _sessions(events, "6 hours")
+
+
+def session_agg_dynamic(events: DataFrame) -> DataFrame:
     """Dynamic-gap session windows: each EVENT extends the session by its
-    own event-type-specific gap (a purchase keeps the session alive
-    longer than a passive view) — Spark ``session_window`` with a gap
+    own event-type-specific gap (a purchase keeps the session alive 12
+    hours, any other event 6) — Spark ``session_window`` with a gap
     EXPRESSION instead of a constant. Session semantics are interval
     merging: windows [ts, ts+gap) overlapping transitively fuse; end =
     max(ts+gap) over the fused set. Works batch AND streaming (the gap
     expression is per-row state either way)."""
-    if gaps is None:
-        gaps = {"purchase": "12 hours"}
-    gap = F.lit(default_gap)
-    for etype, g in sorted(gaps.items()):
-        gap = F.when(F.col("event_type") == etype, F.lit(g)).otherwise(gap)
-    return (
-        events.groupBy(F.session_window("ts", gap), "user_id")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "user_id",
-            "n_events",
-            "sum_value",
-        )
+    gap = F.when(F.col("event_type") == "purchase", F.lit("12 hours")).otherwise(
+        F.lit("6 hours")
     )
+    return _sessions(events, gap)
 
 
 def dedup_keep_first(events: DataFrame) -> DataFrame:
@@ -181,18 +164,10 @@ def stream_static_join(events: DataFrame, customers: DataFrame) -> DataFrame:
     )
 
 
-def interval_join(
-    events: DataFrame, horizon: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """Stream-stream interval join: attribute each purchase to the click
-    by the same user within ``[click.ts, click.ts + horizon]``.
-
-    Works on batch AND streaming frames (``withWatermark`` is a no-op in
-    batch). In streaming, BOTH sides carry a watermark and the join
-    condition bounds event-time distance, so Spark can expire buffered
-    rows — state per side is O(rate × (horizon + watermark)), never
-    unbounded. Both sides shuffle on user_id (one exchange each); at
-    100 TB the horizon keeps the per-key buffered window small."""
+def _interval_sides(events: DataFrame) -> tuple[DataFrame, DataFrame, Column]:
+    """(purchases, clicks, bound) of the stream-stream interval joins:
+    both sides carry a 2-hour watermark, and ``bound`` pairs a purchase
+    with a same-user click at most 1 hour before it."""
     clicks = (
         events.filter(F.col("event_type") == "click")
         .select(
@@ -200,31 +175,43 @@ def interval_join(
             F.col("ts").alias("click_ts"),
             F.col("event_id").alias("click_id"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", "2 hours")
     )
     purchases = (
         events.filter(F.col("event_type") == "purchase")
         .select(
-            F.col("user_id").alias("user_id"),
+            "user_id",
             F.col("ts").alias("purchase_ts"),
             F.col("event_id").alias("purchase_id"),
             F.col("value").alias("purchase_value"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", "2 hours")
     )
-    return clicks.join(
-        purchases,
+    bound = (
         (F.col("click_user") == F.col("user_id"))
         & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}")),
-    ).select(
+        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 hour"))
+    )
+    return purchases, clicks, bound
+
+
+def interval_join(events: DataFrame) -> DataFrame:
+    """Stream-stream interval join: attribute each purchase to the click
+    by the same user within ``[click.ts, click.ts + 1 hour]``.
+
+    Works on batch AND streaming frames (``withWatermark`` is a no-op in
+    batch). In streaming, BOTH sides carry a watermark and the join
+    condition bounds event-time distance, so Spark can expire buffered
+    rows — state per side is O(rate × (horizon + watermark)), never
+    unbounded. Both sides shuffle on user_id (one exchange each); at
+    100 TB the horizon keeps the per-key buffered window small."""
+    purchases, clicks, bound = _interval_sides(events)
+    return clicks.join(purchases, bound).select(
         "user_id", "click_id", "purchase_id", "click_ts", "purchase_ts", "purchase_value"
     )
 
 
-def interval_join_left(
-    events: DataFrame, horizon: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
+def interval_join_left(events: DataFrame) -> DataFrame:
     """LEFT OUTER stream-stream interval join: every purchase survives,
     padded with NULL click columns when no same-user click preceded it
     within the horizon — the attribution query that must also COUNT the
@@ -237,39 +224,13 @@ def interval_join_left(
     final (horizon + watermark) tail. The batch/stream parity test
     therefore compares the watermark-CLOSED region only — exactly the
     guarantee Spark documents for outer interval joins."""
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("click_user"),
-            F.col("ts").alias("click_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    return purchases.join(
-        clicks,
-        (F.col("click_user") == F.col("user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}")),
-        "left_outer",
-    ).select(
+    purchases, clicks, bound = _interval_sides(events)
+    return purchases.join(clicks, bound, "left_outer").select(
         "user_id", "purchase_id", "purchase_ts", "purchase_value", "click_id", "click_ts"
     )
 
 
-def interval_join_full(
-    events: DataFrame, horizon: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
+def interval_join_full(events: DataFrame) -> DataFrame:
     """FULL OUTER stream-stream interval join: every purchase AND every
     click survives — matched pairs plus null-padded orphans on both
     sides. The audit formulation of attribution: orphan purchases are
@@ -283,32 +244,8 @@ def interval_join_full(
     The parity test compares the watermark-closed region. State stays
     O(rate × (horizon + watermark)) per side — same expiry math as the
     inner join, Spark just holds rows to the bound before padding."""
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("click_user"),
-            F.col("ts").alias("click_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    return purchases.join(
-        clicks,
-        (F.col("click_user") == F.col("user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}")),
-        "full_outer",
-    ).select(
+    purchases, clicks, bound = _interval_sides(events)
+    return purchases.join(clicks, bound, "full_outer").select(
         F.coalesce(F.col("user_id"), F.col("click_user")).alias("user_id"),
         "purchase_id", "purchase_ts", "purchase_value", "click_id", "click_ts",
     )
@@ -351,12 +288,11 @@ def late_drop_replay(
     spark: SparkSession,
     sf_dir: str,
     split: str = "2024-01-08 00:00:00",
-    delay: str = "72 hours",
 ) -> DataFrame:
     """WATERMARK LATE-DATA DROP, witnessed for real: replay the events
     table as TWO micro-batches — first every on-time row (ts >= split),
     then the older rows as a LATE arrival — through an append-mode
-    1-day tumbling aggregation with a ``delay`` watermark.
+    1-day tumbling aggregation with a 72-hour watermark.
 
     Batch 1 builds state from every on-time row; batch 2 (a small
     "tick" re-delivery of the last-days rows) cycles the watermark
@@ -449,7 +385,7 @@ def late_drop_replay(
         .parquet(data_dir)
     )
     agg = (
-        stream.withWatermark("ts", delay)
+        stream.withWatermark("ts", "72 hours")
         .groupBy(F.window("ts", "1 day"))
         .agg(
             F.count("*").alias("n"),

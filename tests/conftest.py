@@ -33,6 +33,23 @@ def spark():
     yield s
 
 
+def _release_dropped_blocks(spark) -> None:
+    """Free the storage blocks of frames that earlier tests dropped, so a
+    test can assert that the JVM-wide storage holds no block of its own.
+    Spark's ContextCleaner releases a block only after the JVM collects
+    its RDD, which a long test session may not do for many minutes;
+    blocks of frames still referenced stay. Gives up after 30 s."""
+    import gc
+    import time
+
+    gc.collect()  # release the Python-side py4j references first
+    sc = spark.sparkContext
+    deadline = time.monotonic() + 30.0
+    while len(sc._jsc.sc().getRDDStorageInfo()) and time.monotonic() < deadline:
+        sc._jvm.System.gc()
+        time.sleep(0.2)
+
+
 def _jobs(spark, fn):
     """Run ``fn()`` under a fresh job group; return (its result, the
     number of Spark jobs it launched)."""

@@ -4,7 +4,7 @@ without touching caches created outside the scope."""
 
 from __future__ import annotations
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, _release_dropped_blocks
 
 from hive_release_spark.operators.cache import pipeline_scope
 
@@ -24,6 +24,7 @@ def test_scoped_run_leaves_cache_empty(spark):
     from hive_release_spark.queries import REGISTRY
 
     spark.catalog.clearCache()
+    _release_dropped_blocks(spark)
     assert _cache_manager(spark).isEmpty()
 
     with pipeline_scope() as tracked:
@@ -77,6 +78,7 @@ def test_persist_methods_restored_after_exception(spark):
 
 
 def test_unpersist_inside_scope_is_fine(spark):
+    _release_dropped_blocks(spark)
     with pipeline_scope():
         df = spark.range(20).persist()
         df.count()
@@ -93,6 +95,7 @@ def test_nested_scopes_chain(spark):
     re-released as a no-op at outer exit — and an outer-only persist
     survives the inner scope."""
     spark.catalog.clearCache()
+    _release_dropped_blocks(spark)
     with pipeline_scope() as outer_tracked:
         outer_df = spark.range(70).persist()
         outer_df.count()
@@ -117,6 +120,7 @@ def test_foreign_thread_persist_not_tracked(spark):
     import threading
 
     spark.catalog.clearCache()
+    _release_dropped_blocks(spark)
     foreign: list = []
 
     def other_pipeline():

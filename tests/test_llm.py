@@ -468,7 +468,7 @@ def test_prefix_filter_is_lossless_and_prunes(spark):
     # plain postings candidate count = sum over shingles of d*(d-1)/2
     from hive_release_spark.llm.dedup import _exploded_shingles
 
-    ex = _exploded_shingles(docs, 3, "doc_id", "text")
+    ex = _exploded_shingles(docs, 3)
     plain = (
         ex.groupBy("s_h").agg(F.count("*").alias("d"))
         .filter(F.col("d") > 1)

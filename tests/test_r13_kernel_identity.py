@@ -32,7 +32,7 @@ def test_nearest_kernel_matches_hof(spark):
         .select("vec_id", "cluster")
         .collect()
     }
-    kernel, schema = _nearest_kernel(cents, "vec_id", "bigint")
+    kernel, schema = _nearest_kernel(cents, "bigint")
     ker = {
         r.vec_id: r.cluster
         for r in pts.mapInPandas(kernel, schema=schema)

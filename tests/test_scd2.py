@@ -11,7 +11,7 @@ from datetime import datetime
 from pyspark.sql import functions as F  # noqa: F401
 
 from hive_release_spark.operators.scd import scd2_apply, scd2_history
-from tests.conftest import _jobs
+from tests.conftest import _jobs, _release_dropped_blocks
 
 
 def _t(d):
@@ -112,22 +112,6 @@ def test_scd2_streaming_cdc_equals_batch_rebuild(spark, tmp_path):
     assert got == want
     # the 2026-day-4 'a' for key 1 is a REAL new version (a->b->a)
     assert sum(1 for r in got if r[0] == 1) == 3
-
-
-def _release_dropped_blocks(spark, timeout_s: float = 30.0) -> None:
-    """Free the storage blocks of frames that earlier tests dropped.
-    Spark's ContextCleaner releases a block only after the JVM collects
-    its RDD, which a long test session may not do for many minutes;
-    blocks of frames still referenced stay."""
-    import gc
-    import time
-
-    gc.collect()  # release the Python-side py4j references first
-    sc = spark.sparkContext
-    deadline = time.monotonic() + timeout_s
-    while len(sc._jsc.sc().getRDDStorageInfo()) and time.monotonic() < deadline:
-        sc._jvm.System.gc()
-        time.sleep(0.2)
 
 
 def test_scd2_apply_leaves_no_storage_blocks(spark, tmp_path):

@@ -21,6 +21,7 @@ from hive_release_spark.operators.pairs import baskets, sorted_pairs
 from hive_release_spark.operators.topk import bounded_sort, global_topk
 
 PKG = Path(__file__).resolve().parent.parent / "hive_release_spark"
+REPO = PKG.parent
 
 
 def _plan(df, mode: str = "simple") -> str:
@@ -316,3 +317,140 @@ def test_shared_idioms_are_not_inlined():
     assert len(_IDIOMS["bounded sort"][0].findall(topk)) == 1
     sim = (PKG / "llm/similarity.py").read_text()
     assert len(_IDIOMS["neighbor rank tail"][0].findall(sim)) == 1
+
+
+# The Hive statement surface keeps options that no caller in the repo
+# sets: they are the DDL/format knobs of the dialect it mirrors.
+_HIVE_SURFACE = {"ddl.py", "functions/hive.py", "sources/formats.py", "cli.py"}
+_CALLERS = ("hive_release_spark", "tests", "tools", "perfbench", "bench.py",
+            "__spark_entry__.py")
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
+    """(position, name) of every parameter of ``fn`` with a default;
+    keyword-only parameters have position None."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    return [(i, p.arg) for i, p in enumerate(pos) if i >= first] + [
+        (None, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+    ]
+
+
+def _dict_binding(name: str, scope: ast.AST) -> dict | None:
+    """The keyword values of ``name = dict(k=v, ...)`` or ``name = {"k": v}``
+    in ``scope``; None when ``name`` is bound some other way."""
+    for n in ast.walk(scope):
+        if not (isinstance(n, ast.Assign) and len(n.targets) == 1):
+            continue
+        if not (isinstance(n.targets[0], ast.Name) and n.targets[0].id == name):
+            continue
+        v = n.value
+        is_dict_call = isinstance(v, ast.Call) and getattr(v.func, "id", "") == "dict"
+        if is_dict_call and not v.args and all(k.arg for k in v.keywords):
+            return {k.arg: k.value for k in v.keywords}
+        if isinstance(v, ast.Dict) and all(
+            isinstance(k, ast.Constant) and isinstance(k.value, str) for k in v.keys
+        ):
+            return {k.value: x for k, x in zip(v.keys, v.values)}
+    return None
+
+
+def _read_call(call: ast.Call, scope: ast.AST):
+    """(callee name, positional args, {keyword: value}, opaque) of
+    ``call``; opaque when a ``*args`` or an unresolvable ``**kw`` may set
+    any parameter. ``functools.partial(f, ...)`` is read as a call of
+    ``f``."""
+    name = getattr(call.func, "id", getattr(call.func, "attr", None))
+    args, kws, opaque = list(call.args), {}, False
+    if name == "partial" and args:
+        name = getattr(args[0], "id", getattr(args[0], "attr", None))
+        args = args[1:]
+    for k in call.keywords:
+        if k.arg is not None:
+            kws[k.arg] = k.value
+            continue
+        bound = None
+        if isinstance(k.value, ast.Name):
+            bound = _dict_binding(k.value.id, scope)
+        if bound is None:
+            opaque = True
+        else:
+            kws.update(bound)
+    return name, args, kws, opaque or any(isinstance(a, ast.Starred) for a in args)
+
+
+def _unset_options() -> list[str]:
+    """Defaulted parameters of ``hive_release_spark`` functions that no
+    call in the repo sets. A call that only passes an enclosing
+    function's own defaulted parameter through sets the callee's
+    parameter only if the enclosing one is set; callees are matched by
+    name, so a call to any same-named function counts."""
+    defs = []  # (file, function)
+    calls: dict[str, list] = {}  # callee name -> (args, kws, opaque, scope)
+
+    def visit(rel, node, scope):
+        for ch in ast.iter_child_nodes(node):
+            if isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs.append((rel, ch))
+                visit(rel, ch, ch)
+                continue
+            if isinstance(ch, ast.Call):
+                name, *read = _read_call(ch, scope)
+                calls.setdefault(name, []).append((*read, scope))
+            visit(rel, ch, scope)
+
+    for root in _CALLERS:
+        path = REPO / root
+        for f in [path] if path.is_file() else sorted(path.rglob("*.py")):
+            tree = ast.parse(f.read_text())
+            visit(f.relative_to(REPO).as_posix(), tree, tree)
+
+    def passed_through(value, scope):
+        """The (function, parameter) whose value ``value`` passes on, if
+        it is a defaulted parameter of the enclosing function."""
+        if isinstance(value, ast.Name) and isinstance(scope, ast.FunctionDef):
+            if value.id in {p for _, p in _defaulted(scope)}:
+                return (id(scope), value.id)
+        return None
+
+    # (id(function), parameter) -> the setters of that parameter, each
+    # None (a value) or the enclosing (function, parameter) it passes on
+    setters: dict[tuple[int, str], list] = {}
+    where: dict[tuple[int, str], str] = {}
+    for rel, fn in defs:
+        for i, p in _defaulted(fn):
+            key = (id(fn), p)
+            where[key] = f"{rel}:{fn.lineno}: {fn.name}({p})"
+            setters[key] = []
+            for args, kws, opaque, scope in calls.get(fn.name, []):
+                values = [kws[p]] if p in kws else []
+                if i is not None and i < len(args):
+                    values.append(args[i])
+                if opaque:
+                    setters[key].append(None)
+                setters[key] += [passed_through(v, scope) for v in values]
+    is_set: set[tuple[int, str]] = set()
+    changed = True
+    while changed:
+        changed = False
+        for key, ss in setters.items():
+            if key not in is_set and any(s is None or s in is_set for s in ss):
+                is_set.add(key)
+                changed = True
+    pkg = "hive_release_spark/"
+    return sorted(
+        w
+        for key, w in where.items()
+        if key not in is_set
+        and w.startswith(pkg)
+        and w[len(pkg):].split(":")[0] not in _HIVE_SURFACE
+    )
+
+
+def test_no_option_goes_unset():
+    """Every defaulted parameter of a library function is set by some
+    caller in the repo. A parameter that only ever takes its default is
+    a constant: name the value in the function body instead."""
+    unset = _unset_options()
+    assert not unset, "\n".join(unset)
