@@ -121,27 +121,32 @@ def skew_leg(spark, sf_dir: str):
        coalesce(1) upstream) is beyond AQE's reach.
     2. **Skew detection is compressed-BYTES-based and a constant-key
        hot partition compresses pathologically well.** Measured at
-       sf0.1: the hot partition holds 2.45M rows vs the ~76k median
-       (32x row skew) but its lz4 map-output bytes land under 2x the
-       median — below the default 5x factor, so AQE never saw it
-       (BENCH_r07's "aqe" arm was plain + overhead; the r7 prose
-       claiming a salted win was wrong too, per the driver's own
-       numbers). The aqe arm now lowers skewedPartitionFactor to 1.2
-       + threshold 100k so the byte heuristic can see through the
-       compression at bench scale. Cluster lesson: AQE protects
-       shuffle BYTES; if deserialized row memory or per-row compute
-       is the binding constraint, the byte heuristic under-fires on
-       low-entropy hot keys — salt deterministically
-       (operators/skew.py) when you know the key.
+       sf0.1 with 32 shuffle partitions: the hot partition holds 2.45M
+       rows vs the ~76k median (32x row skew) but its zstd map-output
+       bytes are 1.46x the median (144 KB vs 99 KB) — below the
+       default 5x factor, so AQE never sees it (BENCH_r07's "aqe" arm
+       was plain + overhead; the r7 prose claiming a salted win was
+       wrong too, per that artifact's own numbers). The aqe arm lowers
+       skewedPartitionFactor to 1.2 + threshold 100k so the byte
+       heuristic can detect the hot partition at bench scale. Under
+       zstd that no longer gets it split: its 144 KB is below the
+       256k advisory size that sets the split target, so the split
+       yields one piece and ``skew_split_fired`` is false (under lz4
+       the same partition was 592 KB, 1.91x the median, and split).
+       Cluster lesson: AQE protects shuffle BYTES; if deserialized
+       row memory or per-row compute is the binding constraint, the
+       byte heuristic under-fires on low-entropy hot keys, and a
+       stronger codec makes it under-fire more — salt
+       deterministically (operators/skew.py) when you know the key.
 
-    With the mitigations actually engaged (this box, sf0.1,
-    local[32]): plain ~2.5s / salted ~2.1s / aqe ~1.5s, and the
-    row proxy shows the real story: max join-output partition rows
-    plain ~2.45M (hot key in one task) / salted ~650k (8-salt
-    scatter + hash collisions at 32 partitions) / aqe ~1.2M
-    (split at mapper granularity by the advisory size). Wall-clock
-    is box-noisy — read the proxy first; it is the quantity that
-    becomes spill/OOM at 100x (240M rows in one task).
+    Measured at sf0.1, local[4] with 32 shuffle partitions, zstd:
+    plain ~4.4s / salted ~3.6s / aqe ~2.6s, and the row proxy shows
+    the real story: max join-output partition rows plain ~2.45M (hot
+    key in one task) / salted ~650k (8-salt scatter + hash
+    collisions at 32 partitions) / aqe ~2.45M (no split; ~1.2M under
+    lz4, split at mapper granularity by the advisory size).
+    Wall-clock is box-noisy — read the proxy first; it is the
+    quantity that becomes spill/OOM at 100x (240M rows in one task).
 
     - ``plain``: AQE skew split off -> the hot key lands in one task
       (the pathological straggler baseline);

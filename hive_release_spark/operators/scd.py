@@ -99,7 +99,10 @@ def scd2_apply(
         history.write.parquet(path)
         catalog.record(spark, path, catalog.listing_version(path), history.schema)
         return
-    affected = incoming.select(key).distinct()
+    # feeds only a semi and an anti join, which test existence: duplicate
+    # keys change nothing, and no aggregate exchange runs before the
+    # broadcast
+    affected = incoming.select(key)
 
     def fold(tgt: DataFrame) -> DataFrame:
         untouched = tgt.join(affected, key, "left_anti")

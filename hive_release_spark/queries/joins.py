@@ -88,8 +88,12 @@ def join_broadcast_part(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: 3-way join → agg → top-k. customer broadcasts into
     orders when it fits the session threshold (size-conditional — at 100×
-    scale it degrades to sort-merge instead of OOMing the executors);
-    orders⋈lineitem shuffles on orderkey."""
+    scale it degrades to sort-merge instead of OOMing the executors).
+    orders⋈lineitem is size-conditional too: the date-filtered orders
+    side broadcasts while Catalyst's estimate is under
+    ``spark.sql.autoBroadcastJoinThreshold`` (at sf0.1 a
+    ``BroadcastHashJoin … BuildRight``, so the only shuffle is the partial
+    aggregate on the group keys), and shuffles on orderkey past it."""
     cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1998-03-15")
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1998-03-15")

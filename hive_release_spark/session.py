@@ -17,6 +17,16 @@ Scale posture (100 TB design point, BASELINE.md B5):
 - UTC session timezone: Hive TIMESTAMP is timezone-less wall clock
   (SURVEY.md §7.6.1); pinning UTC makes classic TimestampType behave like
   TimestampNTZ for parity.
+- One codec, zstd, for intermediate and written data: Hive's
+  ``hive.exec.compress.intermediate`` / ``hive.exec.compress.output``
+  analogues are ``spark.io.compression.codec`` (shuffle map output,
+  broadcast blocks, spill, RDD blocks) and
+  ``spark.sql.parquet.compression.codec`` (every engine commit), matching
+  Spark's ORC default (``spark.sql.orc.compression.codec`` = zstd). AQE's
+  partition coalescing and runtime broadcast conversion read compressed
+  map-output sizes, so each byte they see stands for more rows than
+  under lz4 (SCALE.md). A writer's ``.option("compression", ...)`` and
+  ``extra_conf`` still override.
 """
 
 from __future__ import annotations
@@ -67,6 +77,8 @@ def get_session(
         # scale; AQE coalesces small ones back together.
         "spark.sql.files.maxPartitionBytes": "256m",
         "spark.sql.parquet.filterPushdown": "true",
+        "spark.io.compression.codec": "zstd",
+        "spark.sql.parquet.compression.codec": "zstd",
         # CBO join reordering kicks in once tables carry ANALYZE stats
         # (ddl.analyze) — Hive's CalcitePlanner cost path (SURVEY.md §4.2).
         "spark.sql.cbo.enabled": "true",

@@ -50,6 +50,30 @@ def _release_dropped_blocks(spark) -> None:
         time.sleep(0.2)
 
 
+def _executed_shuffle_stages(spark, action):
+    """Run ``action`` and return how many NEW stages wrote shuffle
+    data (shuffleWriteRecords > 0) during it, per the live
+    AppStatusStore."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    empty = sc._jvm.java.util.ArrayList()
+    defaults = [
+        getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)
+    ]
+
+    def stage_rows():
+        lst = store.stageList(empty, *defaults)
+        return [lst.apply(i) for i in range(lst.size())]
+
+    before = {s.stageId() for s in stage_rows()}
+    action()
+    return sum(
+        1
+        for s in stage_rows()
+        if s.stageId() not in before and s.shuffleWriteRecords() > 0
+    )
+
+
 def _jobs(spark, fn):
     """Run ``fn()`` under a fresh job group; return (its result, the
     number of Spark jobs it launched)."""

@@ -11,7 +11,7 @@ from datetime import datetime
 from pyspark.sql import functions as F  # noqa: F401
 
 from hive_release_spark.operators.scd import scd2_apply, scd2_history
-from tests.conftest import _jobs, _release_dropped_blocks
+from tests.conftest import _executed_shuffle_stages, _jobs, _release_dropped_blocks
 
 
 def _t(d):
@@ -153,3 +153,24 @@ def test_second_scd2_apply_runs_no_schema_inference(spark, tmp_path):
     assert jobs == [1, 1]
     want = scd2_history(b1.unionByName(b2).unionByName(b3))
     assert _rows(spark.read.parquet(path)) == _rows(want)
+
+
+def test_second_scd2_apply_shuffles_only_the_key_window(spark, tmp_path):
+    """The affected keys feed only a semi and an anti join, so they
+    broadcast straight from the batch's scan with no aggregate exchange:
+    a fold writes shuffle data in exactly one stage, the key window of
+    the rebuilt history. The batches are Parquet files, as a streaming
+    feed delivers them, so the planner knows their size."""
+    path = str(tmp_path / "dim")
+    batches = [
+        [(1, "a", _t(0)), (2, "x", _t(0))],
+        [(1, "b", _t(1)), (1, "c", _t(2)), (3, "n", _t(1))],
+    ]
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(rows, "id BIGINT, attr STRING, ts TIMESTAMP").write.parquet(
+            str(tmp_path / f"b{i}")
+        )
+    b1, b2 = (spark.read.parquet(str(tmp_path / f"b{i}")) for i in range(2))
+    scd2_apply(spark, path, b1)
+    assert _executed_shuffle_stages(spark, lambda: scd2_apply(spark, path, b2)) == 1
+    assert _rows(spark.read.parquet(path)) == _rows(scd2_history(b1.unionByName(b2)))

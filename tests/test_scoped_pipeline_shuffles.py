@@ -40,29 +40,7 @@ from __future__ import annotations
 
 import pytest
 
-
-def _executed_shuffle_stages(spark, action):
-    """Run ``action`` and return how many NEW stages wrote shuffle
-    data (shuffleWriteRecords > 0) during it, per the live
-    AppStatusStore."""
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    empty = sc._jvm.java.util.ArrayList()
-    defaults = [
-        getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)
-    ]
-
-    def stage_rows():
-        lst = store.stageList(empty, *defaults)
-        return [lst.apply(i) for i in range(lst.size())]
-
-    before = {s.stageId() for s in stage_rows()}
-    action()
-    return sum(
-        1
-        for s in stage_rows()
-        if s.stageId() not in before and s.shuffleWriteRecords() > 0
-    )
+from tests.conftest import _executed_shuffle_stages
 
 
 # entry -> executed shuffle-map stages per call at sf0.001 (see module

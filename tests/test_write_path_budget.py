@@ -4,10 +4,12 @@ partitioned copy of sf0.001 ``orders``, with AQE off so every query is
 one job plus its broadcasts. In the second round every read finds the
 schema the previous commit recorded, so no operation runs a
 schema-inference job, and MERGE's source checks ride its staged write;
-a change that brings back either job fails here."""
+a change that brings back either job fails here. The same path's part
+files carry the session's zstd codec."""
 
 from __future__ import annotations
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from hive_release_spark import catalog
@@ -78,3 +80,40 @@ def test_second_round_runs_no_schema_inference(spark, tmp_path):
         spark.read.parquet(table).select("o_custkey").distinct().count()
     )
     assert catalog.read_parquet(spark, dim).schema == spark.read.parquet(dim).schema
+
+
+def _codecs(files) -> set[str]:
+    """Compression of every column chunk in the first row group of each
+    Parquet file."""
+    codecs = set()
+    for f in files:
+        rg = pq.ParquetFile(f).metadata.row_group(0)
+        codecs.update(rg.column(i).compression for i in range(rg.num_columns))
+    return codecs
+
+
+def test_engine_commits_write_zstd(spark, tmp_path):
+    """The session compresses shuffle and Parquet output with zstd, every
+    engine commit of two rounds (partition-scoped MERGE, UPDATE and
+    DELETE, snapshot write, first and second SCD-2 apply) inherits it,
+    and a writer's own ``compression`` option still wins."""
+    assert spark.sparkContext.getConf().get("spark.io.compression.codec") == "zstd"
+    assert spark.conf.get("spark.sql.parquet.compression.codec") == "zstd"
+
+    table, snaps, dim = (str(tmp_path / d) for d in ("orders", "snaps", "dim"))
+    parts = lambda: set(tmp_path.glob("**/part-*.parquet"))  # noqa: E731
+    orders = catalog.load_table(spark, SF_SMOKE, "orders").withColumn(
+        "o_year", F.year("o_orderdate")
+    )
+    orders.write.option("compression", "snappy").partitionBy("o_year").parquet(table)
+    seed = parts()
+    assert _codecs(seed) == {"SNAPPY"}
+    years = sorted(r[0] for r in orders.select("o_year").distinct().collect())
+    for r in range(2):
+        _round(spark, orders, table, snaps, dim, years, r)
+        written = parts() - seed
+        assert _codecs(written) == {"ZSTD"}
+        assert {f.relative_to(tmp_path).parts[0] for f in written} == {"orders", "snaps", "dim"}
+        assert {f.parent.name for f in written if f.is_relative_to(table)} == {
+            f"o_year={y}" for y in years[:3]
+        }
