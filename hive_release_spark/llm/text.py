@@ -29,6 +29,45 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text)).cast("long")
 
 
+def term_counts(docs: DataFrame, *keys: str) -> DataFrame:
+    """``(*keys, term, n)``: the occurrences of each whitespace token of
+    ``text`` per ``keys`` group (the whole corpus when no key is given).
+    NULL text gives no token; ``split`` never yields an empty array or a
+    NULL element. The explode's input is the ``split`` expression, not
+    an attribute, so no InferFiltersFromGenerate size filter re-evaluates
+    it, and ``term`` stays non-nullable for the callers' joins."""
+    return (
+        docs.select(*keys, F.explode(tokens("text")).alias("term"))
+        .groupBy(*keys, "term")
+        .agg(F.count("*").alias("n"))
+    )
+
+
+def query_term_stats(docs: DataFrame, terms: tuple[str, ...]) -> DataFrame:
+    """``(doc_id, dlen, tf_0 … tf_k)`` per document from one tokenize
+    pass: ``dlen`` counts its tokens and ``tf_i`` the occurrences of
+    ``terms[i]``. A document with NULL text has no row.
+
+    The frame is PERSISTED (MEMORY_AND_DISK): a ranker reads it twice,
+    in its 1-row corpus rollup and in its scored pass, and without the
+    persist each read re-runs scan → split → explode. The caller's
+    ``pipeline_scope`` releases it."""
+    from pyspark import StorageLevel
+
+    return (
+        docs.select("doc_id", F.explode(tokens("text")).alias("term"))
+        .groupBy("doc_id")
+        .agg(
+            F.count("*").alias("dlen"),
+            *[
+                F.count(F.when(F.col("term") == t, True)).alias(f"tf_{i}")
+                for i, t in enumerate(terms)
+            ],
+        )
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+
+
 def fingerprint(text: Column | str) -> Column:
     """Document fingerprint: md5 over the sorted distinct token set —
     canonicalizes word order + duplication (near-dup pre-key)."""
@@ -99,14 +138,9 @@ def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     from pyspark import StorageLevel
     from pyspark.sql import Window
 
-    terms = (
-        df.select("doc_id", tokens("text").alias("w"))
-        .select("doc_id", F.explode_outer("w").alias("term"))
-        .filter(F.col("term").isNotNull())
-    )
     tf = (
-        terms.groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"))
+        term_counts(df, "doc_id")
+        .withColumnRenamed("n", "tf")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     docfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
@@ -309,13 +343,7 @@ def vocab_coverage(df: DataFrame, cutoff: float = 0.999) -> DataFrame:
     Returns (term, freq, rank)."""
     from pyspark.sql import Window
 
-    counts = (
-        df.select(tokens("text").alias("w"))
-        .select(F.explode_outer("w").alias("term"))
-        .filter(F.col("term").isNotNull())
-        .groupBy("term")
-        .agg(F.count("*").alias("freq"))
-    )
+    counts = term_counts(df).withColumnRenamed("n", "freq")
     order = Window.orderBy(F.col("freq").desc(), "term")
     before = (
         F.coalesce(

@@ -100,8 +100,10 @@ def scd2_apply(
         catalog.record(spark, path, catalog.listing_version(path), history.schema)
         return
     # feeds only a semi and an anti join, which test existence: duplicate
-    # keys change nothing, and no aggregate exchange runs before the
-    # broadcast
+    # keys change nothing, so no aggregate exchange runs before the
+    # joins. They broadcast the keys only when the batch has size
+    # statistics (a file-fed batch); a batch without them (a local
+    # createDataFrame frame) plans both as sort-merge joins
     affected = incoming.select(key)
 
     def fold(tgt: DataFrame) -> DataFrame:

@@ -34,6 +34,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 
 from hive_release_spark import catalog
+from hive_release_spark.operators.dml import _write_staged
 
 _VERSION_RE = re.compile(r"^v(\d+)$")
 
@@ -67,21 +68,18 @@ def snapshot_write(df: DataFrame, table_dir: str) -> int:
     Crash-safe in both directions: the next version is computed from
     max(pointer, highest existing version dir) — so an orphan ``v{n}``
     left by a crash between the data write and the pointer commit can
-    never collide with a later write — and the data lands in a hidden
-    staging dir that is atomically renamed to ``v{n}``, so readers (and
-    the dir-fallback in :func:`latest_snapshot`) never observe a
-    half-written version."""
+    never collide with a later write — and the data lands in a staging
+    sibling of ``v{n}`` (removed if the write fails) that is atomically
+    renamed to ``v{n}``, so readers (and the dir-fallback in
+    :func:`latest_snapshot`) never observe a half-written version."""
     os.makedirs(table_dir, exist_ok=True)
     committed = latest_snapshot(table_dir) or 0
     dirs = list_snapshots(table_dir)
     version = max(committed, dirs[-1] if dirs else 0) + 1
     vdir = os.path.join(table_dir, f"v{version}")
-    staging = tempfile.mkdtemp(dir=table_dir, prefix="._staging_")
-    stage_target = os.path.join(staging, "data")
-    df.write.mode("error").parquet(stage_target)
-    written = catalog.listing_version(stage_target)
-    os.rename(stage_target, vdir)  # atomic publish; never overwrites
-    os.rmdir(staging)
+    staged = _write_staged(df.write, vdir)
+    written = catalog.listing_version(staged)
+    os.rename(staged, vdir)  # atomic publish; never overwrites
     catalog.record(df.sparkSession, vdir, written, df.schema)
     fd, tmp = tempfile.mkstemp(dir=table_dir, prefix="._latest_")
     with os.fdopen(fd, "w") as fh:

@@ -42,7 +42,6 @@ from hive_release_spark.queries.registry import register
            (SELECT count(*) FROM c) AS n_click_after_view,
            (SELECT count(*) FROM p) AS n_purchase_after_click
     """,
-    tags=("analytics", "events", "funnel", "hof"),
 )
 def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered funnel view → click → purchase over the events table —
@@ -121,7 +120,6 @@ def funnel(
     GROUP BY 1, 2
     ORDER BY 1, 2
     """,
-    tags=("analytics", "events", "retention"),
 )
 def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly retention triangle: users cohorted by the week of their
@@ -170,7 +168,6 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(gap_s) AS BIGINT) AS total_gap_s
     FROM gaps GROUP BY user_id ORDER BY user_id
     """,
-    tags=("timeseries", "window", "stats"),
 )
 def events_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user inter-event gap statistics — the liveness/engagement
@@ -223,7 +220,6 @@ def events_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2, 3
     ORDER BY r_score DESC, f_score DESC, m_score DESC
     """,
-    tags=("timeseries", "window", "agg", "segmentation"),
 )
 def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM segmentation (recency / frequency / monetary quartiles) — the
@@ -279,7 +275,6 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     CROSS JOIN n
     ORDER BY grp_a, grp_b
     """,
-    tags=("agg", "join", "basket", "stats"),
 )
 def basket_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket affinity: part-group pairs co-occurring in the same
@@ -346,7 +341,6 @@ def basket_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM daily CROSS JOIN stats
     ORDER BY day
     """,
-    tags=("timeseries", "stats", "agg"),
 )
 def events_daily_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily-volume anomaly flags: each day's event count z-scored
@@ -385,7 +379,6 @@ def events_daily_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM seq WHERE prev_status IS NOT NULL
     GROUP BY 1, 2 ORDER BY 1, 2
     """,
-    tags=("timeseries", "window", "agg"),
 )
 def orders_status_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Status-transition (Markov) counts over each customer's order
@@ -424,7 +417,6 @@ def orders_status_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked WHERE cum_rev / total_rev <= 0.5 OR rk <= 3
     ORDER BY rk
     """,
-    tags=("window", "agg", "stats", "topk"),
 )
 def supplier_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pareto / concentration analysis: the smallest supplier set covering
@@ -483,7 +475,6 @@ def supplier_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS open_orders
     FROM merged ORDER BY day
     """,
-    tags=("timeseries", "window", "interval", "agg"),
 )
 def orders_backlog_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concurrent-interval counting (orders 'open' for 30 days) via the
@@ -520,7 +511,6 @@ def orders_backlog_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events WHERE event_type = 'purchase'
     GROUP BY 1, 2 ORDER BY 1, 2
     """,
-    tags=("timeseries", "agg", "stats"),
 )
 def events_hourly_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hour-of-day × day-of-week seasonality grid for purchases — the
@@ -558,7 +548,6 @@ def events_hourly_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM shares
     ORDER BY yr, o_orderpriority
     """,
-    tags=("window", "agg", "timeseries", "stats"),
 )
 def orders_priority_mix_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mix-shift analysis: each priority class's share of yearly volume
@@ -592,7 +581,6 @@ def orders_priority_mix_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
            max(event_id) AS last_event_id
     FROM events GROUP BY user_id ORDER BY user_id
     """,
-    tags=("timeseries", "agg", "stats"),
 )
 def events_user_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user lifecycle summary: activity span, distinct active days,
@@ -632,7 +620,6 @@ def events_user_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(revenue / sum(revenue) OVER (), 6) AS share_of_total
     FROM rev ORDER BY region, nation
     """,
-    tags=("window", "agg", "join", "broadcast"),
 )
 def region_nation_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Share-within-parent hierarchy report (nation revenue as a share
@@ -678,7 +665,6 @@ def region_nation_share(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(sum(s * s), 6) AS hhi
     FROM shares GROUP BY p_type ORDER BY p_type
     """,
-    tags=("window", "agg", "stats"),
 )
 def part_type_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Herfindahl-Hirschman concentration index per part type: the sum

@@ -32,7 +32,6 @@ from hive_release_spark.queries.registry import register
     FROM days d JOIN ud u ON u.day BETWEEN d.day - 6 AND d.day
     GROUP BY 1 ORDER BY 1
     """,
-    tags=("analytics", "events", "window", "distinct"),
 )
 def events_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-7-day distinct active users per day (the DAU/WAU board
@@ -92,7 +91,6 @@ def events_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
            n_events
     FROM p ORDER BY user_id, version
     """,
-    tags=("analytics", "events", "window", "scd"),
 )
 def user_state_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD Type-2 state history from an event log: collapse consecutive
@@ -177,7 +175,6 @@ def user_state_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS covered_days
     FROM merged GROUP BY 1 ORDER BY o_custkey
     """,
-    tags=("analytics", "window", "intervals"),
 )
 def customer_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge overlapping activity intervals per customer and report
@@ -267,7 +264,6 @@ def _md5_u32(expr: str) -> str:
     SELECT lang, CAST(rk AS INTEGER) AS rk, doc_id, n_chars
     FROM ranked WHERE rk <= 5 ORDER BY lang, rk
     """,
-    tags=("sampling", "llm", "deterministic"),
 )
 def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic weighted sampling without replacement, top-5 per
@@ -319,7 +315,6 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(sum(o_totalprice), 2) AS bucket_value
     FROM b GROUP BY bucket ORDER BY bucket
     """,
-    tags=("analytics", "window", "histogram"),
 )
 def orders_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-DEPTH (equal-count) histogram of order values: decile
@@ -374,7 +369,6 @@ def orders_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(sum(value), 2) AS session_value
     FROM s GROUP BY 1, 2 ORDER BY user_id, session_n
     """,
-    tags=("analytics", "events", "session", "window"),
 )
 def events_sessionize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization with explicit session IDS — the assignment
@@ -437,7 +431,6 @@ def events_sessionize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON p.user_id = v.user_id AND p.ts >= v.ts
     ORDER BY p.event_id
     """,
-    tags=("analytics", "events", "attribution", "asof"),
 )
 def events_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-touch attribution: every purchase credits the user's most
@@ -491,7 +484,6 @@ def events_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame
     FROM days d JOIN ud u ON u.day BETWEEN d.day - 6 AND d.day
     GROUP BY 1 ORDER BY 1
     """,
-    tags=("analytics", "events", "sketch", "window", "mergeable"),
 )
 def events_rolling_active_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SKETCH path for sliding-window distinct counts: one HLL
@@ -570,7 +562,6 @@ def events_rolling_active_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
            (SELECT count(*) FROM c) AS n_click_72h,
            (SELECT count(*) FROM p) AS n_purchase_72h
     """,
-    tags=("analytics", "events", "funnel", "hof"),
 )
 def funnel_conversion_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-BOUNDED funnel: each step converts only within 72 h of the
@@ -627,7 +618,6 @@ def funnel_conversion_window(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(icept + slope * (t_max + 1), 2) AS forecast_next
     FROM fit
     """,
-    tags=("analytics", "regression", "forecast"),
 )
 def orders_trend_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear-trend revenue forecast: monthly revenue -> OLS fit via the
@@ -683,7 +673,6 @@ def orders_trend_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
            psi.v > 0.1 AS drifted
     FROM t CROSS JOIN psi
     """,
-    tags=("analytics", "dq", "drift", "monitoring"),
 )
 def dq_distribution_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index between two periods' order-value
@@ -747,7 +736,6 @@ def dq_distribution_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS types_seen
     FROM f ORDER BY user_id, ts, event_id
     """,
-    tags=("analytics", "window", "distinct"),
 )
 def window_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running COUNT(DISTINCT) over an ordered stream — how many
@@ -823,7 +811,6 @@ def window_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE p.cohort_m < 6
     ORDER BY p.cohort_m, p.age_m
     """,
-    tags=("analytics", "cohort", "ltv", "window"),
 )
 def customer_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort LTV curves: cumulative revenue per user by cohort age in
@@ -895,7 +882,6 @@ def customer_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS n_streaks
     FROM per GROUP BY user_id ORDER BY user_id
     """,
-    tags=("analytics", "events", "window", "streaks"),
 )
 def events_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Longest consecutive-day activity streak per user (the engagement
@@ -945,7 +931,6 @@ def events_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM days d JOIN dau ON d.day = dau.day JOIN mau ON d.day = mau.day
     ORDER BY d.day
     """,
-    tags=("analytics", "events", "distinct", "engagement"),
 )
 def events_stickiness_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DAU/MAU stickiness per day — the canonical engagement ratio
@@ -998,7 +983,6 @@ def events_stickiness_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM d CROSS JOIN med CROSS JOIN mad
     ORDER BY d.day
     """,
-    tags=("analytics", "dq", "anomaly", "robust"),
 )
 def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust anomaly flags via median absolute deviation — the
@@ -1056,7 +1040,6 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM c CROSS JOIN t
     ORDER BY c.d
     """,
-    tags=("analytics", "dq", "benford"),
 )
 def dq_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford's-law first-digit audit of order amounts — the classic
@@ -1108,7 +1091,6 @@ def dq_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM c CROSS JOIN mx
     ORDER BY c.day
     """,
-    tags=("analytics", "timeseries", "changepoint", "monitoring"),
 )
 def events_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM change-point detection on daily volume: the running sum of
@@ -1166,7 +1148,6 @@ def events_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
                  - (n + 1.0) / n, 6) AS gini
     FROM s
     """,
-    tags=("analytics", "concentration", "gini"),
 )
 def customer_gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini coefficient of revenue across customers — the inequality
@@ -1250,7 +1231,6 @@ def customer_gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE round(exp(cum_ln), 6) END AS s_hat
     FROM km ORDER BY t
     """,
-    tags=("analytics", "events", "survival", "window"),
 )
 def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier survival curve for time-to-conversion (first
@@ -1350,7 +1330,6 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS med_centered7
     FROM f ORDER BY day
     """,
-    tags=("analytics", "window", "median", "timeseries"),
 )
 def window_moving_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MOVING MEDIAN of daily revenue (trailing-7 and centered-7) — the
@@ -1427,7 +1406,6 @@ def window_moving_median(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(detrended - seasonal, 4) AS resid
     FROM se ORDER BY day
     """,
-    tags=("analytics", "timeseries", "window", "decomposition"),
 )
 def orders_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classical additive seasonal decomposition of daily revenue
@@ -1482,7 +1460,6 @@ def orders_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(regr_r2(lq, lp), 4) AS r2
     FROM pb GROUP BY 1 ORDER BY 1
     """,
-    tags=("analytics", "regression", "agg"),
 )
 def part_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PER-GROUP log-log OLS — price elasticity of demand by brand
@@ -1533,7 +1510,6 @@ def part_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
         AND (b.od > a.od OR b.o_totalprice > a.o_totalprice))
     ORDER BY o_custkey, o_orderkey
     """,
-    tags=("analytics", "window", "skyline"),
 )
 def orders_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SKYLINE / Pareto frontier per customer — the orders not
@@ -1614,7 +1590,6 @@ def orders_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM paths GROUP BY 1
     ORDER BY n_sessions DESC, path LIMIT 20
     """,
-    tags=("analytics", "events", "session_window", "paths"),
 )
 def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 session PATHS — the ordered event-type sequence (first 5
@@ -1701,7 +1676,6 @@ def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS mean_winsorized
     FROM r GROUP BY 1 ORDER BY 1
     """,
-    tags=("agg", "stats", "robust", "window"),
 )
 def agg_trimmed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust means per group — 5% TRIMMED (drop the tails) and
@@ -1793,7 +1767,6 @@ def agg_trimmed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
              * (1.0 / n0 + 1.0 / n1)), 4) AS z_score
     FROM w
     """,
-    tags=("analytics", "experimentation", "stats"),
 )
 def events_ab_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A/B experiment readout — deterministic hash-based arm
@@ -1886,7 +1859,6 @@ def events_ab_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders o LEFT JOIN li ON o.o_orderkey = li.l_orderkey
     GROUP BY 1 ORDER BY 1
     """,
-    tags=("dq", "reconciliation", "join", "audit"),
 )
 def dq_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Header/detail RECONCILIATION audit — the warehouse-classic DQ
@@ -1983,7 +1955,6 @@ def _key_freq_profile(df: DataFrame, key: str, label: str) -> DataFrame:
            CAST((list(k ORDER BY cnt DESC, k))[1] AS BIGINT) AS top_key
     FROM f GROUP BY 1 ORDER BY 1
     """,
-    tags=("dq", "skew", "profile", "scale"),
 )
 def dq_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JOIN-KEY SKEW PROFILER — the pre-flight check a 100 TB join
@@ -2054,7 +2025,6 @@ def dq_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS credited
     FROM g GROUP BY 1, 2 ORDER BY 1, 2
     """,
-    tags=("analytics", "events", "attribution", "window"),
 )
 def events_attribution_position(spark: SparkSession, sf_dir: str) -> DataFrame:
     """POSITION-BASED (U-shaped, 40/20/40) multi-touch attribution —
@@ -2200,7 +2170,6 @@ def events_attribution_position(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / 100, 4) AS uplift_cuped
     FROM t
     """,
-    tags=("analytics", "experimentation", "stats", "cuped"),
 )
 def events_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUPED variance-reduced A/B readout (Deng et al. 2013 — the
@@ -2327,7 +2296,6 @@ def events_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
       UNION ALL SELECT n_rows, 'o_orderpriority', c5, d5, mn5, mx5 FROM a)
     ORDER BY col_name
     """,
-    tags=("dq", "profile", "stats"),
 )
 def dq_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COLUMN PROFILER — the per-column half of data-quality intake
@@ -2438,7 +2406,6 @@ def dq_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / CAST(max(total_cents) AS DOUBLE), 6) AS revenue_share
     FROM c GROUP BY 1 ORDER BY 1
     """,
-    tags=("analytics", "abc", "pareto", "window"),
 )
 def orders_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC (Pareto) CLASSIFICATION — the inventory-management classic:
@@ -2545,7 +2512,6 @@ def _markov_rounds(k: int) -> str:
       FROM tc GROUP BY 1) o ON x3.et = o.et
     ORDER BY event_type
     """,
-    tags=("analytics", "markov", "iterative", "events"),
 )
 def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MARKOV-CHAIN STATIONARY DISTRIBUTION of the event-type process:
@@ -2659,7 +2625,6 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS hhi_normalized
     FROM t ORDER BY n_name
     """,
-    tags=("analytics", "concentration", "hhi", "join"),
 )
 def supplier_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HERFINDAHL-HIRSCHMAN market-concentration index per nation —
@@ -2760,7 +2725,6 @@ def supplier_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS violation_rate
     FROM r ORDER BY rule
     """,
-    tags=("dq", "rules", "validation", "join"),
 )
 def dq_business_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BUSINESS-RULE validation report — the cross-field half of data
@@ -2853,7 +2817,6 @@ def dq_business_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(max(lat) AS BIGINT) AS max_days
     FROM j GROUP BY 1 ORDER BY 1
     """,
-    tags=("analytics", "latency", "percentile", "join"),
 )
 def orders_ship_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORDER-TO-SHIP CYCLE TIME per priority class — the fulfillment
@@ -2928,7 +2891,6 @@ def orders_ship_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n_customers
     FROM mig GROUP BY 1, 2 ORDER BY 1, 2
     """,
-    tags=("analytics", "migration", "segments", "growth"),
 )
 def customer_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SEGMENT MIGRATION MATRIX — the growth-accounting table behind
@@ -3006,7 +2968,6 @@ def customer_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(max(gap_days) AS BIGINT) AS max_days
     FROM j GROUP BY 1 ORDER BY 1
     """,
-    tags=("analytics", "repurchase", "window", "percentile"),
 )
 def customer_repurchase_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REPURCHASE-CYCLE distribution per market segment — the retail
@@ -3089,7 +3050,6 @@ def customer_repurchase_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS fisher_milli
     FROM idx ORDER BY month
     """,
-    tags=("analytics", "economics", "price_index"),
 )
 def orders_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PRICE INDEX SERIES — Laspeyres (base-period basket), Paasche
@@ -3194,7 +3154,6 @@ def orders_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                       + 0.5) AS BIGINT) AS did_micro
     FROM w
     """,
-    tags=("analytics", "experiment", "causal", "did"),
 )
 def events_did_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DIFFERENCE-IN-DIFFERENCES — the causal estimator for when
@@ -3320,7 +3279,6 @@ def events_did_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM abc JOIN xyz ON abc.l_partkey = xyz.l_partkey
     GROUP BY 1, 2 ORDER BY 1, 2
     """,
-    tags=("analytics", "abc_xyz", "inventory", "segmentation"),
 )
 def orders_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC-XYZ SEGMENTATION MATRIX — the standard inventory policy

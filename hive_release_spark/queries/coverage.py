@@ -33,7 +33,6 @@ from hive_release_spark.queries.registry import register
     SELECT user_id, event_id, 1 AS match_pos
     FROM ordered WHERE event_type = 'purchase' AND prev_type = 'error'
     """,
-    tags=("ptf", "matchpath"),
 )
 def ptf_matchpath(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MatchPath (Hive udf/ptf/MatchPath.java): find error→purchase
@@ -78,7 +77,6 @@ def ptf_matchpath(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY freq DESC, w2
     LIMIT 20
     """,
-    tags=("llm", "text", "ngrams"),
 )
 def text_context_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive ``context_ngrams(sentences(...), array('the', null), k)``
@@ -115,7 +113,6 @@ def text_context_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
            len(string_split(text, ' ')) AS n_ws_tokens
     FROM documents WHERE doc_id < 300
     """,
-    tags=("llm", "text", "tokenize"),
 )
 def text_token_bpe_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE-ish pre-tokenization count: word/number/punct split via regex
@@ -142,7 +139,6 @@ def text_token_bpe_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
            array_to_string((string_split(p_type, ' '))[1:2], ' ') AS si2
     FROM part WHERE p_partkey % 3 = 0
     """,
-    tags=("functions", "string"),
 )
 def fn_string2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second string batch: levenshtein, left/right, startswith/contains,
@@ -187,7 +183,6 @@ def fn_string2(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM part WHERE p_partkey % 10 = 0 AND isfinite(p_retailprice)
     ORDER BY p_partkey
     """,
-    tags=("functions",),
 )
 def fn_misc_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive string/selector one-offs, ORACLE-GATED (r5 conversion,
@@ -225,7 +220,7 @@ def fn_misc_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("p_partkey")
 
 
-@register("fn_misc_xpath", tags=("functions", "no_oracle"))
+@register("fn_misc_xpath")
 def fn_misc_xpath(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TERMINALLY rows-only (VERDICT r5 #4 accepts this one as
     terminal): the remainder of the old fn_misc_surface (r5 split) —
@@ -269,7 +264,6 @@ def fn_misc_xpath(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rn_asc <= 50 OR rn_desc <= 50
     ORDER BY c_custkey
     """,
-    tags=("sort", "nulls"),
 )
 def sort_null_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NULL ordering contract (SURVEY.md §7.6 watch-list #5): Hive and
@@ -323,7 +317,6 @@ _SAMPLE_THR = format(int(0.1 * 16**8), "08x")
     GROUP BY l_returnflag
     ORDER BY l_returnflag
     """,
-    tags=("sample",),
 )
 def sample_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TABLESAMPLE (10 PERCENT) — Bernoulli row sample + aggregate

@@ -28,7 +28,6 @@ from hive_release_spark.queries.registry import register
     FROM c FULL JOIN s ON c.k = s.k
            FULL JOIN n ON coalesce(c.k, s.k) = n.k
     """,
-    tags=("join", "uniquejoin"),
 )
 def join_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive UNIQUEJOIN (TOK_UNIQUEJOIN — multi-way full outer preserving
@@ -72,7 +71,6 @@ def join_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS hllpp_within_5pct
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
-    tags=("agg", "sketch"),
 )
 def agg_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-distinct sketch: Hive's GenericUDAFBloomFilter/ComputeStats
@@ -114,7 +112,6 @@ def agg_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS union_within_2pct
     FROM lineitem
     """,
-    tags=("agg", "sketch", "mergeable"),
 )
 def agg_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch MERGEABILITY — the property that makes sketches the 100 TB
@@ -163,7 +160,6 @@ def agg_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM f
     GROUP BY l_linestatus
     """,
-    tags=("agg", "stats", "regr"),
 )
 def agg_regr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear-regression aggregate family (Hive GenericUDAFBinarySet
@@ -193,7 +189,6 @@ def agg_regr(spark: SparkSession, sf_dir: str) -> DataFrame:
            ascii(p_brand)                      AS a
     FROM part WHERE p_partkey % 7 = 0
     """,
-    tags=("functions", "numeric"),
 )
 def fn_numeric_repr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Numeric representation functions with exact cross-engine values:
@@ -230,7 +225,6 @@ def fn_numeric_repr(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(floor(p) AS VARCHAR)                 AS floor_s
     FROM t ORDER BY l_orderkey, l_linenumber
     """,
-    tags=("functions", "decimal"),
 )
 def fn_decimal_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DECIMAL arithmetic + promotion (SURVEY.md §1.2 DECIMAL(38) /
@@ -307,7 +301,6 @@ def fn_decimal_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
            epoch_us(ts) // 1000000 AS unix_s
     FROM o, ref
     """,
-    tags=("functions", "datetime"),
 )
 def fn_datetime_misc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/time functions with Hive-specific conventions (SURVEY.md
@@ -351,7 +344,6 @@ def fn_datetime_misc(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM documents WHERE doc_id < 20)
     WHERE pos <= 2
     """,
-    tags=("udtf", "extension", "python"),
 )
 def udtf_python(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF (§2.I GenericUDTF analogue): lateral-joined
@@ -388,7 +380,6 @@ def udtf_python(spark: SparkSession, sf_dir: str) -> DataFrame:
            0 AS n_missed,
            TRUE AS fpp_ok
     """,
-    tags=("agg", "sketch", "bloom"),
 )
 def agg_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive bloom_filter/in_bloom_filter UDAF+UDF pair (SURVEY.md §2.C,
@@ -465,7 +456,6 @@ def agg_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS intersect_exact,
            TRUE AS estimate_within_10pct_of_union
     """,
-    tags=("agg", "sketch", "setops"),
 )
 def agg_hll_intersect_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set-INTERSECTION cardinality from mergeable sketches via
@@ -531,7 +521,6 @@ def agg_hll_intersect_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT l_returnflag, l_quantity AS modal_qty, cnt AS modal_count
     FROM r WHERE rk = 1 ORDER BY l_returnflag
     """,
-    tags=("agg", "mode", "stats"),
 )
 def agg_mode_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mode (most frequent value) with a DETERMINISTIC tie rule —
@@ -575,7 +564,6 @@ def agg_mode_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY o_orderpriority ORDER BY o_orderpriority
     """,
-    tags=("agg", "listagg", "ansi"),
 )
 def agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANSI LISTAGG ... WITHIN GROUP (Spark 4) — ordered string
@@ -615,7 +603,6 @@ def agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(sum(p_retailprice), 2) AS value
     FROM v GROUP BY 1 ORDER BY 1
     """,
-    tags=("functions", "collation", "string"),
 )
 def fn_collation_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collation-aware grouping (Spark 4 collations): a mixed-case
@@ -670,7 +657,6 @@ def fn_collation_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n
     FROM f
     """,
-    tags=("agg", "stats", "correlation"),
 )
 def agg_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise correlation matrix over the fact's numeric columns in
@@ -717,7 +703,6 @@ def agg_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(quantile_cont(q, 0.50), 4) AS q50_cont
     FROM f GROUP BY 1 ORDER BY 1
     """,
-    tags=("agg", "percentile", "sql2008"),
 )
 def agg_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PERCENTILE_DISC — the SQL-standard DISCRETE percentile (the

@@ -115,7 +115,6 @@ def _app_scoped_roundtrip_dir(spark: SparkSession, prefix: str, sf_dir: str) -> 
     FROM lineitem
     GROUP BY l_returnflag
     """,
-    tags=("agg", "pivot"),
 )
 def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIVOT with explicit values (→ single-pass conditional aggregation;
@@ -143,7 +142,6 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT l_returnflag, 'sum_price', sum_price FROM wide
     ORDER BY l_returnflag, measure
     """,
-    tags=("agg", "unpivot"),
 )
 def agg_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNPIVOT / melt — the PIVOT complement (wide measures → long
@@ -170,7 +168,7 @@ GROUP BY s.s_name
 """
 
 
-@register("join_merge_hint", oracle=_SUPP_JOIN_ORACLE, tags=("join", "hint", "smb"))
+@register("join_merge_hint", oracle=_SUPP_JOIN_ORACLE)
 def join_merge_hint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sort-merge join forced via hint — Hive's SMB join path
     (SMBMapJoinOperator / SortedMergeBucketMapJoinOptimizer). With
@@ -185,7 +183,7 @@ def join_merge_hint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("join_shuffle_hash_hint", oracle=_SUPP_JOIN_ORACLE, tags=("join", "hint"))
+@register("join_shuffle_hash_hint", oracle=_SUPP_JOIN_ORACLE)
 def join_shuffle_hash_hint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-hash join via hint — Hive's reduce-side hash join without
     the sort, right for large-but-not-broadcastable build sides."""
@@ -211,7 +209,6 @@ def join_shuffle_hash_hint(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_quantity IS NULL OR isfinite(l_quantity)
     WINDOW w AS (PARTITION BY l_returnflag, l_linestatus)
     """,
-    tags=("ptf", "extension", "pandas"),
 )
 def ptf_apply_in_pandas_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group z-score via ``applyInPandas`` — the Python replacement
@@ -255,7 +252,6 @@ def ptf_apply_in_pandas_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(l_orderkey AS VARCHAR) AS k, CAST(l_linenumber AS VARCHAR) AS ln
     FROM lineitem WHERE l_orderkey < 100
     """,
-    tags=("script", "transform"),
 )
 def script_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive TRANSFORM ... USING 'script' (ScriptOperator, §2.A) — Spark
@@ -278,7 +274,6 @@ def script_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(p_partkey % 7 AS BIGINT) AS bucket_v
     FROM part WHERE p_partkey % 4 = 0
     """,
-    tags=("functions", "map"),
 )
 def fn_str_to_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """str_to_map round-trip (GenericUDFStrToMap): serialize two fields
@@ -306,7 +301,6 @@ def fn_str_to_map(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(p_partkey AS VARCHAR)              AS id_param
     FROM part WHERE p_partkey % 5 = 0
     """,
-    tags=("functions", "url"),
 )
 def fn_parse_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     """parse_url HOST/PATH/QUERY:key (GenericUDFParseUrl): build a URL
@@ -365,7 +359,6 @@ def fn_parse_url(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS sorted_ok
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
-    tags=("agg", "sketch"),
 )
 def agg_histogram_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
     """histogram_numeric (GenericUDAFHistogramNumeric parity — Spark's
@@ -461,7 +454,6 @@ def agg_histogram_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
               AND NOT EXISTS (SELECT 1 FROM customer c
                               WHERE c.c_custkey = o.o_custkey)) AS orphans_o_custkey
     """,
-    tags=("quality", "agg", "join", "constraints"),
 )
 def dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Constraint VALIDATION (dbt-test / Deequ shape) for the
@@ -493,7 +485,6 @@ def dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS rank90_ok
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
-    tags=("agg", "sketch", "percentile"),
 )
 def agg_percentile_approx_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """percentile_approx (GenericUDAFPercentileApprox parity — Spark's
@@ -569,7 +560,6 @@ def agg_percentile_approx_contract(spark: SparkSession, sf_dir: str) -> DataFram
     SELECT l_suppkey, exact_n, TRUE AS never_under, TRUE AS bound_ok
     FROM keys ORDER BY l_suppkey
     """,
-    tags=("agg", "sketch"),
 )
 def agg_count_min_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch (Spark's count_min_sketch / Hive's DataSketches
@@ -628,7 +618,6 @@ def agg_count_min_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events e JOIN all3 USING (user_id)
     GROUP BY e.user_id ORDER BY e.user_id
     """,
-    tags=("tpcds", "setop", "agg", "single_scan"),
 )
 def ds_cross_channel_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS q38 shape: users active in ALL THREE channels. The spec
@@ -671,7 +660,6 @@ def ds_cross_channel_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM days d LEFT JOIN per_day p USING (day)
     ORDER BY d.day
     """,
-    tags=("sql", "recursive", "calendar"),
 )
 def sql_recursive_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WITH RECURSIVE — the SQL:1999 recursion surface Spark gained in
@@ -719,7 +707,6 @@ def sql_recursive_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS charged_total
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
-    tags=("functions", "extension", "macro", "sql_udf"),
 )
 def fn_sql_macro(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive ``CREATE TEMPORARY MACRO`` parity through Spark 4 SQL UDFs
@@ -761,7 +748,6 @@ def fn_sql_macro(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderpriority
     ORDER BY o_orderpriority
     """,
-    tags=("sql", "extension", "pipe"),
 )
 def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL pipe syntax (Spark 4's ``|>`` operators, the linear
@@ -793,7 +779,6 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_quantity >= 49
     ORDER BY l_orderkey, l_linenumber
     """,
-    tags=("sql", "extension", "lateral_alias"),
 )
 def sql_lateral_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lateral column aliases: later SELECT items reference earlier
@@ -827,7 +812,6 @@ def sql_lateral_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY ALL
     ORDER BY ALL
     """,
-    tags=("sql", "extension", "agg"),
 )
 def sql_group_order_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY ALL / ORDER BY ALL (r5): the DuckDB-popularized
@@ -860,7 +844,6 @@ def sql_group_order_all(spark: SparkSession, sf_dir: str) -> DataFrame:
                                ORDER BY o_totalprice DESC, o_orderkey) = 1
     ORDER BY o_custkey
     """,
-    tags=("sql", "extension", "window", "topk"),
 )
 def sql_qualify_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """QUALIFY — the window-function WHERE (each customer's single
@@ -900,7 +883,6 @@ def sql_qualify_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem WHERE l_orderkey % 1000 = 0 AND l_linenumber = 1
     ORDER BY kind, id, amount
     """,
-    tags=("setop", "sql", "extension"),
 )
 def setop_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION by COLUMN NAME, not position (r5, completing §2.F): the
@@ -949,7 +931,6 @@ def setop_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY t.tier
     ORDER BY t.tier
     """,
-    tags=("sql", "extension", "values"),
 )
 def sql_values_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inline VALUES table constructor (the zero-IO dimension: Hive's
@@ -985,7 +966,6 @@ def sql_values_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders WHERE o_orderkey % 5000 = 0
     ORDER BY o_orderkey
     """,
-    tags=("sql", "extension", "star_except"),
 )
 def sql_select_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SELECT * EXCEPT — the wide-table ergonomics feature (keep all
@@ -1025,7 +1005,6 @@ def sql_select_except(spark: SparkSession, sf_dir: str) -> DataFrame:
                   ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
     ORDER BY o_custkey, rn
     """,
-    tags=("sql", "extension", "named_window"),
 )
 def sql_named_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Named WINDOW clause — define partition/order specs once and
@@ -1079,7 +1058,6 @@ def sql_named_window(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS value_cents
     FROM events GROUP BY event_type ORDER BY event_type
     """,
-    tags=("source", "xml", "roundtrip"),
 )
 def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XML DATASOURCE roundtrip, oracle-gated for losslessness: the
@@ -1157,7 +1135,6 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_orderkey % 10 = 0
     GROUP BY l_returnflag ORDER BY l_returnflag
     """,
-    tags=("source", "sequencefile", "roundtrip"),
 )
 def source_sequencefile_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SequenceFile roundtrip, oracle-gated for losslessness (judge-

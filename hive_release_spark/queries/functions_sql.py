@@ -47,7 +47,6 @@ from hive_release_spark.queries.registry import register
            trim(' ' || p_brand || ' ')            AS trimmed
     FROM part
     """,
-    tags=("functions", "string"),
 )
 def fn_string(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String family (Hive UDFUpper/UDFLower/UDFLength/UDFSubstr/
@@ -81,7 +80,6 @@ def fn_string(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     WHERE doc_id < 200
     """,
-    tags=("functions", "regex"),
 )
 def fn_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """regexp_extract / regexp_replace / rlike (Hive UDFRegExpExtract,
@@ -122,7 +120,6 @@ def fn_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM f
     GROUP BY l_returnflag
     """,
-    tags=("functions", "math"),
 )
 def fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Math family (UDFAbs/UDFCeil/UDFFloor/UDFSqrt/UDFExp/UDFLn/UDFLog10/
@@ -178,7 +175,6 @@ def fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
       -- measurement — dropped scan-side (functions/temporal.py)
       AND o_orderdate < TIMESTAMP '2200-01-01 00:00:00'
     """,
-    tags=("functions", "datetime"),
 )
 def fn_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/time family (UDFYear/Month/Day/WeekOfYear, GenericUDFQuarter,
@@ -225,7 +221,6 @@ def fn_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
            CASE WHEN c_acctbal IS NULL THEN 1 ELSE 0 END AS bal_null
     FROM customer
     """,
-    tags=("functions", "conditional"),
 )
 def fn_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional family (GenericUDFWhen/Coalesce/NullIf/Greatest/Least/
@@ -281,7 +276,6 @@ def fn_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY event_type
     """,
-    tags=("functions", "json"),
 )
 def fn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON path extraction (Hive GenericUDFGetJsonObject / json_tuple —
@@ -325,7 +319,6 @@ def fn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
                  THEN props->>'missing' END) AS n_missing
     FROM events GROUP BY event_type ORDER BY event_type
     """,
-    tags=("functions", "json", "variant"),
 )
 def fn_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured via Spark 4's VARIANT type — the modern engine
@@ -364,7 +357,6 @@ def fn_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     WHERE c_custkey % 10 = 0
     """,
-    tags=("functions", "hash"),
 )
 def fn_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash/crypto family (UDFMd5, GenericUDFSha2, GenericUDFBase64 —
@@ -406,7 +398,6 @@ def fn_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     WHERE c_custkey % 20 = 0
     """,
-    tags=("functions", "masking"),
 )
 def fn_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data masking (Hive GenericUDFMask family — SURVEY.md §2.H): upper→X,
@@ -439,7 +430,6 @@ def fn_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
                  [c_nationkey % 5, c_nationkey % 3, 7] AS l
           FROM customer WHERE c_custkey % 50 = 0)
     """,
-    tags=("functions", "complex_types"),
 )
 def fn_complex_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ARRAY/STRUCT constructors + accessors (Hive GenericUDFArray/Struct/
@@ -482,7 +472,6 @@ def fn_complex_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM srt s JOIN rep r USING (l_orderkey)
     GROUP BY 1, 2 ORDER BY 1
     """,
-    tags=("functions", "udtf", "complex_types"),
 )
 def fn_gap_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The §2.H gap-tier functions as one oracle-gated pipeline
@@ -541,7 +530,6 @@ def fn_gap_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE concat('1:', o_orderpriority) END            AS rendered
     FROM orders WHERE o_orderkey % 25 = 0
     """,
-    tags=("functions", "uniontype", "complex_types"),
 )
 def fn_union_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNIONTYPE round-trip (Hive GenericUDFUnion/ExtractUnion, serde2
@@ -596,7 +584,6 @@ def fn_union_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n DESC, word
     LIMIT 30
     """,
-    tags=("udtf", "lateral_view"),
 )
 def udtf_explode_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LATERAL VIEW explode(split(...)) — Hive LateralViewJoinOperator +
@@ -621,7 +608,6 @@ def udtf_explode_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM documents WHERE doc_id < 50)
     WHERE pos <= 3
     """,
-    tags=("udtf", "lateral_view"),
 )
 def udtf_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """posexplode — position-aware UDTF (Hive GenericUDTFPosExplode).
@@ -642,7 +628,6 @@ def udtf_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT p_partkey, 'type', p_type FROM part WHERE p_partkey % 9 = 0
     ORDER BY p_partkey, k
     """,
-    tags=("udtf", "lateral_view", "map"),
 )
 def udtf_explode_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LATERAL VIEW explode over a MAP column (Hive GenericUDTFExplode's
@@ -669,7 +654,6 @@ def udtf_explode_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT r_regionkey, 'hi', upper(r_name) FROM region
     ORDER BY r_regionkey, tier DESC
     """,
-    tags=("udtf", "lateral_view", "inline"),
 )
 def udtf_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """inline(array<struct>) — Hive GenericUDTFInline: explode an array
@@ -693,7 +677,6 @@ def udtf_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT r_regionkey + 100, upper(r_name) FROM region
     """,
-    tags=("udtf",),
 )
 def udtf_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """stack(n, ...) row generator (Hive GenericUDTFStack); the oracle is
@@ -718,7 +701,6 @@ def udtf_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM part WHERE p_partkey % 40 = 0
     ORDER BY p_partkey
     """,
-    tags=("functions", "bitwise"),
 )
 def fn_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitwise operator family (Hive UDFOPBitAnd/Or/Xor/Not,
@@ -761,7 +743,6 @@ def fn_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
            coalesce(array_to_string(list_sort(flatten([a1, a2])), ','), '')    AS flat_s
     FROM t ORDER BY c_custkey
     """,
-    tags=("functions", "complex_types", "array"),
 )
 def fn_array_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array-algebra family (Hive/Spark array_union / array_intersect /
@@ -810,7 +791,6 @@ def fn_array_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
            CASE WHEN list_contains(map_keys(m), 'bucket') THEN 1 ELSE 0 END AS has_bucket
     FROM t ORDER BY p_partkey
     """,
-    tags=("functions", "map", "complex_types"),
 )
 def fn_map_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MAP-type family (Hive GenericUDFMap/MapKeys/MapValues/Size,
@@ -845,7 +825,6 @@ def fn_map_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(CASE WHEN l_tax > l_discount THEN 1 END) AS BIGINT) AS n_tax_gt
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
-    tags=("agg", "functions", "boolean"),
 )
 def agg_bool_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boolean aggregate family (every/any/some — Hive's
@@ -886,7 +865,6 @@ def agg_bool_family(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(sum(radians(q)), 4)                         AS s_rad
     FROM f GROUP BY l_returnflag ORDER BY l_returnflag
     """,
-    tags=("functions", "math", "trig"),
 )
 def fn_trig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trigonometric family (UDFSin/Cos/Atan2, UDFDegrees/UDFRadians —
@@ -938,7 +916,6 @@ def fn_trig(spark: SparkSession, sf_dir: str) -> DataFrame:
                x -> upper(x[1:1]) || x[2:]), ' ') AS title3
     FROM base ORDER BY doc_id
     """,
-    tags=("functions", "hof", "arrays"),
 )
 def fn_hof_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The lambda higher-order-function family as a named surface —
@@ -1002,7 +979,6 @@ def _map_str(col):
     FROM part WHERE p_partkey % 40 = 0
     ORDER BY p_partkey
     """,
-    tags=("functions", "map", "hof", "complex_types"),
 )
 def fn_map_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MAP lambda family — transform_values / map_filter / map_zip_with
@@ -1052,7 +1028,6 @@ def fn_map_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders WHERE o_orderkey % 7 = 0
     ORDER BY o_orderkey
     """,
-    tags=("functions", "ansi", "try"),
 )
 def fn_try_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The try_* error-safe family (try_divide / try_cast / NULL-on-
@@ -1094,7 +1069,6 @@ def fn_try_family(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(avg(l_quantity) FILTER (WHERE l_tax = 0), 2) AS avg_qty_notax
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
-    tags=("agg", "ansi", "filter_clause"),
 )
 def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ANSI aggregate FILTER clause — per-aggregate predicates in

@@ -89,7 +89,6 @@ def _copurchase_pairs(li: DataFrame) -> DataFrame:
     FROM p3 JOIN deg ON p3.a = deg.a
     ORDER BY doc_id
     """,
-    tags=("llm", "graph", "iterative", "neardup"),
 )
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the near-dup graph — ranks the "hub" documents a
@@ -129,7 +128,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS clustering_coeff
     FROM st CROSS JOIN tri
     """,
-    tags=("llm", "graph", "neardup"),
 )
 def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle count + global clustering coefficient of the near-dup
@@ -164,7 +162,6 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(cluster_size - 1) AS BIGINT) AS docs_dropped
     FROM sizes GROUP BY 1 ORDER BY 1
     """,
-    tags=("llm", "graph", "dedup", "neardup"),
 )
 def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTER-SIZE distribution — the dedup yield report: for
@@ -220,7 +217,6 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM deg LEFT JOIN tpn ON deg.v = tpn.v
     ORDER BY doc_id
     """,
-    tags=("llm", "graph", "neardup"),
 )
 def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node clustering coefficient of the near-dup graph (new r5):
@@ -277,7 +273,6 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
             (ORDER BY round(aa, 6) DESC, u, v) AS rk FROM nonedge)
     WHERE rk <= 20 ORDER BY rk
     """,
-    tags=("graph", "linkpred", "basket"),
 )
 def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADAMIC-ADAR link prediction over the part CO-PURCHASE graph
@@ -378,7 +373,6 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
             (ORDER BY score DESC, u, v) AS rk FROM scored)
     WHERE rk <= 20 ORDER BY rk
     """,
-    tags=("graph", "linkpred", "basket"),
 )
 def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEIGHBORHOOD-JACCARD link prediction on the same co-purchase
@@ -483,7 +477,6 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS assortativity_micro
     FROM s
     """,
-    tags=("graph", "assortativity", "network", "basket"),
 )
 def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DEGREE ASSORTATIVITY of the co-purchase graph — Pearson

@@ -41,7 +41,6 @@ from hive_release_spark.queries.registry import register
     WHERE p.p_size >= 10
     GROUP BY p.p_brand
     """,
-    tags=("join", "broadcast", "agg"),
 )
 def join_broadcast_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact ⋈ broadcast(dim): Hive's map join. ``F.broadcast`` pins the
@@ -83,7 +82,6 @@ def join_broadcast_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, l.l_orderkey
     LIMIT 10
     """,
-    tags=("join", "multiway", "topk", "flagship"),
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: 3-way join → agg → top-k. customer broadcasts into
@@ -129,7 +127,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n.n_name
     ORDER BY revenue DESC, n.n_name
     """,
-    tags=("join", "multiway", "flagship"),
 )
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 6-way snowflake join. Fixed-size dims
@@ -178,7 +175,7 @@ GROUP BY c.c_custkey
 """
 
 
-@register("join_left_outer", oracle=_LEFT_ORACLE, tags=("join", "outer"))
+@register("join_left_outer", oracle=_LEFT_ORACLE)
 def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER JOIN preserving customers with no orders."""
     cust = load_table(spark, sf_dir, "customer")
@@ -193,7 +190,7 @@ def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("join_right_outer", oracle=_LEFT_ORACLE, tags=("join", "outer"))
+@register("join_right_outer", oracle=_LEFT_ORACLE)
 def join_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RIGHT OUTER JOIN — mirror of the left query (same oracle), exercising
     how='right'."""
@@ -219,7 +216,6 @@ def join_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL JOIN (SELECT s_nationkey AS k, count(*) AS s_cnt FROM supplier GROUP BY s_nationkey) s
       ON c.k = s.k
     """,
-    tags=("join", "outer"),
 )
 def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER JOIN of two aggregates (Hive TOK_FULLOUTERJOIN)."""
@@ -252,7 +248,6 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE EXISTS (SELECT 1 FROM orders o
                   WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
     """,
-    tags=("join", "semi"),
 )
 def join_left_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT SEMI JOIN (Hive TOK_LEFTSEMIJOIN / HiveSemiJoinRule)."""
@@ -269,7 +264,6 @@ def join_left_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT c_custkey, c_nationkey FROM customer c
     WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
     """,
-    tags=("join", "anti"),
 )
 def join_left_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT ANTI JOIN — Hive writes NOT IN/NOT EXISTS, rewritten by
@@ -286,7 +280,6 @@ def join_left_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT r.r_name, n.n_name FROM region r CROSS JOIN nation n
     """,
-    tags=("join", "cross"),
 )
 def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit CROSS JOIN (Hive TOK_CROSSJOIN; CrossProductCheck guard —
@@ -303,7 +296,6 @@ def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM supplier s JOIN nation n
       ON s.s_nationkey = n.n_nationkey AND s.s_acctbal > 100.0 * n.n_nationkey
     """,
-    tags=("join", "theta"),
 )
 def join_theta_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi join + residual non-equi predicate — exactly how Hive's
@@ -322,7 +314,6 @@ def join_theta_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT a.r_regionkey AS k1, b.r_regionkey AS k2
     FROM region a JOIN region b ON a.r_regionkey < b.r_regionkey
     """,
-    tags=("join", "theta"),
 )
 def join_pure_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """True theta join (no equi key) → Spark BroadcastNestedLoopJoin, a
@@ -345,7 +336,6 @@ def join_pure_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'MACHINERY')
     GROUP BY o_orderpriority
     """,
-    tags=("subquery",),
 )
 def subquery_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncorrelated IN subquery → semi join (Catalyst RewritePredicateSubquery)."""
@@ -368,7 +358,6 @@ def subquery_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE c_acctbal > (SELECT avg(c2.c_acctbal) FROM customer c2
                        WHERE c2.c_nationkey = c.c_nationkey)
     """,
-    tags=("subquery", "correlated"),
 )
 def subquery_scalar_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery (Hive GenericUDFSQCountCheck guard;
@@ -391,7 +380,6 @@ def subquery_scalar_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM part
     WHERE p_partkey NOT IN (SELECT l_partkey FROM lineitem WHERE l_quantity > 49)
     """,
-    tags=("subquery", "anti"),
 )
 def subquery_not_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOT IN (null-aware anti join)."""

@@ -33,7 +33,6 @@ from hive_release_spark.queries.registry import register
     FROM documents
     GROUP BY 1
     """,
-    tags=("llm", "dedup"),
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by content key (here: 5-token prefix) with deterministic
@@ -59,7 +58,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY a.doc_id, b.doc_id
     HAVING count(*) * 1.0 / (any_value(a.n_sh) + any_value(b.n_sh) - count(*)) >= 0.5
     """,
-    tags=("llm", "dedup", "neardup"),
 )
 def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-shingle Jaccard near-dup pairs (≥ 0.5) via inverted-index join —
@@ -84,7 +82,6 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY a.doc_id, b.doc_id
     HAVING count(*) * 1.0 / (any_value(a.n_sh) + any_value(b.n_sh) - count(*)) >= 0.5
     """,
-    tags=("llm", "dedup", "neardup", "prefix_filter"),
 )
 def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Jaccard pairs (≥ 0.5) via PREFIX FILTERING — same oracle as
@@ -129,7 +126,7 @@ _JACCARD_ORACLE = """
 """
 
 
-@register("dedup_minhash_lsh", oracle=_JACCARD_ORACLE, tags=("llm", "dedup", "neardup"))
+@register("dedup_minhash_lsh", oracle=_JACCARD_ORACLE)
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(32)-LSH(8 bands) candidates verified with exact Jaccard.
 
@@ -171,7 +168,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM docs_g d LEFT JOIN agg a USING (doc_id)
     ORDER BY d.doc_id
     """,
-    tags=("llm", "dedup", "span"),
 )
 def dedup_span_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact duplicate-span removal (C4 / Lee-et-al exact-substring
@@ -182,7 +178,7 @@ def dedup_span_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.span_chunk_dedup(docs, k=10).orderBy("doc_id")
 
 
-@register("dedup_simhash", tags=("llm", "dedup", "neardup", "no_oracle"))
+@register("dedup_simhash")
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash-64 near-dup pairs (hamming ≤ 6) via 16-bit band buckets.
 
@@ -209,7 +205,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM e a JOIN e b ON a.vec_id < b.vec_id
     WHERE list_cosine_similarity(a.v, b.v) >= 0.4
     """,
-    tags=("llm", "dedup", "similarity"),
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup: all pairs with cosine ≥ 0.4, on the BLAS
@@ -245,7 +240,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM assign a JOIN assign b ON a.cell = b.cell AND a.vec_id < b.vec_id
     WHERE list_cosine_similarity(a.v, b.v) >= 0.4
     """,
-    tags=("llm", "dedup", "similarity", "neardup"),
 )
 def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup: nearest-centroid cell bucketing +
@@ -282,7 +276,6 @@ def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT query_id, neighbor_id, round(sim, 6) AS sim, rank
     FROM ranked WHERE rank <= 5
     """,
-    tags=("llm", "similarity", "topk"),
 )
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 for query vectors (vec_id < 20): the exact
@@ -334,7 +327,6 @@ def _lsh_oracle() -> str:
 @register(
     "sim_ann_lsh",
     oracle=_lsh_oracle(),
-    tags=("llm", "similarity", "ann"),
 )
 def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH bucketed ANN top-5: 8 OR-amplified tables of
@@ -400,7 +392,6 @@ def _ivf_oracle(n_cells: int, n_probe: int, k: int, nq: int) -> str:
 @register(
     "sim_ann_ivf",
     oracle=_ivf_oracle(n_cells=16, n_probe=6, k=5, nq=20),
-    tags=("llm", "similarity", "ann"),
 )
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF coarse-quantizer ANN top-5: corpus partitioned into Voronoi
@@ -420,7 +411,6 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sim_ann_ivf_bcast",
     oracle=_ivf_oracle(n_cells=64, n_probe=8, k=5, nq=20),
-    tags=("llm", "similarity", "ann", "broadcast"),
 )
 def sim_ann_ivf_bcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN at 64 cells / 8 probes, four times the cells of
@@ -452,7 +442,6 @@ def sim_ann_ivf_bcast(spark: SparkSession, sf_dir: str) -> DataFrame:
            length(text) - length(regexp_replace(text, '[^a-z]', '', 'g')) AS n_nonalpha
     FROM documents
     """,
-    tags=("llm", "text"),
 )
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-score features as exact integer counts (ratios = downstream
@@ -487,7 +476,6 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS predicted
     FROM documents
     """,
-    tags=("llm", "text", "langid"),
 )
 def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rule-chain language ID (marker tokens). The n-gram scorer variant is
@@ -522,7 +510,6 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 'de' END AS predicted
     FROM s
     """,
-    tags=("llm", "text", "langid"),
 )
 def text_langid_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Character-bigram language scorer as an Arrow-batched pandas UDF —
@@ -541,7 +528,6 @@ def text_langid_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS fingerprint
     FROM documents
     """,
-    tags=("llm", "text"),
 )
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical document fingerprint: md5 of the sorted distinct token
@@ -563,7 +549,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY freq DESC, ngram
     LIMIT 30
     """,
-    tags=("llm", "text", "ngrams"),
 )
 def text_ngrams_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive ``ngrams`` UDAF parity: corpus top-30 bigrams."""
@@ -585,7 +570,6 @@ def text_ngrams_top(spark: SparkSession, sf_dir: str) -> DataFrame:
            (['image','audio','video'])[(doc_id % 3) + 1] AS modality
     FROM documents
     """,
-    tags=("llm", "multimodal"),
 )
 def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary asset column + typed metadata (payload elided from the
@@ -623,7 +607,6 @@ def _hexpair(k: int) -> str:
     FROM b
     ORDER BY asset_id
     """,
-    tags=("llm", "multimodal", "arrow"),
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode/feature-extract via mapInPandas — the Arrow plumbing
@@ -689,7 +672,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                  neighbor_id) AS rank
       FROM adc) WHERE rank <= 5
     """,
-    tags=("llm", "similarity", "ann", "quantize"),
 )
 def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN top-5: 8 subspaces of 8 dims, 16-entry
@@ -721,7 +703,6 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
            sha256(text || ':' || CAST(frame_idx AS VARCHAR)) AS frame_checksum
     FROM f ORDER BY asset_id, frame_idx
     """,
-    tags=("llm", "multimodal", "arrow", "udtf"),
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame sampling (every 4th frame) through the 1→N
@@ -766,7 +747,6 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(min(b) = a AS BOOLEAN) AS is_survivor
     FROM reach GROUP BY a
     """,
-    tags=("llm", "dedup", "neardup", "iterative"),
 )
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS, not just pairs: transitive closure of the
@@ -802,7 +782,6 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM scored
     ) WHERE rk <= 3
     """,
-    tags=("llm", "text", "tfidf"),
 )
 def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 TF-IDF terms per document (keyword extraction / relevance
@@ -824,7 +803,6 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY label, pos
     """,
-    tags=("llm", "similarity", "agg", "centroid"),
 )
 def emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding centroids (element-wise mean over the vector
@@ -853,7 +831,6 @@ def emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING count(*) * 1.0 / any_value(a.n_sh) >= 0.8
     ORDER BY doc_small, doc_big
     """,
-    tags=("llm", "dedup", "neardup", "containment"),
 )
 def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONTAINMENT near-dup pairs: |A∩B| / |A| ≥ 0.8 with A the smaller
@@ -904,7 +881,6 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE levenshtein(a.p_name, b.p_name) <= 2
     ORDER BY a.block, name_a, name_b
     """,
-    tags=("llm", "dedup", "linkage", "fuzzy"),
 )
 def dedup_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked FUZZY RECORD LINKAGE — the entity-resolution workhorse
@@ -983,7 +959,6 @@ def _simhash32_sig_sql() -> str:
 @register(
     "dedup_simhash_banded",
     oracle=_simhash32_sig_sql(),
-    tags=("llm", "dedup", "neardup", "simhash"),
 )
 def dedup_simhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORACLE-GATED SimHash near-dup pairs — the hash-gated twin of the
@@ -1044,7 +1019,6 @@ def dedup_simhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM rer)
     WHERE rank <= 5 ORDER BY query_id, rank
     """,
-    tags=("llm", "similarity", "ann", "quantization"),
 )
 def sim_ann_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BINARY-QUANTIZATION ANN — 1-bit sign codes, Hamming-distance
@@ -1092,7 +1066,6 @@ def sim_ann_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cand WHERE levenshtein(name_a, name_b) <= 2
     ORDER BY name_a, name_b
     """,
-    tags=("llm", "dedup", "linkage", "snm"),
 )
 def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SORTED-NEIGHBORHOOD record linkage (Hernandez-Stolfo) — the
@@ -1190,7 +1163,6 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(max(nrm), 6) AS max_norm
     FROM n CROSS JOIN s GROUP BY label, s.mu, s.sd ORDER BY label
     """,
-    tags=("llm", "embeddings", "dq", "report"),
 )
 def emb_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EMBEDDING QUALITY REPORT — the hygiene gate an embedding table
@@ -1291,7 +1263,6 @@ def emb_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS bytes_saved
     FROM g GROUP BY 1 ORDER BY 1
     """,
-    tags=("llm", "multimodal", "dedup", "binary"),
 )
 def multimodal_payload_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BINARY-PAYLOAD exact dedup — content-addressed storage math for
@@ -1372,7 +1343,6 @@ def multimodal_payload_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM short)
     WHERE rank <= 5 ORDER BY query_id, rank
     """,
-    tags=("llm", "similarity", "ann", "quantization"),
 )
 def sim_ann_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCALAR-QUANTIZATION (SQ8) ANN — per-dimension min-max int8

@@ -27,7 +27,6 @@ from hive_release_spark.queries.registry import register
                                ' +', ' ', 'g'))) AS norm_len
     FROM documents WHERE doc_id < 250
     """,
-    tags=("llm", "text", "normalize"),
 )
 def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boilerplate-strip normalization: lowercase, non-alnum → space,
@@ -54,7 +53,6 @@ def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     GROUP BY 1, 2
     """,
-    tags=("llm", "split"),
 )
 def split_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 80/10/10 train/eval/test split on a stable key —
@@ -90,7 +88,7 @@ FROM ranked WHERE rank <= 5
 """
 
 
-@register("sim_cosine_topk_arrow", oracle=_TOPK_ORACLE, tags=("llm", "similarity", "pandas"))
+@register("sim_cosine_topk_arrow", oracle=_TOPK_ORACLE)
 def sim_cosine_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cosine top-k via a numpy matmul inside mapInPandas — the
     vectorized fast path for wide embeddings (BLAS beats per-element

@@ -43,7 +43,6 @@ from hive_release_spark.queries.registry import register
     FROM ratio r LEFT JOIN share s ON r.doc_id = s.doc_id
     ORDER BY r.doc_id
     """,
-    tags=("llm", "text", "quality"),
 )
 def text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher/C4 repetition rules: per-doc top-bigram share and distinct
@@ -69,7 +68,6 @@ def text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pii
     ORDER BY doc_id
     """,
-    tags=("llm", "text", "pii"),
 )
 def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII redaction: the corpus text is synthetic (no real PII), so a
@@ -107,7 +105,6 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0)
     ORDER BY vec_id
     """,
-    tags=("llm", "embedding", "quantize"),
 )
 def emb_normalize_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding L2-normalize + int8 quantize — ANN-index storage prep.
@@ -138,7 +135,6 @@ def emb_normalize_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY lang, source
     ORDER BY lang, source
     """,
-    tags=("llm", "stats", "agg"),
 )
 def corpus_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus composition report: per (lang, source) doc/token/char
@@ -172,7 +168,6 @@ def corpus_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND n_chars >= 20
     ORDER BY doc_id
     """,
-    tags=("llm", "pipeline", "dedup", "quality"),
 )
 def pipeline_dedup_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end ingest pipeline slice: exact-dedup (hash groupBy,
@@ -209,7 +204,6 @@ def pipeline_dedup_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "emb_kmeans",
     oracle=clustering.kmeans_oracle(k=8, n_iter=3),
-    tags=("llm", "embedding", "clustering", "iterative"),
 )
 def emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd's k-means (k=8, 3 iterations) over the embedding corpus —
@@ -226,7 +220,6 @@ def emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "emb_pca_project",
     oracle=clustering.power_iteration_oracle(n_iter=6, nq=20, dim=64),
-    tags=("llm", "embedding", "pca"),
 )
 def emb_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dominant-component PCA projection by QUANTIZED power iteration —
@@ -269,7 +262,6 @@ def emb_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, count(*) AS n_bigrams, round(avg(lp), 6) AS avg_logprob
     FROM scored GROUP BY doc_id ORDER BY doc_id
     """,
-    tags=("llm", "text", "quality", "lm"),
 )
 def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style LM quality filter: self-trained add-one-smoothed
@@ -294,7 +286,6 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(regr_r2(ln(f), ln(r)), 4) AS fit_r2
     FROM ranked
     """,
-    tags=("llm", "stats", "agg", "text"),
 )
 def corpus_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf's-law fit of the corpus vocabulary: OLS slope and R² of
@@ -306,11 +297,7 @@ def corpus_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     a unique (freq desc, term) tie-break so both engines see identical
     points."""
     docs = load_table(spark, sf_dir, "documents")
-    freq = (
-        docs.select(F.explode(text.tokens("text")).alias("term"))
-        .groupBy("term")
-        .agg(F.count("*").alias("f"))
-    )
+    freq = text.term_counts(docs).withColumnRenamed("n", "f")
     ranked = freq.select(
         "f",
         F.row_number()
@@ -331,7 +318,6 @@ def corpus_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS ordered_ok, TRUE AS means_ok, TRUE AS ortho_ok
     FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0
     """,
-    tags=("llm", "embedding", "pca", "sketch"),
 )
 def emb_pca_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PCA's mathematical GUARANTEES as an oracle-gated contract (same
@@ -399,7 +385,6 @@ def emb_pca_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE c_xy >= 5
     ORDER BY pmi DESC, w1, w2 LIMIT 20
     """,
-    tags=("llm", "text", "stats", "collocation"),
 )
 def text_pmi_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top collocations by pointwise mutual information —
@@ -472,7 +457,6 @@ def text_pmi_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT degree, count(*) AS n_docs
     FROM deg GROUP BY degree ORDER BY degree
     """,
-    tags=("llm", "dedup", "neardup", "stats"),
 )
 def dedup_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree distribution of the near-dup similarity graph — the
@@ -503,7 +487,6 @@ def dedup_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     GROUP BY 1, 2 ORDER BY bucket
     """,
-    tags=("llm", "stats", "agg", "text"),
 )
 def corpus_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-length histogram (16-token buckets) — the sequence-length
@@ -546,7 +529,6 @@ def corpus_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT query_id, neighbor_id, neighbor_label, round(sim, 6) AS sim, rank
     FROM ranked WHERE rank <= 5
     """,
-    tags=("llm", "similarity", "topk", "training"),
 )
 def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining for contrastive training: per query vector,
@@ -615,7 +597,6 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN ov USING (query_id)
     ORDER BY q.query_id
     """,
-    tags=("llm", "similarity", "embedding", "matryoshka"),
 )
 def emb_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka-truncation retrieval quality: top-5 neighbors from the
@@ -708,7 +689,6 @@ def emb_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM intra i JOIN gaps g ON i.label = g.label
     ORDER BY i.label
     """,
-    tags=("llm", "embedding", "clustering", "eval"),
 )
 def emb_cluster_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-separation diagnostics per label: mean Euclidean distance
@@ -806,7 +786,6 @@ def emb_cluster_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(regr_r2(y, x), 4) AS r2
     FROM pts
     """,
-    tags=("llm", "stats", "vocabulary", "regression"),
 )
 def corpus_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heaps'-law fit: vocabulary growth V ≈ K·Nᵝ over the corpus read
@@ -907,7 +886,6 @@ def corpus_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             JOIN s3 ON s1.query_id = s3.query_id
     ORDER BY s1.query_id
     """,
-    tags=("llm", "similarity", "rerank", "mmr"),
 )
 def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (lambda=0.7): pick 3
@@ -1044,15 +1022,14 @@ _BM25_TERMS = ("spark", "table", "query")
       GROUP BY tf.doc_id)
     SELECT doc_id, round(score, 6) AS bm25, rk FROM (
       SELECT doc_id, score,
-             -- rank on the REPORTED precision (r11 replica axis): the
-             -- raw float sum differs between engines in the last ulp,
-             -- so a sub-1e-6 near-tie can flip raw-score ranks
+             -- rank on the REPORTED precision: the raw float sum
+             -- differs between engines in the last ulp, so a sub-1e-6
+             -- near-tie can flip raw-score ranks
              row_number() OVER (ORDER BY round(score, 6) DESC, doc_id)
                AS rk
       FROM scored)
     WHERE rk <= 20 ORDER BY rk
     """,
-    tags=("llm", "text", "search", "bm25"),
 )
 def search_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 document ranking (k1=1.2, b=0.75) for a fixed keyword query
@@ -1065,33 +1042,11 @@ def search_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     algebra replayed exactly by the oracle, doc_id tie-break on the
     rank."""
     docs = load_table(spark, sf_dir, "documents")
-    # r13 (guide §1.2/§6 — one corpus pass, for real): the former shape
-    # consumed the exploded token frame through FOUR unpersisted
-    # subtrees (dl fed both the stats rollup and the scored join; tf
-    # fed both df and scored), so scan → split → explode executed four
-    # times per run.  The query term list is a 3-literal constant, so
-    # every statistic rides ONE doc-grain conditional aggregate over
-    # ONE tokenize pass: dlen plus one tf counter per query term; the
-    # corpus stats AND document frequencies are its 1-row rollup
-    # (n_docs = count, avg_len = avg(dlen) — exact: sum of longs, one
-    # division; df_i = count of docs with tf_i > 0 — the identical
-    # integers the tf-then-groupBy produced).  Per-doc scoring sums
-    # the identical idf·tf/norm expression over PRESENT terms only
-    # (tf_i > 0 — absent postings contribute exactly 0, and docs with
-    # no query term are filtered out, as the old inner join dropped
-    # them).
-    from pyspark import StorageLevel
-
-    toks = docs.select("doc_id", F.explode(text.tokens("text")).alias("term"))
-    per_doc = toks.groupBy("doc_id").agg(
-        F.count("*").alias("dlen"),
-        *[
-            F.count(F.when(F.col("term") == t, True)).alias(f"tf_{i}")
-            for i, t in enumerate(_BM25_TERMS)
-        ],
-    ).persist(StorageLevel.MEMORY_AND_DISK)  # doc-grain, 5 narrow cols;
-    # two consumers (1-row stats rollup + scored pass); released by the
-    # caller's pipeline_scope
+    # the query is 3 literal terms, so the corpus stats and document
+    # frequencies are a 1-row rollup of the doc-grain frame (df_i =
+    # docs with tf_i > 0); scoring sums over present terms only (an
+    # absent posting contributes exactly 0) and drops docs with none
+    per_doc = text.query_term_stats(docs, _BM25_TERMS)
     stats = per_doc.agg(
         F.count("*").alias("n_docs"),
         F.avg("dlen").alias("avg_len"),
@@ -1177,7 +1132,6 @@ def search_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM fused)
     WHERE rk <= 5 ORDER BY query_id, rk
     """,
-    tags=("llm", "similarity", "fusion", "rerank"),
 )
 def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal Rank Fusion (k=60) of two retrieval lists — the
@@ -1257,7 +1211,6 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM idx
     ORDER BY doc_id, chunk_idx
     """,
-    tags=("llm", "text", "chunking", "rag"),
 )
 def text_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window chunking (64-token chunks, stride 48 → 16-token
@@ -1311,7 +1264,6 @@ def text_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
                  - 84.6 * (n_syl * 1.0 / n_words), 4) AS flesch
     FROM d ORDER BY doc_id
     """,
-    tags=("llm", "text", "quality", "readability"),
 )
 def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flesch reading-ease per document — the classic readability
@@ -1364,7 +1316,6 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(sum(wx), 6) AS wsum
     FROM w GROUP BY 1 ORDER BY 1
     """,
-    tags=("llm", "embedding", "preprocessing"),
 )
 def emb_whitening(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-dimension embedding STANDARDIZATION (diagonal whitening:
@@ -1459,7 +1410,6 @@ _QL_MU = 100.0
       FROM scored)
     WHERE rk <= 20 ORDER BY rk
     """,
-    tags=("llm", "text", "search", "lm"),
 )
 def search_query_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DIRICHLET-SMOOTHED QUERY LIKELIHOOD ranking (Zhai & Lafferty
@@ -1479,37 +1429,12 @@ def search_query_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequencies, and tf; mu=100 suits the fixture's short docs."""
     docs = load_table(spark, sf_dir, "documents")
     mu = F.lit(_QL_MU)
-    # r13 (guide §1.2 — the distributed algorithm first): the former
-    # shape consumed the exploded token frame through FOUR unpersisted
-    # subtrees (doc lengths, the token total, collection frequencies,
-    # per-doc tf), so the scan → split → explode pipeline executed
-    # four times per run.  The query term list is a 3-literal
-    # constant, so ALL per-doc statistics ride ONE doc-grain
-    # conditional aggregate over ONE tokenize pass: dlen plus one tf
-    # counter per query term; the token total and the collection
-    # frequencies are its 1-row rollup (t = Σ dlen, cf_i = Σ tf_i —
-    # the identical integers the separate aggregates produced).  The
-    # decomposed score arithmetic is unchanged term for term: c0 sums
-    # log(mu·cf/t) over PRESENT terms only and stays NULL when no
-    # query term occurs anywhere (the old empty-cf sum — the oracle's
-    # own convention), the hit sum contributes log(1 + tf/(mu·cf/t))
-    # exactly for tf > 0 rows and 0 otherwise (absent postings), and
-    # the length term is untouched.
-    from pyspark import StorageLevel
-
-    toks = docs.select("doc_id", F.explode(text.tokens("text")).alias("term"))
-    per_doc = toks.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("dlen"),
-        *[
-            F.count(F.when(F.col("term") == t, True))
-            .cast("long")
-            .alias(f"tf_{i}")
-            for i, t in enumerate(_QL_TERMS)
-        ],
-    ).persist(StorageLevel.MEMORY_AND_DISK)  # doc-grain, 5 narrow cols;
-    # two consumers (the 1-row stats rollup and the scored pass) — the
-    # persist is what holds the tokenize pass at ONE; released by the
-    # caller's pipeline_scope
+    # the token total and the collection frequencies are a 1-row rollup
+    # of the doc-grain frame (t = Σ dlen, cf_i = Σ tf_i); c0 sums
+    # log(mu·cf/t) over present terms only and stays NULL when no query
+    # term occurs anywhere (the oracle's convention), and the hit sum
+    # contributes log(1 + tf/(mu·cf/t)) for tf > 0 only
+    per_doc = text.query_term_stats(docs, _QL_TERMS)
     stats = per_doc.agg(
         F.sum("dlen").cast("long").alias("t"),
         *[
@@ -1599,7 +1524,6 @@ def search_query_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
         (ORDER BY rake_score DESC, phrase) AS rk FROM agg)
     WHERE rk <= 15 ORDER BY rk
     """,
-    tags=("llm", "text", "keywords", "rake"),
 )
 def text_rake_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAKE keyword extraction (Rose et al. 2010) with INDUCED
@@ -1726,7 +1650,6 @@ def text_rake_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM scored)
     WHERE rk <= 20 ORDER BY rk
     """,
-    tags=("llm", "text", "search", "tfidf"),
 )
 def search_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VECTOR-SPACE tf-idf COSINE ranking for the same fixed keyword
@@ -1744,22 +1667,15 @@ def search_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings, corpus stats and query weights ride 1-row/3-row
     broadcasts. Same tie-break discipline as BM25."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(text.tokens("text")).alias("term")
-    )
-    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    tf = text.term_counts(docs, "doc_id").withColumnRenamed("n", "tf")
     tf.persist()
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     nd = tf.agg(F.countDistinct("doc_id").alias("n_docs"))
-    # r13 (guide §1.2/§5): the full (doc, term) weight matrix W used to
-    # be PERSISTED so the scoring join could filter it down to the 3
-    # query terms — a corpus-token-cardinality cache paid to serve a
-    # postings-sized read. W now streams ONCE straight into the norm
-    # aggregate (its only full-width consumer), and the scoring branch
-    # re-derives its query-term weights postings-pruned from the
-    # cached tf frame: wt = (1 + ln tf) · qwt, where qwt is the SAME
-    # ln(n_docs/df) double the old W row carried — the multiply is
-    # bit-identical.
+    # the (doc, term) weight matrix W is corpus-token-sized, so it is
+    # not cached: it streams once into the norm aggregate, its only
+    # full-width consumer, and the scoring branch re-derives its
+    # query-term weights from the cached tf frame postings-pruned
+    # (wt = (1 + ln tf) · qwt, the same double)
     w = (
         tf.join(df, "term")
         .crossJoin(F.broadcast(nd))
@@ -1830,7 +1746,6 @@ def search_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
                       * 1000 + 0.5) AS BIGINT) AS welch_t_milli
     FROM st ORDER BY dim
     """,
-    tags=("llm", "embedding", "drift", "monitoring"),
 )
 def emb_mean_shift_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PER-DIMENSION EMBEDDING DRIFT MONITOR — the vector-space

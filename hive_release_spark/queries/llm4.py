@@ -55,7 +55,6 @@ _SAMPLE_RATES = {"en": 0.5, "de": 0.25, "fr": 1.0, "zh": 0.125}
     WHERE d.doc_id % 41 <> 0
     ORDER BY d.doc_id
     """,
-    tags=("llm", "pipeline", "decontamination"),
 )
 def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination (GPT-3/Llama n-gram protocol): the eval
@@ -87,7 +86,6 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
     ORDER BY doc_id
     """,
-    tags=("llm", "pipeline", "packing", "window"),
 )
 def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing into {_PACK_BUDGET}-token packs, {_PACK_SHARDS}
@@ -117,7 +115,6 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM n WHERE n_copies >= 1
     ORDER BY doc_id, copy_idx
     """,
-    tags=("llm", "pipeline", "mixing"),
 )
 def domain_mix_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted domain mixing: src0 upsampled 2.5× (2 copies + a
@@ -146,7 +143,6 @@ def domain_mix_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sharded
     ORDER BY doc_id
     """,
-    tags=("llm", "pipeline", "shuffle", "window"),
 )
 def shuffle_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic global shuffle for training-data serving: md5 sort
@@ -168,7 +164,6 @@ def shuffle_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
           < {pipeline.sample_thresholds_sql(_SAMPLE_RATES)}
     ORDER BY doc_id
     """,
-    tags=("llm", "pipeline", "sampling"),
 )
 def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified deterministic sampling: per-language keep rates (en 50%,
@@ -217,7 +212,6 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE d.doc_id NOT IN (SELECT doc_id FROM losers)
     ORDER BY d.doc_id
     """,
-    tags=("llm", "pipeline", "dedup", "neardup", "iterative"),
 )
 def pipeline_neardedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END near-dedup: Jaccard >= 0.5 pair graph -> connected
@@ -292,7 +286,6 @@ def pipeline_neardedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE before_mass * 1.0 / total < 0.9
     ORDER BY rank
     """,
-    tags=("llm", "pipeline", "vocab", "window"),
 )
 def vocab_coverage_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer vocabulary cut: most-frequent terms covering 90% of
@@ -319,7 +312,6 @@ def vocab_coverage_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     ORDER BY 1, 2
     """,
-    tags=("llm", "pipeline", "contamination", "postings"),
 )
 def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source contamination report: distinct shared 3-grams per
@@ -357,7 +349,6 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY doc_id
     ORDER BY doc_id
     """,
-    tags=("llm", "pipeline", "tokenize"),
 )
 def tokenize_word_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus → token-id sequences against the 90%-coverage vocabulary
@@ -433,7 +424,6 @@ def tokenize_word_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM counts c LEFT JOIN k USING (lang, source)
     ORDER BY lang, source
     """,
-    tags=("llm", "pipeline", "dedup", "quality", "normalize"),
 )
 def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship corpus-build chain — normalize → quality gate → exact
@@ -566,7 +556,6 @@ def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rk <= 5
     ORDER BY lang, rk
     """,
-    tags=("llm", "sample", "window", "pipeline"),
 )
 def sample_reservoir_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-group reservoir sample (k=5 docs per language)
@@ -612,7 +601,6 @@ def sample_reservoir_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, count(*) AS n_eval_matches, max(j) AS max_jaccard
     FROM crossed GROUP BY 1 ORDER BY 1
     """,
-    tags=("llm", "pipeline", "decontamination", "neardup"),
 )
 def decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FUZZY benchmark decontamination (the Llama-2 / GPT-4 protocol
@@ -669,7 +657,6 @@ def decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY t.doc_id
     ORDER BY t.doc_id
     """,
-    tags=("llm", "sampling", "importance", "dsir"),
 )
 def sample_importance_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR-style importance weighting (Xie et al. 2023, "Data
@@ -782,7 +769,6 @@ def sample_importance_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM per_q p JOIN nrel n USING (query_id)
     ORDER BY query_id
     """,
-    tags=("llm", "similarity", "search", "eval"),
 )
 def search_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retrieval-quality evaluation harness — recall@10, MRR, and
@@ -916,7 +902,6 @@ def _bpe_oracle(rounds: int) -> str:
 @register(
     "bpe_train_merges",
     oracle=_bpe_oracle(5),
-    tags=("llm", "text", "tokenizer", "bpe"),
 )
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE TOKENIZER TRAINING — the first 5 merge rules learned from
@@ -946,10 +931,9 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     wf = (
-        docs.select(F.explode(text.tokens("text")).alias("word"))
-        .filter(F.col("word").rlike("^[A-Za-z0-9]+$"))
-        .groupBy("word")
-        .agg(F.count("*").alias("freq"))
+        text.term_counts(docs)
+        .filter(F.col("term").rlike("^[A-Za-z0-9]+$"))
+        .select(F.col("term").alias("word"), F.col("n").alias("freq"))
     )
     cur = wf.select(
         "word",
@@ -1058,7 +1042,6 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(rk2 AS INTEGER) AS rank
     FROM r2 ORDER BY query_id, rank
     """,
-    tags=("llm", "similarity", "search", "feedback"),
 )
 def sim_rocchio_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pseudo-relevance feedback (Rocchio): retrieve top-3 per query,
@@ -1137,7 +1120,6 @@ def sim_rocchio_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM th LEFT JOIN pairs p ON p.j >= th.threshold
     GROUP BY 1 ORDER BY 1
     """,
-    tags=("llm", "dedup", "sweep", "tuning"),
 )
 def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DEDUP THRESHOLD SWEEP — the tuning curve behind every near-dup
@@ -1199,7 +1181,6 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / (count(*) * {_PACK_BUDGET}), 6) AS bucket_efficiency
     FROM b GROUP BY 1 ORDER BY 1
     """,
-    tags=("llm", "packing", "report", "tuning"),
 )
 def pack_efficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SEQUENCE-PACKING EFFICIENCY REPORT — the measurement companion
@@ -1268,7 +1249,6 @@ def pack_efficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS chars_per_token
     FROM d GROUP BY 1 ORDER BY 1
     """,
-    tags=("llm", "tokenize", "eval", "report"),
 )
 def tokenize_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TOKENIZER FERTILITY REPORT per language — the standard
@@ -1349,7 +1329,6 @@ def tokenize_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
                  6) AS jsd
     FROM pt GROUP BY 1, 2 ORDER BY 1, 2
     """,
-    tags=("llm", "text", "divergence", "drift"),
 )
 def text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JENSEN-SHANNON DIVERGENCE between every source pair's unigram
@@ -1371,16 +1350,10 @@ def text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpora).  Everything after the first groupBy is
     vocabulary-cardinality."""
     docs = load_table(spark, sf_dir, "documents")
-    tc = (
-        docs.select(
-            "source", F.explode(text.tokens("text")).alias("t")
-        )
-        .groupBy("source", "t")
-        .agg(F.count("*").alias("n"))
-    )
+    tc = text.term_counts(docs, "source")
     tot = tc.groupBy("source").agg(F.sum("n").alias("tot"))
     p = tc.join(F.broadcast(tot), "source").select(
-        "source", "t", (F.col("n").cast("double") / F.col("tot")).alias("p")
+        "source", "term", (F.col("n").cast("double") / F.col("tot")).alias("p")
     )
     pairs = (
         tot.select(F.col("source").alias("src_a"))
@@ -1394,7 +1367,7 @@ def text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
             p,
             (p.source == F.col("src_a")) | (p.source == F.col("src_b")),
         )
-        .groupBy("src_a", "src_b", "t")
+        .groupBy("src_a", "src_b", "term")
         .agg(
             F.coalesce(
                 F.max(F.when(F.col("source") == F.col("src_a"), F.col("p"))),
@@ -1452,7 +1425,6 @@ def text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM d WHERE n_distinct > 1 GROUP BY 1)
     SELECT * FROM s ORDER BY source
     """,
-    tags=("llm", "text", "quality", "entropy"),
 )
 def text_entropy_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TOKEN-ENTROPY QUALITY SIGNAL — the information-theoretic
@@ -1471,22 +1443,16 @@ def text_entropy_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rollup is source-cardinality.  Single-token docs are
     excluded (log2(1) = 0 would divide the efficiency)."""
     docs = load_table(spark, sf_dir, "documents")
-    tc = (
-        docs.select(
-            "doc_id", "source", F.explode(text.tokens("text")).alias("t")
-        )
-        .groupBy("doc_id", "source", "t")
-        .agg(F.count("*").alias("n"))
-    )
+    tc = text.term_counts(docs, "doc_id", "source")
     wdoc = W.partitionBy("doc_id")
     p = F.col("n").cast("double") / F.sum("n").over(wdoc)
     d = (
-        tc.withColumn("term", -(p * F.log2(p)))
+        tc.withColumn("h", -(p * F.log2(p)))
         .groupBy("doc_id", "source")
         .agg(
             F.sum("n").alias("n_tokens"),
             F.count("*").alias("n_distinct"),
-            F.sum("term").alias("entropy"),
+            F.sum("h").alias("entropy"),
         )
         .filter(F.col("n_distinct") > 1)
     )
@@ -1533,7 +1499,6 @@ def text_entropy_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM c JOIN t USING (lang)
     ORDER BY c.lang, c.pred
     """,
-    tags=("llm", "text", "langid", "eval", "confusion"),
 )
 def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LANGUAGE-ID CONFUSION MATRIX — the evaluation table for the
@@ -1593,7 +1558,6 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS herdan_c_micro
     FROM tc GROUP BY source ORDER BY source
     """,
-    tags=("llm", "text", "diversity", "vocabulary"),
 )
 def text_ttr_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEXICAL-DIVERSITY PROFILE per source: type-token ratio, hapax-
@@ -1610,11 +1574,7 @@ def text_ttr_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the (source, token) frame is vocabulary-bounded, the
     standard scale-out for corpus-level vocabulary stats."""
     docs = load_table(spark, sf_dir, "documents")
-    tc = (
-        docs.select("source", F.explode(text.tokens("text")).alias("t"))
-        .groupBy("source", "t")
-        .agg(F.count("*").alias("n"))
-    )
+    tc = text.term_counts(docs, "source")
     types = F.count("*")
     tokens = F.sum("n")
     hapax = F.count(F.when(F.col("n") == 1, 1))
@@ -1659,7 +1619,6 @@ def text_ttr_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS cjk_ratio_micro
     FROM documents GROUP BY source ORDER BY source
     """,
-    tags=("llm", "text", "script", "langid"),
 )
 def text_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNICODE-SCRIPT COMPOSITION per source — the zeroth-order
@@ -1727,7 +1686,6 @@ def text_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS corpus_after
     FROM merged
     """,
-    tags=("llm", "dedup", "incremental", "pipeline"),
 )
 def pipeline_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL DEDUP INGEST — the production shape a corpus update
@@ -1812,7 +1770,6 @@ def pipeline_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY f_len, f_alpha, f_uniq, tot.nt
     ORDER BY f_len, f_alpha, f_uniq
     """,
-    tags=("llm", "pipeline", "quality", "ablation"),
 )
 def pipeline_quality_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """QUALITY-FILTER ABLATION LEDGER — the 2^3-cell breakdown of

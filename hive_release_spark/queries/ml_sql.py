@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
 from hive_release_spark.functions.numeric import exact_moment, half_up, is_finite
-from hive_release_spark.llm.text import tokens
+from hive_release_spark.llm.text import term_counts, tokens
 from hive_release_spark.operators.pairs import baskets, sorted_pairs
 from hive_release_spark.operators.topk import bounded_sort, global_topk
 from hive_release_spark.queries.registry import register
@@ -77,7 +77,6 @@ from hive_release_spark.queries.registry import register
                       * 100000 + 0.5) AS BIGINT) AS r2_e5
     FROM b
     """,
-    tags=("ml", "regression", "closed_form"),
 )
 def ml_linear_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MULTIPLE LINEAR REGRESSION trained in one aggregate pass —
@@ -237,7 +236,6 @@ def ml_linear_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS acc_micro
     FROM pred GROUP BY true_lang ORDER BY true_lang
     """,
-    tags=("ml", "classifier", "langid", "naive_bayes"),
 )
 def ml_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MULTINOMIAL NAIVE BAYES language classifier, trained AND
@@ -264,23 +262,19 @@ def ml_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest floor is calibrated to the fixture, not to real-corpus
     lang-ID performance (where word NB is near-perfect)."""
     docs = load_table(spark, sf_dir, "documents")
-    tr = docs.filter(F.col("doc_id") % 2 == 0).select(
-        "lang", "doc_id", F.explode(tokens("text")).alias("term")
-    )
+    train = docs.filter(F.col("doc_id") % 2 == 0)
     te = docs.filter(F.col("doc_id") % 2 == 1).select(
-        "doc_id",
-        F.col("lang").alias("true_lang"),
-        F.explode(tokens("text")).alias("term"),
+        "doc_id", F.col("lang").alias("true_lang"), "text"
     )
-    tc = tr.groupBy("lang", "term").agg(F.count("*").alias("c"))
+    tc = term_counts(train, "lang").withColumnRenamed("n", "c")
     tc.persist()
     lt = tc.groupBy("lang").agg(F.sum("c").alias("t"))
     vb = tc.agg(F.countDistinct("term").alias("v"))
+    # documents with at least one token
+    tr = train.select("lang", "doc_id", F.explode(tokens("text")).alias("term"))
     pr = tr.groupBy("lang").agg(F.countDistinct("doc_id").alias("nd"))
     prt = pr.agg(F.sum("nd").alias("total"))
-    dt = te.groupBy("doc_id", "true_lang", "term").agg(
-        F.count("*").alias("tf")
-    )
+    dt = term_counts(te, "doc_id", "true_lang").withColumnRenamed("n", "tf")
     dt.persist()
     dl = dt.groupBy("doc_id", "true_lang").agg(F.sum("tf").alias("len_d"))
     hits = (
@@ -392,7 +386,6 @@ def ml_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS rk
     FROM best ORDER BY rk
     """,
-    tags=("ml", "tree", "split", "gini"),
 )
 def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DECISION-STUMP TRAINING — the best Gini split per feature for
@@ -530,7 +523,6 @@ def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS correct
     FROM pred ORDER BY query_id
     """,
-    tags=("ml", "classifier", "knn", "embedding"),
 )
 def ml_knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-NN CLASSIFICATION over the embedding space — majority vote of
@@ -632,7 +624,6 @@ def ml_knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
             (ORDER BY cosine DESC, pa, pb) AS rk FROM scored)
     WHERE rk <= 20 ORDER BY rk
     """,
-    tags=("ml", "recommender", "cf", "basket"),
 )
 def ml_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ITEM-ITEM COLLABORATIVE FILTERING — cosine similarity on the
@@ -748,7 +739,6 @@ def ml_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM test JOIN model ON test.prev = model.prev
     GROUP BY test.prev ORDER BY test.prev
     """,
-    tags=("ml", "markov", "sequence", "events"),
 )
 def ml_markov_next_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FIRST-ORDER MARKOV NEXT-EVENT PREDICTION, trained and evaluated
@@ -836,7 +826,6 @@ def ml_markov_next_event(spark: SparkSession, sf_dir: str) -> DataFrame:
             (ORDER BY lift DESC, pa, pb) AS rk FROM scored)
     WHERE rk <= 20 ORDER BY rk
     """,
-    tags=("ml", "recommender", "association_rules", "basket"),
 )
 def ml_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ASSOCIATION RULES (Apriori level-2) — directed pair rules
@@ -1036,7 +1025,6 @@ def ml_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM best2 b2
     ORDER BY stage
     """,
-    tags=("ml", "tree", "boosting", "gbdt"),
 )
 def ml_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TWO GRADIENT-BOOSTING ROUNDS of SSE decision stumps — round 1
@@ -1253,7 +1241,6 @@ def ml_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM bins CROSS JOIN fit
     ORDER BY bucket
     """,
-    tags=("ml", "regression", "calibration", "diagnostics"),
 )
 def ml_regression_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MODEL CALIBRATION TABLE for the in-engine regression — the
@@ -1373,7 +1360,6 @@ def ml_regression_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS b1_micro
     FROM fit ORDER BY fold
     """,
-    tags=("ml", "regression", "cross_validation", "evaluation"),
 )
 def ml_regression_kfold_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-FOLD CROSS-VALIDATION of the in-engine regression with ZERO

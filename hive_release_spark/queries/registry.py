@@ -33,19 +33,18 @@ class Query:
     name: str
     fn: QueryFn
     oracle: str | None
-    tags: tuple[str, ...]
 
 
 REGISTRY: dict[str, Query] = {}
 
 
-def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
+def register(name: str, oracle: str | None = None):
     """Decorator: add a query to the registry."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, tags=tags)
+        REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle)
         return fn
 
     return deco

@@ -35,7 +35,6 @@ from hive_release_spark.queries.registry import register
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_quantity > 45
     """,
-    tags=("scan", "filter", "project"),
 )
 def scan_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Projection + predicate; both reach the parquet scan (PushedFilters /
@@ -78,7 +77,7 @@ ORDER BY l_returnflag, l_linestatus
 """
 
 
-@register("q1_pricing_summary", oracle=Q1_ORACLE, tags=("agg", "flagship"))
+@register("q1_pricing_summary", oracle=Q1_ORACLE)
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 pricing summary: the §2.A spine (scan → filter → partial agg
     → shuffle → final agg → sort). Hive: FilterOperator + GroupByOperator
@@ -135,7 +134,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM f
     GROUP BY l_returnflag
     """,
-    tags=("agg", "stats"),
 )
 def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Statistical UDAF family (Hive GenericUDAF{Variance,Std,Covariance,
@@ -168,7 +166,6 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY l_returnflag
     """,
-    tags=("agg", "distinct"),
 )
 def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-distinct aggregation (Hive TOK_FUNCTIONDI +
@@ -191,7 +188,6 @@ def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
     """,
-    tags=("agg", "grouping_sets"),
 )
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS + grouping() markers (Hive TOK_GROUPING_SETS,
@@ -219,7 +215,6 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY ROLLUP (l_returnflag, l_linestatus)
     ORDER BY grouping__id, l_returnflag, l_linestatus
     """,
-    tags=("agg", "grouping_sets", "functions"),
 )
 def agg_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive's GROUPING__ID virtual column (TOK_GROUPING_SETS grammar,
@@ -250,7 +245,6 @@ def agg_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
-    tags=("agg", "rollup"),
 )
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -268,7 +262,6 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY CUBE (l_returnflag, l_linestatus)
     """,
-    tags=("agg", "cube"),
 )
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -293,7 +286,6 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM nation
     GROUP BY n_regionkey
     """,
-    tags=("agg", "collect"),
 )
 def agg_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """collect_list / collect_set (Hive GenericUDAFCollect{List,Set}).
@@ -330,7 +322,6 @@ def agg_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM f
     GROUP BY l_linestatus
     """,
-    tags=("agg", "percentile"),
 )
 def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact percentile (Hive GenericUDAFPercentile*; interpolated —
@@ -375,7 +366,6 @@ def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_totalprice DESC, o_orderkey
     LIMIT 10
     """,
-    tags=("sort", "limit", "topk"),
 )
 def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORDER BY + LIMIT → Spark TakeOrderedAndProject (Hive TopNHash +
@@ -397,7 +387,6 @@ def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_orderkey
     LIMIT 20 OFFSET 40
     """,
-    tags=("sort", "limit", "offset"),
 )
 def limit_offset_page(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIMIT/OFFSET pagination (Hive LimitOperator + TOK_OFFSET)."""
@@ -418,7 +407,6 @@ def limit_offset_page(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     WHERE l_orderkey % 10 = 3
     """,
-    tags=("sample",),
 )
 def sample_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic bucket sampling: TABLESAMPLE(BUCKET 4 OUT OF 10 ON
@@ -441,7 +429,6 @@ def sample_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     WHERE c_acctbal > 0
     """,
-    tags=("distinct",),
 )
 def distinct_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SELECT DISTINCT (Hive compiles to GroupByOperator on all cols)."""
@@ -471,7 +458,6 @@ _SETOP_B = "SELECT o_custkey AS k FROM orders WHERE o_totalprice > 50000"
     oracle=f"""
     SELECT k, count(*) AS n FROM ({_SETOP_A} UNION ALL {_SETOP_B}) GROUP BY k
     """,
-    tags=("setop",),
 )
 def setop_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION ALL (Hive UnionOperator) + aggregate to stabilize multiplicity."""
@@ -482,7 +468,6 @@ def setop_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "setop_union_distinct",
     oracle=f"{_SETOP_A} UNION {_SETOP_B}",
-    tags=("setop",),
 )
 def setop_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     a, b = _key_sets(spark, sf_dir)
@@ -492,7 +477,6 @@ def setop_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "setop_intersect",
     oracle=f"{_SETOP_A} INTERSECT {_SETOP_B}",
-    tags=("setop",),
 )
 def setop_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     a, b = _key_sets(spark, sf_dir)
@@ -502,7 +486,6 @@ def setop_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "setop_intersect_all",
     oracle=f"SELECT k, count(*) AS n FROM ({_SETOP_A} INTERSECT ALL {_SETOP_B}) GROUP BY k",
-    tags=("setop",),
 )
 def setop_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     a, b = _key_sets(spark, sf_dir)
@@ -512,7 +495,6 @@ def setop_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "setop_except",
     oracle=f"{_SETOP_A} EXCEPT {_SETOP_B}",
-    tags=("setop",),
 )
 def setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     a, b = _key_sets(spark, sf_dir)
@@ -522,7 +504,6 @@ def setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "setop_except_all",
     oracle=f"SELECT k, count(*) AS n FROM ({_SETOP_A} EXCEPT ALL {_SETOP_B}) GROUP BY k",
-    tags=("setop",),
 )
 def setop_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     a, b = _key_sets(spark, sf_dir)
@@ -549,7 +530,6 @@ def setop_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(min(o_totalprice), 2) AS min_price
     FROM t GROUP BY o_orderpriority ORDER BY o_orderpriority
     """,
-    tags=("agg", "functions", "min_max_by"),
 )
 def agg_min_max_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """max_by / min_by (Hive's GenericUDAFMaxByValue lineage, ANSI

@@ -81,7 +81,6 @@ def _two_sample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS ks_d_micro
     FROM c
     """,
-    tags=("stats", "hypothesis", "ecdf"),
 )
 def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov D between the order-price
@@ -144,7 +143,6 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
              * 1000 + 0.5) AS BIGINT) AS z_milli
     FROM agg
     """,
-    tags=("stats", "hypothesis", "rank"),
 )
 def stats_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Whitney U (rank-sum) test on the same URGENT-vs-LOW price
@@ -228,7 +226,6 @@ def stats_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
                       * 1000000 + 0.5) AS BIGINT) AS v_micro
     FROM t
     """,
-    tags=("stats", "hypothesis", "contingency"),
 )
 def stats_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square test of independence on the order-priority x
@@ -332,7 +329,6 @@ _DAILY_CTE = """
     JOIN r b ON b.rn = a.rn - k
     GROUP BY k ORDER BY k
     """,
-    tags=("timeseries", "acf", "stats"),
 )
 def timeseries_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Autocorrelation function of daily shipped quantity at lags 1-7
@@ -375,7 +371,6 @@ def timeseries_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN r b ON b.rn = a.rn - k
     GROUP BY k ORDER BY k
     """,
-    tags=("timeseries", "ccf", "stats"),
 )
 def timeseries_cross_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lagged cross-correlation between daily shipped quantity and
@@ -432,7 +427,6 @@ def timeseries_cross_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
                       * 1000 + 0.5) AS BIGINT) AS ci_hi_milli
     FROM m
     """,
-    tags=("stats", "bootstrap", "uncertainty"),
 )
 def stats_subsample_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DETERMINISTIC SUBSAMPLE CONFIDENCE INTERVAL for the mean order
@@ -504,7 +498,6 @@ def stats_subsample_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS n_per_arm_80pct
     FROM p
     """,
-    tags=("stats", "power", "experiment"),
 )
 def stats_power_two_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TWO-PROPORTION SAMPLE-SIZE CALCULATOR — the planning half of
@@ -558,7 +551,6 @@ def stats_power_two_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY event_type
     ORDER BY rk
     """,
-    tags=("agg", "sketch", "topk"),
 )
 def agg_approx_top_k_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approx_top_k EXACTNESS CONTRACT (Spark 4's frequent-items
@@ -608,7 +600,6 @@ def agg_approx_top_k_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s CROSS JOIN g
     ORDER BY event_type
     """,
-    tags=("dq", "freshness", "monitoring"),
 )
 def dq_freshness_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DATA-FRESHNESS MONITOR — per-stream staleness without wall
@@ -689,7 +680,6 @@ def dq_freshness_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE -1 END AS halflife_days_milli
     FROM fit
     """,
-    tags=("analytics", "retention", "fit", "churn"),
 )
 def retention_halflife_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RETENTION HALF-LIFE — fit exponential decay to the day-k
@@ -811,7 +801,6 @@ def retention_halflife_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS eta2_micro
     FROM ss
     """,
-    tags=("stats", "hypothesis", "anova"),
 )
 def stats_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE-WAY ANOVA across the five order priorities — the k-group
@@ -910,7 +899,6 @@ def stats_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
                       * 1000000 + 0.5) AS BIGINT) AS spearman_micro
     FROM s
     """,
-    tags=("stats", "correlation", "rank", "robust"),
 )
 def stats_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPEARMAN RANK CORRELATION between line quantity and price —
@@ -1030,7 +1018,6 @@ def _erf_sql(x: str) -> str:
     FROM ranked CROSS JOIN cut
     ORDER BY rk
     """,
-    tags=("stats", "hypothesis", "fdr", "multiple_testing"),
 )
 def stats_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BENJAMINI-HOCHBERG FDR CORRECTION — the step every dashboard
@@ -1154,7 +1141,6 @@ def stats_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS p_milli
     FROM s
     """,
-    tags=("stats", "hypothesis", "randomization", "resampling"),
 )
 def stats_randomization_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANDOMIZATION (permutation) TEST for the experiment's rate
@@ -1276,7 +1262,6 @@ def stats_randomization_test(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS scale_days_milli
     FROM fit
     """,
-    tags=("stats", "survival", "weibull", "reliability"),
 )
 def stats_weibull_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WEIBULL RELIABILITY FIT on the order shipping SPAN (days from
@@ -1371,7 +1356,6 @@ def stats_weibull_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM c CROSS JOIN range(1, 10) t(p)
     GROUP BY p ORDER BY p
     """,
-    tags=("stats", "quantile", "qq", "ecdf"),
 )
 def stats_qq_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q-Q DECILE COMPARISON of the two order-price samples — WHERE
@@ -1443,7 +1427,6 @@ def stats_qq_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s CROSS JOIN t
     ORDER BY stratum
     """,
-    tags=("stats", "sampling", "stratified", "neyman"),
 )
 def sample_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEYMAN OPTIMAL ALLOCATION for stratified sampling — how many
@@ -1527,7 +1510,6 @@ def sample_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
                 THEN 1 ELSE 0 END AS bursty_flag
     FROM s ORDER BY event_type
     """,
-    tags=("stats", "point_process", "burstiness", "fano"),
 )
 def events_fano_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FANO FACTOR (variance/mean of daily counts) per event stream —
@@ -1598,7 +1580,6 @@ def events_fano_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders o CROSS JOIN f
     GROUP BY f.nt, f.q1, f.q3, f.lo, f.hi
     """,
-    tags=("dq", "outlier", "tukey", "profiling"),
 )
 def dq_outlier_tukey_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TUKEY IQR FENCES on order price — the boxplot outlier rule
@@ -1734,7 +1715,6 @@ def dq_outlier_tukey_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS f_milli
     FROM sse
     """,
-    tags=("stats", "granger", "econometrics", "timeseries"),
 )
 def stats_granger_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GRANGER-STYLE PREDICTABILITY TEST (one lag) — does yesterday's
@@ -1913,7 +1893,6 @@ def stats_granger_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM per_seg s CROSS JOIN overall o
     ORDER BY s.segment
     """,
-    tags=("stats", "simpson", "causal", "diagnostics"),
 )
 def stats_simpson_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SIMPSON'S-PARADOX REVERSAL CHECK — per-segment treatment

@@ -36,14 +36,14 @@ GROUP BY 1, 2
 """
 
 
-@register("stream_tumbling", oracle=_TUMBLING_ORACLE, tags=("streaming", "window"))
+@register("stream_tumbling", oracle=_TUMBLING_ORACLE)
 def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time tumbling 1h aggregation (batch execution of the
     streaming plan)."""
     return P.tumbling_agg(load_table(spark, sf_dir, "events"))
 
 
-@register("stream_tumbling_live", oracle=_TUMBLING_ORACLE, tags=("streaming", "live"))
+@register("stream_tumbling_live", oracle=_TUMBLING_ORACLE)
 def stream_tumbling_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME aggregation executed as a real Structured Streaming query
     (file source → availableNow trigger → memory sink, complete mode).
@@ -67,7 +67,6 @@ def stream_tumbling_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY 1
     """,
-    tags=("streaming", "window"),
 )
 def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding 2h window, 1h hop — every event lands in two windows (the
@@ -110,7 +109,6 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sessions
     GROUP BY user_id, sid
     """,
-    tags=("streaming", "session_window"),
 )
 def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (6h gap) per user — Spark ``session_window``; the
@@ -154,7 +152,6 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(sum(value), 2) AS sum_value
     FROM s GROUP BY user_id, sid
     """,
-    tags=("streaming", "session_window", "dynamic_gap"),
 )
 def stream_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DYNAMIC-gap session windows: purchases extend the session 12h,
@@ -182,7 +179,6 @@ def stream_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM events)
     WHERE rn = 1
     """,
-    tags=("streaming", "dedup"),
 )
 def stream_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep-first dedup per (user_id, event_type) — the batch twin of
@@ -206,7 +202,6 @@ def stream_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY p.user_id
     ORDER BY p.user_id
     """,
-    tags=("streaming", "join", "interval"),
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join (click→purchase attribution within
@@ -237,7 +232,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL '1 hour'
     GROUP BY p.user_id ORDER BY p.user_id
     """,
-    tags=("streaming", "join", "interval", "outer"),
 )
 def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER stream-stream interval join — attribution that also
@@ -266,7 +260,6 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events e JOIN customer c ON e.user_id = c.c_custkey
     GROUP BY 1, 2
     """,
-    tags=("streaming", "join"),
 )
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream ⋈ static broadcast dim (works identically on the stream —
@@ -317,7 +310,6 @@ def _distinct_users_window(events: DataFrame, with_exact: bool = True) -> DataFr
            TRUE AS sketch_within_6se
     FROM events WHERE ts IS NOT NULL GROUP BY 1
     """,
-    tags=("streaming", "window", "sketch", "distinct"),
 )
 def stream_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct users per event-time day, exact + sketch (batch
@@ -352,7 +344,6 @@ def stream_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL '1 hour'
     GROUP BY 1 ORDER BY 1
     """,
-    tags=("streaming", "join", "interval", "outer"),
 )
 def stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER stream-stream interval join (r5 — completing the
@@ -398,7 +389,6 @@ def stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE date_trunc('day', f1.ts) + INTERVAL 1 DAY <= wm.w
     GROUP BY 1 ORDER BY 1
     """,
-    tags=("streaming", "watermark", "late_data"),
 )
 def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Append-mode watermark semantics witnessed across REAL

@@ -32,7 +32,6 @@ from hive_release_spark.queries.registry import register
       ON e.user_id = r.o_custkey AND e.ts >= r.o_orderdate
     ORDER BY e.event_id
     """,
-    tags=("join", "asof", "timeseries"),
 )
 def join_asof_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AS-OF join: each event matched to the user's most recent order
@@ -77,7 +76,6 @@ def join_asof_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY s.s_name
     ORDER BY s.s_name
     """,
-    tags=("join", "skew", "salted"),
 )
 def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compile-time skew-salted join (`operators/skew.salted_join`,
@@ -119,7 +117,6 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY 2, 3
     ORDER BY grain, bucket, event_type
     """,
-    tags=("agg", "rollup", "timeseries"),
 )
 def rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-resolution time rollup (hypertable continuous-aggregate
@@ -169,7 +166,6 @@ def rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2, 3
     ORDER BY purchase_id
     """,
-    tags=("timeseries", "join", "range_join", "interval"),
 )
 def join_range_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range (interval) join, bucketed: views within the hour before
@@ -235,7 +231,6 @@ def join_range_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events e LEFT JOIN (SELECT * FROM c WHERE rn = 1) b USING (event_id)
     ORDER BY e.event_id
     """,
-    tags=("join", "asof", "timeseries"),
 )
 def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEAREST-direction as-of join with a 30-day tolerance: each event
@@ -291,7 +286,6 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(max(o_totalprice), 2) AS p100
     FROM f GROUP BY 1 ORDER BY 1
     """,
-    tags=("analytics", "timeseries", "percentile"),
 )
 def orders_monthly_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monthly P50/P90/P99/max of order value — the latency-report
@@ -348,7 +342,6 @@ def orders_monthly_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS corr_14d
     FROM s ORDER BY day
     """,
-    tags=("analytics", "timeseries", "window", "stats"),
 )
 def timeseries_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLING Pearson correlation (trailing 14 days) between two
@@ -415,7 +408,6 @@ def timeseries_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
            floor(s * 100 + 0.5) / 100 AS ewma
     FROM r ORDER BY month
     """,
-    tags=("analytics", "timeseries", "hof", "smoothing"),
 )
 def timeseries_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially-weighted moving average over the monthly revenue
@@ -507,7 +499,6 @@ def timeseries_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
                  * 10000 + 0.5) / 10000 AS sen_slope
     FROM s
     """,
-    tags=("analytics", "timeseries", "robust", "hof"),
 )
 def timeseries_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THEIL-SEN robust trend + MANN-KENDALL test statistic on the
@@ -623,7 +614,6 @@ def timeseries_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
            floor((l + b) * 100 + 0.5) / 100 AS forecast_next
     FROM r ORDER BY month
     """,
-    tags=("analytics", "timeseries", "hof", "smoothing", "forecast"),
 )
 def timeseries_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HOLT LINEAR (double exponential) smoothing on monthly revenue —
@@ -746,7 +736,6 @@ def timeseries_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
              ELSE NULL END AS rev_interp
     FROM w ORDER BY hr
     """,
-    tags=("analytics", "timeseries", "gapfill", "window"),
 )
 def timeseries_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CALENDAR GAP FILLING — the time-series primitive every
@@ -839,7 +828,6 @@ def timeseries_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(avg(abs(CAST(c - f AS DOUBLE)) / c), 6) AS mape
     FROM e GROUP BY 1 ORDER BY 1
     """,
-    tags=("analytics", "timeseries", "forecast", "backtest"),
 )
 def timeseries_backtest_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLING-ORIGIN FORECAST BACKTEST of the two standard baselines
@@ -919,7 +907,6 @@ def timeseries_backtest_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON v.user_id = p.user_id AND v.ts <= p.ts
     ORDER BY v.event_id
     """,
-    tags=("join", "asof", "forward", "timeseries"),
 )
 def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FORWARD as-of join — every view matched to the user's NEXT
@@ -1007,7 +994,6 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS forecast_milli
     FROM r CROSS JOIN (SELECT max(rn) AS mx FROM r) m
     """,
-    tags=("timeseries", "forecast", "croston", "intermittent"),
 )
 def timeseries_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CROSTON'S METHOD for intermittent demand — the forecaster
@@ -1130,7 +1116,6 @@ def timeseries_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
                       + 0.5) AS BIGINT) AS forecast_milli
     FROM fin
     """,
-    tags=("timeseries", "forecast", "holt_winters", "seasonal"),
 )
 def timeseries_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADDITIVE HOLT-WINTERS with weekly seasonality on daily shipped

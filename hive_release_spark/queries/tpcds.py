@@ -43,7 +43,6 @@ from hive_release_spark.queries.registry import register
     FROM (SELECT extract('hour' FROM ts) AS h
           FROM events WHERE event_type = 'purchase' AND value >= 10)
     """,
-    tags=("tpcds", "agg", "conditional", "single_scan"),
 )
 def ds_time_bucket_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS q88 shape: the spec's 8 cross-joined single-bucket
@@ -83,7 +82,6 @@ def ds_time_bucket_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY f.n_orders DESC, c.c_custkey
     LIMIT 100
     """,
-    tags=("tpcds", "agg", "having", "join"),
 )
 def ds_frequent_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS q73/q34 shape: per-customer fact counts banded by HAVING,
@@ -126,7 +124,6 @@ def ds_frequent_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM weekly
     ORDER BY week_start
     """,
-    tags=("tpcds", "window", "timeseries"),
 )
 def ds_week_over_week(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS q59 shape: week-over-week revenue comparison. The spec
@@ -171,7 +168,6 @@ def ds_week_over_week(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rk <= 3
     ORDER BY l_returnflag, rk
     """,
-    tags=("tpcds", "window", "topk", "agg"),
 )
 def ds_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS q67 shape: best-3 revenue months per return flag — rank
@@ -219,7 +215,6 @@ def ds_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
                     THEN o_totalprice ELSE 0 END)
     ORDER BY o_custkey
     """,
-    tags=("tpcds", "agg", "conditional", "single_scan"),
 )
 def ds_year_over_year_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS q74/q11 shape: customers whose spend grew year-over-year.
@@ -261,7 +256,6 @@ def ds_year_over_year_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM u GROUP BY GROUPING SETS ((channel, mon), (channel), ())
     ORDER BY channel NULLS FIRST, mon NULLS FIRST
     """,
-    tags=("tpcds", "setops", "grouping_sets", "rollup"),
 )
 def ds_channel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS q5/q77 shape: per-channel revenue rolled up across a
@@ -324,7 +318,6 @@ def ds_channel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     ORDER BY 1, 2
     """,
-    tags=("tpcds", "join", "broadcast_chain", "single_scan"),
 )
 def ds_late_delivery_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS q72 shape (VERDICT r4 stretch #8): the fact riding a
@@ -402,7 +395,6 @@ def ds_late_delivery_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     ORDER BY 1, 2
     """,
-    tags=("tpcds", "join", "cte_reuse", "self_join"),
 )
 def ds_spend_growth_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS q64 shape (VERDICT r4 stretch #8): a multi-pass CTE —
@@ -480,7 +472,6 @@ def ds_spend_growth_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM agg
     ORDER BY lochierarchy DESC, n_name NULLS FIRST, seg NULLS FIRST
     """,
-    tags=("tpcds", "rollup", "window", "grouping_sets"),
 )
 def ds_hierarchy_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS q36 shape (VERDICT r4 stretch #8): gross-revenue ranking
@@ -583,7 +574,6 @@ def ds_hierarchy_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM rk WHERE qty_rank <= 10 OR amt_rank <= 10
     ORDER BY l_partkey
     """,
-    tags=("tpcds", "returns", "rank", "plan_quality"),
 )
 def ds_worst_return_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS q49 shape — "worst return ratios": rank items by
@@ -687,7 +677,6 @@ def ds_worst_return_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
             (ORDER BY deviation DESC, brand, month) AS rk FROM d)
     WHERE rk <= 15 ORDER BY rk
     """,
-    tags=("tpcds", "window", "deviation", "plan_quality"),
 )
 def ds_sales_deviation_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS q47 shape — largest monthly deviations from the yearly
@@ -777,7 +766,6 @@ def ds_sales_deviation_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS rn
     FROM c ORDER BY rn LIMIT 10
     """,
-    tags=("tpcds", "returns", "join", "topk", "plan_quality"),
 )
 def ds_returns_adjusted_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS q93 shape (VERDICT r5 stretch #8) — "returns-adjusted
@@ -862,7 +850,6 @@ def ds_returns_adjusted_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM g)
     WHERE rn <= 20 ORDER BY rn
     """,
-    tags=("tpcds", "anti", "conditional", "single_scan", "plan_quality"),
 )
 def ds_three_channel_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS q78 shape (VERDICT r5 stretch #8) — per-customer-year

@@ -61,7 +61,6 @@ from hive_release_spark.queries.registry import register
     GROUP BY supp_nation, cust_nation, l_year
     ORDER BY supp_nation, cust_nation, l_year
     """,
-    tags=("tpch", "join", "self-join-dim"),
 )
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: bilateral trade volume between two nations by
@@ -127,7 +126,6 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_year
     ORDER BY o_year
     """,
-    tags=("tpch", "join", "conditional"),
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: one nation's share of ECONOMY-part volume sold
@@ -192,7 +190,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY nation, o_year
     ORDER BY nation, o_year DESC
     """,
-    tags=("tpch", "join", "agg"),
 )
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape: profit on red-named parts by supplier nation and
@@ -236,7 +233,6 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY c_count
     ORDER BY custdist DESC, c_count DESC
     """,
-    tags=("tpch", "outer-join", "double-agg"),
 )
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: distribution of order counts per customer —
@@ -274,7 +270,6 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE r.total_revenue = (SELECT max(total_revenue) FROM revenue)
     ORDER BY s.s_suppkey
     """,
-    tags=("tpch", "view", "scalar-subquery"),
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: quarterly revenue per supplier (the REVENUE
@@ -314,7 +309,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY p.p_brand, p.p_size
     ORDER BY supplier_cnt DESC, p.p_brand, p.p_size
     """,
-    tags=("tpch", "count-distinct", "not-in"),
 )
 def q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: distinct-supplier counts per (brand, size) with
@@ -355,7 +349,6 @@ def q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
                           FROM lineitem l2
                           WHERE l2.l_partkey = l.l_partkey)
     """,
-    tags=("tpch", "correlated-scalar", "agg"),
 )
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape: revenue from small-quantity orders of one brand,
@@ -397,7 +390,6 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR (p.p_brand = 'Brand#14' AND p.p_size BETWEEN 1 AND 15
            AND l.l_quantity >= 20 AND l.l_quantity <= 30)
     """,
-    tags=("tpch", "disjunction", "pushdown"),
 )
 def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: OR-of-ANDs across both join sides. Catalyst
@@ -447,7 +439,6 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY numwait DESC, s.s_name
     LIMIT 20
     """,
-    tags=("tpch", "exists", "not-exists", "anti-correlation"),
 )
 def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape: suppliers who were the SOLE late supplier on a
@@ -521,7 +512,6 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY c.c_nationkey
     ORDER BY cntry
     """,
-    tags=("tpch", "not-exists", "scalar-subquery"),
 )
 def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: above-average-balance customers with no recent
@@ -572,7 +562,6 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY eu.s_acctbal DESC, eu.s_name, p.p_partkey
     LIMIT 100
     """,
-    tags=("tpch", "correlated-min", "multi-join"),
 )
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: for each qualifying part, the EUROPE supplier(s)
@@ -634,7 +623,6 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE value > (SELECT sum(value) * 0.001 FROM val)
     ORDER BY value DESC, partkey
     """,
-    tags=("tpch", "having-scalar", "agg"),
 )
 def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape: parts whose inventory value (for suppliers in a
@@ -691,7 +679,6 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
           GROUP BY l2.l_suppkey) per_s))
     ORDER BY s.s_name
     """,
-    tags=("tpch", "nested-in", "having-scalar"),
 )
 def q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape: suppliers who moved an outsized share of one

@@ -29,7 +29,6 @@ from hive_release_spark.queries.registry import register
     GROUP BY o_orderpriority
     ORDER BY o_orderpriority
     """,
-    tags=("join", "subquery", "tpch"),
 )
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: correlated EXISTS → left-semi join with a
@@ -68,7 +67,6 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, c.c_custkey
     LIMIT 20
     """,
-    tags=("join", "topk", "tpch"),
 )
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: revenue lost to returns per customer, top 20."""
@@ -108,7 +106,6 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY total DESC, o.o_orderkey
     LIMIT 25
     """,
-    tags=("join", "subquery", "having", "tpch"),
 )
 def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: large-quantity orders via IN (GROUP BY ...
@@ -152,7 +149,6 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_discount BETWEEN 0.05 AND 0.07
       AND l_quantity < 24
     """,
-    tags=("tpch", "agg", "filter"),
 )
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: pure scan + selective conjunctive filter + global
@@ -191,7 +187,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l.l_returnflag
     ORDER BY l.l_returnflag
     """,
-    tags=("tpch", "join", "agg", "conditional"),
 )
 def q12_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape: fact-fact join on orderkey + conditional
@@ -231,7 +226,6 @@ def q12_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l.l_shipdate >= TIMESTAMP '1997-09-01'
       AND l.l_shipdate <  TIMESTAMP '1997-10-01'
     """,
-    tags=("tpch", "join", "broadcast", "conditional"),
 )
 def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: filtered fact ⋈ broadcast(part) + conditional

@@ -40,7 +40,6 @@ from hive_release_spark.queries.registry import register
     FROM customer
     WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey)
     """,
-    tags=("window", "ranking"),
 )
 def window_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full ranking family over a partitioned, uniquely-ordered window."""
@@ -67,7 +66,6 @@ def window_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
     """,
-    tags=("window", "navigation"),
 )
 def window_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lead/lag with offset + default (Hive GenericUDAF{Lead,Lag})."""
@@ -98,7 +96,6 @@ def window_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
                            l_quantity, l_extendedprice
                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
     """,
-    tags=("window", "frame_rows"),
 )
 def window_rows_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROWS frames: sliding 3-row sum + running totals (Hive WindowFrameDef
@@ -144,7 +141,6 @@ def window_rows_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                           RANGE BETWEEN 1000 PRECEDING AND CURRENT ROW), 2) AS sum_within_1k
     FROM orders
     """,
-    tags=("window", "frame_range"),
 )
 def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Value-based RANGE frame (Hive TOK_WINDOWVALUES + ValueBoundaryScanner
@@ -173,7 +169,6 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                  RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
     ORDER BY event_id
     """,
-    tags=("window", "frame_range", "interval", "timeseries"),
 )
 def window_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TIME-interval RANGE frame (Hive ValueBoundaryScanner's timestamp
@@ -208,7 +203,6 @@ def window_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY s_nationkey ORDER BY s_acctbal DESC, s_suppkey
                  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
     """,
-    tags=("window", "navigation"),
 )
 def window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     """first_value/last_value/nth_value over the full-partition frame (Hive
@@ -237,7 +231,6 @@ def window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) OVER (PARTITION BY o_custkey) AS cust_n
     FROM orders
     """,
-    tags=("window", "agg_over_window"),
 )
 def window_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary UDAF over an unordered window (Hive reuses GroupBy
@@ -273,7 +266,6 @@ def window_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
     ORDER BY o_custkey, o_orderkey
     """,
-    tags=("window", "ignore_nulls"),
 )
 def window_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IGNORE NULLS windowing (Hive GenericUDAFFirstValue/LastValue/
@@ -324,7 +316,6 @@ def window_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM d a
     ORDER BY a.l_orderkey, a.l_linenumber
     """,
-    tags=("window", "frames", "groups"),
 )
 def window_groups_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPS frames — the third SQL:2011 frame unit (peer groups of the
@@ -385,7 +376,6 @@ def window_groups_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem WHERE l_suppkey % 100 = 0
     ORDER BY l_orderkey, l_linenumber
     """,
-    tags=("window", "frames", "exclude"),
 )
 def window_exclude_current(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL:2011 frame exclusion (EXCLUDE CURRENT ROW) — the
@@ -471,7 +461,6 @@ def window_exclude_current(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem WHERE l_suppkey % 100 = 0
     ORDER BY l_orderkey, l_linenumber
     """,
-    tags=("window", "frames", "exclude"),
 )
 def window_exclude_group_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The remaining SQL:2011 frame-exclusion arms (r5, completing
@@ -571,7 +560,6 @@ def window_exclude_group_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s WHERE rn >= 2
     ORDER BY o_custkey, rn
     """,
-    tags=("window", "regression", "trend"),
 )
 def window_regr_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLING OLS SLOPE over a window — the per-entity trend signal

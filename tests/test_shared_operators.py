@@ -1,7 +1,8 @@
 """Unit tests for the shared query helpers: ``global_topk`` (ranked
 top-k), ``bounded_sort`` (single-task sort of a bounded result),
 ``baskets`` and ``sorted_pairs`` (basket building and postings pair
-emission), ``exact_moment`` (exact integer second moments) and
+emission), ``term_counts`` and ``query_term_stats`` (corpus token
+counts), ``exact_moment`` (exact integer second moments) and
 ``half_up`` (the fixed-point output fold). The registry entries built
 on them are covered by the oracle and plan suites; these pin the
 helpers' own contracts on tiny frames. The last tests keep the idioms
@@ -17,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hive_release_spark.functions.numeric import exact_moment, half_up
+from hive_release_spark.llm.text import query_term_stats, term_counts
 from hive_release_spark.operators.pairs import baskets, sorted_pairs
 from hive_release_spark.operators.topk import bounded_sort, global_topk
 
@@ -162,6 +164,51 @@ def test_baskets_crosses_one_key_exchange(spark):
     assert re.search(r"Exchange hashpartitioning\(o#\d+, ", exchanges[0]), plan
 
 
+def _docs(spark):
+    # doc 2 has NULL text; doc 3's "" splits to one empty token
+    return spark.createDataFrame(
+        [(1, "x", "a b a"), (2, "x", None), (3, "y", ""), (4, "y", "b")],
+        "doc_id INT, k STRING, text STRING",
+    )
+
+
+def test_term_counts_per_key_grain(spark):
+    whole = term_counts(_docs(spark))
+    assert whole.columns == ["term", "n"]
+    assert sorted(tuple(r) for r in whole.collect()) == [("", 1), ("a", 2), ("b", 2)]
+    by_k = term_counts(_docs(spark), "k")
+    assert by_k.columns == ["k", "term", "n"]
+    assert sorted(tuple(r) for r in by_k.collect()) == [
+        ("x", "a", 2), ("x", "b", 1), ("y", "", 1), ("y", "b", 1),
+    ]
+    by_doc = term_counts(_docs(spark), "doc_id", "k")
+    assert by_doc.columns == ["doc_id", "k", "term", "n"]
+    assert sorted(tuple(r) for r in by_doc.collect()) == [
+        (1, "x", "a", 2), (1, "x", "b", 1), (3, "y", "", 1), (4, "y", "b", 1),
+    ]
+
+
+def test_term_counts_splits_once(spark):
+    """The explode's input is the split itself, so no inferred size
+    filter copies it: the plan shows ``split(`` exactly once."""
+    plan = _plan(term_counts(_docs(spark), "k"))
+    assert plan.count("split(") == 1, plan
+
+
+def test_query_term_stats_counts_per_document(spark):
+    stats = query_term_stats(_docs(spark), ("a", "z"))
+    try:
+        assert stats.columns == ["doc_id", "dlen", "tf_0", "tf_1"]
+        # doc 1 has "a" twice; docs 3 and 4 have neither term; doc 2
+        # (NULL text) has no row
+        assert sorted(tuple(r) for r in stats.collect()) == [
+            (1, 3, 2, 0), (3, 1, 0, 0), (4, 1, 0, 0),
+        ]
+        assert stats.storageLevel.useMemory and stats.storageLevel.useDisk
+    finally:
+        stats.unpersist()
+
+
 def test_exact_moment_sums_past_long(spark):
     # each square (9e18) fits in a long; their sum (2.7e19) does not
     y = 3_000_000_000
@@ -225,6 +272,14 @@ _IDIOMS = {
         re.compile(r'F\.split\(\s*[^,]+?,\s*" "\s*\)'),
         {"llm/text.py", "queries/functions_sql.py"},
     ),
+    # explode(tokens(...)) selected straight into a groupBy
+    "term count": (
+        re.compile(
+            r"explode(?:_outer)?\(\s*[\w.]*\btokens\([^()]*\)\s*\)"
+            r"(?:\.alias\([^()]*\))?\s*\)\s*\.groupBy\("
+        ),
+        {"llm/text.py"},
+    ),
     # a coalesce(1) that feeds a write (streaming/pipelines.py) is not a sort
     "bounded sort": (
         re.compile(r"\.coalesce\(\s*1\s*\)\s*\.(?:orderBy|sort)\("),
@@ -276,7 +331,8 @@ def _half_up_folds(tree: ast.AST) -> list[ast.Call]:
 def test_shared_idioms_are_not_inlined():
     """Exact moments go through ``exact_moment``, basket building
     through ``baskets``, whitespace tokenization of text through
-    ``text.tokens``, the single-task sort through ``bounded_sort``, the
+    ``text.tokens``, corpus token counts through ``text.term_counts``,
+    the single-task sort through ``bounded_sort``, the
     per-query neighbor rank tail through ``rank_neighbors`` and the
     half-up output fold through ``half_up``;
     ``functions_sql`` keeps Hive's own split UDTF showcase. The fold is

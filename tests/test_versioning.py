@@ -107,5 +107,23 @@ def test_no_staging_dirs_left_behind(spark, tmp_path):
     d = str(tmp_path / "t")
     V.snapshot_write(spark.range(2), d)
     V.snapshot_write(spark.range(4), d)
-    leftovers = [n for n in os.listdir(d) if n.startswith("._staging_")]
-    assert leftovers == []
+    assert sorted(os.listdir(d)) == ["_LATEST", "v1", "v2"]
+
+
+def test_failed_write_leaves_no_staging_dir(spark, tmp_path):
+    """A write that fails inside a task removes its staging directory:
+    the table keeps only its committed versions and the pointer, and
+    the next snapshot write commits."""
+    d = str(tmp_path / "t")
+    V.snapshot_write(spark.range(2), d)
+
+    @F.udf("long")
+    def boom(x):
+        raise ValueError("task failure")
+
+    with pytest.raises(Exception, match="task failure"):
+        V.snapshot_write(spark.range(3).select(boom("id").alias("id")), d)
+    assert sorted(os.listdir(d)) == ["_LATEST", "v1"]
+    assert V.snapshot_write(spark.range(3), d) == 2
+    assert sorted(os.listdir(d)) == ["_LATEST", "v1", "v2"]
+    assert V.read_snapshot(spark, d).count() == 3
