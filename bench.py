@@ -121,32 +121,34 @@ def skew_leg(spark, sf_dir: str):
        coalesce(1) upstream) is beyond AQE's reach.
     2. **Skew detection is compressed-BYTES-based and a constant-key
        hot partition compresses pathologically well.** Measured at
-       sf0.1 with 32 shuffle partitions: the hot partition holds 2.45M
-       rows vs the ~76k median (32x row skew) but its zstd map-output
-       bytes are 1.46x the median (144 KB vs 99 KB) — below the
+       sf0.1 with 32 shuffle partitions, zstd: the hot partition holds
+       2.45M rows vs the ~76k median (32x row skew) but its map-output
+       bytes are 4.4x the median (972 KB vs 221 KB) — below the
        default 5x factor, so AQE never sees it (BENCH_r07's "aqe" arm
        was plain + overhead; the r7 prose claiming a salted win was
        wrong too, per that artifact's own numbers). The aqe arm lowers
        skewedPartitionFactor to 1.2 + threshold 100k so the byte
-       heuristic can detect the hot partition at bench scale. Under
-       zstd that no longer gets it split: its 144 KB is below the
-       256k advisory size that sets the split target, so the split
-       yields one piece and ``skew_split_fired`` is false (under lz4
-       the same partition was 592 KB, 1.91x the median, and split).
+       heuristic can detect the hot partition at bench scale. At one
+       shuffle partition per core the hot partition also holds a
+       share of every other key: at 4 partitions it is 2.54 MB
+       against 1.72-2.08 MB for the other three, still split.
        Cluster lesson: AQE protects shuffle BYTES; if deserialized
        row memory or per-row compute is the binding constraint, the
        byte heuristic under-fires on low-entropy hot keys, and a
        stronger codec makes it under-fire more — salt
        deterministically (operators/skew.py) when you know the key.
+       The profile below keeps ``l_quantity`` in its exchange for the
+       same reason: with the key alone, the hot partition is 98.7 KB,
+       exactly the median, and no factor can tell it apart.
 
-    Measured at sf0.1, local[4] with 32 shuffle partitions, zstd:
-    plain ~4.4s / salted ~3.6s / aqe ~2.6s, and the row proxy shows
-    the real story: max join-output partition rows plain ~2.45M (hot
-    key in one task) / salted ~650k (8-salt scatter + hash
-    collisions at 32 partitions) / aqe ~2.45M (no split; ~1.2M under
-    lz4, split at mapper granularity by the advisory size).
-    Wall-clock is box-noisy — read the proxy first; it is the
-    quantity that becomes spill/OOM at 100x (240M rows in one task).
+    Measured at sf0.1, local[4], zstd, row proxy (max join-output
+    partition rows / partitions): at 32 shuffle partitions plain
+    2.45M / 32 (hot key in one task), salted ~650k / 32 (8-salt
+    scatter + hash collisions), aqe 843k / 35 (the hot partition
+    split at mapper granularity by the 256k advisory size); at 4
+    partitions plain 3.01M / 4, aqe 2.21M / 5. Wall-clock is
+    box-noisy — read the proxy first; it is the quantity that
+    becomes spill/OOM at 100x (240M rows in one task).
 
     - ``plain``: AQE skew split off -> the hot key lands in one task
       (the pathological straggler baseline);
@@ -221,12 +223,16 @@ def skew_leg(spark, sf_dir: str):
         try:
             prof = (
                 build()
-                .select(F.spark_partition_id().alias("__pid"))
-                .groupBy("__pid")
-                .count()
+                .groupBy(F.spark_partition_id().alias("__pid"))
+                # the quantity sum keeps ``l_quantity`` in the join's
+                # exchange, as in the timed arm: pruned to the key
+                # alone, the hot partition is one constant value that
+                # zstd shrinks to the median partition's bytes
+                .agg(F.count("*").alias("count"), F.sum("l_quantity").alias("qty"))
                 .agg(
                     F.max("count").alias("max_rows"),
                     F.count("*").alias("n_parts"),
+                    F.sum("qty").alias("qty"),
                 )
             )
             sizes = prof.collect()[0]

@@ -304,6 +304,11 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     scale, point spark.checkpoint.dir at durable storage instead). For
     web-diameter graphs swap in the large-star/small-star variant
     (O(log n) rounds) — same contract.
+
+    At most 25 rounds may change a label, so a component's diameter must
+    be at most 25 (a path of 26 nodes). One more round confirms that the
+    labels are final; if it still changes one, the labels would split a
+    component, and the call raises ``RuntimeError`` instead.
     """
     from pyspark import StorageLevel
 
@@ -322,7 +327,8 @@ def connected_components(pairs: DataFrame) -> DataFrame:
         .select("node", F.col("node").alias("label"))
         .localCheckpoint(eager=False)
     )
-    for _ in range(25):  # rounds = cluster diameter, tiny for near-dups
+    max_rounds = 25
+    for rnd in range(max_rounds + 1):
         nbr = (
             edges.join(labels, edges.a == labels.node)
             .select(F.col("b").alias("node"), "label")
@@ -346,6 +352,12 @@ def connected_components(pairs: DataFrame) -> DataFrame:
         labels = new.select("node", "label")
         if changed == 0:
             break
+        if rnd == max_rounds:
+            edges.unpersist()
+            raise RuntimeError(
+                f"connected_components: labels still change after {max_rounds}"
+                " rounds; a component's diameter exceeds the round cap"
+            )
     edges.unpersist()
     return labels.select(
         F.col("node").alias("doc_id"),

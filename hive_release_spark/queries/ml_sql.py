@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from hive_release_spark.catalog import load_table
 from hive_release_spark.functions.numeric import exact_moment, half_up, is_finite
-from hive_release_spark.llm.text import term_counts, tokens
+from hive_release_spark.llm.text import term_counts
 from hive_release_spark.operators.pairs import baskets, sorted_pairs
 from hive_release_spark.operators.topk import bounded_sort, global_topk
 from hive_release_spark.queries.registry import register
@@ -270,9 +270,13 @@ def ml_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     tc.persist()
     lt = tc.groupBy("lang").agg(F.sum("c").alias("t"))
     vb = tc.agg(F.countDistinct("term").alias("v"))
-    # documents with at least one token
-    tr = train.select("lang", "doc_id", F.explode(tokens("text")).alias("term"))
-    pr = tr.groupBy("lang").agg(F.countDistinct("doc_id").alias("nd"))
+    # documents with at least one token: ``split`` never yields an
+    # empty array, so exactly those whose text is not NULL
+    pr = (
+        train.filter(F.col("text").isNotNull())
+        .groupBy("lang")
+        .agg(F.countDistinct("doc_id").alias("nd"))
+    )
     prt = pr.agg(F.sum("nd").alias("total"))
     dt = term_counts(te, "doc_id", "true_lang").withColumnRenamed("n", "tf")
     dt.persist()

@@ -9,6 +9,20 @@ Scale notes: event-time aggregations shuffle on (window, key) — bounded
 state via watermark; session windows keep per-key state until the gap
 expires; dedup-keep-first is a window rank in batch and
 ``dropDuplicatesWithinWatermark`` in streaming.
+
+Structured Streaming turns AQE off, so nothing coalesces a stream's
+reduce side: every micro-batch runs its stateful exchange and state
+store on the static ``spark.sql.shuffle.partitions``. An aggregate keyed
+on the event-time window alone, under a watermark, in append mode,
+holds one state row per open window, and each batch's reduce input is at
+most one partial row per window and map task, at any input volume. Such
+a stream runs on one state partition (``run_available_now``'s
+``state_partitions=1``; ``late_drop_replay``). The map side keeps the
+source's parallelism: the partial aggregate runs before the exchange,
+where a ``coalesce(1)`` would put the file scan itself on one task.
+Aggregates with a key beside the window, and complete-mode or
+watermark-free state (``tumbling_agg`` as ``stream_tumbling_live``),
+grow with the data and keep the session count.
 """
 
 from __future__ import annotations
@@ -257,24 +271,43 @@ def interval_join_full(events: DataFrame) -> DataFrame:
 
 
 def run_available_now(
-    result: DataFrame, name: str, output_mode: str = "complete", timeout_s: float = 300
+    result: DataFrame,
+    name: str,
+    output_mode: str = "complete",
+    timeout_s: float = 300,
+    state_partitions: int | None = None,
 ) -> DataFrame:
     """Execute a streaming result fully (availableNow trigger → memory
     sink) and return the materialized table. Stops any prior query with
     the same name so re-runs are idempotent. Raises ``TimeoutError``
     (after stopping the query) if it has not finished within
-    ``timeout_s`` seconds, instead of returning a partial table."""
+    ``timeout_s`` seconds, instead of returning a partial table.
+
+    ``state_partitions`` runs the query's stateful operators and their
+    exchanges on that many partitions instead of the session's
+    ``spark.sql.shuffle.partitions`` (module Scale notes give when that
+    is safe). The count is set only around ``.start()``: the query
+    clones the session there and its offset log keeps the value from
+    then on, so the caller's setting is restored before the first batch
+    runs, and on every exit path."""
     spark = result.sparkSession
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
-    q = (
-        result.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    if state_partitions is not None:
+        spark.conf.set(key, str(state_partitions))
+    try:
+        q = (
+            result.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(key, prior)
     finished = q.awaitTermination(timeout_s)
     q.stop()
     if not finished:
@@ -326,7 +359,12 @@ def late_drop_replay(
     deterministic) and streamed with maxFilesPerTrigger=1 so
     availableNow runs one batch per file. ``ts`` is cast to classic
     TIMESTAMP (EventTimeWatermark rejects NTZ; session tz is pinned UTC
-    so values are preserved)."""
+    so values are preserved). The aggregate is keyed on the day window
+    alone, under the watermark, in append mode, so it runs on one state
+    partition (module Scale notes): its state and each batch's reduce
+    input are bounded by the open day windows, the scan and the partial
+    aggregate stay parallel, and the caller's shuffle partition count
+    is untouched."""
     import glob
     import os
     import shutil
@@ -394,5 +432,5 @@ def late_drop_replay(
         .select(F.col("window.start").alias("window_start"), "n", "sum_value")
     )
     return run_available_now(
-        agg, "stream_watermark_late_drop", output_mode="append"
+        agg, "stream_watermark_late_drop", output_mode="append", state_partitions=1
     )

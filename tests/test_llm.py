@@ -138,14 +138,26 @@ class TestConnectedComponents:
             10: (10, True), 11: (10, False),
         }
 
-    def test_long_chain_converges(self, spark):
-        n = 12  # diameter 11 — forces many propagation rounds
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(n)], "doc_a BIGINT, doc_b BIGINT"
+    @staticmethod
+    def _path(spark, n):
+        """The path 0–1–…–(n-1): one component of diameter n - 1."""
+        return spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], "doc_a BIGINT, doc_b BIGINT"
         )
-        got = dedup.connected_components(pairs).collect()
-        assert all(r.component == 0 for r in got)
-        assert sum(r.is_survivor for r in got) == 1
+
+    def test_long_chain_converges(self, spark):
+        # 26 nodes: the 25th round, the cap, makes the last change
+        for n in (20, 26):
+            got = dedup.connected_components(self._path(spark, n)).collect()
+            assert len(got) == n
+            assert all(r.component == 0 for r in got), n
+            assert sum(r.is_survivor for r in got) == 1
+
+    def test_path_beyond_round_cap_raises(self, spark):
+        """A 60-node path needs 59 rounds; returning the labels after the
+        cap would split it into 35 components."""
+        with pytest.raises(RuntimeError, match="still change after 25 rounds"):
+            dedup.connected_components(self._path(spark, 60)).collect()
 
 
 def test_ivf_ann_recall_vs_brute_force(spark):

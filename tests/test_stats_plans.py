@@ -93,6 +93,23 @@ def test_naive_bayes_reuses_persisted_token_frames(spark):
     assert n >= 3, f"expected >=3 cached reads, got {n}\n{plan}"
 
 
+def test_naive_bayes_document_count_explodes_no_token(spark):
+    """The documents-per-language prior counts training documents with
+    non-NULL text: outside the two persisted token frames (leaves of
+    the plan tree), no operator explodes a token."""
+
+    def generates(node) -> int:
+        if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            node = node.initialPlan()
+        cs = node.children()
+        return (node.getClass().getSimpleName() == "GenerateExec") + sum(
+            generates(cs.apply(i)) for i in range(cs.size())
+        )
+
+    df = REGISTRY["ml_naive_bayes_langid"].fn(spark, SF_SMOKE)
+    assert generates(df._jdf.queryExecution().executedPlan()) == 0, _plan(df)
+
+
 def test_markov_model_is_broadcast_onto_test(spark):
     """The fitted 5-row transition model must broadcast onto the test
     transitions; the lead window is the only user-shaped exchange."""

@@ -407,3 +407,57 @@ def test_late_drop_replay_stages_in_one_job(spark):
         spark.streams.removeListener(counter)
     assert jobs == 1
     assert counter.batches == 3
+
+
+class _StatePartitions(_BatchCounter):
+    """Records, per progress of the named query, each stateful
+    operator's ``numShufflePartitions``."""
+
+    def __init__(self, name):
+        super().__init__(name)
+        self.seen = []
+
+    def onQueryProgress(self, event):
+        if event.progress.name == self.name:
+            self.seen.append(
+                [so.numShufflePartitions for so in event.progress.stateOperators]
+            )
+
+
+def test_late_drop_replay_keeps_state_on_one_partition(spark):
+    """The replay's window-only aggregate keeps its state on one
+    partition in every micro-batch, not the session's shuffle partition
+    count, and the caller's count is unchanged afterwards."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    assert before != "1"
+    listener = _StatePartitions("stream_watermark_late_drop")
+    spark.streams.addListener(listener)
+    try:
+        P.late_drop_replay(spark, SF_SMOKE)
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.seen == [[1]] * 3
+    assert spark.conf.get(key) == before
+
+
+def test_run_available_now_restores_shuffle_partitions_on_error(spark):
+    """A query that times out, or that fails in ``start()``, leaves the
+    caller's ``spark.sql.shuffle.partitions`` as it was."""
+    from pyspark.errors import AnalysisException
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    stream = P.tumbling_agg(P.load_events_stream(spark, SF_SMOKE))
+    with pytest.raises(TimeoutError):
+        P.run_available_now(
+            stream, "t_timeout_partitions", timeout_s=0.001, state_partitions=1
+        )
+    assert spark.conf.get(key) == before
+    # complete mode needs an aggregate: ``start()`` itself raises
+    with pytest.raises(AnalysisException):
+        P.run_available_now(
+            P.load_events_stream(spark, SF_SMOKE), "t_start_fails", state_partitions=1
+        )
+    assert spark.conf.get(key) == before
