@@ -24,9 +24,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from hive_release_spark.functions.numeric import half_up
-from hive_release_spark.llm.similarity import VEC_VALID_SQL, vec_valid
+from hive_release_spark.llm.similarity import VEC_VALID_SQL, arrow_fns, vec_valid
 
 
 def _nearest(centroids: list[list[float]]):
@@ -50,9 +51,10 @@ def _nearest(centroids: list[list[float]]):
     return F.array_min(F.array(*cands))["c"]
 
 
-def _nearest_kernel(centroids: list[list[float]], id_type: str):
-    """(mapInPandas fn, schema) computing the nearest-centroid index
-    with the EXACT arithmetic contract of :func:`_nearest`, vectorized
+def _nearest_kernel(centroids: list[list[float]]):
+    """``mapInArrow`` kernel appending ``cluster`` (INT), the
+    nearest-centroid index of each row's ``v``, computed with the EXACT
+    arithmetic contract of :func:`_nearest`, vectorized
     over rows (k·d elementwise numpy ops per BATCH, not k·d interpreted
     lambda steps per row — the ``_assign_cells_kernel`` recipe):
 
@@ -68,37 +70,28 @@ def _nearest_kernel(centroids: list[list[float]], id_type: str):
     finite and has the same dimension d.  ``kmeans_assign`` guarantees
     finiteness with ``vec_valid`` and the embedding column has a fixed
     width.  Outside it the paths differ: a NaN distance wins
-    ``np.argmin`` but sorts last in Spark, and a ragged ``v`` fails
-    ``np.stack`` where ``zip_with`` pads with NULL.
+    ``np.argmin`` but sorts last in Spark, and a ragged or NULL ``v``
+    raises ``ValueError`` where ``zip_with`` pads with NULL.
 
     Verified value-identical against the HOF path on every fixture SF
     (the per-iteration assignment sweep in tools/ab history; the
     argmin-gap margin test independently pins the flip distance).
-    ``v`` is echoed through so the means pass can re-explode it."""
+    ``v`` passes through so the means pass can re-explode it."""
     import numpy as np
-    import pandas as pd
 
     C = np.array(centroids, dtype="float64")  # len(cents) × d, id order
-    schema = f"vec_id {id_type}, v ARRAY<DOUBLE>, cluster INT"
+    matrix, append = arrow_fns()
 
     def assign(batches):
         for b in batches:
-            if not len(b):
-                continue
-            X = np.stack(b["v"].to_numpy()).astype("float64")
+            X = matrix(b, "v")
             dist = np.zeros((len(X), C.shape[0]))
             for j in range(C.shape[1]):
                 diff = X[:, j : j + 1] - C[:, j][None, :]
                 dist += diff * diff
-            yield pd.DataFrame(
-                {
-                    "vec_id": b["vec_id"],
-                    "v": b["v"],
-                    "cluster": np.argmin(dist, axis=1).astype("int32"),
-                }
-            )
+            yield append(b, cluster=np.argmin(dist, axis=1).astype("int32"))
 
-    return assign, schema
+    return assign
 
 
 def kmeans_assign(emb: DataFrame, k: int = 8, n_iter: int = 3) -> DataFrame:
@@ -132,10 +125,9 @@ def kmeans_assign(emb: DataFrame, k: int = 8, n_iter: int = 3) -> DataFrame:
         # (_nearest_kernel: bit-identical fold order and argmin
         # tie-break); the means pass and the 6-dp centroid rounding stay
         # JVM-side, so the update step's arithmetic is the oracle's.
-        id_type = pts.schema["vec_id"].dataType.simpleString()
+        schema = StructType(pts.schema.fields + [StructField("cluster", IntegerType())])
         for _ in range(n_iter):
-            kernel, schema = _nearest_kernel(cents, id_type)
-            assigned = pts.mapInPandas(kernel, schema=schema)
+            assigned = pts.mapInArrow(_nearest_kernel(cents), schema)
             means = (
                 assigned.select("cluster", F.posexplode("v").alias("pos", "val"))
                 .groupBy("cluster", "pos")
@@ -147,8 +139,7 @@ def kmeans_assign(emb: DataFrame, k: int = 8, n_iter: int = 3) -> DataFrame:
             new = {r.cluster: [x.m for x in r.ms] for r in means}
             # empty cluster → keep its previous centroid
             cents = [new.get(i, cents[i]) for i in range(len(cents))]
-        kernel, schema = _nearest_kernel(cents, id_type)
-        return pts.mapInPandas(kernel, schema=schema).select("vec_id", "cluster")
+        return pts.mapInArrow(_nearest_kernel(cents), schema).select("vec_id", "cluster")
     finally:
         pts.unpersist()
 
@@ -200,7 +191,7 @@ def pca_project(emb: DataFrame, k: int = 8) -> DataFrame:
     Spark-first shape (MLlib RowMatrix.computePrincipalComponents
     pattern):
 
-    1. Per-Arrow-batch partial moments via ``mapInPandas``: each batch
+    1. Per-Arrow-batch partial moments via ``mapInArrow``: each batch
        contributes its numpy ``XᵀX`` Gram block, column sums, and row
        count — a 100 TB corpus reduces map-side to (d²+d+1)-size
        partials, BLAS-computed, before any exchange.
@@ -210,7 +201,7 @@ def pca_project(emb: DataFrame, k: int = 8) -> DataFrame:
        centroid loop).
     3. numpy ``eigh`` on the driver yields the top-k components; the
        projection itself is a zero-shuffle Arrow map stage (ONE
-       ``mapInPandas`` kernel whose numpy accumulate replays a
+       ``mapInArrow`` kernel whose numpy accumulate replays a
        sequential fold's index order bit-for-bit),
        with the 6-dp output round staying JVM-side.
 
@@ -221,7 +212,7 @@ def pca_project(emb: DataFrame, k: int = 8) -> DataFrame:
     corpus) in tests/test_clustering_pca.py.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     # corrupt vectors carry no geometry — excluded from the moments AND
     # from the projection output (r10 all-NULL axis; r12 vector-
@@ -236,26 +227,20 @@ def pca_project(emb: DataFrame, k: int = 8) -> DataFrame:
             "vec_id", *[F.lit(0.0).alias(f"pc{c}") for c in range(k)]
         )
     d = len(head[0])
+    matrix, append = arrow_fns()
+    ii, jj = np.meshgrid(np.arange(d), np.arange(d), indexing="ij")
+    i_key = np.concatenate([ii.ravel(), np.arange(d), [-1]]).astype("int32")
+    j_key = np.concatenate([jj.ravel(), np.full(d, -1), [-1]]).astype("int32")
 
     def partial_moments(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf["v"].values).astype("float64")
-            g = X.T @ X
-            s = X.sum(axis=0)
-            ii, jj = np.meshgrid(np.arange(d), np.arange(d), indexing="ij")
-            yield pd.DataFrame(
-                {
-                    "i": np.concatenate([ii.ravel(), np.arange(d), [-1]]),
-                    "j": np.concatenate([jj.ravel(), np.full(d, -1), [-1]]),
-                    "val": np.concatenate([g.ravel(), s, [float(len(X))]]),
-                }
-            )
+        for b in batches:
+            X = matrix(b, "v")
+            val = np.concatenate([(X.T @ X).ravel(), X.sum(axis=0), [float(len(X))]])
+            yield pa.RecordBatch.from_pydict({"i": i_key, "j": j_key, "val": val})
 
     moments = (
         emb.select(F.col("embedding").cast("array<double>").alias("v"))
-        .mapInPandas(partial_moments, schema="i INT, j INT, val DOUBLE")
+        .mapInArrow(partial_moments, "i INT, j INT, val DOUBLE")
         .groupBy("i", "j")
         .agg(F.sum("val").alias("val"))
         .collect()  # ≤ d² + d + 1 rows — dimension-bounded, documented
@@ -291,31 +276,29 @@ def pca_project(emb: DataFrame, k: int = 8) -> DataFrame:
     # 512-node expression tree evaluates per-node, losing to the
     # fold's array loop; the numpy kernel's batch accumulate wins
     # where per-row expression trees cannot.
-    id_type = emb.schema["vec_id"].dataType.simpleString()
+    # Only the id goes back out with the projections: the vector would
+    # cross the boundary again for nothing.
     comps_by_dim = [
         np.ascontiguousarray(comps[i, :], dtype="float64") for i in range(d)
     ]
 
     def project(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf["v"].values).astype("float64")
+        for b in batches:
+            X = matrix(b, "v")
             acc = np.zeros((len(X), k), dtype="float64")
             for i in range(d):
                 acc += X[:, i : i + 1] * comps_by_dim[i]
-            out = {"_id": pdf["_id"].values}
-            for c in range(k):
-                out[f"raw{c}"] = acc[:, c]
-            yield pd.DataFrame(out)
+            yield append(
+                b.select(["vec_id"]), **{f"raw{c}": acc[:, c] for c in range(k)}
+            )
 
-    raw = emb.select(
-        F.col("vec_id").alias("_id"),
-        F.col("embedding").cast("array<double>").alias("v"),
-    ).mapInPandas(
+    pts = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    raw = pts.mapInArrow(
         project,
-        schema=f"_id {id_type}, "
-        + ", ".join(f"raw{c} double" for c in range(k)),
+        StructType(
+            [pts.schema["vec_id"]]
+            + [StructField(f"raw{c}", DoubleType()) for c in range(k)]
+        ),
     )
     proj_cols = []
     for c in range(k):
@@ -323,7 +306,7 @@ def pca_project(emb: DataFrame, k: int = 8) -> DataFrame:
         proj_cols.append(
             F.round(F.col(f"raw{c}") - F.lit(offset), 6).alias(f"pc{c}")
         )
-    return raw.select(F.col("_id").alias("vec_id"), *proj_cols)
+    return raw.select("vec_id", *proj_cols)
 
 
 # ---------------------------------------------------------------------------

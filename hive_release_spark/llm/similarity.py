@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
-from pyspark.sql.types import IntegralType
+from pyspark.sql import types as T
 
 from hive_release_spark.functions.numeric import half_up
 
@@ -29,6 +29,39 @@ DIM = 64
 
 def as_double_vec(col: Column | str) -> Column:
     return F.col(col).cast("array<double>") if isinstance(col, str) else col.cast("array<double>")
+
+
+def arrow_fns():
+    """``(matrix, append)``, the vector kernels' Arrow boundary, built per
+    call (the :func:`_nearest_cell_fn` rule) so kernels ship them by value.
+
+    ``matrix(batch, col)`` is the list column ``col`` of a batch or table
+    as an ``(n, d)`` float64 array read from the list's child values; a
+    NULL or ragged row raises ``ValueError`` naming ``col``. An empty
+    partition sends no batch, so ``n > 0``. ``append(batch, **cols)``
+    adds numpy arrays as columns; the batch's own pass through uncopied.
+    ``mapInArrow`` does not cast: each dtype is its field's exact type."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def matrix(batch, col: str):
+        arr = batch.column(col)
+        width = pc.min_max(pc.list_value_length(arr)).as_py()
+        if arr.null_count or width["min"] != width["max"]:
+            raise ValueError(
+                f"column {col!r} holds a NULL or ragged vector: a matrix"
+                " needs one vector of one width per row"
+            )
+        flat = pc.list_flatten(arr).to_numpy(zero_copy_only=False)
+        return flat.astype("float64", copy=False).reshape(len(arr), -1)
+
+    def append(batch, **cols):
+        return pa.RecordBatch.from_arrays(
+            batch.columns + [pa.array(a) for a in cols.values()],
+            names=batch.schema.names + list(cols),
+        )
+
+    return matrix, append
 
 
 # Vector-geometry contract v2 (r12 vector-specials axis, extending the
@@ -231,7 +264,11 @@ def cosine_pairs_blas(vectors: DataFrame, threshold: float) -> DataFrame:
     deterministic id-blocks (xxhash64 — stable across retries), each
     block packs into one ``collect_list(struct(id, v))`` row, and the
     nb(nb+1)/2 ordered block pairs fan out as tasks whose kernel runs
-    normalize + matmul + the ``id_a < id_b`` mask.
+    normalize + matmul + the ``id_a < id_b`` mask. The pair grid is a
+    driver-local frame of block numbers, the only broadcast: the packed
+    blocks equi-join it once as the ``a`` side and once as the ``b``
+    side, and the two sides meet in a shuffled hash join on the pair,
+    whose exchange also spreads the pairs one per task.
 
     EAGER at call time: building this plan runs ONE bounded Spark
     action — the count() that sizes the block grid. Callers that only
@@ -248,7 +285,7 @@ def cosine_pairs_blas(vectors: DataFrame, threshold: float) -> DataFrame:
     import math
 
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     out_schema = "id_a BIGINT, id_b BIGINT, sim DOUBLE"
     # corrupt vectors carry no geometry — drop them JVM-side before
@@ -260,59 +297,52 @@ def cosine_pairs_blas(vectors: DataFrame, threshold: float) -> DataFrame:
     )
     # the kernel packs ids as int64; check the type before the count
     id_type = src.schema["id"].dataType
-    if not isinstance(id_type, IntegralType):
+    if not isinstance(id_type, T.IntegralType):
         raise ValueError(
             "cosine_pairs_blas: vec_id must be an integer type, got"
             f" {id_type.simpleString()}"
         )
     n = src.count()  # bounded action: one long, sizes the block grid
+    spark = vectors.sparkSession
     if n == 0:
-        return vectors.sparkSession.createDataFrame([], out_schema)
+        return spark.createDataFrame([], out_schema)
     # nb blocks ≈ n/8192 rows each, floored at 8 for task spread and
     # capped at 64 so replication (nb × corpus) stays bounded — the
     # grid scales with n, not with the local core count
     nb = max(8, min(64, math.ceil(n / 8192)))
+    matrix, _ = arrow_fns()
+
+    def unit_rows(block):
+        # StructArray.flatten honors the block's slice offset;
+        # RecordBatch.from_struct_array does not for every child
+        rows = pa.RecordBatch.from_arrays(block.values.flatten(), names=["id", "v"])
+        X = matrix(rows, "v")
+        nrm = np.linalg.norm(X, axis=1)
+        nrm[nrm == 0] = 1.0
+        return rows.column("id").to_numpy().astype("int64"), X / nrm[:, None]
 
     def block(batches):
         for batch in batches:
-            for ra, rb, same in zip(
-                batch["rows_a"], batch["rows_b"], batch["same"]
-            ):
-                ids_a = np.fromiter(
-                    (r["id"] for r in ra), dtype="int64", count=len(ra)
-                )
-                Xa = np.stack([r["v"] for r in ra]).astype("float64")
-                na = np.linalg.norm(Xa, axis=1)
-                na[na == 0] = 1.0
-                Na = Xa / na[:, None]
-                if same:
-                    ids_b, Nb = ids_a, Na
-                else:
-                    ids_b = np.fromiter(
-                        (r["id"] for r in rb), dtype="int64", count=len(rb)
-                    )
-                    Xb = np.stack([r["v"] for r in rb]).astype("float64")
-                    nbn = np.linalg.norm(Xb, axis=1)
-                    nbn[nbn == 0] = 1.0
-                    Nb = Xb / nbn[:, None]
+            for ra, rb, same in zip(*batch.columns):
+                ids_a, Na = unit_rows(ra)
+                ids_b, Nb = (ids_a, Na) if same.as_py() else unit_rows(rb)
                 S = Na @ Nb.T
-                mask = (S >= threshold) & (ids_a[:, None] < ids_b[None, :])
-                i, j = np.nonzero(mask)
-                out = {"id_a": ids_a[i], "id_b": ids_b[j], "sim": S[i, j]}
-                if not same:
-                    # cross-block pairs where the LOWER id sits on the
-                    # b side appear only in this task — emit them too
-                    # (sim is ulp-identical either way: IEEE multiply
-                    # commutes and the dot accumulates over the same
-                    # dimension order)
-                    m2 = (S >= threshold) & (ids_b[None, :] < ids_a[:, None])
-                    i2, j2 = np.nonzero(m2)
-                    out = {
-                        "id_a": np.concatenate([out["id_a"], ids_b[j2]]),
-                        "id_b": np.concatenate([out["id_b"], ids_a[i2]]),
-                        "sim": np.concatenate([out["sim"], S[i2, j2]]),
+                # a cross-block pair appears only in this task, whichever
+                # side holds its lower id, so all are emitted, lower id
+                # first (the sim is the same either way: IEEE multiply
+                # commutes and the dot runs over the same dimension
+                # order); a same-block pair appears twice, once kept
+                keep = S >= threshold
+                if same.as_py():
+                    keep &= ids_a[:, None] < ids_b[None, :]
+                i, j = np.nonzero(keep)
+                yield pa.RecordBatch.from_pydict(
+                    {
+                        "id_a": np.minimum(ids_a[i], ids_b[j]),
+                        "id_b": np.maximum(ids_a[i], ids_b[j]),
+                        "sim": S[i, j],
                     }
-                yield pd.DataFrame(out)
+                )
 
     packed = (
         src.withColumn(
@@ -328,20 +358,26 @@ def cosine_pairs_blas(vectors: DataFrame, threshold: float) -> DataFrame:
         # unpersists it
         .persist()
     )
-    pa = packed.select(F.col("blk").alias("blk_a"), F.col("rows").alias("rows_a"))
-    pb = packed.select(F.col("blk").alias("blk_b"), F.col("rows").alias("rows_b"))
-    pairs = (
-        pa.join(F.broadcast(pb), F.col("blk_a") <= F.col("blk_b"))
-        # one fat row per task: the nb(nb+1)/2 block pairs hash-spread
-        # so each gemm runs in its own slot instead of queueing behind
-        # its left block's partition
-        .repartition(F.col("blk_a"), F.col("blk_b"))
-        .select(
-            "rows_a", "rows_b", (F.col("blk_a") == F.col("blk_b")).alias("same")
+    grid = F.broadcast(
+        spark.createDataFrame(
+            [(a, b) for a in range(nb) for b in range(a, nb)], "blk_a INT, blk_b INT"
         )
     )
-    return pairs.mapInPandas(block, schema=out_schema).select(
-        "id_a", "id_b", F.round("sim", 6).alias("sim")
+
+    def side(s):
+        return packed.select(
+            F.col("blk").alias(f"blk_{s}"), F.col("rows").alias(f"rows_{s}")
+        ).join(grid, f"blk_{s}")
+
+    # the shuffle-hash hint keeps a pair side from being broadcast when
+    # the packed blocks look small
+    pairs = side("a").join(side("b").hint("shuffle_hash"), ["blk_a", "blk_b"])
+    return (
+        pairs.select(
+            "rows_a", "rows_b", (F.col("blk_a") == F.col("blk_b")).alias("same")
+        )
+        .mapInArrow(block, out_schema)
+        .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
     )
 
 
@@ -387,7 +423,7 @@ def lsh_bucket_topk(
     n/2^n_planes per table).
 
     Signature kernel: ONE ``X @ P[t].T`` per table per Arrow batch
-    inside ``mapInPandas``, where HOF folds would evaluate ~2 000
+    inside ``mapInArrow``, where HOF folds would evaluate ~2 000
     lambdas per vector. The bucket integers equal a sequential fold's:
     the planes are the same splitmix constants, and
     ``tests/test_fixture_margins.py`` pins every projection's distance
@@ -411,58 +447,45 @@ def lsh_bucket_topk(
     practical effect is a marginal candidate appearing/vanishing,
     i.e. approximate-recall jitter, not corruption."""
     import numpy as np
-    import pandas as pd
 
     planes_all = [
         np.array(_hyperplanes(DIM, n_planes, t), dtype="float64")
         for t in range(n_tables)
     ]
     bit_weights = (1 << np.arange(n_planes, dtype="int64")).astype("int64")
+    matrix, append = arrow_fns()
 
-    def with_buckets(df: DataFrame, idc: str, vc: str, nc: str) -> DataFrame:
-        # id column type derives from the input (string ids, ints, ...)
-        id_type = df.schema[idc].dataType.simpleString()
-        out_schema = (
-            f"{idc} {id_type}, {vc} ARRAY<DOUBLE>, {nc} DOUBLE, bucket BIGINT"
-        )
-
+    def with_buckets(df: DataFrame, vc: str) -> DataFrame:
         def bucketize(batches):
             for b in batches:
-                if not len(b):
-                    continue
-                X = np.stack(b[vc].to_numpy()).astype("float64")
+                X = matrix(b, vc)
                 for t, P in enumerate(planes_all):
                     proj = X @ P.T
                     # table id in the high bits keeps buckets disjoint
                     # across tables (same layout as the SQL oracle)
-                    sig = (t << 32) + ((proj > 0) @ bit_weights)
-                    yield pd.DataFrame(
-                        {idc: b[idc], vc: b[vc], nc: b[nc], "bucket": sig}
-                    )
+                    yield append(b, bucket=(t << 32) + ((proj > 0) @ bit_weights))
 
-        return df.mapInPandas(bucketize, schema=out_schema)
+        return df.mapInArrow(
+            bucketize, T.StructType(df.schema.fields + [T.StructField("bucket", T.LongType())])
+        )
 
     # NULL vectors carry no geometry — no signature, no candidacy;
     # drop JVM-side (scan-pushed) before the signature kernel's
-    # np.stack. r10 all-NULL axis.  The rerank norms are the JVM fold
+    # matrix. r10 all-NULL axis.  The rerank norms are the JVM fold
     # (NOT a BLAS norm — bit-identity with the fold path), computed per
-    # ROW here and echoed through the kernel, so the rerank pays one
+    # ROW here and passed through the kernel, so the rerank pays one
     # dot fold per candidate pair instead of three (r12).
     q = with_buckets(
         queries.filter(vec_valid("embedding")).select(
             F.col("vec_id").alias("query_id"), as_double_vec("embedding").alias("qv")
         ).withColumn("qn", norm(F.col("qv"))),
-        "query_id",
         "qv",
-        "qn",
     )
     c = with_buckets(
         corpus.filter(vec_valid("embedding")).select(
             F.col("vec_id").alias("neighbor_id"), as_double_vec("embedding").alias("cv")
         ).withColumn("cn", norm(F.col("cv"))),
-        "neighbor_id",
         "cv",
-        "cn",
     )
     candidates = (
         c.join(F.broadcast(q), "bucket")
@@ -580,40 +603,28 @@ def _nearest_cell_fn():
     return nearest
 
 
-def _assign_cells_kernel(cents: list, id_out: str, id_type: str, vec_out: str,
-                         extra_cols: tuple = ()):
-    """(mapInPandas fn, schema) labelling each row with its nearest
-    centroid's cell: the centroid's position in ``cents``, which
-    :func:`_packed_centroids_data` makes its cell number, found by
-    :func:`_nearest_cell_fn` over all dimensions (n_cells·d elementwise
-    numpy ops per Arrow batch). The centroid matrix rides the task
-    closure (the cosine_pairs_blas precedent). With no centroid
-    there is no cell, and every row is dropped, as the oracles' cross
-    join with an empty ``cents`` CTE drops it. ``extra_cols`` are echoed
-    through unchanged."""
+def _assign_cells_kernel(cents: list):
+    """``mapInArrow`` kernel appending to each row its ``cell`` (INT):
+    the cell of the centroid nearest its ``v``, i.e. the centroid's
+    position in ``cents``, which :func:`_packed_centroids_data` makes
+    its cell number, found by :func:`_nearest_cell_fn` over all
+    dimensions (n_cells·d elementwise numpy ops per Arrow batch). The
+    centroid matrix rides the task closure (the cosine_pairs_blas
+    precedent). With no centroid there is no cell, and every row is
+    dropped, as the oracles' cross join with an empty ``cents`` CTE
+    drops it. The other columns pass through unchanged."""
     import numpy as np
-    import pandas as pd
 
     C = np.array([cv for _, cv in cents], dtype="float64")
     nearest = _nearest_cell_fn()
-    extra = ", ".join(f"{name} {typ}" for name, typ in extra_cols)
-    schema = (
-        f"{id_out} {id_type}, {vec_out} ARRAY<DOUBLE>"
-        + (f", {extra}" if extra else "")
-        + ", cell INT"
-    )
+    matrix, append = arrow_fns()
 
     def assign(batches):
         for b in batches:
-            if not len(b) or not cents:
-                continue
-            X = np.stack(b[vec_out].to_numpy()).astype("float64")
-            out = {id_out: b[id_out], vec_out: b[vec_out]}
-            out.update({name: b[name] for name, _ in extra_cols})
-            out["cell"] = nearest(X, C, range(C.shape[1]))
-            yield pd.DataFrame(out)
+            if cents:
+                yield append(b, cell=nearest(matrix(b, "v"), C, range(C.shape[1])))
 
-    return assign, schema
+    return assign
 
 
 def ivf_topk(
@@ -648,12 +659,12 @@ def ivf_topk(
         return _empty_topk(queries, corpus)
 
     c = corpus.select(
-        F.col("vec_id").alias("neighbor_id"), as_double_vec("embedding").alias("cv")
-    ).withColumn("cn", norm(F.col("cv")))  # per-row norm, not per-pair (r12)
-    kernel, schema = _assign_cells_kernel(
-        cents, "neighbor_id", dict(c.dtypes)["neighbor_id"], "cv", (("cn", "DOUBLE"),)
+        F.col("vec_id").alias("neighbor_id"), as_double_vec("embedding").alias("v")
+    ).withColumn("cn", norm(F.col("v")))  # per-row norm, not per-pair (r12)
+    c_cells = c.mapInArrow(
+        _assign_cells_kernel(cents),
+        T.StructType(c.schema.fields + [T.StructField("cell", T.IntegerType())]),
     )
-    c_cells = c.mapInPandas(kernel, schema=schema)
     q = queries.select(
         F.col("vec_id").alias("query_id"), as_double_vec("embedding").alias("qv")
     ).withColumn("qn", norm(F.col("qv")))
@@ -673,7 +684,7 @@ def ivf_topk(
     candidates = (
         c_cells.join(F.broadcast(q_probes), "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "qv", "qn", "neighbor_id", "cv", "cn")
+        .select("query_id", "qv", "qn", "neighbor_id", F.col("v").alias("cv"), "cn")
     )
     sims = candidates.withColumn(
         "sim", cosine_pre(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn"))
@@ -693,8 +704,10 @@ def assign_cells(vectors: DataFrame, n_cells: int = 16) -> DataFrame:
         F.col("vec_id").alias("id"), as_double_vec("embedding").alias("v")
     )
     cents = _packed_centroids_data(vectors, n_cells)
-    kernel, schema = _assign_cells_kernel(cents, "id", dict(v.dtypes)["id"], "v")
-    return v.mapInPandas(kernel, schema=schema)
+    return v.mapInArrow(
+        _assign_cells_kernel(cents),
+        T.StructType(v.schema.fields + [T.StructField("cell", T.IntegerType())]),
+    )
 
 
 def semantic_dedup_pairs(
@@ -708,12 +721,12 @@ def semantic_dedup_pairs(
     same-cell pairs, which is the published SemDeDup design (near-dups
     share a cluster by construction of the embedding space). Assignment
     is the zero-shuffle Arrow kernel of :func:`assign_cells`; pair
-    emission is ONE ``applyInPandas`` over the cell key (one shuffle)
+    emission is ONE ``applyInArrow`` over the cell key (one shuffle)
     computing each cell's pair block by BLAS matmul, not a d-term fold
     per PAIR.
 
     Hot-cell memory contract (ADVICE r6-1): a whole cell of m rows
-    does land in one Python worker — applyInPandas groups are
+    does land in one Python worker — applyInArrow groups are
     indivisible, AQE can NOT split them — so the matmul is CHUNKED:
     only a ``block_rows``×m slice of the similarity matrix is live at
     once (O(block_rows·m·8B), ~0.8 GB at m=100k with the default
@@ -726,49 +739,49 @@ def semantic_dedup_pairs(
     Deterministic end-to-end → fully DuckDB-replayable (same
     centroid/argmax contract as ivf_topk)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     # NULL vectors carry no geometry — drop them JVM-side before cell
     # assignment (scan-pushed; keeps NULL rows out of both the stride
-    # centroid sample and the pair kernel's np.stack). r10 all-NULL axis.
+    # centroid sample and the pair kernel's matrix). r10 all-NULL axis.
     vectors = vectors.filter(vec_valid("embedding"))
     assigned = assign_cells(vectors, n_cells)
+    matrix, _ = arrow_fns()
 
-    def cell_pairs(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        if len(pdf) < 2:
-            return pd.DataFrame(
-                {"cell": [], "id_a": [], "id_b": [], "sim": []}
-            ).astype({"cell": "int64", "id_a": "int64", "id_b": "int64",
-                      "sim": "float64"})
-        order = np.argsort(pdf["id"].to_numpy())
-        ids = pdf["id"].to_numpy()[order]
-        X = np.stack(pdf["v"].to_numpy()[order]).astype("float64")
+    def cell_pairs(t):
+        ids = t.column("id").to_numpy().astype("int64")
+        order = np.argsort(ids)
+        ids = ids[order]
+        X = matrix(t, "v")[order]
         nrm = np.linalg.norm(X, axis=1)
         nrm[nrm == 0] = 1.0
         N = X / nrm[:, None]
         m = len(ids)
-        cell = int(pdf["cell"].iloc[0])
         cols = np.arange(m)
-        chunks = []
+        id_a, id_b, sim = [], [], []
         for s in range(0, m, block_rows):
             e = min(s + block_rows, m)
             Sb = N[s:e] @ N.T  # block_rows × m slice — never m × m
             keep = (Sb >= threshold) & (cols[None, :] > np.arange(s, e)[:, None])
             bi, bj = np.nonzero(keep)
-            chunks.append(pd.DataFrame(
-                {
-                    "cell": np.full(len(bi), cell),
-                    "id_a": ids[s + bi],
-                    "id_b": ids[bj],
-                    "sim": Sb[bi, bj],
-                }
-            ))
-        return pd.concat(chunks, ignore_index=True)
+            id_a.append(ids[s + bi])
+            id_b.append(ids[bj])
+            sim.append(Sb[bi, bj])
+        id_a = np.concatenate(id_a)
+        cell = t.column("cell")[0].as_py()
+        return pa.table(
+            {
+                "cell": np.full(len(id_a), cell, dtype="int64"),
+                "id_a": id_a,
+                "id_b": np.concatenate(id_b),
+                "sim": np.concatenate(sim),
+            }
+        )
 
     return (
         assigned.select("cell", "id", "v")
         .groupBy("cell")
-        .applyInPandas(
+        .applyInArrow(
             cell_pairs, schema="cell BIGINT, id_a BIGINT, id_b BIGINT, sim DOUBLE"
         )
         .select("cell", "id_a", "id_b", F.round("sim", 6).alias("sim"))
@@ -845,7 +858,6 @@ def pq_topk(
     from functools import reduce
 
     import numpy as np
-    import pandas as pd
 
     # NULL vectors carry no geometry — not encodable, not candidates;
     # drop JVM-side (scan-pushed). r10 all-NULL axis.
@@ -867,26 +879,33 @@ def pq_topk(
     # kernel (n_subspaces × n_cells width-w dots per corpus row, the
     # dominant cost of the entry) under _nearest_cell_fn's arithmetic
     # contract. The codebook rides the task closure.
+    # Only the id goes back out with the codes: the vector would cross
+    # the boundary again for nothing.
     C = np.array([cv for _, cv in cents], dtype="float64")
     nearest = _nearest_cell_fn()
+    matrix, append = arrow_fns()
     c = corpus.select(
         F.col("vec_id").alias("neighbor_id"), as_double_vec("embedding").alias("cv")
-    )
-    code_schema = f"neighbor_id {dict(c.dtypes)['neighbor_id']}, " + ", ".join(
-        f"code_{s} INT" for s in range(n_subspaces)
     )
 
     def encode(batches):
         for b in batches:
-            if not len(b):
-                continue
-            X = np.stack(b["cv"].to_numpy()).astype("float64")
-            out = {"neighbor_id": b["neighbor_id"]}
-            for s in range(n_subspaces):
-                out[f"code_{s}"] = nearest(X, C, range(s * w, (s + 1) * w))
-            yield pd.DataFrame(out)
+            X = matrix(b, "cv")
+            yield append(
+                b.select(["neighbor_id"]),
+                **{
+                    f"code_{s}": nearest(X, C, range(s * w, (s + 1) * w))
+                    for s in range(n_subspaces)
+                },
+            )
 
-    codes = c.mapInPandas(encode, schema=code_schema)
+    codes = c.mapInArrow(
+        encode,
+        T.StructType(
+            [c.schema["neighbor_id"]]
+            + [T.StructField(f"code_{s}", T.IntegerType()) for s in range(n_subspaces)]
+        ),
+    )
 
     # ADC lookup tables, the published PQ trick: sim(query, code) only
     # depends on (query, subspace, cell), so the n_queries x n_subspaces

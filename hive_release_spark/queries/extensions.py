@@ -15,95 +15,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_release_spark.catalog import load_table, register_views
+from hive_release_spark.catalog import app_scoped_dir, load_table, register_views
 from hive_release_spark.functions.numeric import cents, cents_sql, finite
 from hive_release_spark.operators.topk import bounded_sort
 from hive_release_spark.queries.registry import register
-
-# Roundtrip-entry scratch directories registered for end-of-process
-# cleanup (atexit), so a normally-exiting session leaves no
-# per-application debris under spark-warehouse.
-_SCOPED_DIRS: set = set()
-
-# Sibling scratch dirs older than this are crash debris from a dead
-# application (no live sweep/bench session runs anywhere near this
-# long) and are swept before the next write.
-_STALE_SCRATCH_SECONDS = 24 * 3600
-
-
-def _app_scoped_roundtrip_dir(spark: SparkSession, prefix: str, sf_dir: str) -> str:
-    """A per-Spark-application scratch directory for write-then-read
-    roundtrip entries.
-
-    Shared-fixed-path roundtrip dirs raced twice in r9 (two concurrent
-    check.py axes clearing each other's files mid-lazy-read), so the
-    path embeds ``applicationId``: re-calls within one session reuse
-    (and may safely clear) their own directory; concurrent sessions
-    never collide.  Lifecycle (ADVICE r9-3): the directory is
-    registered for atexit removal, and siblings with the same prefix
-    whose mtime is older than :data:`_STALE_SCRATCH_SECONDS` are swept
-    as dead-application debris — a live concurrent session's dir is
-    hours younger than the threshold, so the sweep can never take a
-    directory out from under a running sweep/bench session."""
-    import atexit
-    import os
-    import shutil
-    import time
-
-    base = "spark-warehouse"
-    # sanitize '_' out of the tag (r11 in-round review): the sweep
-    # below parses <prefix>_<tag>_<appId> and SKIPS ambiguous names,
-    # so an underscore-bearing tag (the /tmp/sf_nan axis dirs — the
-    # most common debris source) would make its own debris permanently
-    # unsweepable
-    tag = os.path.basename(sf_dir.rstrip("/")).replace("_", "-")
-    # sanitize the appId segment the same way (ADVICE r11-4): local
-    # appIds ("local-17…") carry no underscore, but a YARN
-    # "application_x_y" id would make every generated dir fail its own
-    # family's one-segment parse below — debris would never be swept
-    app_id = spark.sparkContext.applicationId.replace("_", "-")
-    name = f"{prefix}_{tag}_{app_id}"
-    path = os.path.join(base, name)
-    if os.path.isdir(base):
-        cutoff = time.time() - _STALE_SCRATCH_SECONDS
-        for sib in os.listdir(base):
-            # Match the FULL structured name, not a raw prefix
-            # (ADVICE r10-3): a sibling belongs to THIS entry family
-            # only if stripping "<prefix>_" and "_<appId>" leaves
-            # exactly one tag segment — a bare startswith would let a
-            # family whose prefix prefixes another's ("race_pin" vs
-            # "race_pin_sweep") sweep that family's still-wanted dirs.
-            # Generated names sanitize '_' out of BOTH the tag and the
-            # appId, so they always parse; a legacy underscore-bearing
-            # name fails the one-segment parse and is simply SKIPPED —
-            # the sweep errs toward leaving debris, never toward
-            # deleting another family's data.
-            if sib == name or not sib.startswith(f"{prefix}_"):
-                continue
-            parts = sib[len(prefix) + 1 :].rsplit("_", 1)
-            if len(parts) != 2 or "_" in parts[0]:
-                continue
-            sp = os.path.join(base, sib)
-            try:
-                if os.path.getmtime(sp) < cutoff:
-                    shutil.rmtree(sp, ignore_errors=True)
-            except OSError:
-                pass  # a concurrent cleanup won the race — fine
-    if os.path.isdir(path):
-        # heartbeat: a session older than the TTL that still calls its
-        # entries keeps its directory's mtime fresh, so a concurrent
-        # session's debris sweep can never mistake it for a dead app
-        # (the residual exposure — >TTL of IDLE time between a write
-        # and a lazy re-read with no intervening entry call — is not a
-        # shape any sweep/bench session has)
-        try:
-            os.utime(path)
-        except OSError:
-            pass
-    if path not in _SCOPED_DIRS:
-        _SCOPED_DIRS.add(path)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
 
 
 @register(
@@ -1085,7 +1000,7 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session's lineage but not for a concurrent session's reader, so
     # two sessions sharing a fixed path can race (observed as a one-off
     # sweep failure when two check.py axes ran in parallel)
-    path = _app_scoped_roundtrip_dir(spark, "xml_roundtrip", sf_dir)
+    path = app_scoped_dir(spark, "xml_roundtrip", sf_dir)
     (
         ev.withColumn("ts", F.col("ts").cast("string"))
         .write.mode("overwrite")
@@ -1186,7 +1101,7 @@ def source_sequencefile_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     # out from under another session's lazy read — the app id keeps
     # re-calls within one session reusing (and safely clearing) their
     # own directory while concurrent sessions never collide
-    path = _app_scoped_roundtrip_dir(spark, "seqfile_roundtrip", sf_dir)
+    path = app_scoped_dir(spark, "seqfile_roundtrip", sf_dir)
     shutil.rmtree(path, ignore_errors=True)
     write_sequencefile(li, path)
     back = read_sequencefile(

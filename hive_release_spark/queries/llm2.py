@@ -5,10 +5,8 @@ top-k (the numpy fast path for wide embeddings).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -90,7 +88,7 @@ FROM ranked WHERE rank <= 5
 
 @register("sim_cosine_topk_arrow", oracle=_TOPK_ORACLE)
 def sim_cosine_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cosine top-k via a numpy matmul inside mapInPandas — the
+    """Cosine top-k via a numpy matmul inside mapInArrow — the
     vectorized fast path for wide embeddings (BLAS beats per-element
     higher-order functions as dimensionality grows). Queries are
     broadcast to every batch as a numpy matrix; each Arrow batch of the
@@ -111,30 +109,26 @@ def sim_cosine_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "query_id long, neighbor_id long, sim double, rank int"
         )
-    q_ids = np.array([r.vec_id for r in qrows])
+    q_ids = np.array([r.vec_id for r in qrows], dtype="int64")
     q_mat = np.array([r.embedding for r in qrows], dtype=np.float64)
     q_norm = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
+    matrix, _ = similarity.arrow_fns()
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                # empty Arrow batch (empty partition on a real run, not
-                # just an empty table): np.stack of nothing is 1-D and
-                # the axis-1 norm would crash the worker
-                continue
-            c = np.array(list(pdf["embedding"]), dtype=np.float64)
+    def score(batches):
+        for b in batches:
+            c = matrix(b, "embedding")
             c_norm = c / np.linalg.norm(c, axis=1, keepdims=True)
             sims = c_norm @ q_norm.T  # (batch, n_queries)
             n, m = sims.shape
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {
-                    "query_id": np.repeat(q_ids[np.newaxis, :], n, axis=0).ravel(),
-                    "neighbor_id": np.repeat(pdf["vec_id"].to_numpy(), m),
+                    "query_id": np.tile(q_ids, n),
+                    "neighbor_id": np.repeat(b.column("vec_id").to_numpy().astype("int64"), m),
                     "sim": sims.ravel(),
                 }
             )
 
-    sims = emb.select("vec_id", "embedding").mapInPandas(
+    sims = emb.select("vec_id", "embedding").mapInArrow(
         score, "query_id long, neighbor_id long, sim double"
     ).filter(F.col("query_id") != F.col("neighbor_id"))
     w = W.partitionBy("query_id").orderBy(F.round("sim", 9).desc(), F.col("neighbor_id"))

@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 
 from hive_release_spark.catalog import (
     _EVENTS_RAW_NS_SCHEMA,
+    app_scoped_dir,
     events_ts_unit,
     load_table,
     table_path,
@@ -353,11 +354,13 @@ def late_drop_replay(
     ``coalesce(1)`` partitioned by the tag, so each batch gets one
     part file without the tag column; a batch with no rows gets no
     partition directory and is written as an empty file instead. The
-    part files are moved to ``data/<batch>.parquet`` under
-    spark-warehouse (rewritten idempotently, modification times
-    staggered so FileStreamSource's oldest-first ordering is
-    deterministic) and streamed with maxFilesPerTrigger=1 so
-    availableNow runs one batch per file. ``ts`` is cast to classic
+    part files are moved to ``data/<batch>.parquet`` (rewritten
+    idempotently, modification times staggered so FileStreamSource's
+    oldest-first ordering is deterministic) and streamed with
+    maxFilesPerTrigger=1 so availableNow runs one batch per file. They
+    live in the application's own scratch directory
+    (``catalog.app_scoped_dir``), so two processes replaying one SF
+    from one working directory never touch each other's files. ``ts`` is cast to classic
     TIMESTAMP (EventTimeWatermark rejects NTZ; session tz is pinned UTC
     so values are preserved). The aggregate is keyed on the day window
     alone, under the watermark, in append mode, so it runs on one state
@@ -369,9 +372,7 @@ def late_drop_replay(
     import os
     import shutil
 
-    base = os.path.join(
-        "spark-warehouse", f"latedrop_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    base = app_scoped_dir(spark, "latedrop", sf_dir)
     data_dir = os.path.join(base, "data")
     # Event-time validity ceiling (r12 temporal axis,
     # functions/temporal.py): one far-future corrupt timestamp in the

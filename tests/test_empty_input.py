@@ -836,11 +836,12 @@ def test_single_row_adjudicated_exceptions(spark, single_sf, single_con):
 
 
 def test_empty_arrow_batch_does_not_crash_pandas_kernel(spark, empty_sf):
-    """The mapInPandas kernels must tolerate EMPTY Arrow batches — on a
-    real cluster an empty partition hands the UDF an empty frame, so
-    this is live-data robustness, not just the empty-table edge (the
-    pca partial-moments kernel always guarded; the cosine kernel is
-    pinned since the r9 sweep caught it)."""
+    """The Arrow vector kernels must tolerate EMPTY partitions — on a
+    real cluster most partitions of a small frame are empty, so this is
+    live-data robustness, not just the empty-table edge. An empty
+    partition sends ``mapInArrow`` no batch at all, which is why the
+    kernels carry no empty-batch guard; this pins the 1-row corpus
+    spread over 8 partitions and the all-empty tables."""
     from hive_release_spark.queries import REGISTRY
 
     # 1-row corpus across 8 partitions -> at least 7 empty batches

@@ -354,7 +354,7 @@ def test_new_operators_handle_empty_inputs(spark):
     # stride-sampled centroids from an empty corpus -> no cells, no pairs
     assert similarity.semantic_dedup_pairs(empty_emb, threshold=0.5).count() == 0
     # the BLAS twin collects eagerly at call time; an empty corpus must
-    # yield an empty typed frame, not an np.stack crash (ADVICE r6-3)
+    # yield an empty typed frame, not a kernel crash (ADVICE r6-3)
     blas_empty = similarity.cosine_pairs_blas(empty_emb, threshold=0.5)
     assert blas_empty.columns == ["id_a", "id_b", "sim"]
     assert blas_empty.count() == 0
@@ -385,7 +385,7 @@ def test_cosine_pairs_blas_rejects_string_ids_before_any_job(spark):
 
 def test_semantic_dedup_chunked_matmul_matches_single_block(spark):
     """The per-cell kernel chunks the similarity matmul so only a
-    block_rows x m slice is live (ADVICE r6-1: applyInPandas groups are
+    block_rows x m slice is live (ADVICE r6-1: applyInArrow groups are
     indivisible, so a hot cell's memory must be bounded INSIDE the
     kernel). Forcing block_rows below the cell size must exercise the
     multi-block path and reproduce the single-block pair set exactly."""

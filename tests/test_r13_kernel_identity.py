@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from hive_release_spark.catalog import load_table
 from hive_release_spark.llm import similarity
@@ -32,10 +33,10 @@ def test_nearest_kernel_matches_hof(spark):
         .select("vec_id", "cluster")
         .collect()
     }
-    kernel, schema = _nearest_kernel(cents, "bigint")
+    schema = StructType(pts.schema.fields + [StructField("cluster", IntegerType())])
     ker = {
         r.vec_id: r.cluster
-        for r in pts.mapInPandas(kernel, schema=schema)
+        for r in pts.mapInArrow(_nearest_kernel(cents), schema)
         .select("vec_id", "cluster")
         .collect()
     }

@@ -19,8 +19,10 @@ Checks:
   appearing here is a bug.
 - ``BatchEvalPython`` — a row-at-a-time (non-Arrow) Python UDF, the
   10-100x slow path. The package's Python escape hatches are all
-  Arrow-batched (pandas_udf / mapInPandas / applyInPandas, which plan
-  as ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas);
+  Arrow-batched (mapInArrow / applyInArrow for the vector kernels,
+  pandas_udf / mapInPandas / applyInPandas elsewhere, which plan as
+  MapInArrow / FlatMapGroupsInArrow / ArrowEvalPython / MapInPandas /
+  FlatMapGroupsInPandas);
   udtf_python is the deliberate Python-UDTF extension-surface demo
   (Spark 4 plans UDTFs as BatchEvalPythonUDTF — there is no Arrow
   UDTF mode) and is the only allowed hit.

@@ -308,13 +308,32 @@ def test_ivf_bcast_corpus_side_has_no_shuffle_before_probe_join(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
     plan = _plan(ivf_topk(q, emb, k=3, n_cells=8, n_probe=2))
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "BroadcastNestedLoopJoin" in plan
     # the only hash exchange allowed is the rank window's query_id partition
     import re
 
     exchanges = re.findall(r"Exchange hashpartitioning\(([^,]+)", plan)
     assert all(e.startswith("query_id") for e in exchanges), exchanges
+
+
+def test_blas_pairs_broadcast_only_the_block_grid(spark):
+    """cosine_pairs_blas pairs its packed blocks by equi-joins against a
+    driver-local (blk_a, blk_b) grid. No nested-loop join is planned,
+    and no broadcast carries packed corpus rows: broadcasting them
+    would collect the whole corpus to the driver."""
+    import re
+
+    from hive_release_spark.llm.similarity import cosine_pairs_blas
+    from hive_release_spark.operators.cache import pipeline_scope
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    with pipeline_scope():
+        plan = _plan(cosine_pairs_blas(emb, threshold=0.4))
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    inputs = re.findall(r"\(\d+\) BroadcastExchange\nInput \[\d+\]: \[([^\]]*)\]", plan)
+    assert inputs, plan
+    assert not any("rows" in cols for cols in inputs), inputs
 
 
 def test_lm_score_reuses_persisted_bigram_base(spark):

@@ -2,8 +2,9 @@
 top-k), ``bounded_sort`` (single-task sort of a bounded result),
 ``baskets`` and ``sorted_pairs`` (basket building and postings pair
 emission), ``term_counts`` and ``query_term_stats`` (corpus token
-counts), ``exact_moment`` (exact integer second moments) and
-``half_up`` (the fixed-point output fold). The registry entries built
+counts), ``exact_moment`` (exact integer second moments),
+``half_up`` (the fixed-point output fold) and ``arrow_fns`` (the vector
+kernels' Arrow boundary). The registry entries built
 on them are covered by the oracle and plan suites; these pin the
 helpers' own contracts on tiny frames. The last tests keep the idioms
 from being pasted back inline."""
@@ -14,10 +15,13 @@ import ast
 import re
 from pathlib import Path
 
+import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from hive_release_spark.functions.numeric import exact_moment, half_up
+from hive_release_spark.llm.similarity import arrow_fns
 from hive_release_spark.llm.text import query_term_stats, term_counts
 from hive_release_spark.operators.pairs import baskets, sorted_pairs
 from hive_release_spark.operators.topk import bounded_sort, global_topk
@@ -510,3 +514,55 @@ def test_no_option_goes_unset():
     a constant: name the value in the function body instead."""
     unset = _unset_options()
     assert not unset, "\n".join(unset)
+
+
+def test_matrix_reads_a_sliced_vector_column():
+    """``matrix`` is the (n, d) float64 matrix of a list column, also
+    for a batch that is a slice of a larger one and for float vectors."""
+    matrix, append = arrow_fns()
+    vecs = pa.array([[0.0, 1.0], [2.0, 3.0], [4.0, 5.0]], pa.list_(pa.float32()))
+    batch = pa.RecordBatch.from_arrays([pa.array([7, 8, 9]), vecs], names=["id", "v"])
+    X = matrix(batch.slice(1), "v")
+    assert X.dtype == np.float64 and X.tolist() == [[2.0, 3.0], [4.0, 5.0]]
+    out = append(batch, cell=np.array([1, 2, 3], dtype="int32"))
+    assert out.schema.names == ["id", "v", "cell"]
+    # the incoming columns pass through uncopied: same buffers
+    assert [b.address for b in out.column("v").buffers() if b] == [
+        b.address for b in vecs.buffers() if b
+    ]
+    assert out.schema.field("cell").type == pa.int32()
+
+
+@pytest.mark.parametrize(
+    "rows", [[[1.0, 2.0], [3.0]], [[1.0, 2.0], None]], ids=["ragged", "null"]
+)
+def test_matrix_refuses_ragged_or_null_vectors(rows):
+    """A ragged or NULL ``list<double>`` row has no place in an (n, d)
+    matrix: ``matrix`` raises ``ValueError`` naming the column instead
+    of reshaping the flattened values into wrong rows."""
+    matrix, _ = arrow_fns()
+    batch = pa.RecordBatch.from_arrays([pa.array(rows, pa.list_(pa.float64()))], names=["emb"])
+    with pytest.raises(ValueError, match="'emb'"):
+        matrix(batch, "emb")
+
+
+_ARROW_KERNEL_MODULES = ("llm/clustering.py", "llm/similarity.py", "queries/llm2.py")
+
+
+@pytest.mark.parametrize("rel", _ARROW_KERNEL_MODULES)
+def test_vector_kernels_stay_on_arrow(rel):
+    """The vector kernels cross the Python boundary as Arrow batches.
+    Their modules neither call ``mapInPandas`` / ``applyInPandas`` nor
+    import pandas, so a numpy matrix is never rebuilt row by row from a
+    pandas object column."""
+    tree = ast.parse((PKG / rel).read_text())
+    found = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and node.attr in ("mapInPandas", "applyInPandas"):
+            found.append(f"{node.attr} at line {node.lineno}")
+        elif isinstance(node, ast.Import):
+            found += [f"import {a.name} at line {node.lineno}" for a in node.names
+                      if a.name.split(".")[0] == "pandas"]
+        elif isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[0] == "pandas":
+            found.append(f"from {node.module} import at line {node.lineno}")
+    assert not found, f"{rel}: {found}"

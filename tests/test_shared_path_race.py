@@ -12,7 +12,7 @@ Two layers:
 
 * a STATIC sweep over every ``hive_release_spark/queries`` module:
   any function that writes to the filesystem must build its path via
-  ``_app_scoped_roundtrip_dir`` (the one construction that embeds the
+  ``catalog.app_scoped_dir`` (the one construction that embeds the
   applicationId and carries the cleanup lifecycle), and no module may
   hand-build a ``spark-warehouse`` path at all;
 * a FUNCTIONAL check of the helper itself: app-id embedding, atexit
@@ -41,7 +41,7 @@ WRITE_CALLS = {
 }
 
 # The only sanctioned path constructor for entry-owned scratch dirs.
-SANCTIONED = "_app_scoped_roundtrip_dir"
+SANCTIONED = "app_scoped_dir"
 
 
 def _module_sources():
@@ -98,9 +98,8 @@ def _enclosing_function(tree, target):
 
 def test_every_writing_entry_uses_the_scoped_helper():
     """Any queries/ function that performs a filesystem write must call
-    _app_scoped_roundtrip_dir somewhere in its body (or BE the helper's
-    own module plumbing) — this is what fails when the next roundtrip
-    entry is added with a fixed path."""
+    app_scoped_dir somewhere in its body — this is what fails when the
+    next roundtrip entry is added with a fixed path."""
     offenders = []
     for fname, src in _module_sources():
         tree = ast.parse(src)
@@ -122,17 +121,13 @@ def test_every_writing_entry_uses_the_scoped_helper():
 
 
 def test_scoped_dir_embeds_application_id(spark):
-    from hive_release_spark.queries.extensions import (
-        _app_scoped_roundtrip_dir,
-    )
+    from hive_release_spark.catalog import _SCOPED_DIRS, app_scoped_dir
 
-    p = _app_scoped_roundtrip_dir(spark, "race_pin", "/root/testdata/sf0.001")
+    p = app_scoped_dir(spark, "race_pin", "/root/testdata/sf0.001")
     app_id = spark.sparkContext.applicationId
     assert app_id in os.path.basename(p)
     assert p.startswith("spark-warehouse" + os.sep)
     # registered for end-of-process cleanup
-    from hive_release_spark.queries.extensions import _SCOPED_DIRS
-
     assert p in _SCOPED_DIRS
 
 
@@ -141,7 +136,7 @@ def test_stale_sibling_sweep_spares_live_sessions(spark, tmp_path):
     than the TTL; a young sibling (a LIVE concurrent session's dir)
     must survive — deleting it would reintroduce the very race the
     scoping fixed."""
-    from hive_release_spark.queries import extensions as ext
+    from hive_release_spark import catalog
 
     base = "spark-warehouse"
     os.makedirs(base, exist_ok=True)
@@ -151,11 +146,11 @@ def test_stale_sibling_sweep_spares_live_sessions(spark, tmp_path):
         os.makedirs(d, exist_ok=True)
         with open(os.path.join(d, "part-00000"), "w") as fh:
             fh.write("x")
-    old = time.time() - ext._STALE_SCRATCH_SECONDS - 60
+    old = time.time() - catalog._STALE_SCRATCH_SECONDS - 60
     os.utime(dead, (old, old))
 
     try:
-        ext._app_scoped_roundtrip_dir(
+        catalog.app_scoped_dir(
             spark, "race_pin_sweep", "/root/testdata/sf0.001"
         )
         assert not os.path.exists(dead), "stale dead-app dir not swept"
@@ -178,7 +173,7 @@ def test_stale_sibling_sweep_is_family_exact(spark):
     underscore-bearing tag (the /tmp/sf_nan axis dirs) also fails the
     one-segment parse and is skipped: the sweep errs toward leaving
     debris, never toward deleting another family's data."""
-    from hive_release_spark.queries import extensions as ext
+    from hive_release_spark import catalog
 
     base = "spark-warehouse"
     os.makedirs(base, exist_ok=True)
@@ -186,11 +181,11 @@ def test_stale_sibling_sweep_is_family_exact(spark):
     odd_tag = os.path.join(base, "race_pin_sf_nan_app-y-2")
     for d in (other_family, odd_tag):
         os.makedirs(d, exist_ok=True)
-    old = time.time() - ext._STALE_SCRATCH_SECONDS - 60
+    old = time.time() - catalog._STALE_SCRATCH_SECONDS - 60
     for d in (other_family, odd_tag):
         os.utime(d, (old, old))
     try:
-        ext._app_scoped_roundtrip_dir(
+        catalog.app_scoped_dir(
             spark, "race_pin", "/root/testdata/sf0.001"
         )
         assert os.path.exists(other_family), (
@@ -203,7 +198,7 @@ def test_stale_sibling_sweep_is_family_exact(spark):
         )
         # ... and the helper no longer GENERATES such names: axis
         # tags are sanitized so their own debris stays sweepable
-        p = ext._app_scoped_roundtrip_dir(spark, "race_pin", "/tmp/sf_nan")
+        p = catalog.app_scoped_dir(spark, "race_pin", "/tmp/sf_nan")
         assert "sf-nan" in os.path.basename(p) and "sf_nan" not in os.path.basename(p)
     finally:
         import shutil

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQueryListener
 
-from hive_release_spark.catalog import load_table
+from hive_release_spark.catalog import app_scoped_dir, load_table
 from hive_release_spark.functions.temporal import ts_valid
 from hive_release_spark.streaming import pipelines as P
 from tests.conftest import SF_ORACLE, SF_SMOKE, _jobs
@@ -259,10 +259,8 @@ def test_stream_stream_full_join_closed_region_parity(spark):
     assert any(r[1] is None for r in s)  # clicks that never converted
 
 
-def _replay_files(sf_dir):
-    base = os.path.join(
-        "spark-warehouse", f"latedrop_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+def _replay_files(spark, sf_dir):
+    base = app_scoped_dir(spark, "latedrop", sf_dir)
     return {
         name: os.path.join(base, "data", f"{name}.parquet")
         for name in ("1-ontime", "2-tick", "3-late")
@@ -289,7 +287,7 @@ def test_late_drop_replay_drops_every_late_row_by_watermark(spark):
     # manually because run_available_now stops the query before its
     # progress metrics can be read
     P.late_drop_replay(spark, SF_SMOKE)
-    late_file = _replay_files(SF_SMOKE)["3-late"]
+    late_file = _replay_files(spark, SF_SMOKE)["3-late"]
     data_dir = os.path.dirname(late_file)
     n_late_windows = (
         spark.read.parquet(late_file)
@@ -355,7 +353,7 @@ def test_late_drop_replay_stages_each_batch_row_for_row(spark, sf_dir):
         "2-tick": events.filter(F.col("ts") >= F.lit(tick)),
         "3-late": events.filter(F.col("ts") < F.lit(split)),
     }
-    for name, path in _replay_files(sf_dir).items():
+    for name, path in _replay_files(spark, sf_dir).items():
         got = spark.read.parquet(path)
         assert got.schema == events.schema, (name, got.schema)
         assert got.count() == want[name].count() > 0, name
@@ -369,11 +367,35 @@ def test_late_drop_replay_writes_empty_late_batch(spark):
     with 0 rows and the replay still runs."""
     out = P.late_drop_replay(spark, SF_SMOKE, split="2000-01-01 00:00:00")
     assert out.count() > 0
-    files, events = _replay_files(SF_SMOKE), _replay_events(spark, SF_SMOKE)
+    files, events = _replay_files(spark, SF_SMOKE), _replay_events(spark, SF_SMOKE)
     late = spark.read.parquet(files["3-late"])
     assert late.count() == 0
     assert late.schema == events.schema
     assert spark.read.parquet(files["1-ontime"]).count() == events.count()
+
+
+def test_late_drop_replay_leaves_other_processes_files_alone(spark):
+    """The replay stages under its own application's scratch directory,
+    never under a shared fixed path: a ``latedrop_<sf>`` directory that
+    another process is reading keeps its files."""
+    other = os.path.join(
+        "spark-warehouse", f"latedrop_{os.path.basename(SF_SMOKE)}", "data"
+    )
+    os.makedirs(other, exist_ok=True)
+    marker = os.path.join(other, "1-ontime.parquet")
+    with open(marker, "w") as fh:
+        fh.write("another process's batch")
+    try:
+        P.late_drop_replay(spark, SF_SMOKE)
+        with open(marker) as fh:
+            assert fh.read() == "another process's batch"
+        assert spark.sparkContext.applicationId.replace("_", "-") in (
+            _replay_files(spark, SF_SMOKE)["1-ontime"]
+        )
+    finally:
+        import shutil
+
+        shutil.rmtree(os.path.dirname(other), ignore_errors=True)
 
 
 class _BatchCounter(StreamingQueryListener):
