@@ -548,10 +548,13 @@ def _packed_centroids_data(corpus: DataFrame, n_cells: int) -> list:
 
 def _packed_frame(spark, cents: list) -> DataFrame:
     """The ONE-row ``cents array<struct<cell:int, cv:array<double>>>``
-    frame from driver-side centroid data: a LocalRelation, so every
-    consumer's 1-row broadcast attach carries NO corpus-scan lineage,
-    and plan size stays O(1) in n_cells. Array order is irrelevant to
-    every consumer (sort by (sim, cell) structs, or by cell)."""
+    frame from driver-side centroid data, so every consumer's 1-row
+    broadcast attach carries NO corpus-scan lineage, and plan size stays
+    O(1) in n_cells. PySpark plans it as a ``LogicalRDD`` over one
+    parallelized row, not a LocalRelation; its broadcast runs one job
+    either way, so an Arrow-built LocalRelation would not save a job.
+    Array order is irrelevant to every consumer (sort by (sim, cell)
+    structs, or by cell)."""
     return spark.createDataFrame(
         [(cents,)], "cents array<struct<cell:int, cv:array<double>>>"
     )

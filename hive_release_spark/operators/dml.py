@@ -5,7 +5,7 @@ background compaction (``ql/io/AcidUtils``, ``ql/txn/compactor/CompactorMR``,
 ``parse/UpdateDeleteSemanticAnalyzer`` — SURVEY.md §2.B). Plain parquet has
 no delta mechanism, so this module provides the documented equivalent:
 **copy-on-write table rewrite** — read, apply the mutation as a relational
-rewrite, write to a staging dir, atomically swap. This is exactly what
+rewrite, write to a staging dir, swap it in by renames. This is exactly what
 lakehouse formats do per-file; here the granularity is the table (or the
 partition, via ``partition_filter``), which is the honest plain-parquet
 contract. The partitions a scoped statement touches are chosen on
@@ -14,16 +14,34 @@ partition specs: the filter runs over the directory listing, never over
 the partitions' rows.
 
 Semantics guarantees:
-- readers see either the old or the new table (directory swap), never a mix;
-- concurrent writers are DETECTED, not serialized: the rewrite
-  fingerprints the table's file listing when it reads and re-checks it
+- one commit path, :func:`_commit`, serves UPDATE, DELETE, MERGE and the
+  SCD-2 fold. It writes the new rows with the table's partition columns
+  (the caller's ``partition_cols``, else the ``col=value`` levels of the
+  table's files), so a full-table statement keeps a partitioned table
+  partitioned. Its units are the table directory, or the partitions a
+  ``partition_filter`` scopes the statement to. A partitioned table the
+  statement leaves with no row keeps one empty file with its data
+  schema in its first partition, since Spark writes no file for an empty
+  partitioned output and a table without one cannot be read;
+- each unit is swapped by two renames: the old directory goes aside under
+  ``{path}.__old_<hex>/``, then the staged one takes its place. Old files
+  are deleted only after every unit is in place. Between a unit's two
+  renames a reader finds it absent: the table path does not exist, or
+  the partition reads as holding no rows. A scoped statement swaps its
+  partitions one after another, so a reader listing during the swap may
+  see some partitions new and others old;
+- concurrent writers are DETECTED, not serialized: the commit
+  fingerprints its units' file listings when it reads and re-checks them
   after the staged write — a conflicting commit in between raises
   ``ConcurrentWriteError`` and leaves the winner's table intact
   (optimistic first-writer-wins; Hive serialized with ZK/DB locks —
   out of scope, SURVEY.md §2.J — and a residual check-to-rename race
   window remains, as in any lockless design);
-- a failed staged write removes its staging directory and leaves the
-  table unchanged;
+- a failed commit leaves the table unchanged: a failed staged write or
+  guard removes its staging directory, and a rename that fails during
+  the swap moves every unit already set aside back into place, removes
+  the directories the swap made for new partitions, and discards the
+  staged write;
 - MERGE raises when two source rows share a join key, NULL keys grouped
   together as ``groupBy`` groups them, whether or not a target row
   matches them. This is stricter than Hive's ``cardinality_violation()``,
@@ -43,21 +61,19 @@ observation then holds no row, and the guard computes the same flags
 with one aggregate. Trade-off: an empty source costs one discarded
 staged write, not one aggregate; the table stays byte-identical.
 
-Every commit hands the new table's schema to the catalog
+A commit hands the new table's schema to the catalog
 (:func:`catalog.record`), as Hive's ``MoveTask`` records it in the
 metastore, so the next statement's read launches no schema-inference job.
-The schema is recorded under the listing version the commit itself
-produced, never under a listing taken after the swap, so a concurrent
-writer's commit cannot inherit it:
-- a full rewrite records the written frame's schema under the staged
-  directory's listing, taken before the rename (a rename keeps every
-  file's size and mtime);
-- a partition-scoped rewrite *predicts* the version: the listing it read,
-  minus the entries under the rewritten partitions, plus the staged
-  entries under them. It carries the schema it read to that version only
-  if no partition was created, none was emptied, and the written frame's
-  non-partition columns have the read schema's names and types in the
-  same order; otherwise it records nothing and the next read infers.
+The schema is the one a fresh read would infer, recorded under the
+listing version the commit itself produced, never under a listing taken
+after the swap, so a concurrent writer's commit cannot inherit it. That
+version is the listing it read, minus the entries under its units, plus
+the staged entries under them (a rename keeps every file's size and
+mtime); for a full-table statement it is the staged listing. It is
+recorded only if no partition was created or emptied and, when files
+outside the units survive, the written data columns have the read
+schema's names and types in the same order; otherwise the next read
+infers.
 """
 
 from __future__ import annotations
@@ -70,6 +86,7 @@ import uuid
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, DataFrameWriter, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from hive_release_spark import catalog
 
@@ -84,65 +101,61 @@ class ConcurrentWriteError(RuntimeError):
 def _write_staged(writer: DataFrameWriter, path: str, guard=None) -> str | None:
     """Write to a fresh staging sibling of ``path`` and return it.
 
-    ``guard``, if given, runs after the write: it raises to abort the
-    statement, or returns False to discard the write (None is returned).
-    A failed write or guard removes the staging directory before the
-    error propagates."""
+    ``guard``, if given, runs after the write on the staging directory:
+    it raises to abort the statement, or returns False to discard the
+    write (None is returned). A failed write or guard removes the staging
+    directory before the error propagates."""
     staged = f"{path}.__staged_{uuid.uuid4().hex[:8]}"
+    keep = False
     try:
         writer.mode("overwrite").parquet(staged)
-        if guard is None or guard():
-            return staged
-    except BaseException:
-        shutil.rmtree(staged, ignore_errors=True)
-        raise
-    shutil.rmtree(staged, ignore_errors=True)
-    return None
+        keep = guard is None or guard(staged)
+    finally:
+        if not keep:
+            shutil.rmtree(staged, ignore_errors=True)
+    return staged if keep else None
 
 
-def _rewrite(spark: SparkSession, path: str, transform, guard=None) -> None:
-    """Read → transform → staged write → guard → conflict check →
-    directory swap."""
-    token = catalog.listing_version(path)
-    out = transform(catalog.read_parquet(spark, path, token))
-    staged = _write_staged(out.write, path, guard)
-    if staged is None:
-        return
-    written = catalog.listing_version(staged)
-    if catalog.listing_version(path) != token:
-        shutil.rmtree(staged, ignore_errors=True)
-        raise ConcurrentWriteError(
-            f"table {path} changed during rewrite; retry against the new version"
+def _at(root: str, unit: str) -> str:
+    """The directory of ``unit`` under ``root``; the unit "" is ``root``."""
+    return os.path.join(root, unit) if unit else root
+
+
+def _under(listing: tuple, unit: str) -> tuple:
+    """The entries of ``listing`` below ``unit``, relative to it."""
+    prefix = os.path.join(unit, "")
+    return tuple((r[len(prefix) :], s, m) for r, s, m in listing if r.startswith(prefix))
+
+
+def _data_dirs(listing) -> set[str]:
+    """Directories (relative, "" for the root) holding the data files of
+    ``listing``. Names a reader skips, ``_SUCCESS``, ``.crc`` files and
+    staging directories, hold no data; a ``_col=value`` partition does."""
+    hidden = lambda n: n.startswith(".") or (n.startswith("_") and "=" not in n)  # noqa: E731
+    return {
+        os.path.dirname(rel)
+        for rel, _size, _mtime in listing
+        if not any(hidden(name) for name in rel.split(os.sep))
+    }
+
+
+def _partition_cols(path: str, listing: tuple, partition_cols: list[str] | None) -> list[str]:
+    """The partition columns of the table at ``path``: the ``col=value``
+    directory levels its data files sit under in ``listing``, as Hive's
+    ``MoveTask`` reads them from the metastore. ``partition_cols`` is
+    used for a table without data files and must match any other."""
+    layouts = {
+        tuple(level.split("=", 1)[0] for level in d.split(os.sep)) if d else ()
+        for d in _data_dirs(listing)
+    }
+    if len(layouts) > 1:
+        raise ValueError(f"table {path} mixes partition layouts {sorted(layouts)}")
+    cols = list(layouts.pop() if layouts else partition_cols or ())
+    if partition_cols is not None and list(partition_cols) != cols:
+        raise ValueError(
+            f"partition_cols {partition_cols} disagree with table {path}, partitioned by {cols}"
         )
-    old = f"{path}.__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(staged, path)
-    shutil.rmtree(old)
-    catalog.record(spark, path, written, out.schema)
-
-
-def _staged_partition_rels(staged: str, partition_cols: list[str]) -> list[str]:
-    """Relative ``col=value[/col=value...]`` paths actually present in a
-    staged partitioned write (leaf partition directories only)."""
-    rels: list[str] = []
-
-    def walk(d: str, depth: int, rel: str) -> None:
-        if depth == len(partition_cols):
-            rels.append(rel)
-            return
-        prefix = partition_cols[depth] + "="
-        for name in sorted(os.listdir(d)):
-            p = os.path.join(d, name)
-            if os.path.isdir(p) and name.startswith(prefix):
-                walk(p, depth + 1, os.path.join(rel, name) if rel else name)
-
-    walk(staged, 0, "")
-    return rels
-
-
-def _data_columns(schema, partition_cols: list[str]) -> list[tuple]:
-    """(name, type) of the non-partition columns, in order."""
-    return [(f.name, f.dataType) for f in schema.fields if f.name not in partition_cols]
+    return cols
 
 
 def _unescape_path_name(name: str) -> str:
@@ -154,111 +167,165 @@ def _unescape_path_name(name: str) -> str:
 def _matching_partitions(
     spark: SparkSession,
     df: DataFrame,
-    path: str,
+    listing: tuple,
     partition_filter: Column,
     partition_cols: list[str],
 ) -> list[str]:
-    """Relative ``col=value[/...]`` directories of ``path`` whose partition
-    values satisfy ``partition_filter``, exactly as they appear on disk.
+    """Relative ``col=value[/...]`` directories of the table ``listing``
+    lists whose partition values satisfy ``partition_filter``, exactly as
+    they appear on disk.
 
     Pruning runs on metadata, as Hive's ``PartitionPruner`` evaluates the
-    predicate against partition specs: the leaf directories are listed,
-    their values decoded (``__HIVE_DEFAULT_PARTITION__`` is NULL) and cast
-    to the table's partition types, and the filter is applied to that
-    in-memory local frame. No data is read and no Spark job runs."""
-    rels = _staged_partition_rels(path, partition_cols)
+    predicate against partition specs: the listing's partition
+    directories are taken, their values decoded
+    (``__HIVE_DEFAULT_PARTITION__`` is NULL) and cast to the table's
+    partition types, and the filter is applied to that in-memory local
+    frame. No data is read and no Spark job runs."""
+    rels = sorted(_data_dirs(listing))
     values: dict[str, list[str | None]] = {c: [] for c in partition_cols}
     for rel in rels:
         for c, part in zip(partition_cols, rel.split(os.sep)):
             v = part[len(c) + 1 :]
             values[c].append(None if v == _DEFAULT_PARTITION else _unescape_path_name(v))
-    listing = spark.createDataFrame(
+    frame = spark.createDataFrame(
         pa.table({**{c: pa.array(v, pa.string()) for c, v in values.items()}, "__rel": rels})
     )
-    typed = listing.select(
+    typed = frame.select(
         *(F.col(c).cast(df.schema[c].dataType).alias(c) for c in partition_cols), "__rel"
     )
     return [r["__rel"] for r in typed.filter(partition_filter).select("__rel").collect()]
 
 
-def _rewrite_partitions(
+def _move(src: str, dst: str) -> None:
+    os.makedirs(os.path.dirname(dst) or os.curdir, exist_ok=True)
+    os.rename(src, dst)
+
+
+def _prune(root: str, rel: str) -> None:
+    """Remove the directory ``rel`` under ``root`` and each parent below
+    ``root`` while it is empty, as :func:`_move` may have made them."""
+    while rel and os.path.isdir(_at(root, rel)) and not os.listdir(_at(root, rel)):
+        os.rmdir(_at(root, rel))
+        rel = os.path.dirname(rel)
+
+
+def _commit(
     spark: SparkSession,
     path: str,
     transform,
-    partition_filter: Column,
-    partition_cols: list[str],
+    partition_filter: Column | None = None,
+    partition_cols: list[str] | None = None,
     guard=None,
+    assigned=(),
+    source_cols=None,
 ) -> None:
-    """Partition-scoped copy-on-write (SCALE.md cliff #4): only partitions
-    matching ``partition_filter`` are read, rewritten, and swapped; every
-    other partition directory is untouched (identical files and mtimes).
+    """The copy-on-write commit of every statement (module docstring):
+    read → transform → staged write → guard → conflict check → swap.
 
-    The affected partitions come from metadata, the directory listing
-    (:func:`_matching_partitions`), never from a scan of their rows, and
-    Catalyst prunes the rewrite's scan to the same partitions, so at
-    100 TB a DELETE on one day lists the table's directories and reads
-    one day's files.
-
-    The transform may also EMIT rows in partitions the target had no rows
-    for (MERGE inserts into a fresh day): those staged directories are
-    renamed in as new partitions, with a commit-time existence check so a
-    concurrent writer creating the same partition is a detected conflict,
-    not a silent replace."""
+    The units it rewrites and swaps are the table directory, or, with
+    ``partition_filter``, the partition directories the filter matches
+    (SCALE.md cliff #4) plus those the transform creates (a MERGE that
+    inserts into a new day). The matched partitions come from the
+    listing, never from a scan of their rows, and Catalyst prunes the
+    read to them, so at 100 TB a DELETE on one day lists the table and
+    reads one day's files; other partitions keep their files and mtimes.
+    ``assigned`` names the columns the statement sets: a scoped statement
+    that sets a partition column would move rows out of its units.
+    ``source_cols``, a MERGE's source columns, must hold every partition
+    column of a scoped statement, else its inserts land in a NULL
+    partition outside the scope."""
     version = catalog.listing_version(path)
+    cols = _partition_cols(path, version, partition_cols)
+    scoped = partition_filter is not None
+    if scoped:
+        if not cols:
+            raise ValueError(f"partition_filter needs a partitioned table; {path} is not")
+        moved = set(assigned) & set(cols)
+        if moved:
+            raise ValueError(
+                f"partition-scoped statement cannot reassign partition columns {sorted(moved)}; "
+                "run it on the full table (partition_filter=None)"
+            )
+        missing = [c for c in cols if source_cols is not None and c not in source_cols]
+        if missing:
+            raise ValueError(f"partition-scoped MERGE source lacks partition columns {missing}")
     df = catalog.read_parquet(spark, path, version)
-    rels = _matching_partitions(spark, df, path, partition_filter, partition_cols)
-    # conflict detection is scoped to the AFFECTED partitions — a
-    # concurrent writer in a different partition is not a conflict
-    token = tuple(
-        catalog.listing_version(d) if os.path.exists(d) else None
-        for d in (os.path.join(path, rel) for rel in rels)
-    )
-    out = transform(df.filter(partition_filter))
-    staged = _write_staged(out.write.partitionBy(*partition_cols), path, guard)
+    units = _matching_partitions(spark, df, version, partition_filter, cols) if scoped else [""]
+    out = transform(df.filter(partition_filter) if scoped else df)
+    prefixes = tuple(os.path.join(u, "") for u in units)
+    kept = [e for e in version if not e[0].startswith(prefixes)]
+    data = [f for f in out.schema.fields if f.name not in cols]
+
+    def finish(staged: str) -> bool:
+        keep = guard is None or guard()
+        if keep and cols and not _data_dirs(kept + list(catalog.listing_version(staged))):
+            # Spark writes no file for an empty partitioned output; a table
+            # left with no row keeps one empty file with its data schema
+            # in its first partition, so it stays readable and partitioned
+            empty = spark.createDataFrame([], StructType(data))
+            empty.write.parquet(os.path.join(staged, min(_data_dirs(version))))
+        return keep
+
+    staged = _write_staged(out.write.partitionBy(*cols), path, finish)
     if staged is None:
         return
-    staged_rels = _staged_partition_rels(staged, partition_cols)
-    new_rels = [r for r in staged_rels if r not in set(rels)]
-    recheck = tuple(
-        catalog.listing_version(d) if os.path.exists(d) else None
-        for d in (os.path.join(path, rel) for rel in rels)
+    written = catalog.listing_version(staged)
+    # a partition the staged write created is one more unit, which must
+    # not exist at the swap: a concurrent writer creating it is a conflict
+    created = sorted(
+        d for d in _data_dirs(written) if not os.path.join(d, "").startswith(prefixes)
     )
-    if recheck != token or any(
-        os.path.exists(os.path.join(path, rel)) for rel in new_rels
-    ):
+    token = [_under(version, u) for u in units] + [None] * len(created)
+    units += created
+    if token != [
+        catalog.listing_version(d) if os.path.isdir(d) else None
+        for d in (_at(path, u) for u in units)
+    ]:
         shutil.rmtree(staged, ignore_errors=True)
         raise ConcurrentWriteError(
-            f"affected partitions of {path} changed during rewrite; retry"
+            f"table {path} changed during rewrite; retry against the new version"
         )
-    # the read schema still describes the table if the partition set and
-    # the written files' columns are unchanged (see the module docstring)
-    carry = set(staged_rels) == set(rels) and _data_columns(
-        out.schema, partition_cols
-    ) == _data_columns(df.schema, partition_cols)
-    if carry:
-        scoped = tuple(rel + os.sep for rel in rels)
-        predicted = tuple(sorted(
-            [e for e in version if not e[0].startswith(scoped)]
-            + [
-                (os.path.join(rel, name), size, mtime)
-                for rel in rels
-                for name, size, mtime in catalog.listing_version(os.path.join(staged, rel))
-            ]
-        ))
+    produced = tuple(sorted(kept + [
+        (os.path.join(u, rel), size, mtime)
+        for u in units
+        for rel, size, mtime in _under(written, u)
+    ]))
+    # a fresh read takes the data columns from one file and types the
+    # partition columns from the directory names: the written columns
+    # describe the table if no partition was created or emptied, and
+    # either no old file survives or the columns are the read ones
+    record = _data_dirs(produced) == _data_dirs(version) and (
+        not _data_dirs(kept)
+        or [(f.name, f.dataType) for f in data]
+        == [(f.name, f.dataType) for f in df.schema.fields if f.name not in cols]
+    )
+
+    old = f"{path}.__old_{uuid.uuid4().hex[:8]}"
+    aside, placed = [], []
     try:
-        for rel in rels + new_rels:
-            old_dir = os.path.join(path, rel)
-            new_dir = os.path.join(staged, rel)
-            if os.path.exists(old_dir):
-                shutil.rmtree(old_dir)
-            if os.path.exists(new_dir):
-                # absent when the rewrite emptied the partition (full delete)
-                os.makedirs(os.path.dirname(old_dir), exist_ok=True)
-                os.rename(new_dir, old_dir)
-    finally:
+        for u in units:
+            if os.path.exists(_at(path, u)):
+                _move(_at(path, u), _at(old, u))
+                aside.append(u)
+            if os.path.exists(_at(staged, u)):  # absent when the statement emptied it
+                _move(_at(staged, u), _at(path, u))
+                placed.append(u)
+    except BaseException:
+        # no finally: if a rename back fails, its old unit stays under
+        # ``old`` for recovery instead of being deleted with it
+        for u in reversed(placed):
+            shutil.rmtree(_at(path, u))
+        for u in reversed(aside):
+            _move(_at(old, u), _at(path, u))
+        for u in units:  # parents the swap made for a created unit
+            _prune(path, os.path.dirname(u))
         shutil.rmtree(staged, ignore_errors=True)
-    if carry:
-        catalog.record(spark, path, predicted, df.schema)
+        shutil.rmtree(old, ignore_errors=True)
+        raise
+    shutil.rmtree(staged, ignore_errors=True)
+    shutil.rmtree(old, ignore_errors=True)
+    if record:
+        catalog.record(spark, path, produced, StructType(data + [df.schema[c] for c in cols]))
 
 
 def update_table(
@@ -271,30 +338,17 @@ def update_table(
 ) -> None:
     """UPDATE t SET col = expr, ... WHERE cond.
 
-    With ``partition_filter`` (a predicate over ``partition_cols`` only),
-    the copy-on-write rewrite is scoped to the matching partitions; rows in
-    other partitions are untouched without being read or rewritten."""
+    With ``partition_filter`` (a predicate over the table's partition
+    columns only), the copy-on-write rewrite is scoped to the matching
+    partitions; rows in other partitions are untouched without being read
+    or rewritten. ``partition_cols``, if given, must be the table's."""
 
     def tr(df: DataFrame) -> DataFrame:
         for col, expr in assignments.items():
             df = df.withColumn(col, F.when(where, expr).otherwise(F.col(col)))
         return df
 
-    if partition_filter is not None:
-        if not partition_cols:
-            raise ValueError("partition_filter requires partition_cols")
-        moved = set(assignments) & set(partition_cols)
-        if moved:
-            # reassigning a partition column moves rows into partitions the
-            # scoped rewrite may not own — a full-table rewrite is the
-            # correct (and honest) path for that
-            raise ValueError(
-                f"partition-scoped UPDATE cannot reassign partition columns {sorted(moved)}; "
-                "use a full-table update_table(partition_filter=None)"
-            )
-        _rewrite_partitions(spark, path, tr, partition_filter, partition_cols)
-    else:
-        _rewrite(spark, path, tr)
+    _commit(spark, path, tr, partition_filter, partition_cols, assigned=assignments)
 
 
 def delete_from(
@@ -307,12 +361,7 @@ def delete_from(
     """DELETE FROM t WHERE cond (partition-scoped when ``partition_filter``
     is given — see :func:`update_table`)."""
     tr = lambda df: df.filter(~where | where.isNull())  # noqa: E731
-    if partition_filter is not None:
-        if not partition_cols:
-            raise ValueError("partition_filter requires partition_cols")
-        _rewrite_partitions(spark, path, tr, partition_filter, partition_cols)
-    else:
-        _rewrite(spark, path, tr)
+    _commit(spark, path, tr, partition_filter, partition_cols)
 
 
 def merge_into(
@@ -348,33 +397,14 @@ def merge_into(
     data column that is NULL on a matched row must not flip the row into the
     insert branch (silent corruption otherwise).
 
-    With ``partition_filter`` (a predicate over ``partition_cols``, which
-    every source row must satisfy — enforced), the copy-on-write rewrite is
+    With ``partition_filter`` (a predicate over the partition columns,
+    which every source row must satisfy — enforced), the copy-on-write rewrite is
     scoped to the matching partitions: a 100 TB MERGE of one day's CDC batch
     reads and rewrites one day, not the table. Inserts landing in partitions
     the target has no rows for become new partition directories; partitions
     outside the filter keep identical files and mtimes.
     """
     src_cols = source.columns
-    if partition_filter is not None:
-        if not partition_cols:
-            raise ValueError("partition_filter requires partition_cols")
-        missing = [c for c in partition_cols if c not in src_cols]
-        if missing:
-            raise ValueError(
-                f"partition-scoped MERGE source lacks partition columns {missing}"
-            )
-        moved = set(matched_update or {}) & set(partition_cols)
-        if moved:
-            # same rule as partition-scoped UPDATE: reassigning a partition
-            # column moves rows into partitions the scoped rewrite may not
-            # own — and if the destination partition exists, the commit's
-            # ConcurrentWriteError("retry") could never be cleared by a retry
-            raise ValueError(
-                f"partition-scoped MERGE cannot reassign partition columns {sorted(moved)}; "
-                "use a full-table merge_into(partition_filter=None)"
-            )
-
     sentinels = ("__tgt_m", "__src_m")
     for sentinel in sentinels:
         if sentinel in src_cols:
@@ -389,16 +419,12 @@ def merge_into(
     # source column collides with it), holds the key's row count, its
     # out-of-scope flag and its other source columns. It is non-NULL on
     # every source-side row of the join, so it is also the matched marker.
-    out_of_scope = (
-        F.lit(False)
-        if partition_filter is None
-        else ~F.coalesce(partition_filter, F.lit(False))
-    )
+    in_scope = F.lit(True) if partition_filter is None else partition_filter
     rest = [c for c in src_cols if c not in on]
     grouped = source.groupBy(*on).agg(
         F.struct(
             F.count(F.lit(1)).alias("n"),
-            F.max(out_of_scope).alias("stray"),
+            F.max(~F.coalesce(in_scope, F.lit(False))).alias("stray"),
             *([F.first(F.struct(*rest)).alias("row")] if rest else []),
         ).alias("__src_m")
     )
@@ -473,17 +499,16 @@ def merge_into(
             out_cols.append(col.alias(c))
         return joined.select(*out_cols)
 
-    if partition_filter is not None:
-        _rewrite_partitions(
-            spark, target_path, tr, partition_filter, partition_cols, guard
-        )
-    else:
-        _rewrite(spark, target_path, tr, guard)
+    _commit(
+        spark, target_path, tr, partition_filter, partition_cols, guard,
+        assigned=matched_update or (), source_cols=src_cols,
+    )
 
 
 def insert_into(spark: SparkSession, path: str, rows: DataFrame) -> None:
-    """INSERT INTO t (append)."""
-    rows.write.mode("append").parquet(path)
+    """INSERT INTO t (append), into the table's partition directories."""
+    cols = _partition_cols(path, catalog.listing_version(path), None)
+    rows.write.mode("append").partitionBy(*cols).parquet(path)
 
 
 def multi_insert(df: DataFrame, sinks: list[tuple[str, object]]) -> None:

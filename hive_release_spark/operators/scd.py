@@ -14,9 +14,9 @@ collapse + lead over the collapsed frame — see the query's docstring);
 ``scd2_apply`` touches target rows for CHANGED keys only via one
 semi/anti join pair on the key, so a steady-state CDC tick costs
 O(batch + affected history), never a full-dimension rebuild. The
-commit is the unpartitioned copy-on-write of the DML layer
-(``dml._rewrite``): the folded table is written to a staging directory
-and swapped in atomically, with concurrent-writer detection. The read
+commit is the DML layer's copy-on-write commit (``dml._commit``) over
+the whole table: the folded table is written to a staging directory and
+renamed into place, with concurrent-writer detection. The read
 and the write never share a directory, so nothing is checkpointed, and
 a failed write leaves the previous dimension intact. The first write and
 every fold record the table's schema in the catalog, so the next fold
@@ -115,4 +115,4 @@ def scd2_apply(
         rebuilt = scd2_history(prior.unionByName(incoming), key, state, ts)
         return untouched.unionByName(rebuilt)
 
-    dml._rewrite(spark, path, fold)
+    dml._commit(spark, path, fold)

@@ -270,7 +270,7 @@ def test_concurrent_write_detected(spark, table):
         return df.filter(F.col("id") != 1)
 
     with pytest.raises(dml.ConcurrentWriteError):
-        dml._rewrite(spark, table, conflicting_transform)
+        dml._commit(spark, table, conflicting_transform)
     ids = sorted(r.id for r in spark.read.parquet(table).collect())
     assert ids == [1, 2, 3, 4, 99]  # loser's delete NOT applied; winner kept
 
@@ -298,7 +298,7 @@ def test_partition_conflict_scoped_to_affected(spark, tmp_path):
         os.utime(p2_file)
         return df.filter(F.col("id") != 1)
 
-    dml._rewrite_partitions(
+    dml._commit(
         spark,
         path,
         transform_touching_other_partition,
@@ -516,7 +516,7 @@ def test_partition_matching_reads_no_data(spark, escaped_table):
     path, t1, _t2 = escaped_table
     df = spark.read.parquet(path)
     got, jobs = _jobs(spark, lambda: dml._matching_partitions(
-        spark, df, path,
+        spark, df, catalog.listing_version(path),
         F.col("k").isNull() | ((F.col("k") == "a:1") & (F.col("t") == F.lit(t1))),
         ["k", "t"],
     ))
@@ -793,6 +793,217 @@ def test_failed_staged_write_leaves_no_staging_dir(spark, tmp_path, scoped):
     assert {r.id: r.val for r in spark.read.parquet(path).collect()} == {1: 11.0, 2: 20.0}
 
 
+def _years(spark, tmp_path):
+    """A table partitioned ``y=2020`` / ``y=2021``, two rows in each."""
+    path = str(tmp_path / "years")
+    spark.createDataFrame(
+        [(1, 2020, 10.0), (2, 2020, 20.0), (3, 2021, 30.0), (4, 2021, 40.0)],
+        "id BIGINT, y INT, val DOUBLE",
+    ).write.partitionBy("y").parquet(path)
+    return path
+
+
+def _data_files(path):
+    """Data files of ``path``, relative to it."""
+    return sorted(f for f in _files(path) if f.endswith(".parquet"))
+
+
+_FULL_TABLE = {
+    "update": (
+        lambda spark, path: dml.update_table(spark, path, {"val": F.lit(0.0)}, F.col("id") == 1),
+        {1: 0.0, 2: 20.0, 3: 30.0, 4: 40.0},
+    ),
+    "delete": (
+        lambda spark, path: dml.delete_from(spark, path, F.col("id") == 1),
+        {2: 20.0, 3: 30.0, 4: 40.0},
+    ),
+    "merge": (
+        lambda spark, path: dml.merge_into(
+            spark, path,
+            spark.createDataFrame(
+                [(1, 2020, 0.0), (5, 2021, 50.0)], "id BIGINT, y INT, val DOUBLE"
+            ),
+            on=["id"], matched_update={"val": F.col("src.val")},
+        ),
+        {1: 0.0, 2: 20.0, 3: 30.0, 4: 40.0, 5: 50.0},
+    ),
+}
+
+
+@pytest.mark.parametrize("statement", sorted(_FULL_TABLE))
+def test_full_table_statement_keeps_partitions(spark, tmp_path, statement):
+    """A statement without ``partition_filter`` writes the table's
+    partition columns: the ``y=`` directories stay, no data file lands
+    flat in the table directory, and a later scoped statement sees every
+    row."""
+    path = _years(spark, tmp_path)
+    run, want = _FULL_TABLE[statement]
+    run(spark, path)
+    files = _data_files(path)
+    assert files and all(f.startswith(("y=2020/", "y=2021/")) for f in files)
+    assert {r.id: r.val for r in spark.read.parquet(path).collect()} == want
+    dml.update_table(
+        spark, path, {"val": F.col("val") + 1}, F.col("id") == 3,
+        partition_filter=F.col("y") == 2021, partition_cols=["y"],
+    )
+    got = {r.id: (r.y, r.val) for r in spark.read.parquet(path).collect()}
+    assert {i: v for i, (_y, v) in got.items()} == {**want, 3: 31.0}
+    assert all(y == (2020 if i <= 2 else 2021) for i, (y, _v) in got.items())
+
+
+def _tree(path):
+    """Every directory and data file under ``path``, relative to it."""
+    import os
+
+    return sorted(
+        os.path.relpath(os.path.join(root, n), path)
+        for root, dirs, files in os.walk(path)
+        for n in dirs + files
+    ), _files(path)
+
+
+def _swap_case(spark, tmp_path, case):
+    """The table and the statement of a swap-failure case, and the
+    staged rename that fails: a full-table UPDATE on its first unit; a
+    scoped UPDATE on its second partition, after the first is in place;
+    a scoped MERGE into a table partitioned by ``a``/``b`` on its second
+    new partition ``a=3/b=1``, after ``a=1/b=3`` is in place, both under
+    ``a=`` directories the table lacked."""
+    if case == "created":
+        path = str(tmp_path / "ab")
+        spark.createDataFrame(
+            [(1, 2, 1, 10.0), (2, 2, 2, 20.0)], "id BIGINT, a INT, b INT, val DOUBLE"
+        ).write.partitionBy("a", "b").parquet(path)
+        source = spark.createDataFrame(
+            [(1, 2, 1, 11.0), (7, 1, 3, 70.0), (8, 3, 1, 80.0)],
+            "id BIGINT, a INT, b INT, val DOUBLE",
+        )
+        run = lambda: dml.merge_into(  # noqa: E731
+            spark, path, source, on=["id"], matched_update={"val": F.col("src.val")},
+            partition_filter=F.col("a").isin(1, 2, 3),
+        )
+        return path, run, 4
+    path = _partitioned(spark, str(tmp_path / "t"))
+    scope = (
+        dict(partition_filter=F.col("grp").isin("a", "b"), partition_cols=["grp"])
+        if case == "scoped" else {}
+    )
+    run = lambda: dml.update_table(  # noqa: E731
+        spark, path, {"val": F.col("val") * 2}, F.lit(True), **scope
+    )
+    return path, run, 2 if case == "scoped" else 1
+
+
+@pytest.mark.parametrize("case", ["full", "scoped", "created"])
+def test_failed_swap_rename_restores_the_table(spark, tmp_path, monkeypatch, case):
+    """A rename that fails while staged units move into place rolls the
+    swap back: a unit already placed is dropped, every unit set aside is
+    moved back, the directories made for new partitions are removed, and
+    neither the staging nor the set-aside directory remains."""
+    import os
+
+    path, run, fail_at = _swap_case(spark, tmp_path, case)
+    before, rows = _tree(path), sorted(spark.read.parquet(path).collect())
+    rename, placed = os.rename, []
+
+    def failing_rename(src, dst):
+        if ".__staged_" in str(src):
+            placed.append(src)
+            if len(placed) == fail_at:
+                raise OSError("rename failed")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    with pytest.raises(OSError, match="rename failed"):
+        run()
+    monkeypatch.setattr(os, "rename", rename)
+    assert len(placed) == fail_at
+    assert _tree(path) == before
+    assert sorted(spark.read.parquet(path).collect()) == rows
+    assert [n for n in os.listdir(tmp_path) if "__staged_" in n or "__old_" in n] == []
+
+
+@pytest.mark.parametrize("scoped", [False, True])
+def test_deleting_every_row_keeps_the_table_readable(spark, tmp_path, scoped):
+    """A DELETE that leaves a partitioned table with no row keeps one
+    empty file in its first partition: the table reads back empty with
+    its schema, through the catalog and directly, and stays partitioned,
+    so a later append lands in its ``y=`` directories."""
+    path = _years(spark, tmp_path)
+    schema = spark.read.parquet(path).schema
+    scope = dict(partition_filter=F.col("y").isin(2020, 2021)) if scoped else {}
+    dml.delete_from(spark, path, F.lit(True), **scope)
+    assert [f.split("/")[0] for f in _data_files(path)] == ["y=2020"]
+    for df in (spark.read.parquet(path), catalog.read_parquet(spark, path)):
+        assert df.schema == schema
+        assert df.count() == 0
+    dml.insert_into(
+        spark, path, spark.createDataFrame([(5, 2022, 50.0)], "id BIGINT, y INT, val DOUBLE")
+    )
+    assert all(f.startswith(("y=2020/", "y=2022/")) for f in _data_files(path))
+    assert [(r.id, r.y, r.val) for r in spark.read.parquet(path).collect()] == [(5, 2022, 50.0)]
+
+
+def test_scoped_merge_source_lacking_a_partition_column_raises(spark, tmp_path):
+    """A scoped MERGE whose source lacks one of the partition columns the
+    table's directories name raises before any job, with or without
+    ``partition_cols``: its inserts would land in a NULL partition
+    outside the scope."""
+    path = str(tmp_path / "ym")
+    spark.createDataFrame(
+        [(1, 2020, 1, 10.0)], "id BIGINT, y INT, m INT, val DOUBLE"
+    ).write.partitionBy("y", "m").parquet(path)
+    before = _files(path)
+    source = spark.createDataFrame([(2, 2020, 20.0)], "id BIGINT, y INT, val DOUBLE")
+
+    def merge():
+        with pytest.raises(ValueError, match=r"lacks partition columns \['m'\]"):
+            dml.merge_into(spark, path, source, on=["id"], partition_filter=F.col("y") == 2020)
+
+    assert _jobs(spark, merge)[1] == 0
+    assert _files(path) == before
+
+
+def test_layout_errors_raise_before_any_job(spark, tmp_path, table):
+    """``partition_cols`` that disagree with the table's directories, a
+    table whose files mix layouts, and a ``partition_filter`` on an
+    unpartitioned table all raise before the statement reads anything."""
+    path = _partitioned(spark, str(tmp_path / "p"))
+    mixed = _partitioned(spark, str(tmp_path / "mixed"))
+    spark.createDataFrame([(4, 40.0, 4)], "id BIGINT, val DOUBLE, n INT").write.mode(
+        "append"
+    ).parquet(mixed)
+    before = {p: _files(p) for p in (path, mixed, table)}
+
+    def statements():
+        with pytest.raises(ValueError, match="disagree"):
+            dml.update_table(spark, path, {"val": F.lit(0.0)}, F.lit(True), partition_cols=["n"])
+        with pytest.raises(ValueError, match="disagree"):
+            dml.delete_from(
+                spark, path, F.lit(True), partition_filter=F.col("grp") == "a", partition_cols=[]
+            )
+        with pytest.raises(ValueError, match="mixes partition layouts"):
+            dml.delete_from(spark, mixed, F.col("id") == 1)
+        with pytest.raises(ValueError, match="needs a partitioned table"):
+            dml.delete_from(spark, table, F.lit(True), partition_filter=F.col("id") == 1)
+
+    assert _jobs(spark, statements)[1] == 0
+    assert {p: _files(p) for p in before} == before
+
+
+def test_insert_into_partitioned_table_writes_its_partitions(spark, tmp_path):
+    """An append lands in the table's ``grp=`` directories, a new one for
+    a new value, never as a flat file beside them."""
+    path = _partitioned(spark, str(tmp_path / "t"))
+    rows = spark.createDataFrame(
+        [("a", 7, 70.0, 7), ("c", 8, 80.0, 8)], "grp STRING, id BIGINT, val DOUBLE, n INT"
+    )
+    dml.insert_into(spark, path, rows)
+    assert all(f.startswith(("grp=a/", "grp=b/", "grp=c/")) for f in _data_files(path))
+    got = {r.id: r.grp for r in spark.read.parquet(path).collect()}
+    assert got == {1: "a", 2: "a", 3: "b", 7: "a", 8: "c"}
+
+
 def _partitioned(spark, path):
     spark.createDataFrame(
         [("a", 1, 10.0, 1), ("a", 2, 20.0, 2), ("b", 3, 30.0, 3)],
@@ -963,7 +1174,7 @@ def test_concurrent_commit_in_other_partition_is_not_inherited(spark, tmp_path):
         _write_extra_file(os.path.join(path, "grp=a"))
         return df.withColumn("val", F.col("val") + 1)
 
-    dml._rewrite_partitions(spark, path, transform, F.col("grp") == "b", ["grp"])
+    dml._commit(spark, path, transform, F.col("grp") == "b", ["grp"])
     _reads_again_with_extra(spark, path)
 
 
