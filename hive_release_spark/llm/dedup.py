@@ -300,10 +300,12 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     and its neighbors' labels; rounds needed = graph diameter, which for
     near-dup clusters is tiny (near-dups of one source text all pair with
     each other). Each round is one shuffle join + groupBy; the label frame
-    is localCheckpoint'ed per round so lineage stays flat (at cluster
-    scale, point spark.checkpoint.dir at durable storage instead). For
-    web-diameter graphs swap in the large-star/small-star variant
-    (O(log n) rounds) — same contract.
+    is localCheckpoint'ed per round so lineage stays flat. Those blocks
+    live in executor storage until the caller's ``pipeline_scope``
+    frees them, and an executor lost mid-run loses them; at cluster
+    scale the durable variant is ``checkpoint()``, which writes to
+    ``spark.checkpoint.dir``. For web-diameter graphs swap in the
+    large-star/small-star variant (O(log n) rounds) — same contract.
 
     At most 25 rounds may change a label, so a component's diameter must
     be at most 25 (a path of 26 nodes). One more round confirms that the

@@ -229,33 +229,28 @@ def pipeline_neardedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans total is the floor for "global graph, then filter" without
     persisting 100 TB.
 
-    Cache lifetime: the pair-graph persists (shingle/prefix bases) are
-    consumed entirely by the connected-components iteration, which
-    runs its actions at CALL time and hands back a localCheckpoint'ed
-    label frame — so the whole graph phase runs inside
-    ``pipeline_scope`` (VERDICT r8 #6: first production adoption) and
-    every call-time persist is released before this function returns.
-    The returned frame references only the corpus scan and the
-    checkpointed loser set, so nothing the scope frees is recomputed
-    downstream; executor storage is empty again at return (pinned by
-    tests/test_cache_scope.py::test_neardedup_entry_is_cache_clean)."""
+    Cache lifetime: the whole pair-graph phase runs inside
+    ``pipeline_scope``, so its persists (shingle/prefix bases) and the
+    connected-components label checkpoints are freed before this
+    function returns. The loser set is eagerly checkpointed first and
+    handed off (one narrow job, no shuffle): the returned frame reads
+    only the corpus scan and that checkpoint, which the caller's scope
+    frees."""
     from hive_release_spark.llm import dedup as dedup_mod
     from hive_release_spark.llm import text as text_mod
     from hive_release_spark.operators.cache import pipeline_scope
     from hive_release_spark.operators.hints import maybe_broadcast
 
     docs = load_table(spark, sf_dir, "documents")
-    with pipeline_scope():
+    with pipeline_scope() as tracked:
         pairs = dedup_mod.jaccard_pairs(docs, n=3, threshold=0.5)
-        # connected_components iterates at call time and returns a
-        # frame rooted at its final localCheckpoint — the loser set is
-        # already severed from the pair-graph lineage the scope is
-        # about to release
         losers = (
             dedup_mod.connected_components(pairs)
             .filter(~F.col("is_survivor"))
             .select("doc_id")
+            .localCheckpoint(eager=True)
         )
+        tracked.remove(losers)
     return (
         docs.join(maybe_broadcast(losers), "doc_id", "left_anti")
         .select(
@@ -438,23 +433,13 @@ def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     skinny aggregate frames, and the final count/kept frames join on the
     tiny (lang, source) key space (broadcast).
 
-    Cache lifecycle (VERDICT r9 #5; the r10 checkpoint shape KEPT
-    after the r11 price-or-revert A/B — VERDICT r10 #3): the whole
-    chain runs inside ``pipeline_scope`` and the final
-    (lang, source)-cardinality report is EAGERLY localCheckpoint'ed
-    before the scope closes — the one action the entry ever needs runs
-    while the shared scan is still cached (both consumers hit it), and
-    executor cache is deterministically empty at return. The r11
-    adjudication (full numbers in SCALE.md): an interleaved min-of-5
-    A/B of the r9 leaky-persist shape, this shape, and a
-    collect+createDataFrame restructure measured 0.83 / 0.83 / 1.15 s
-    at sf0.1 — the checkpoint costs nothing measurable against the r9
-    shape on a controlled box (the 0.44 → 1.1 s artifact delta was
-    session state, not the checkpoint), and the LocalRelation
-    alternative is strictly worse (PySpark local relations pay a slow
-    driver-collect path). Without the eager materialization the
-    scope's exit-unpersist would make the persist useless: the
-    caller's collect would re-run the scan twice."""
+    Cache lifetime: the whole chain runs inside ``pipeline_scope`` and
+    the final (lang, source) report is EAGERLY checkpointed before the
+    scope closes, so the one job the entry needs runs while the shared
+    scan is still cached (both consumers hit it). Without that, the
+    scope's exit would make the persist useless: the caller's collect
+    would re-run the scan twice. The checkpoint is handed off to the
+    caller's scope (SCALE.md §pipeline_corpus_build)."""
     from pyspark import StorageLevel
 
     from hive_release_spark.operators.cache import pipeline_scope
@@ -466,7 +451,7 @@ def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.regexp_replace(F.lower("text"), "[^a-z0-9 ]", " "), " +", " "
         )
     )
-    with pipeline_scope():
+    with pipeline_scope() as tracked:
         feat = docs.select(
             "doc_id",
             "lang",
@@ -482,10 +467,9 @@ def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).persist(StorageLevel.MEMORY_AND_DISK)
         qual = (F.col("n_tok") >= 10) & (F.col("n_len") >= 50)
         # Survivor pick = min struct, decided ENTIRELY by a non-NULL
-        # compare prefix (r11 second hygiene pass): struct comparison
-        # orders NULL fields NULLS-FIRST in Spark but NULLS-LAST in
-        # DuckDB, so the tie-break must never consult a nullable
-        # field. cmp_id coalesces a NULL doc_id below every real id;
+        # compare prefix: struct comparison orders NULL fields
+        # NULLS-FIRST in Spark but NULLS-LAST in DuckDB, so the
+        # tie-break must never consult a nullable field. cmp_id coalesces a NULL doc_id below every real id;
         # tb hashes the attribute tuple with explicit NULL markers
         # (concat_ws would erase the NULL/''-distinction; \x01 marker
         # and \x02 separator, not NUL — DuckDB VARCHAR cannot hold a
@@ -535,12 +519,9 @@ def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("tokens_kept", F.lit(0).cast("long")).alias("tokens_kept"),
         )
         # one row per (lang, source). Eager: run the one job NOW, while
-        # feat is cached. Kept after the r11 A/B (SCALE.md
-        # §pipeline_corpus_build): interleaved min-of-5 shows this shape
-        # EQUAL to the r9 leaky-persist shape (0.83s vs 0.83s min at
-        # sf0.1), and the collect+createDataFrame alternative 0.3s WORSE
-        # (PySpark local relations pay a slow driver collect path).
+        # feat is cached
         out = bounded_sort(report, "lang", "source").localCheckpoint(eager=True)
+        tracked.remove(out)
     return out
 
 
@@ -1708,12 +1689,12 @@ def pipeline_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     base = docs.filter(F.col("doc_id") % 10 != 0)
     new_batch = docs.filter(F.col("doc_id") % 10 == 0)
-    # cache lifecycle (VERDICT r9 #5): the survivor persist serves the
-    # count action and the membership join, both INSIDE the scope; the
-    # one-row ledger is eagerly checkpointed before the scope closes so
-    # the caller's collect never re-derives the survivor frame after
-    # its cache is dropped
-    with pipeline_scope():
+    # the survivor persist serves the count action and the membership
+    # join, both INSIDE the scope; the one-row ledger is eagerly
+    # checkpointed before the scope closes, so the caller's collect
+    # never re-derives the survivor frame, and handed off to the
+    # caller's scope
+    with pipeline_scope() as tracked:
         surv = base.groupBy(F.md5("text").alias("h")).agg(
             F.min("doc_id").alias("survivor_id")
         )
@@ -1737,6 +1718,7 @@ def pipeline_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(corpus_before).cast("long").alias("corpus_before"),
             (F.lit(corpus_before) + F.sum("is_new")).alias("corpus_after"),
         ).localCheckpoint(eager=True)
+        tracked.remove(out)
     return out
 
 

@@ -53,9 +53,7 @@ def test_skew_leg_contract(spark):
     harness records parsed:null at the driver gate, so its contract is
     pinned at sf0.001 (cheap: ~400 rows per arm)."""
     from bench import skew_leg
-    from conftest import _release_dropped_blocks
 
-    _release_dropped_blocks(spark)
     conf_keys = (
         "spark.sql.autoBroadcastJoinThreshold",
         "spark.sql.adaptive.skewJoin.enabled",

@@ -1,10 +1,10 @@
-"""pipeline_scope (operators/cache.py, VERDICT r7 #5): call-time
-persists issued by registry operators are released at scope exit,
+"""pipeline_scope (operators/cache.py): call-time persists and local
+checkpoints issued by registry operators are released at scope exit,
 without touching caches created outside the scope."""
 
 from __future__ import annotations
 
-from conftest import SF_SMOKE, _release_dropped_blocks
+from conftest import SF_SMOKE
 
 from hive_release_spark.operators.cache import pipeline_scope
 
@@ -18,13 +18,11 @@ def _storage_rdd_count(spark) -> int:
 
 
 def test_scoped_run_leaves_cache_empty(spark):
-    """The VERDICT-named contract: running cache-using registry
-    entries inside the scope leaves both the CacheManager (plan
+    """Running cache-using registry entries inside the scope leaves both the CacheManager (plan
     substitution) and executor storage (memory) empty on exit."""
     from hive_release_spark.queries import REGISTRY
 
     spark.catalog.clearCache()
-    _release_dropped_blocks(spark)
     assert _cache_manager(spark).isEmpty()
 
     with pipeline_scope() as tracked:
@@ -78,7 +76,6 @@ def test_persist_methods_restored_after_exception(spark):
 
 
 def test_unpersist_inside_scope_is_fine(spark):
-    _release_dropped_blocks(spark)
     with pipeline_scope():
         df = spark.range(20).persist()
         df.count()
@@ -88,14 +85,13 @@ def test_unpersist_inside_scope_is_fine(spark):
 
 
 def test_nested_scopes_chain(spark):
-    """Nesting is SUPPORTED by chaining (ADVICE r8-4 adjudication: the
-    VERDICT r8 #6 adoption puts a scoped registry entry inside the
-    scoped bench harness, so nesting must work, not raise): an inner
+    """Nesting is SUPPORTED by chaining (a scoped registry entry runs
+    inside the scoped bench harness, so nesting must work, not raise):
+    an inner
     persist is tracked by BOTH scopes — released early at inner exit,
     re-released as a no-op at outer exit — and an outer-only persist
     survives the inner scope."""
     spark.catalog.clearCache()
-    _release_dropped_blocks(spark)
     with pipeline_scope() as outer_tracked:
         outer_df = spark.range(70).persist()
         outer_df.count()
@@ -115,12 +111,11 @@ def test_nested_scopes_chain(spark):
 
 def test_foreign_thread_persist_not_tracked(spark):
     """The scope protects ONE pipeline: a persist issued by another
-    thread during the block is not captured (ADVICE r8-4 — the old
-    behavior silently released caches the scope never owned)."""
+    thread during the block is not captured, so the scope never
+    releases a cache it does not own."""
     import threading
 
     spark.catalog.clearCache()
-    _release_dropped_blocks(spark)
     foreign: list = []
 
     def other_pipeline():
@@ -145,44 +140,84 @@ def test_foreign_thread_persist_not_tracked(spark):
     assert _storage_rdd_count(spark) == 0
 
 
-def test_neardedup_entry_is_cache_clean(spark):
-    """VERDICT r8 #6 done-criterion: the first production adopter —
-    pipeline_neardedup_corpus runs its whole pair-graph phase inside
-    pipeline_scope, so after CALLING the entry (before any caller
-    action) executor storage and the CacheManager are already empty,
-    and the returned frame still collects correctly from the
-    checkpointed loser set."""
-    from conftest import SF_SMOKE
+def test_checkpoints_are_freed_at_exit(spark):
+    """Eager and lazy local checkpoints made inside the scope hold
+    executor blocks until the scope exits, and none after."""
+    with pipeline_scope() as tracked:
+        eager = spark.range(100).localCheckpoint(eager=True)
+        lazy = spark.range(50).localCheckpoint(eager=False)
+        assert lazy.count() == 50
+        assert eager.count() == 100
+        assert len(tracked) == 2
+        assert _storage_rdd_count(spark) == 2
+    assert _storage_rdd_count(spark) == 0
 
+
+def test_handed_off_checkpoint_outlives_inner_scope(spark):
+    """A scoped block that returns a checkpoint-rooted frame removes it
+    from its list: the frame still collects after the inner scope
+    exits, and the enclosing scope frees it."""
+
+    def build():
+        with pipeline_scope() as tracked:
+            base = spark.range(30).persist()
+            out = base.filter("id % 2 = 0").localCheckpoint(eager=True)
+            tracked.remove(out)
+        return out
+
+    with pipeline_scope() as outer_tracked:
+        out = build()
+        assert any(df is out for df in outer_tracked)
+        assert _storage_rdd_count(spark) == 1
+        assert sorted(r.id for r in out.collect()) == list(range(0, 30, 2))
+    assert _storage_rdd_count(spark) == 0
+
+
+def test_connected_components_in_scope_leaves_no_blocks(spark):
+    """connected_components checkpoints its label frame every round in
+    the caller's scope; a 20-node path takes 19 rounds, and all of
+    their blocks go when the scope exits."""
+    from hive_release_spark.llm import dedup
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(19)], "doc_a BIGINT, doc_b BIGINT"
+    )
+    with pipeline_scope():
+        comps = dedup.connected_components(pairs).collect()
+        assert {r.component for r in comps} == {0}
+        assert len(comps) == 20
+    assert _storage_rdd_count(spark) == 0
+
+
+def test_neardedup_entry_is_cache_clean(spark):
+    """pipeline_neardedup_corpus runs its whole pair-graph phase inside
+    pipeline_scope, so after CALLING the entry (before any caller
+    action) the CacheManager is already empty, the returned frame
+    still collects correctly from the handed-off loser checkpoint, and
+    the enclosing scope leaves no block in executor storage."""
     from hive_release_spark.queries import REGISTRY
 
     spark.catalog.clearCache()
-    df = REGISTRY["pipeline_neardedup_corpus"].fn(spark, SF_SMOKE)
-    # the CacheManager is empty: no persisted DataFrame survives the
-    # call, so no later plan can silently substitute an
-    # InMemoryRelation.  (Raw localCheckpoint RDD blocks for the
-    # still-referenced loser frame remain in storage until the
-    # ContextCleaner drops them — those are lineage anchors, not plan-
-    # substituting caches, so they are exactly what getRDDStorageInfo
-    # may legitimately show here.)
-    assert _cache_manager(spark).isEmpty()
-    assert len(df.collect()) > 0
-    assert _cache_manager(spark).isEmpty()
+    with pipeline_scope():
+        df = REGISTRY["pipeline_neardedup_corpus"].fn(spark, SF_SMOKE)
+        # no persisted DataFrame survives the call, so no later plan
+        # can silently substitute an InMemoryRelation
+        assert _cache_manager(spark).isEmpty()
+        assert len(df.collect()) > 0
+        assert _cache_manager(spark).isEmpty()
+    assert _storage_rdd_count(spark) == 0
 
 
 def test_remaining_pipeline_entries_are_cache_clean(spark):
-    """VERDICT r9 #5 done-criterion: the two remaining composite
-    pipeline entries with call-time persists — pipeline_corpus_build
-    (shared feature-scan persist) and pipeline_incremental_dedup
-    (survivor persist + two count actions) — now run scoped with an
-    eager final checkpoint, so executor cache is empty the moment the
-    entry returns AND after the caller's collect.
-    pipeline_quality_ablation is adjudicated out: it holds no persist
-    at all (scan-side flags + one broadcast), so there is nothing for
-    a scope to release — asserted here by the same cache-empty check
-    without a scope in its kernel."""
-    from conftest import SF_SMOKE
-
+    """The two other composite pipeline entries with call-time
+    persists — pipeline_corpus_build (shared feature-scan persist) and
+    pipeline_incremental_dedup (survivor persist + two count actions)
+    — run scoped and hand off an eager final checkpoint, so executor
+    cache is empty the moment the entry returns AND after the caller's
+    collect, and the caller's scope frees the checkpoint.
+    pipeline_quality_ablation holds no persist at all (scan-side flags
+    + one broadcast), so there is nothing for a scope to release —
+    asserted here by the same checks without a scope in its kernel."""
     from hive_release_spark.queries import REGISTRY
 
     for name in (
@@ -191,7 +226,9 @@ def test_remaining_pipeline_entries_are_cache_clean(spark):
         "pipeline_quality_ablation",
     ):
         spark.catalog.clearCache()
-        df = REGISTRY[name].fn(spark, SF_SMOKE)
-        assert _cache_manager(spark).isEmpty(), f"{name} leaked a cache"
-        assert len(df.collect()) > 0, name
-        assert _cache_manager(spark).isEmpty(), f"{name} leaked post-collect"
+        with pipeline_scope():
+            df = REGISTRY[name].fn(spark, SF_SMOKE)
+            assert _cache_manager(spark).isEmpty(), f"{name} leaked a cache"
+            assert len(df.collect()) > 0, name
+            assert _cache_manager(spark).isEmpty(), f"{name} leaked post-collect"
+        assert _storage_rdd_count(spark) == 0, f"{name} left storage blocks"

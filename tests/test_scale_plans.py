@@ -349,12 +349,12 @@ def test_lm_score_reuses_persisted_bigram_base(spark):
 
 
 def test_corpus_build_returns_checkpointed_report(spark):
-    """pipeline_corpus_build (r10: pipeline_scope adoption) runs its
-    whole chain — shared feature persist feeding the yield counts AND
-    the dedup leg — INSIDE the scope and eagerly checkpoints the tiny
-    (lang, source) report, so the RETURNED plan is a checkpoint scan
-    with zero exchanges (the shuffles ran at call time while the base
-    was cached) and no cache survives the call. The scan-once reuse
+    """pipeline_corpus_build runs its whole chain — shared feature
+    persist feeding the yield counts AND the dedup leg — INSIDE the
+    scope and eagerly checkpoints the tiny (lang, source) report, so
+    the RETURNED plan is a checkpoint scan with zero exchanges (the
+    shuffles ran at call time while the base was cached) and no cache
+    survives the call. The scan-once reuse
     itself is pinned by the cache-scope test
     (test_cache_scope.py::test_remaining_pipeline_entries_are_cache_clean)
     plus this checkpoint-root assertion: a plan that re-derived the
@@ -367,9 +367,6 @@ def test_corpus_build_returns_checkpointed_report(spark):
     assert "Scan ExistingRDD" in plan, plan
     assert "Exchange" not in plan, plan
     assert "FileScan" not in plan, plan
-    # free the checkpoint's blocks now, not at the JVM's next collection:
-    # later tests (test_scd2) assert that executor storage holds no block
-    df._jdf.queryExecution().analyzed().rdd().unpersist(True)
 
 
 def test_range_join_bucketed_equals_naive_theta(spark):

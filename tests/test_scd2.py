@@ -11,7 +11,7 @@ from datetime import datetime
 from pyspark.sql import functions as F  # noqa: F401
 
 from hive_release_spark.operators.scd import scd2_apply, scd2_history
-from tests.conftest import _executed_shuffle_stages, _jobs, _release_dropped_blocks
+from tests.conftest import _executed_shuffle_stages, _jobs
 
 
 def _t(d):
@@ -117,7 +117,6 @@ def test_scd2_streaming_cdc_equals_batch_rebuild(spark, tmp_path):
 def test_scd2_apply_leaves_no_storage_blocks(spark, tmp_path):
     """The incremental apply commits through a staged swap: once it
     returns, no cached or checkpointed block is left in storage."""
-    _release_dropped_blocks(spark)
     path = str(tmp_path / "dim")
     b1 = spark.createDataFrame(
         [(1, "a", _t(0)), (2, "x", _t(0))], "id BIGINT, attr STRING, ts TIMESTAMP"
