@@ -48,17 +48,18 @@ Semantics guarantees:
   which fails only when one target row matches twice.
 
 MERGE speculates, then guards. Hive 2.3 rewrites a MERGE into one
-multi-insert statement whose ``cardinality_violation()`` branch fails the
-query from inside (``UpdateDeleteSemanticAnalyzer``); likewise the scope
-and cardinality checks here run inside the MERGE's own staged write. The
-source is grouped by the join keys once; an ``Observation`` on that
-grouping returns the check flags from the write job, and a guard reads
+multi-insert statement over an outer join whose
+``cardinality_violation()`` branch fails the query from inside
+(``UpdateDeleteSemanticAnalyzer``), and its reduce-side join sends both
+tagged inputs through one shuffle. Here too the target and the source
+share one hash exchange on the join keys: their rows are unioned and one
+window per key finds the key's source row and counts its target and
+source rows. An ``Observation`` directly above that window returns the
+scope and cardinality flags from the staged write, and a guard reads
 them after the write and before the conflict check and swap. A failed
 check discards the staged write and raises, scope first, then
-cardinality. When AQE proves the join's target side empty it never runs
-the observed source side (a no-insert MERGE into an empty target); the
-observation then holds no row, and the guard computes the same flags
-with one aggregate. Trade-off: an empty source costs one discarded
+cardinality. An observation with no row means the write read no row, so
+the source was empty. Trade-off: an empty source costs one discarded
 staged write, not one aggregate; the table stays byte-identical.
 
 A commit hands the new table's schema to the catalog
@@ -84,7 +85,7 @@ import shutil
 import uuid
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, DataFrameWriter, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameWriter, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -385,17 +386,21 @@ def merge_into(
     rows) instead of silently dropped; inserted rows carry their source
     values, matched rows take them only through ``matched_update``.
 
-    Implemented as a full outer join rewrite of the target with the source
-    grouped by ``on``; update/delete expressions may reference both sides
-    via aliases (``F.col("src.x")``, ``F.col("tgt.x")``). A source with a
-    repeated key raises (cardinality violation), as does a scoped MERGE's
-    source row outside ``partition_filter``; both are checked by the
-    staged write itself, before its commit.
+    Implemented as one exchange over the union of the target rows and the
+    source rows, partitioned by ``on`` (module docstring). Update/delete
+    expressions see the target row as ``tgt`` and the matched source row
+    as the struct column ``src`` (``F.col("tgt.x")``, ``F.col("src.x")``);
+    with a target column named ``src`` a ``src.x`` reference is ambiguous
+    and raises before the staged write. A NULL in any key column matches
+    nothing. A source with a repeated key raises (cardinality violation),
+    NULL keys counted together, as does a scoped MERGE's source row
+    outside ``partition_filter``; both are checked by the staged write
+    itself, before its commit.
 
-    Matched/not-matched detection uses sentinel marker columns added to each
-    side before the join, never the nullness of data columns — a nullable
-    data column that is NULL on a matched row must not flip the row into the
-    insert branch (silent corruption otherwise).
+    Matched/not-matched detection uses the reserved marker columns
+    ``__tgt_m`` and ``__src_m``, never the nullness of data columns — a
+    nullable data column that is NULL on a matched row must not flip the
+    row into the insert branch (silent corruption otherwise).
 
     With ``partition_filter`` (a predicate over the partition columns,
     which every source row must satisfy — enforced), the copy-on-write rewrite is
@@ -410,56 +415,29 @@ def merge_into(
         if sentinel in src_cols:
             raise ValueError(f"column name {sentinel!r} is reserved by MERGE")
 
-    # Speculate, then guard (module docstring). The source is grouped by
-    # the join keys once; the join reuses that grouping's hash exchange,
-    # and the grouping carries both checks: every source row must fall
-    # inside the scoped partitions, else its update/insert would silently
-    # target an unread partition, and no key may repeat (cardinality).
-    # The grouped frame's one non-key column, ``__src_m`` (reserved, so no
-    # source column collides with it), holds the key's row count, its
-    # out-of-scope flag and its other source columns. It is non-NULL on
-    # every source-side row of the join, so it is also the matched marker.
+    # Speculate, then guard (module docstring). Every source row is packed
+    # into ``__src_m`` (reserved, so no source column collides with it)
+    # with its out-of-scope flag: a scoped MERGE's source row outside the
+    # scoped partitions would update or insert into an unread partition.
     in_scope = F.lit(True) if partition_filter is None else partition_filter
-    rest = [c for c in src_cols if c not in on]
-    grouped = source.groupBy(*on).agg(
-        F.struct(
-            F.count(F.lit(1)).alias("n"),
-            F.max(~F.coalesce(in_scope, F.lit(False))).alias("stray"),
-            *([F.first(F.struct(*rest)).alias("row")] if rest else []),
-        ).alias("__src_m")
-    )
-    # retry-safe flags only (bool_or, max, and count read as > 0): a
-    # re-executed task may add its rows to the metrics twice
-    flags = (
-        F.bool_or(F.col("__src_m.n") > 1).alias("dup"),
-        F.max("__src_m.stray").alias("stray"),
-        F.count(F.lit(1)).alias("keys"),
-    )
-    # observed directly above the grouping, so no filter the join infers
-    # (isnotnull(key) on a no-insert MERGE) can be pushed below it
+    packed = F.struct(
+        F.struct(*src_cols).alias("row"),
+        (~F.coalesce(in_scope, F.lit(False))).alias("stray"),
+    ).alias("__src_m")
     observation = Observation()
-    grouped_src = grouped.observe(observation, *flags).select(
-        *on, *(["__src_m.row.*"] if rest else []), "__src_m"
-    )
 
     def guard() -> bool:
         """Raise on a failed source check; False discards the write of an
-        empty source (nothing to update, delete or insert)."""
-        # AQE drops the source side of a join it proves empty (a no-insert
-        # MERGE into an empty target); the observation then completes with
-        # no row, and the flags are computed directly instead
-        got = (
-            grouped.agg(*flags).first()
-            if observation._jo.getRow().length() == 0
-            else observation.get
-        )
-        if got["stray"]:
+        empty source (nothing to update, delete or insert). No observed
+        row means the write's input was empty, so the source was too."""
+        got = observation.get
+        if got.get("stray"):
             raise ValueError(
                 "partition-scoped MERGE: source rows fall outside partition_filter"
             )
-        if got["dup"]:
+        if got.get("dup"):
             raise ValueError("MERGE cardinality violation: source has duplicate keys")
-        return got["keys"] > 0 or evolve_schema
+        return got.get("rows", 0) > 0 or evolve_schema
 
     def tr(df: DataFrame) -> DataFrame:
         for sentinel in sentinels:
@@ -470,34 +448,81 @@ def merge_into(
             for c in source.columns:
                 if c not in df.columns:
                     df = df.withColumn(c, F.lit(None).cast(src_types[c]))
-        tgt = df.withColumn("__tgt_m", F.lit(1)).alias("tgt")
-        joined = tgt.join(grouped_src.alias("src"), on, "full_outer")
-        matched = F.col("__tgt_m").isNotNull() & F.col("__src_m").isNotNull()
-        src_only = F.col("__tgt_m").isNull()
+        # One exchange, as Hive's reduce-side join shuffles its tagged
+        # inputs together: the target rows, flat and tagged ``__tgt_m``,
+        # and the source rows, packed into ``__src_m``, are unioned, and
+        # one unbounded window per key sums the key up in ``__tgt_m``:
+        # whether the row is a target row, the key's target and source row
+        # counts, and its source row. Only the reserved names are added,
+        # so no target column is shadowed.
+        src_rows = source.select(
+            *(F.col(c) if c in on else F.lit(None).cast(df.schema[c].dataType).alias(c)
+              for c in df.columns),
+            F.lit(None).cast("boolean").alias("__tgt_m"),
+            packed,
+        )
+        tgt_rows = df.select(
+            "*", F.lit(True).alias("__tgt_m"),
+            F.lit(None).cast(src_rows.schema["__src_m"].dataType).alias("__src_m"),
+        )
+        per_key = Window.partitionBy(*on)
+        keyed = tgt_rows.union(src_rows).select(
+            *df.columns,
+            F.struct(
+                F.col("__tgt_m").isNotNull().alias("row"),
+                F.count("__tgt_m").over(per_key).alias("n"),
+                F.count("__src_m").over(per_key).alias("n_src"),
+                F.first("__src_m", ignorenulls=True).over(per_key).alias("src"),
+            ).alias("__tgt_m"),
+            "__src_m",
+        )
+        # observed directly above the window, so no clause filter can drop
+        # a row before it is counted; NULL keys share a window, so two
+        # NULL-keyed source rows are a duplicate key. Retry-safe flags
+        # only (bool_or, and count read as > 0): a re-executed task may
+        # add its rows to the metrics twice
+        keyed = keyed.observe(
+            observation,
+            F.bool_or(F.col("__tgt_m.n_src") > 1).alias("dup"),
+            F.bool_or("__src_m.stray").alias("stray"),
+            F.count("__src_m").alias("rows"),
+        )
+        # a NULL in any key column matches nothing
+        no_null = F.lit(True)
+        for c in on:
+            no_null = no_null & F.col(c).isNotNull()
+        is_tgt = F.col("__tgt_m.row")
+        matched = is_tgt & no_null & (F.col("__tgt_m.n_src") > 0)
+        # a source row whose key a target row holds is matched: dropped;
+        # an unmatched one is inserted, if inserts are on
+        keep = is_tgt
+        if not_matched_insert:
+            keep = keep | ~(no_null & (F.col("__tgt_m.n") > 0))
+        framed = keyed.filter(keep).alias("tgt").select(
+            "*", F.col("__tgt_m.src.row").alias("src")
+        )
 
-        # WHEN MATCHED AND cond THEN DELETE — cond sees tgt.* and src.* on
-        # the joined frame; NULL cond keeps the row (SQL three-valued AND).
+        # WHEN MATCHED AND cond THEN DELETE — cond sees tgt.* and src.*;
+        # NULL cond keeps the row (SQL three-valued AND).
         if matched_delete is not None:
-            joined = joined.filter(
+            framed = framed.filter(
                 ~F.coalesce(matched & matched_delete, F.lit(False))
             )
-        if not not_matched_insert:
-            joined = joined.filter(~src_only)
 
         out_cols = []
         for c in df.columns:
-            if c in on:
-                # using-join coalesces key columns; correct for both the
-                # surviving-target and inserted-source rows
-                out_cols.append(F.col(c).alias(c))
-                continue
             col = F.col(f"tgt.{c}")
+            if c in on:
+                # the union's key: the target's on target rows, the
+                # source's on inserted rows
+                out_cols.append(col.alias(c))
+                continue
             if matched_update and c in matched_update:
                 col = F.when(matched, matched_update[c]).otherwise(col)
             if not_matched_insert and c in src_cols:
-                col = F.when(src_only, F.col(f"src.{c}")).otherwise(col)
+                col = F.when(~is_tgt, F.col(f"__src_m.row.{c}")).otherwise(col)
             out_cols.append(col.alias(c))
-        return joined.select(*out_cols)
+        return framed.select(*out_cols)
 
     _commit(
         spark, target_path, tr, partition_filter, partition_cols, guard,

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from hive_release_spark import catalog
 from hive_release_spark.operators import dml, scd, versioning
-from tests.conftest import _jobs
+from tests.conftest import _executed_shuffle_stages, _jobs
 
 
 @pytest.fixture()
@@ -600,11 +600,11 @@ def _plan_nodes(node):
 
 
 def test_merge_write_plan_scans_source_once(spark, table, tmp_path, monkeypatch):
-    """With AQE off the MERGE's write plan observes the source checks in
-    one CollectMetrics, scans the source once, and shuffles the source
-    once: the join reuses the grouping's hash exchange. Together with
-    the one-job pin above, a source-check pre-pass or a second source
-    scan fails here."""
+    """With AQE off the MERGE's write plan has one exchange, hash
+    partitioned on the keys, over the union of one target scan and one
+    source scan, and observes the source checks in one CollectMetrics
+    above it. Together with the one-job pin above, a source-check
+    pre-pass, a second scan or a second exchange fails here."""
     src_path = str(tmp_path / "src")
     spark.createDataFrame(
         [(2, "B", 99.0), (5, "e", 50.0)], "id BIGINT, name STRING, val DOUBLE"
@@ -626,19 +626,92 @@ def test_merge_write_plan_scans_source_once(spark, table, tmp_path, monkeypatch)
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
     [plan] = plans
     nodes = list(_plan_nodes(plan))
-    assert [n for n, _ in nodes].count("CollectMetrics") == 1
-    leaves = [node for _n, node in nodes if not node.children().size()]
-    assert sum(src_path in leaf.toString() for leaf in leaves) == 1
-    join = next(node for n, node in nodes if "Join" in n)
-    src_side = next(
-        kid for kid in (join.children().apply(i) for i in range(2))
-        if any(n == "CollectMetrics" for n, _ in _plan_nodes(kid))
-    )
-    names = [n for n, _ in _plan_nodes(src_side)]
-    # one exchange on the source side, below the observation
-    assert names.count("Exchange") == 1
-    assert names.index("CollectMetrics") < names.index("Exchange")
+    [exchange] = [node for n, node in nodes if n == "Exchange"]
+    keys = exchange.outputPartitioning().expressions()
+    assert exchange.outputPartitioning().toString().startswith("hashpartitioning(")
+    assert [keys.apply(i).name() for i in range(keys.size())] == ["id"]
+    assert exchange.child().nodeName() == "Union"
+    scans = [node.toString() for _n, node in _plan_nodes(exchange) if not node.children().size()]
+    assert len(scans) == 2
+    assert sum(f"{src_path}]" in s for s in scans) == 1
+    assert sum(f"{table}]" in s for s in scans) == 1
+    [metrics] = [node for n, node in nodes if n == "CollectMetrics"]
+    assert "Exchange" in [n for n, _ in _plan_nodes(metrics)]
     assert {r.id: r.val for r in spark.read.parquet(table).collect()}[2] == 99.0
+
+
+def test_scoped_merge_runs_one_shuffle_stage(spark, tmp_path):
+    """With AQE on, a partition-scoped MERGE of a file-fed source into a
+    table the engine wrote runs one shuffle map stage, for the target and
+    the source together, and two jobs: that stage and the staged write."""
+    path = _scoped_rewrite(spark, tmp_path)
+    src_path = str(tmp_path / "src")
+    spark.createDataFrame(
+        [("a", 1, 11.0, 1), ("a", 7, 70.0, 7)], "grp STRING, id BIGINT, val DOUBLE, n INT"
+    ).write.parquet(src_path)
+    source = spark.read.parquet(src_path)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    jobs = []
+    stages = _executed_shuffle_stages(spark, lambda: jobs.append(_jobs(spark, lambda: dml.merge_into(
+        spark, path, source, on=["id"], matched_update={"val": F.col("src.val")}, **_scope_a()
+    ))[1]))
+    assert (stages, jobs) == (1, [2])
+    assert sorted((r.grp, r.id, r.val) for r in spark.read.parquet(path).collect()) == [
+        ("a", 1, 11.0), ("a", 2, 20.0), ("a", 7, 70.0), ("b", 3, 30.0),
+    ]
+
+
+def test_merge_composite_key_with_null_key_columns(spark, tmp_path):
+    """A composite key matches on every column; a NULL in any key column
+    matches nothing, so those target rows stay and those source rows are
+    inserted."""
+    path = str(tmp_path / "ck")
+    spark.createDataFrame(
+        [(1, "a", 1.0), (1, "b", 2.0), (None, "a", 3.0), (2, None, 4.0)],
+        "id BIGINT, k STRING, val DOUBLE",
+    ).write.parquet(path)
+    source = spark.createDataFrame(
+        [(1, "a", 10.0), (1, "c", 30.0), (None, "a", 33.0), (2, None, 44.0)],
+        "id BIGINT, k STRING, val DOUBLE",
+    )
+    dml.merge_into(spark, path, source, on=["id", "k"], matched_update={"val": F.col("src.val")})
+    got = [(r.id, r.k, r.val) for r in spark.read.parquet(path).collect()]
+    order = lambda t: tuple((v is None, v) for v in t)  # noqa: E731
+    assert sorted(got, key=order) == [
+        (1, "a", 10.0), (1, "b", 2.0), (1, "c", 30.0), (2, None, 4.0), (2, None, 44.0),
+        (None, "a", 3.0), (None, "a", 33.0),
+    ]
+
+
+def test_merge_int_source_key_into_bigint_target(spark, tmp_path):
+    """An INT-keyed source matches a BIGINT target's keys and leaves the
+    target's key type as it was."""
+    path = str(tmp_path / "wide")
+    spark.createDataFrame([(1, 1.0), (2, 2.0)], "id BIGINT, val DOUBLE").write.parquet(path)
+    source = spark.createDataFrame([(2, 20.0), (3, 30.0)], "id INT, val DOUBLE")
+    dml.merge_into(spark, path, source, on=["id"], matched_update={"val": F.col("src.val")})
+    df = spark.read.parquet(path)
+    assert df.schema["id"].dataType.simpleString() == "bigint"
+    assert {r.id: r.val for r in df.collect()} == {1: 1.0, 2: 20.0, 3: 30.0}
+
+
+def test_merge_into_target_with_a_src_column(spark, tmp_path):
+    """A target column named ``src`` is reached as ``tgt.src``: a MERGE
+    whose clauses name only ``tgt`` keeps it on matched rows. Beside it
+    a clause's ``src.x`` is ambiguous and raises, leaving the table
+    unchanged."""
+    from pyspark.errors import AnalysisException
+
+    path = str(tmp_path / "s")
+    spark.createDataFrame([(1, "x", 1.0)], "id BIGINT, src STRING, val DOUBLE").write.parquet(path)
+    source = spark.createDataFrame([(1, 5.0), (2, 6.0)], "id BIGINT, val DOUBLE")
+    dml.merge_into(spark, path, source, on=["id"], matched_update={"val": F.col("tgt.val") + 1})
+    got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    assert got == [(1, "x", 2.0), (2, None, 6.0)]
+    before = _files(path)
+    with pytest.raises(AnalysisException, match="AMBIGUOUS_REFERENCE"):
+        dml.merge_into(spark, path, source, on=["id"], matched_update={"val": F.col("src.val")})
+    assert _files(path) == before
 
 
 def test_merge_out_of_scope_reported_before_duplicates(spark, tmp_path):
@@ -670,10 +743,9 @@ def test_merge_empty_source_keeps_table_byte_identical(spark, table):
 
 def test_merge_null_key_duplicates_violate_cardinality(spark, table):
     """NULL keys group together, so two NULL-keyed source rows are a
-    duplicate key, as groupBy counts them. A no-insert MERGE becomes a
-    left outer join, for which Catalyst infers ``isnotnull(id)`` on the
-    source side; the checks are observed above the grouping, so that
-    filter cannot drop the NULL-keyed rows before they are counted."""
+    duplicate key, as groupBy counts them. A no-insert MERGE drops its
+    unmatched source rows; the checks are observed below that filter, so
+    the NULL-keyed rows are counted before it drops them."""
     source = spark.createDataFrame(
         [(None, "x", 1.0), (None, "y", 2.0)], "id BIGINT, name STRING, val DOUBLE"
     )
@@ -702,10 +774,8 @@ def emptied_table(spark, table):
 
 
 def test_no_insert_merge_into_empty_target_checks_cardinality(spark, emptied_table, monkeypatch):
-    """A no-insert MERGE into an empty target is a left outer join with an
-    empty left side, which AQE answers without running the source, so the
-    write observes no metrics. The guard computes the same flags itself:
-    a duplicate-keyed source still raises and nothing stays staged."""
+    """A no-insert MERGE into an empty target still observes its source
+    checks: a duplicate-keyed source raises and nothing stays staged."""
     import os
 
     made = []  # every Observation merge_into creates
@@ -715,14 +785,13 @@ def test_no_insert_merge_into_empty_target_checks_cardinality(spark, emptied_tab
     with pytest.raises(ValueError, match="cardinality"):
         dml.merge_into(spark, emptied_table, source, on=["id"], not_matched_insert=False)
     [observation] = made
-    assert observation._jo.getRow().length() == 0  # the fallback ran
     assert _staged_dirs(os.path.dirname(emptied_table)) == []
     assert _files(emptied_table) == before
 
 
 def test_no_insert_merge_into_empty_target_commits_valid_source(spark, emptied_table):
-    """The same MERGE with a unique-keyed source passes the fallback's
-    checks and commits its (empty) rewrite."""
+    """The same MERGE with a unique-keyed source passes the checks and
+    commits its (empty) rewrite."""
     import os
 
     before = catalog.listing_version(emptied_table)

@@ -1,8 +1,9 @@
-"""r12/r13 optimization measurement harness (guide §1: measure first).
+"""Optimization measurement harness: measure first.
 
 Times individual registry entries in isolation with the noop sink
 (min/median of N), labels jobs, and dumps `.explain("formatted")` to
-plans/r13/<name>_<tag>.txt so before/after plan claims are on disk.
+.opt-measure-plans/<name>_<tag>.txt (git-ignored) so before/after plan
+claims can be compared on disk.
 
 Usage:
     python tools/opt_measure.py before q21_waiting_suppliers ml_item_item_cf
@@ -28,14 +29,14 @@ from hive_release_spark.session import get_session  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 REPS = int(os.environ.get("SPARK_GRAFT_OPT_REPS", "3"))
-PLANS = Path(__file__).resolve().parent.parent / "plans" / "r13"
+PLANS = Path(__file__).resolve().parent.parent / ".opt-measure-plans"
 
 
 def main() -> None:
     tag = sys.argv[1]
     names = sys.argv[2:]
     spark = get_session(
-        app_name="r13_opt_measure",
+        app_name="opt_measure",
         master=f"local[{CPUS}]",
         shuffle_partitions=CPUS,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
